@@ -59,29 +59,22 @@ object Cli {
       if (!prune) 0L
       else if (latest < keepBlocks) 0L
       else latest - keepBlocks + 1L
-    val history = pipeline.FullHistory.build(sess, accCs, stoCs,
+    val history = pipeline.FullHistory.buildFlagged(sess, accCs, stoCs,
       t("plain_code_hash"), t("plain_state_accounts"),
       t("plain_state_storage"), latest, blockStart = blockStart)
-    val items = spark.StateFormat.asItems(
-      history.withColumnRenamed("valid_from_block", "block"))
-    spark.StateFiles.write(items, outDir, strategy,
+    val rows = spark.StateFormat.asFlaggedItems(
+      history.withColumnRenamed("valid_from_block", "block"),
+      pipeline.FullHistory.NonAdvancing)
+    spark.StateFiles.writeFlagged(rows, outDir, strategy,
       blockStart = blockStart, blockEnd = latest)
     // SURVEY §5 mechanism 3: the reference PRINTS warn-but-tolerate
     // anomalies during -M conversion (incarnation decrease, codeHash
     // change without incarnation, non-advancing adjusted block); a
     // Goerli-shaped chain loses that operator signal without this
-    // summary. The first two accumulate through the codec into the
-    // manifest; the third is two pushed-down key-column aggregates over
-    // the raw changesets (the decode-free form — telemetry must not
-    // double the conversion's ingest reads).
-    val nonAdv = pipeline.FullHistory.nonAdvancingCountRaw(
-      accCs, stoCs, blockStart)
-    def mfL(name: String): Long =
-      spark.StateFiles.manifestField(outDir, name).getOrElse(0L)
-    System.err.println("convert anomalies: " +
-      s"incarnation_decrease=${mfL("anomaly_incarnation_decrease")} " +
-      s"codehash_no_incarnation=${mfL("anomaly_codehash_no_incarnation")} " +
-      s"non_advancing_block=$nonAdv")
+    // summary. All three are counted by the write's own encode tasks —
+    // the first two by the codec, the third from the W1 window's flag —
+    // and committed to the manifest, so the summary reads it back.
+    System.err.println(s"convert anomalies: ${anomalies(outDir)}")
     (latest, blockStart)
   }
 
@@ -103,6 +96,16 @@ object Cli {
       pipeline.TxBodies.decodeBodies(bodies), t("block_transactions"))
     spark.TxBodyFiles.write(enc, outDir, blockStart = 0L, blockEnd = latest)
   }
+
+  /** The manifest's write-time anomaly counters, `n/a` for a counter the
+    * writes of the dataset did not measure.
+    */
+  private[graft] def anomalies(dir: String): String =
+    Seq("incarnation_decrease", "codehash_no_incarnation",
+        "non_advancing_block").map { name =>
+      val v = spark.StateFiles.manifestField(dir, s"anomaly_$name")
+      s"$name=${v.fold("n/a")(_.toString)}"
+    }.mkString(" ")
 
   private def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -243,27 +246,13 @@ object Cli {
         .collect().map(r => r.getBoolean(0) -> r.getLong(1)).toMap
       val accounts = counts.getOrElse(false, 0L)
       val slots = counts.getOrElse(true, 0L)
-      def mf(name: String): Long = {
-        val p = java.nio.file.Paths.get(dir, "_manifest.json")
-        val txt = new String(java.nio.file.Files.readAllBytes(p),
-          java.nio.charset.StandardCharsets.UTF_8)
-        s"""\"$name\":(-?\\d+)""".r.findFirstMatchIn(txt)
-          .map(_.group(1).toLong)
-          .getOrElse(sys.error(s"manifest missing $name"))
-      }
+      def mf(name: String): Long = spark.StateFiles.manifestField(dir, name)
+        .getOrElse(sys.error(s"manifest missing $name"))
       val ok = accounts == mf("accounts") && slots == mf("storage_slots")
-      // write-time anomaly telemetry travels in the manifest (absent in
-      // pre-telemetry manifests -> reported as 0)
-      def mfAnom(name: String): Long =
-        spark.StateFiles.manifestField(dir, name).getOrElse(0L)
       System.err.println(
         s"check: decoded accounts=$accounts (manifest ${mf("accounts")}), " +
           s"storage_slots=$slots (manifest ${mf("storage_slots")}) -> " +
-          (if (ok) "OK" else "MISMATCH") +
-          "; anomalies: incarnation_decrease=" +
-          mfAnom("anomaly_incarnation_decrease") +
-          " codehash_no_incarnation=" +
-          mfAnom("anomaly_codehash_no_incarnation"))
+          (if (ok) "OK" else "MISMATCH") + s"; anomalies: ${anomalies(dir)}")
       s.stop()
       if (!ok) sys.exit(1)
     case _ =>

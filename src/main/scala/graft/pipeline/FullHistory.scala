@@ -112,14 +112,6 @@ object FullHistory {
     */
   def sortKeys: Seq[Column] = groupKeys :+ col("block")
 
-  /** The merge stage (O3+W1+F3, erigon_extract.c:2290-2469) as a window over
-    * the globally sorted union. `plainState*` rows carry the post-latest
-    * state and get `latestBlock + 1` (the comparison-order adjustment at
-    * erigon_extract.c:2373-2387).
-    *
-    * `shufflePartitions` sizes the range partitioner; at 100 TB this is the
-    * knob that keeps each sorted partition within executor memory.
-    */
   /** Decode + prune + union + group-key annotation — the shared front of
     * [[build]] and [[buildSkewTolerant]].
     */
@@ -275,6 +267,17 @@ object FullHistory {
         .otherwise(zeros32).as("value"))
   }
 
+  /** The merge stage (O3+W1+F3, erigon_extract.c:2290-2469) as a window over
+    * the globally sorted union. `plainState*` rows carry the post-latest
+    * state and get `latestBlock + 1` (the comparison-order adjustment at
+    * erigon_extract.c:2373-2387).
+    *
+    * `shufflePartitions` sizes the range partitioner; at 100 TB this is the
+    * knob that keeps each sorted partition within executor memory.
+    *
+    * This is [[buildFlagged]] without its [[NonAdvancing]] flag column;
+    * the optimizer prunes the unused flag expression.
+    */
   def build(spark: SparkSession,
             accountChangeset: DataFrame,
             storageChangeset: DataFrame,
@@ -283,7 +286,36 @@ object FullHistory {
             plainStateStorage: DataFrame,
             latestBlock: Long,
             shufflePartitions: Int = 0,
-            blockStart: Long = 0L): DataFrame = {
+            blockStart: Long = 0L): DataFrame =
+    buildFlagged(spark, accountChangeset, storageChangeset, plainCodeHash,
+      plainStateAccounts, plainStateStorage, latestBlock, shufflePartitions,
+      blockStart).drop(NonAdvancing)
+
+  /** Name of [[buildFlagged]]'s boolean anomaly column. */
+  private[graft] val NonAdvancing = "non_advancing"
+
+  /** [[build]]'s rows plus the boolean [[NonAdvancing]] column — SURVEY §5
+    * mechanism 3, the reference's "Adjusted block number has not moved
+    * backward" warning (erigon_extract.c:2426-2433), detected where the
+    * reference detects it: in the merge stage, by the same LAG that
+    * re-timestamps the row. A row is flagged when its adjusted block
+    * (`valid_from_block`, the previous block of its group) equals its own
+    * block, i.e. the same full key changed twice at one block. Genesis
+    * rows (block 0, skipped silently by the reference, :2422-2425) and the
+    * `latestBlock + 1` plain-state rows are never flagged, so the flags of
+    * one conversion sum to [[nonAdvancingCountRaw]] of its changesets,
+    * pruned or not. A writer counts the flags in the task that encodes the
+    * row, so the telemetry costs no second pass over the changesets.
+    */
+  private[graft] def buildFlagged(spark: SparkSession,
+                                  accountChangeset: DataFrame,
+                                  storageChangeset: DataFrame,
+                                  plainCodeHash: DataFrame,
+                                  plainStateAccounts: DataFrame,
+                                  plainStateStorage: DataFrame,
+                                  latestBlock: Long,
+                                  shufflePartitions: Int = 0,
+                                  blockStart: Long = 0L): DataFrame = {
     val raw = rawKeyedUnion(accountChangeset, storageChangeset,
       plainCodeHash, plainStateAccounts, plainStateStorage, latestBlock,
       blockStart)
@@ -312,7 +344,8 @@ object FullHistory {
       // F3: genesis entries (first-in-group AND original block 0) are
       // dropped (erigon_extract.c:2422-2425)
       .filter(!(col("valid_from_block") === 0L && col("block") === 0L))
-      .select(outputCols: _*)
+      .select((outputCols :+ (col("valid_from_block") === col("block") &&
+        col("block") > 0L && col("block") <= latestBlock).as(NonAdvancing)): _*)
   }
 
   // ---- skew-tolerant W1 (SURVEY §7.4's acknowledged 100× risk) ----
@@ -487,11 +520,11 @@ object FullHistory {
     * blocks excluded. Equal to the merged-stream count by construction
     * (account group key = (address); storage = (address, inc, slot);
     * the two tables cannot collide across the isStorage split —
-    * PipelineSpec asserts the equality on a planted fixture), at a
-    * fraction of the cost: two pushed-down key-column aggregates
-    * instead of a second decode-and-union pass over all five inputs —
-    * the form `Cli convert` uses so telemetry never doubles the
-    * conversion's ingest reads.
+    * PipelineSpec asserts the equality on a planted fixture): two
+    * pushed-down key-column aggregates instead of a decode-and-union pass
+    * over all five inputs. A standalone probe of a table set; a
+    * conversion counts the same rows with [[buildFlagged]]'s flag
+    * instead (CliSpec asserts the two agree, pruned and unpruned).
     */
   def nonAdvancingCountRaw(accountChangeset: DataFrame,
                            storageChangeset: DataFrame,

@@ -52,7 +52,20 @@ object StateFiles {
   def write(items: Dataset[StateItem], dir: String, strategy: Int,
             blockStart: Long = 0L, blockEnd: Long = 0L): Unit =
     writeCore(items, dir, strategy, blockStart, blockEnd, partBase = 0,
-      mergeManifest = false, streamBatchId = -1L)
+      mergeManifest = false, streamBatchId = -1L)(identity)
+
+  /** [[write]] of items paired with the W1 window's non-advancing flag
+    * ([[graft.pipeline.FullHistory.buildFlagged]]): each encode task counts
+    * its partition's flags, and the manifest records their sum as
+    * `anomaly_non_advancing_block` — the only write that measures it.
+    */
+  private[graft] def writeFlagged(rows: Dataset[(StateItem, Boolean)],
+                                  dir: String, strategy: Int,
+                                  blockStart: Long = 0L,
+                                  blockEnd: Long = 0L): Unit =
+    writeCore(rows, dir, strategy, blockStart, blockEnd, partBase = 0,
+      mergeManifest = false, streamBatchId = -1L,
+      flag = Some((r: (StateItem, Boolean)) => r._2))(_._1)
 
   /** Incremental APPEND: new part files after the existing ones, manifest
     * totals merged — the daily-increment flow (changesets are an
@@ -105,7 +118,7 @@ object StateFiles {
             s"refusing append from stream $streamId"))
     writeCore(items, dir, strategy, blockStart, blockEnd, partBase,
       mergeManifest = true, streamBatchId = streamBatchId,
-      streamId = streamId)
+      streamId = streamId)(identity)
   }
 
   /** COMPACTION — the archive-maintenance op the incremental flows
@@ -160,10 +173,12 @@ object StateFiles {
     val sid = manifestStringField(dir, "stream_id").getOrElse("")
     // the scan executes inside this job, strictly before the commit:
     // writeCore's final manifest write REPLACES the snapshot (fresh
-    // dataset_id — overwrite semantics, not merge)
+    // dataset_id — overwrite semantics, not merge). The rows are the same,
+    // so the W1 count measured when they were built carries over.
     writeCore(sorted, dir, strategy, bStart, bEnd,
       partBase = nextPartBase(dir), mergeManifest = false,
-      streamBatchId = sb, streamId = sid)
+      streamBatchId = sb, streamId = sid,
+      nonAdvancing = manifestField(dir, NonAdvancingField))(identity)
     oldFiles.foreach { f =>
       Files.deleteIfExists(Paths.get(dir, f))
       Files.deleteIfExists(
@@ -313,13 +328,20 @@ object StateFiles {
       }
     }
 
+  /** Manifest field of the W1 non-advancing count — present only when a
+    * write fed by the W1 window measured it (see [[commitManifest]]).
+    */
+  private[graft] val NonAdvancingField = "anomaly_non_advancing_block"
+
   /** Per-part stat bundle carried from tasks to the manifest commit
-    * (row totals + write-time anomaly counters).
+    * (row totals + write-time anomaly counters; `anomNonAdvancing` is
+    * counted only by [[writeFlagged]]'s tasks).
     */
   private[spark] final case class PartStats(pid: Int, bytes: Long,
                                             accounts: Long, slots: Long,
                                             anomIncDecrease: Long,
-                                            anomCodeHashNoInc: Long)
+                                            anomCodeHashNoInc: Long,
+                                            anomNonAdvancing: Long = 0L)
 
   /** One encoded part: the full `.dat` bytes (header + page-aligned body)
     * and its `.idx` sidecar, plus the stat counters. Shared by the
@@ -431,13 +453,20 @@ object StateFiles {
     * `file_list` snapshot is replaced ATOMICALLY as the last step — this
     * IS the dataset-level commit point. Shared by the function sink and
     * the DSv2 BatchWrite.commit.
+    *
+    * `nonAdvancing` is the W1 window's non-advancing count for this
+    * snapshot, when the write measured it or carries a measured value;
+    * otherwise a merge keeps the previous manifest's value unchanged (an
+    * append does not see the window) and any other write omits the field
+    * rather than record an unmeasured 0.
     */
   private[spark] def commitManifest(dir: String, strategy: Int,
                                     blockStart: Long, blockEnd: Long,
                                     mergeManifest: Boolean,
                                     parts: Seq[PartStats],
                                     streamBatchId: Long = -1L,
-                                    streamId: String = ""): Unit = {
+                                    streamId: String = "",
+                                    nonAdvancing: Option[Long] = None): Unit = {
     def prev(name: String): Long =
       if (mergeManifest) manifestField(dir, name).getOrElse(0L) else 0L
     val accounts = parts.map(_.accounts).sum + prev("accounts")
@@ -450,6 +479,10 @@ object StateFiles {
       prev("anomaly_incarnation_decrease")
     val anomCh = parts.map(_.anomCodeHashNoInc).sum +
       prev("anomaly_codehash_no_incarnation")
+    val nonAdvJson = nonAdvancing
+      .orElse(if (mergeManifest) manifestField(dir, NonAdvancingField)
+              else None)
+      .fold("")(n => s""""$NonAdvancingField":$n,""")
     val bStart =
       if (mergeManifest)
         math.min(blockStart,
@@ -508,7 +541,7 @@ object StateFiles {
         s""""block_end":$bEnd,"files":$files,$sbJson""" +
         s""""accounts":$accounts,"storage_slots":$slots,""" +
         s""""anomaly_incarnation_decrease":$anomInc,""" +
-        s""""anomaly_codehash_no_incarnation":$anomCh,""" +
+        s""""anomaly_codehash_no_incarnation":$anomCh,$nonAdvJson""" +
         s""""bytes":$bytes,"file_list":$fileListJson}"""
     atomicWrite(dir, "_manifest.json",
       manifest.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -533,17 +566,32 @@ object StateFiles {
     } finally stream.close()
   }
 
-  private def writeCore(items: Dataset[StateItem], dir: String,
-                        strategy: Int, blockStart: Long, blockEnd: Long,
-                        partBase: Int, mergeManifest: Boolean,
-                        streamBatchId: Long,
-                        streamId: String = ""): Unit = {
-    val spark = items.sparkSession
+  /** The function sink: one encode task per partition of `rows`, each
+    * row's item taken by `item`. With a `flag`, each task also counts the
+    * rows it flags as it feeds them to the encoder, and the sum is the
+    * snapshot's measured `nonAdvancing`; without one, `nonAdvancing` is
+    * the value to carry (see [[commitManifest]]).
+    */
+  private def writeCore[T](rows: Dataset[T], dir: String,
+                           strategy: Int, blockStart: Long, blockEnd: Long,
+                           partBase: Int, mergeManifest: Boolean,
+                           streamBatchId: Long,
+                           streamId: String = "",
+                           flag: Option[T => Boolean] = None,
+                           nonAdvancing: Option[Long] = None)(
+                           item: T => StateItem): Unit = {
+    val spark = rows.sparkSession
     import spark.implicits._
     Files.createDirectories(Paths.get(dir))
-    val rows = items.mapPartitions { it =>
+    val parts = rows.mapPartitions { it =>
       val pid = partBase + org.apache.spark.TaskContext.getPartitionId()
-      encodePart(it, strategy, blockStart, blockEnd) match {
+      var flagged = 0L
+      val items = flag match {
+        case None => it.map(item)
+        case Some(f) => it.map { r => if (f(r)) flagged += 1; item(r) }
+      }
+      // encodePart drains `items`, so `flagged` is final once it returns
+      encodePart(items, strategy, blockStart, blockEnd) match {
         case None => Iterator.empty
         case Some(part) =>
           // temp + atomic rename: retried/speculative attempts each
@@ -551,11 +599,13 @@ object StateFiles {
           atomicWrite(dir, f"part-$pid%05d.dat", part.dat)
           atomicWrite(dir, f"part-$pid%05d.idx", part.idx)
           Iterator.single(PartStats(pid, part.bodyBytes, part.accounts,
-            part.slots, part.anomIncDecrease, part.anomCodeHashNoInc))
+            part.slots, part.anomIncDecrease, part.anomCodeHashNoInc,
+            flagged))
       }
     }.collect()
     commitManifest(dir, strategy, blockStart, blockEnd, mergeManifest,
-      rows.toSeq, streamBatchId, streamId)
+      parts.toSeq, streamBatchId, streamId,
+      flag.map(_ => parts.map(_.anomNonAdvancing).sum).orElse(nonAdvancing))
   }
 
   /** Page-parallel read, delegated to the DataSource V2

@@ -61,7 +61,20 @@ object StateFormat {
   def asItems(df: DataFrame): Dataset[StateItem] = {
     val spark = df.sparkSession
     import spark.implicits._
-    df.select("address", "block", "isStorage", "nonce", "incarnation",
-      "balance", "codeHash", "slot", "value").as[StateItem]
+    df.select(itemCols.map(col): _*).as[StateItem]
   }
+
+  /** [[asItems]] keeping one boolean column beside each item — the form
+    * [[StateFiles.writeFlagged]] counts while it encodes.
+    */
+  private[graft] def asFlaggedItems(
+      df: DataFrame, flag: String): Dataset[(StateItem, Boolean)] = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    df.select(struct(itemCols.map(col): _*).as("_1"), col(flag).as("_2"))
+      .as[(StateItem, Boolean)]
+  }
+
+  private val itemCols = Seq("address", "block", "isStorage", "nonce",
+    "incarnation", "balance", "codeHash", "slot", "value")
 }

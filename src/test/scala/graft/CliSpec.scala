@@ -54,11 +54,106 @@ class CliSpec extends AnyFunSuite {
     // anomaly telemetry (SURVEY §5 mechanism 3) rides the manifest and
     // is ZERO on the well-formed fixture chain
     assert(mf.contains("\"anomaly_incarnation_decrease\":0") &&
-      mf.contains("\"anomaly_codehash_no_incarnation\":0"), mf)
+      mf.contains("\"anomaly_codehash_no_incarnation\":0") &&
+      mf.contains("\"anomaly_non_advancing_block\":0"), mf)
     assert(pipeline.FullHistory.nonAdvancingCount(
       pipeline.FullHistory.mergedStream(w.accountChangeset,
         w.storageChangeset, w.plainCodeHash, w.plainStateAccounts,
         w.plainStateStorage, w.latestBlock)) == 0L)
+  }
+
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
+  private def bytes(dir: String, name: String): Array[Byte] =
+    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, name))
+
+  test("convert: manifest non-advancing count equals nonAdvancingCountRaw " +
+      "on planted duplicates, unpruned and pruned; later writes never " +
+      "record an unmeasured count") {
+    import graft.spark.StateFiles
+    val w = Fixtures.generate(spark, nAddresses = 12, nBlocks = 40)
+    // keepBlocks = 10 on latest 40 keeps blocks 31..40. Planted: an
+    // account duplicate before that window, a storage duplicate inside
+    // it, two genesis duplicates (skipped, erigon_extract.c:2422-2425)
+    // and a duplicated plain-state row (at latest + 1, never a changeset
+    // key)
+    val accDup = w.accountChangeset
+      .filter(col("block") > 0 && col("block") < 31).limit(1)
+    val stoDup = w.storageChangeset.filter(col("block") >= 31).limit(1)
+    val genesis = w.accountChangeset.filter(col("block") > 0).limit(1)
+      .withColumn("block", lit(0L))
+    val tables = tmp("graft-cli-nonadv-t")
+    w.accountChangeset.unionByName(accDup).unionByName(genesis)
+      .unionByName(genesis).write.parquet(s"$tables/account_changeset")
+    w.storageChangeset.unionByName(stoDup)
+      .write.parquet(s"$tables/storage_changeset")
+    w.plainCodeHash.write.parquet(s"$tables/plain_code_hash")
+    w.plainStateAccounts.unionByName(w.plainStateAccounts.limit(1))
+      .write.parquet(s"$tables/plain_state_accounts")
+    w.plainStateStorage.write.parquet(s"$tables/plain_state_storage")
+    val acc = spark.read.parquet(s"$tables/account_changeset")
+    val sto = spark.read.parquet(s"$tables/storage_changeset")
+    def nonAdv(dir: String): Option[Long] =
+      StateFiles.manifestField(dir, "anomaly_non_advancing_block")
+
+    val out = tmp("graft-cli-nonadv-o")
+    Cli.convert(spark, tables, out)
+    val raw = pipeline.FullHistory.nonAdvancingCountRaw(acc, sto)
+    assert(raw == 2L && nonAdv(out).contains(raw),
+      new String(bytes(out, "_manifest.json")))
+
+    val pruned = tmp("graft-cli-nonadv-p")
+    assert(Cli.convert(spark, tables, pruned, prune = true,
+      keepBlocks = 10L)._2 == 31L)
+    val rawPruned = pipeline.FullHistory.nonAdvancingCountRaw(acc, sto, 31L)
+    assert(rawPruned == 1L && nonAdv(pruned).contains(rawPruned))
+
+    // an append does not see the W1 window: it carries the value as is,
+    // and so does a compaction, which rewrites the same rows
+    val more = StateFiles.read(spark, pruned, 0).limit(5)
+      .localCheckpoint()
+    StateFiles.append(more, out, 0)
+    assert(nonAdv(out).contains(2L))
+    StateFiles.compact(spark, out, 0)
+    assert(nonAdv(out).contains(2L))
+    assert(Cli.anomalies(out).contains("non_advancing_block=2"))
+    // a plain write measures nothing and records nothing
+    val plain = tmp("graft-cli-nonadv-w")
+    StateFiles.write(more, plain, 0)
+    assert(nonAdv(plain).isEmpty)
+    assert(Cli.anomalies(plain) == "incarnation_decrease=0 " +
+      "codehash_no_incarnation=0 non_advancing_block=n/a")
+  }
+
+  test("convert: .dat and .idx bytes equal StateFiles.write of build on " +
+      "the same tables") {
+    val tables = tmp("graft-cli-bytes-t")
+    val w = writeTables(tables)
+    // one shuffle partition: range bounds are sampled, so with several
+    // the part boundaries of two runs may differ
+    val key = "spark.sql.shuffle.partitions"
+    val was = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try {
+      val out = tmp("graft-cli-bytes-o")
+      Cli.convert(spark, tables, out)
+      val ref = tmp("graft-cli-bytes-r")
+      def t(name: String) = spark.read.parquet(s"$tables/$name")
+      graft.spark.StateFiles.write(graft.spark.StateFormat.asItems(
+        pipeline.FullHistory.build(spark, t("account_changeset"),
+          t("storage_changeset"), t("plain_code_hash"),
+          t("plain_state_accounts"), t("plain_state_storage"),
+          w.latestBlock).withColumnRenamed("valid_from_block", "block")),
+        ref, 0, blockStart = 0L, blockEnd = w.latestBlock)
+      val files = graft.spark.StateFiles.manifestFileList(out).get
+        .flatMap(f => Seq(f, f.stripSuffix(".dat") + ".idx"))
+      assert(files.nonEmpty &&
+        graft.spark.StateFiles.manifestFileList(ref).get ==
+          graft.spark.StateFiles.manifestFileList(out).get)
+      files.foreach(f =>
+        assert(java.util.Arrays.equals(bytes(out, f), bytes(ref, f)), f))
+    } finally spark.conf.set(key, was)
   }
 
   test("convert --prune: only the keep-window tail survives") {

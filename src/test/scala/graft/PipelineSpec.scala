@@ -75,8 +75,7 @@ class PipelineSpec extends AnyFunSuite {
       .unionByName(genesisDup).unionByName(genesisDup)
     val n = FullHistory.nonAdvancingCount(merged(planted))
     assert(n == 1L, s"expected exactly the planted non-genesis dup: $n")
-    // the decode-free raw-changeset form (what Cli convert runs so the
-    // telemetry never doubles the ingest reads) counts identically
+    // the decode-free raw-changeset form counts identically
     assert(FullHistory.nonAdvancingCountRaw(planted,
       world.storageChangeset) == 1L)
     assert(FullHistory.nonAdvancingCountRaw(world.accountChangeset,
