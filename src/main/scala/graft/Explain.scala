@@ -93,13 +93,13 @@ object Explain {
       "l58_redirect_resolve" -> "redirect-chain resolution (pointer-doubling equi-join rounds over the checkpointed url mapping)",
       "l60_line_dedup" -> "line-level boilerplate dedup (narrow line relation, distinct-then-count doc frequency, line-keyed verdict join, doc-keyed reassembly)",
       "l61_outlinks" -> "HTML outlink extraction (one zero-exchange codegen extract+explode+resolve stage)",
-      "l62_pagerank" -> "PageRank iteration (broadcast scalar relations, partial-aggregated contribution sum)",
+      "l62_pagerank" -> "PageRank iteration (adjacency-carrying node state: explode + partial-aggregated node-keyed sum, dangling scalar as 1-row broadcast, no join)",
       "l63_anchor_text" -> "anchor-text aggregation (dst-keyed agg, two-phase count-distinct)",
       "l64_graph_balls" -> "KMV neighborhood function (dst-keyed sketch join + bounded kmin_longs aggregate per round)",
       "l66_harmonic_centrality" -> "harmonic centrality (node-keyed max-when pivot over the ball frame, closed-form sum)",
       "l68_exact_substr" -> "ExactSubstr span removal (scanned-once positional grams, partial-agg support, gram-keyed verdict join, doc-keyed span merge + reassembly)",
       "l69_frontier_schedule" -> "frontier scheduling (host-partitioned slot window, broadcast delay join)",
-      "l71_personalized_pagerank" -> "personalized PageRank iteration (seed column broadcast-joined, partial-aggregated contributions)",
+      "l71_personalized_pagerank" -> "personalized PageRank iteration (the l62 node-state iteration; seed teleport share computed once as a static column)",
       "l72_recrawl_select" -> "recrawl selection (url-keyed equi-join + narrow CASE, lexicographic date compare)",
       "l73_hits" -> "HITS iteration (two partial-aggregated equi-join sums, exact-integer scores)",
       "l75_sitemap_tree" -> "sitemap tree walk (per-level url-keyed equi-join + typed parse, visited anti-join)",

@@ -46,17 +46,6 @@ object PlanDump {
         array(conv(substring(md5(col("node")), 1, 15), 16, 10)
           .cast("long")).as("hs")).localCheckpoint()
       dump("op_kmv_step", W.neighborhoodStep(e, sketch, 16))
-      // mirror pageRank's own setup: the static relations are
-      // checkpointed once, so the step plan shows what an iteration
-      // actually re-executes
-      val nFrame = nodes.agg(count(lit(1)).cast("double").as("n_nodes"))
-        .localCheckpoint()
-      val outdeg = e.groupBy(col("src"))
-        .agg(count(lit(1)).cast("double").as("outdeg")).localCheckpoint()
-      val ranks = nodes.select(col("node"), lit(1e-3).as("rank"))
-        .localCheckpoint()
-      dump("op_pagerank_step",
-        W.pageRankStep(e, nodes, outdeg, nFrame, ranks, 0.85))
       // the LSH candidate shape (the l02/l21 path) — the entry-level
       // plans are checkpoint-truncated, so the operator plan is the
       // reviewable surface

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Link-graph analytics over the edge relation
@@ -20,28 +20,38 @@ object WebGraph {
     * the node count. Parallel edges collapse first (a page linking
     * twice is one endorsement — the standard reading); self-loops are
     * kept (they contribute to their own node, same as every textbook
-    * formulation that doesn't special-case them).
+    * formulation that doesn't special-case them). A null endpoint is
+    * one node; a null SOURCE's out-edges are dropped, as an SQL
+    * equi-join on the source drops them, so the null node is dangling
+    * and its mass returns through D — no mass leaks either way.
     *
-    * Scale shape — the standard distributed PageRank, with every
-    * scalar kept IN-PLAN:
+    * Scale shape — the iteration runs over ONE node-keyed state relation
+    * (node, dsts, N, rank) that carries each node's deduplicated
+    * out-adjacency as an array (see [[adjacency]]):
     *
-    *  - the contribution pass is one `src`-keyed equi-join of the edge
-    *    relation against the rank relation followed by a `dst`-keyed
-    *    sum; the sum PARTIAL-AGGREGATES, so a hub with a billion
-    *    in-links receives per-partition partial sums, never a single
-    *    fat reducer (in-degree skew is free); out-degree skew is
-    *    bounded by page size (a page has only so many links);
-    *  - N and the per-iteration dangling mass D are 1-row aggregate
-    *    frames joined back by BROADCAST cross-join — no `.count()` /
-    *    `.collect()` on the driver, the whole iteration is one
-    *    declarative plan (the judge's no-driver-loops audit applies to
-    *    rank data; the iteration COUNT is a fixed small constant, the
+    *  - setup is one node-keyed aggregate (adjacency and out-degree
+    *    together) plus the 1-row N count broadcast onto it, materialized
+    *    once;
+    *  - an iteration is two aggregates and no keyed join:
+    *    `explode(dsts)` emits `rank / size(dsts)` per out-edge, unioned
+    *    with one zero row per node that carries the static columns, into
+    *    one node-keyed sum that PARTIAL-AGGREGATES — a hub with a billion
+    *    in-links receives per-partition partial sums, never a single fat
+    *    reducer (the carried array makes it a sort-based aggregate; the
+    *    last iteration drops `dsts` and hash-aggregates); the dangling
+    *    mass D is one global sum over `dsts IS NULL`, joined back as a
+    *    1-row broadcast nested loop. The shuffle carries each node's
+    *    adjacency once per iteration, where a join-based step shuffles
+    *    (or broadcasts) the edge relation besides the contributions.
+    *    Out-degree skew is bounded by page size (a page has only so many
+    *    links), which is also what bounds a `dsts` array;
+    *  - every scalar stays IN-PLAN: no `.count()` / `.collect()` on the
+    *    driver (the iteration COUNT is a fixed small constant, the
     *    usual 10–50 of the literature);
-    *  - each iteration ends in `localCheckpoint` — the l38/l58
-    *    precedent — so lineage stays flat instead of doubling the plan
-    *    depth per iteration (checkpoint materialization is the one
-    *    job per iteration; its shuffle files are the iteration's
-    *    natural barrier).
+    *  - each iteration but the last ends in `localCheckpoint` — the
+    *    l38/l58 precedent — so lineage stays flat instead of doubling
+    *    the plan depth per iteration; the last one is returned as a plan
+    *    because the caller consumes it exactly once.
     *
     * Output: (node, rank) for every node that appears as an edge
     * endpoint. Ranks sum to 1 up to FP rounding.
@@ -51,66 +61,77 @@ object WebGraph {
                dstCol: String = "dst"): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping in (0,1), got $damping")
-    val e = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst")).distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
-    // 1-row scalar relations, broadcast onto row-wise arithmetic below.
-    // BOTH materialize once (localCheckpoint): outdeg and nFrame are
-    // static across iterations, and uncached every iteration re-ran the
-    // edge-wide outdeg aggregate TWICE (contribution join + dangling
-    // anti-join) and the node count once — at 100 TB that is 3·k extra
-    // full-relation passes over a k-iteration run (r21 plan audit).
-    val nFrame = nodes.agg(count(lit(1)).cast("double").as("n_nodes"))
+    val adj = adjacency(edges, srcCol, dstCol)
+    val nFrame = adj.agg(count(lit(1)).cast("double").as("n_nodes"))
+    val state = adj.crossJoin(broadcast(nFrame))
+      .select(col("node"), col("dsts"), col("n_nodes"),
+        (lit(1.0) / col("n_nodes")).as("rank"))
       .localCheckpoint()
-    val outdeg = e.groupBy(col("src"))
-      .agg(count(lit(1)).cast("double").as("outdeg")).localCheckpoint()
-    var ranks = nodes.crossJoin(broadcast(nFrame))
-      .select(col("node"), (lit(1.0) / col("n_nodes")).as("rank"))
-      .localCheckpoint()
-    var it = 0
-    while (it < iterations) {
-      ranks = pageRankStep(e, nodes, outdeg, nFrame, ranks, damping)
-        .localCheckpoint()
-      it += 1
+    powerIterate(state, "n_nodes", iterations) { (contrib, dangling) =>
+      (lit(1.0) - damping) / col("n_nodes") +
+        lit(damping) * (contrib + dangling / col("n_nodes"))
     }
-    ranks
   }
 
-  /** One power-iteration step as a pure plan (package-visible so the
-    * plan shape — scalar relations broadcast, contribution sum
-    * partial-aggregated — can be pinned without peeling checkpoints).
-    *
-    * r21 shape: the zero-contribution nodes are restored by UNIONING a
-    * (node, 0.0) row per node into the contribution stream before the
-    * per-node sum, instead of the old contribs-groupBy THEN
-    * nodes-left-outer-join — that join re-shuffled (and sorted) the
-    * node relation every iteration just to re-attach zeros, where the
-    * union rides the same single exchange the sum already pays
-    * (x + 0.0 is exact in IEEE for every non-negative x, and
-    * contributions are non-negative, so sums are bit-identical).
+  /** The deduplicated out-adjacency of every node, as
+    * (node, dsts: array<string>), from ONE node-keyed aggregate: each
+    * edge emits (src, struct(dst)) and (dst, null), and `collect_set`
+    * of the structs yields the distinct destinations (a struct keeps a
+    * null `dst` that a bare `collect_set` would drop, so an edge into
+    * the null node still counts toward out-degree and delivers its
+    * share). A node that is no edge's source — a destination-only or an
+    * extra node — and the null node, whose out-edges are dropped, get
+    * `dsts = null`: the dangling marker.
     */
-  private[graft] def pageRankStep(e: DataFrame, nodes: DataFrame,
-                                  outdeg: DataFrame, nFrame: DataFrame,
-                                  ranks: DataFrame,
-                                  damping: Double): DataFrame = {
-    val contribs = e
-      .join(ranks, e("src") === ranks("node"))
-      .join(outdeg, Seq("src"))
-      .select(col("dst").as("node"),
-        (col("rank") / col("outdeg")).as("c"))
-    val dangling = ranks.join(outdeg,
-        ranks("node") === outdeg("src"), "left_anti")
-      .agg(coalesce(sum(col("rank")), lit(0.0)).as("dangling_mass"))
-    contribs
-      .unionByName(nodes.select(col("node"), lit(0.0).as("c")))
-      .groupBy(col("node")).agg(sum(col("c")).as("contrib"))
-      .crossJoin(broadcast(dangling))
-      .crossJoin(broadcast(nFrame))
+  private def adjacency(edges: DataFrame, srcCol: String, dstCol: String,
+                        extraNodes: Option[DataFrame] = None): DataFrame = {
+    val e = edges.select(col(srcCol).cast("string").as("src"),
+      col(dstCol).cast("string").as("dst"))
+    val out = e.select(col("src").as("node"),
+      when(col("src").isNotNull, struct(col("dst"))).as("d"))
+    val rows = (e.select(col("dst").as("node")) +: extraNodes.toSeq)
+      .foldLeft(out)((u, x) =>
+        u.unionByName(x.select(col("node")), allowMissingColumns = true))
+    rows.groupBy(col("node")).agg(collect_set(col("d")).as("ds"))
       .select(col("node"),
-        ((lit(1.0) - damping) / col("n_nodes") +
-          lit(damping) * (col("contrib") +
-            col("dangling_mass") / col("n_nodes"))).as("rank"))
+        when(size(col("ds")) > 0, transform(col("ds"), _.getField("dst")))
+          .as("dsts"))
+  }
+
+  /** The power iteration [[pageRank]] and [[personalizedPageRank]]
+    * share, over a materialized state (node, dsts, `static`, rank):
+    * `static` is the teleport column ([[pageRank]]'s N, the
+    * personalized s(v)) and `update(contrib, dangling)` the new rank
+    * from a node's summed in-contribution and the dangling mass D.
+    *
+    * The zero row per node restores the nodes nothing links to and
+    * carries `dsts` and `static` through the sum as the r21 union trick
+    * does (x + 0.0 is exact in IEEE for every non-negative x, and
+    * contributions are non-negative): no join re-attaches them.
+    */
+  private def powerIterate(state0: DataFrame, static: String,
+                           iterations: Int)(
+      update: (Column, Column) => Column): DataFrame = {
+    var state = state0
+    var it = 1
+    while (it <= iterations) {
+      val contribs = state.select(explode(col("dsts")).as("node"),
+        (col("rank") / size(col("dsts"))).as("c"))
+      val dangling = state.filter(col("dsts").isNull)
+        .agg(coalesce(sum(col("rank")), lit(0.0)).as("dangling_mass"))
+      val next = contribs
+        .unionByName(state.select(col("node"), lit(0.0).as("c"),
+          col("dsts"), col(static)), allowMissingColumns = true)
+        .groupBy(col("node")).agg(sum(col("c")).as("contrib"),
+          first(col("dsts"), ignoreNulls = true).as("dsts"),
+          max(col(static)).as(static))
+        .crossJoin(broadcast(dangling))
+        .select(col("node"), col("dsts"), col(static),
+          update(col("contrib"), col("dangling_mass")).as("rank"))
+      state = if (it < iterations) next.localCheckpoint() else next
+      it += 1
+    }
+    state.select(col("node"), col("rank"))
   }
 
   /** HITS hubs-and-authorities (Kleinberg 1999), fixed iterations, in
@@ -140,15 +161,16 @@ object WebGraph {
       col(dstCol).cast("string").as("dst")).distinct().localCheckpoint()
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
+    // a projection of the checkpointed nodes: checkpointing it again
+    // would cost a job and a stored copy for nothing
     var hub = nodes.select(col("node"), lit(1L).as("hub"))
-      .localCheckpoint()
     var auth = nodes.select(col("node"), lit(0L).as("authority"))
     var it = 0
     // zero-score nodes are restored by unioning a (node, 0) row into
-    // the endorsement stream before the per-node sum (the r21
-    // pageRankStep shape — exact in integers): one exchange per
-    // half-iteration instead of a groupBy plus a nodes-side
-    // re-shuffled left-outer join
+    // the endorsement stream before the per-node sum (the r21 union
+    // trick — exact in integers): one exchange per half-iteration
+    // instead of a groupBy plus a nodes-side re-shuffled left-outer
+    // join
     while (it < iterations) {
       auth = e.join(hub, e("src") === hub("node"))
         .select(col("dst").as("node"), col("hub").as("v"))
@@ -178,9 +200,10 @@ object WebGraph {
     *
     * Initial rank = s(v) (all mass starts on the seeds). Ranks sum to
     * 1 every iteration; nodes unreachable from the seed set correctly
-    * converge to 0. Same scale shape as [[pageRank]] — the seed
-    * indicator is one extra broadcast-joined column on the node
-    * relation; scalars stay in-plan; fixed iteration count (a
+    * converge to 0. Same scale shape as [[pageRank]], the same
+    * iteration: s(v) is computed once at setup (the seed set broadcast
+    * onto the node state) and rides the state as a static column, so
+    * the teleport term is the only difference; fixed iteration count (a
     * convergence-tolerance stop would need one scalar read per
     * iteration — the BPE-argmax-style control scalar — and is left to
     * deployments that want it).
@@ -196,66 +219,28 @@ object WebGraph {
                            seedCol: String = "node"): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping in (0,1), got $damping")
-    val e = edges.select(col(srcCol).cast("string").as("src"),
-      col(dstCol).cast("string").as("dst")).distinct().localCheckpoint()
     val seedSet = seeds.select(col(seedCol).cast("string").as("node"))
       .distinct().localCheckpoint()
-    // seeds UNION edge endpoints: a seed not (yet) present in the edge
-    // relation — the seed-frontier case this operator exists for — must
-    // still carry its 1/|S| teleport share, or mass leaks every
-    // iteration and ranks stop summing to 1. Such a seed has no
-    // out-edges, so it is dangling and its mass returns to the seeds
-    // through the D·s(v) term, conserving the invariant.
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node")))
-      .union(seedSet.select(col("node"))).distinct()
     val nSeeds = seedSet.agg(count(lit(1)).cast("double").as("n_seeds"))
-    // s(v) as a column on the node relation: 1/|S| on seeds, 0 off
-    val nodesWithS = nodes
+    // seeds join the edge endpoints as nodes: a seed not (yet) present
+    // in the edge relation — the seed-frontier case this operator exists
+    // for — must still carry its 1/|S| teleport share, or mass leaks
+    // every iteration and ranks stop summing to 1. Such a seed has no
+    // out-edges, so it is dangling and its mass returns to the seeds
+    // through the D·s(v) term, conserving the invariant. s(v) is a
+    // static column: 1/|S| on seeds, 0 off, and the initial rank.
+    val s = when(col("__seed") === 1, lit(1.0) / col("n_seeds"))
+      .otherwise(lit(0.0))
+    val state = adjacency(edges, srcCol, dstCol, Some(seedSet))
       .join(broadcast(seedSet.withColumn("__seed", lit(1))),
         Seq("node"), "left_outer")
       .crossJoin(broadcast(nSeeds))
-      .select(col("node"),
-        when(col("__seed") === 1, lit(1.0) / col("n_seeds"))
-          .otherwise(lit(0.0)).as("s"))
+      .select(col("node"), col("dsts"), s.as("s"), s.as("rank"))
       .localCheckpoint()
-    // static across iterations — materialized once (the r21 pageRank
-    // fix: uncached, every iteration re-ran this edge-wide aggregate
-    // twice)
-    val outdeg = e.groupBy(col("src"))
-      .agg(count(lit(1)).cast("double").as("outdeg")).localCheckpoint()
-    var ranks = nodesWithS.select(col("node"), col("s").as("rank"))
-      .localCheckpoint()
-    var it = 0
-    while (it < iterations) {
-      // zero-contribution nodes are restored by unioning (node, 0.0, s)
-      // rows into the contribution stream before the per-node sum (the
-      // r21 pageRankStep shape; the teleport share s rides the same
-      // aggregate as max — every node's zeros row carries it, so the
-      // old per-iteration nodes-side left-outer re-shuffle disappears)
-      val contribs = e
-        .join(ranks, e("src") === ranks("node"))
-        .join(outdeg, Seq("src"))
-        .select(col("dst").as("node"),
-          (col("rank") / col("outdeg")).as("c"),
-          lit(null).cast("double").as("s"))
-      val dangling = ranks.join(outdeg,
-          ranks("node") === outdeg("src"), "left_anti")
-        .agg(coalesce(sum(col("rank")), lit(0.0)).as("dangling_mass"))
-      ranks = contribs
-        .unionByName(nodesWithS.select(col("node"), lit(0.0).as("c"),
-          col("s")))
-        .groupBy(col("node")).agg(sum(col("c")).as("contrib"),
-          max(col("s")).as("s"))
-        .crossJoin(broadcast(dangling))
-        .select(col("node"),
-          ((lit(1.0) - damping) * col("s") +
-            lit(damping) * (col("contrib") +
-              col("dangling_mass") * col("s"))).as("rank"))
-        .localCheckpoint()
-      it += 1
+    powerIterate(state, "s", iterations) { (contrib, dangling) =>
+      (lit(1.0) - damping) * col("s") +
+        lit(damping) * (contrib + dangling * col("s"))
     }
-    ranks
   }
 
   /** Neighborhood function / ball sizes by KMV sketch — HyperBall

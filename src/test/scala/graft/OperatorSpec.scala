@@ -2427,6 +2427,69 @@ class OperatorSpec extends AnyFunSuite {
       s"mass conserved with off-graph seed, got ${r2.values.sum}")
   }
 
+  test("pageRank / personalizedPageRank equal a plain-Scala power " +
+      "iteration on a random multigraph (self-loops, parallel edges, " +
+      "dangling and destination-only nodes, a null endpoint) at 1, 3 " +
+      "and 10 iterations, under 1 and 7 shuffle partitions") {
+    val rnd = new scala.util.Random(62)
+    val names = (0 until 40).map(i => s"v$i")
+    // sources among v0..v29 only: v30..v39 are destination-only (or
+    // absent); v3 -> v3 twice is a parallel self-loop; the null node
+    // receives from v5 and links to v7 — a null source's edges never
+    // match a rank (SQL equi-join), so the null node is dangling
+    val edges: Seq[(String, String)] =
+      (0 until 200).map(_ =>
+        (names(rnd.nextInt(30)), names(rnd.nextInt(40)))) ++
+        Seq(("v3", "v3"), ("v3", "v3"), ("v1", "v2"), ("v1", "v2"),
+          ("v5", null), (null, "v7"))
+    val seeds = Seq("v0", "v31", "OFF") // OFF: a seed off the graph
+    val d = 0.85
+    type V = Option[String]
+    val adj: Map[V, Set[V]] = edges.filter(_._1 != null)
+      .groupBy(x => Option(x._1))
+      .map { case (u, es) => u -> es.map(x => Option(x._2)).toSet }
+    val endpoints: Set[V] =
+      edges.flatMap { case (a, b) => Seq(Option(a), Option(b)) }.toSet
+    // rank'(v) = (1-d)·t(v) + d·(Σ_{u→v} rank(u)/outdeg(u) + D·t(v))
+    def power(nodes: Set[V], t: V => Double, iters: Int): Map[V, Double] = {
+      var r = nodes.map(v => v -> t(v)).toMap
+      for (_ <- 1 to iters) {
+        val contrib = adj.toSeq.flatMap { case (u, ws) =>
+          ws.toSeq.map(w => w -> r(u) / ws.size) }
+          .groupBy(_._1).map { case (w, cs) => w -> cs.map(_._2).sum }
+        val dangling = r.collect { case (v, x) if !adj.contains(v) => x }.sum
+        r = nodes.map(v => v -> ((1 - d) * t(v) +
+          d * (contrib.getOrElse(v, 0.0) + dangling * t(v)))).toMap
+      }
+      r
+    }
+    val pprNodes = endpoints ++ seeds.map(Option(_))
+    val df = edges.toDF("src", "dst")
+    val seedDf = seeds.toDF("node")
+    def got(r: org.apache.spark.sql.DataFrame): Map[V, Double] = r.collect()
+      .map(x => Option(x.getString(0)) -> x.getDouble(1)).toMap
+    def assertClose(a: Map[V, Double], b: Map[V, Double], what: String) = {
+      assert(a.keySet == b.keySet, s"$what: node sets differ")
+      val worst = a.keys.map(v => math.abs(a(v) - b(v))).max
+      assert(worst <= 1e-12, s"$what: max |Δ| = $worst")
+    }
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    try {
+      for (parts <- Seq(1, 7); iters <- Seq(1, 3, 10)) {
+        spark.conf.set("spark.sql.shuffle.partitions", parts.toString)
+        assertClose(got(WebGraph.pageRank(df, iterations = iters)),
+          power(endpoints, _ => 1.0 / endpoints.size, iters),
+          s"pageRank, $parts partitions, $iters iterations")
+        assertClose(
+          got(WebGraph.personalizedPageRank(df, seedDf, iterations = iters)),
+          power(pprNodes,
+            v => if (v.exists(seeds.contains)) 1.0 / seeds.size else 0.0,
+            iters),
+          s"personalizedPageRank, $parts partitions, $iters iterations")
+      }
+    } finally spark.conf.set("spark.sql.shuffle.partitions", before)
+  }
+
   test("neighborhoodKmv: with k above every ball size the sketch IS the " +
       "exact ball (est_ball = |B(v,r)| for every node and radius); with " +
       "a tiny k the kept hashes are provably the k smallest md5 prefixes " +

@@ -919,30 +919,64 @@ class PlanSpec extends AnyFunSuite {
       s"native kernel missing from plan:\n${plan.take(2500)}")
   }
 
-  test("l62: a PageRank step broadcasts the scalar (N, dangling-mass) " +
-      "relations and partial-aggregates the contribution sum — hub " +
-      "in-degree skew dies in map-side combine") {
-    import org.apache.spark.sql.functions.{col, concat, count, lit}
-    val e = spark.range(2000).select(
-        concat(lit("n"), col("id")).as("src"),
-        concat(lit("n"), col("id") % 7).as("dst"))
-      .localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .localCheckpoint()
-    val nFrame = nodes.agg(count(lit(1)).cast("double").as("n_nodes"))
-    val outdeg = e.groupBy(col("src"))
-      .agg(count(lit(1)).cast("double").as("outdeg"))
-    val ranks = nodes.select(col("node"), lit(0.5).as("rank"))
-      .localCheckpoint()
+  /** The l62 entry's arithmetic graph over doc ids 0 until `n`: every
+    * doc id not divisible by 11 links to 13 hubs and a 101-node spread. */
+  private def l62Edges(n: Long) = {
+    import org.apache.spark.sql.functions.{col, concat, lit}
+    val d = spark.range(n).select(col("id").as("doc_id"))
+      .filter(col("doc_id") % 11 =!= 0)
+    d.select(concat(lit("n"), col("doc_id")).as("src"),
+        concat(lit("n"), col("doc_id") % 13).as("dst"))
+      .unionByName(d.select(concat(lit("n"), col("doc_id")).as("src"),
+        concat(lit("n"), (col("doc_id") * 7 + 3) % 101).as("dst")))
+  }
+
+  test("l62: a PageRank iteration is two aggregates over the " +
+      "adjacency-carrying node state — no hash, sort-merge or anti " +
+      "join; the contribution sum partial-aggregates (hub in-degree " +
+      "skew dies in map-side combine); the dangling scalar is the only " +
+      "broadcast") {
+    // the last iteration is returned unmaterialized over the
+    // checkpointed setup state, so its plan IS the iteration's plan
     val plan = graft.operators.WebGraph
-      .pageRankStep(e, nodes, outdeg, nFrame, ranks, 0.85)
+      .pageRank(l62Edges(2000), iterations = 1)
       .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastNestedLoopJoin") ||
-      plan.contains("BroadcastHashJoin"),
-      s"scalar relations must broadcast:\n${plan.take(2500)}")
-    assert(plan.contains("partial"),
-      s"contribution sum must partial-aggregate:\n${plan.take(2500)}")
+    for (join <- Seq("BroadcastHashJoin", "ShuffledHashJoin",
+        "SortMergeJoin", "LeftAnti"))
+      assert(!plan.contains(join),
+        s"$join inside the iteration:\n${plan.take(4000)}")
+    assert(plan.contains("partial_sum"),
+      s"contribution sum must partial-aggregate:\n${plan.take(4000)}")
+    assert("BroadcastExchange".r.findAllIn(plan).size == 1 &&
+      plan.contains("BroadcastNestedLoopJoin"),
+      s"the 1-row dangling mass must be the only broadcast:\n" +
+        plan.take(4000))
+  }
+
+  test("l62: pageRank over the l62 graph at 3 iterations runs an exact " +
+      "number of Spark jobs") {
+    def countJobs(body: => Unit): Int = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+          jobs.incrementAndGet(); ()
+        }
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        body
+        org.apache.spark.sql.graftshim.Bridge.waitListenerBusEmpty(spark)
+      } finally spark.sparkContext.removeSparkListener(listener)
+      jobs.get()
+    }
+    val e = l62Edges(1000).localCheckpoint()
+    val jobs = countJobs(graft.operators.WebGraph
+      .pageRank(e, iterations = 3).collect())
+    info(s"pageRank(l62 graph, 3 iterations): $jobs jobs")
+    // a host-independent counter: the join-based step ran 35 here, so a
+    // join, a broadcast or a checkpoint coming back moves this exactly
+    assert(jobs == 17, s"pageRank job count moved: $jobs")
   }
 
   test("l63: anchor aggregation shuffles on dst_url only — the " +
