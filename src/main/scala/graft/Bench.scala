@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   // DCE blackhole for the calibration probe (volatile: the JIT cannot
@@ -173,7 +172,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Sessions.envCpus
     // probe-only mode: print idle medians of both per-run probes (for
     // pinning RefLoadProbe/RefMemProbe) without touching Spark
     if (sys.env.contains("SPARK_GRAFT_PROBE_ONLY")) {
@@ -192,15 +191,10 @@ object Bench {
         ms.head}%.4f,"psi_stall_frac":$psi%.4f}""")
       return
     }
-    val spark = Sessions.withDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     // self-calibration: fixed-work CPU probe before the suite (and again
     // after) so the artifact carries its own host-noise signal
-    val calPre = calibrationProbe(cpus.toInt)
+    val calPre = calibrationProbe(cpus)
     // JVM/codegen warmup outside the timed region (otherwise the first
     // query pays ~4s of one-time session cost)
     spark.range(100000).selectExpr("sum(id)").collect()
@@ -237,61 +231,45 @@ object Bench {
     val runsPer = 3
     spin(1L, 1L << 20) // JIT the probe loop before the first entry
     memProbe(sfDir) // JIT + fault in the probe buffer's 128 MiB once
-    val results = SparkEntry.queries.toSeq.sortBy(_._1).map {
-      case (name, fn) =>
-        // a throwing query must be FLAGGED, not averaged in as a
-        // near-instant success that makes the bench look faster
-        var err: Option[String] = None
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          // release any ownership-tagged localCheckpoints the entry's
-          // plan created (packIdStream / epochAllocation discipline) in
-          // a FINALLY — a run whose count() throws would otherwise park
-          // its generation until the lazy ContextCleaner, exactly the
-          // r16 l43 slow-creep mode, and precisely while the bench is
-          // in its flagged state (review r19 finding)
-          var df: org.apache.spark.sql.DataFrame = null
-          try {
-            df = fn(spark, sfDir)
-            df.count()
-          }
-          catch { case e: Throwable =>
-            err = Some(s"${e.getClass.getSimpleName}: " +
-              Option(e.getMessage).getOrElse("").take(120))
-          }
-          finally if (df != null) {
-            try org.apache.spark.sql.graftshim.Bridge
-              .unpersistOwnedPlanCheckpoints(df)
-            catch { case _: Throwable => () }
-          }
-          (System.nanoTime() - t0) / 1e9
+    val results = SparkEntry.registry.keys.toSeq.sorted.map { name =>
+      // a throwing query must be FLAGGED, not averaged in as a
+      // near-instant success that makes the bench look faster
+      var err: Option[String] = None
+      def once(): Double = {
+        val t0 = System.nanoTime()
+        try SparkEntry.run(spark, sfDir, name)(_.count())
+        catch { case e: Throwable =>
+          err = Some(s"${e.getClass.getSimpleName}: " +
+            Option(e.getMessage).getOrElse("").take(120))
         }
-        val cold = once()
-        // per-RUN load probe (r12 hardening): the r12 l36 flag was a
-        // burst arriving AFTER a clean per-entry pre-probe — with a
-        // probe immediately before EVERY measured run, each sample
-        // carries its own contention reading, and the tripwire can
-        // require that every run exceeded its own probe-scaled budget
-        // (a co-tenant burst inflates SOME runs; a real plan regression
-        // inflates ALL of them).
-        val samples = (1 to runsPer).map { _ =>
-          val lp = loadProbe(); val mp = memProbe(sfDir)
-          // PSI around the run itself: Δ(some total)/wall = fraction of
-          // the run's wall the host spent with ≥1 task IO-stalled
-          val p0 = psiIo()
-          val t = once()
-          val p1 = psiIo()
-          val psiStall = (for ((_, t0) <- p0; (_, t1) <- p1)
-            yield (t1 - t0) / 1e6 / math.max(t, 1e-9)).getOrElse(0.0)
-          val psiAvg10 = p0.map(_._1).getOrElse(0.0)
-          (t, lp, mp, psiStall, psiAvg10)
-        }
-        val times = samples.map(_._1).sorted
-        val median = times(runsPer / 2)
-        val load = samples.map(_._2).max
-        val memLoad = samples.map(_._3).max
-        (name, median, times.last - times.head, err, cold, load, memLoad,
-          samples)
+        (System.nanoTime() - t0) / 1e9
+      }
+      val cold = once()
+      // per-RUN load probe (r12 hardening): the r12 l36 flag was a
+      // burst arriving AFTER a clean per-entry pre-probe — with a
+      // probe immediately before EVERY measured run, each sample
+      // carries its own contention reading, and the tripwire can
+      // require that every run exceeded its own probe-scaled budget
+      // (a co-tenant burst inflates SOME runs; a real plan regression
+      // inflates ALL of them).
+      val samples = (1 to runsPer).map { _ =>
+        val lp = loadProbe(); val mp = memProbe(sfDir)
+        // PSI around the run itself: Δ(some total)/wall = fraction of
+        // the run's wall the host spent with ≥1 task IO-stalled
+        val p0 = psiIo()
+        val t = once()
+        val p1 = psiIo()
+        val psiStall = (for ((_, t0) <- p0; (_, t1) <- p1)
+          yield (t1 - t0) / 1e6 / math.max(t, 1e-9)).getOrElse(0.0)
+        val psiAvg10 = p0.map(_._1).getOrElse(0.0)
+        (t, lp, mp, psiStall, psiAvg10)
+      }
+      val times = samples.map(_._1).sorted
+      val median = times(runsPer / 2)
+      val load = samples.map(_._2).max
+      val memLoad = samples.map(_._3).max
+      (name, median, times.last - times.head, err, cold, load, memLoad,
+        samples)
     }
     val qs = results.map { case (k, m, _, _, _, _, _, _) =>
       s"\"" + k + "\":" + m }.mkString("{", ",", "}")
@@ -318,7 +296,7 @@ object Bench {
     }
     val errs = results.collect { case (k, _, _, Some(e), _, _, _, _) =>
       "\"" + k + "\":\"" + jstr(e) + "\"" }.mkString("{", ",", "}")
-    val calPost = calibrationProbe(cpus.toInt)
+    val calPost = calibrationProbe(cpus)
     val calMean = (calPre + calPost) / 2.0
     val cal = f""""calibration_sec":$calMean%.4f,"calibration_pre_sec":$calPre%.4f,"calibration_post_sec":$calPost%.4f"""
     val total = results.map(_._2).sum

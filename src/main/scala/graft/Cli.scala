@@ -107,17 +107,6 @@ object Cli {
       s"$name=${v.fold("n/a")(_.toString)}"
     }.mkString(" ")
 
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val s = Sessions.withDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-
   /** Strict flag parse: an unrecognized/typo'd flag must FAIL, not
     * silently run an unpruned conversion.
     */
@@ -160,20 +149,20 @@ object Cli {
   def main(args: Array[String]): Unit = args.toList match {
     case "convert" :: tablesDir :: outDir :: rest =>
       val (prune, strategy) = parseConvertFlags(rest)
-      val s = session()
+      val s = Sessions.local()
       val (latest, start) = convert(s, tablesDir, outDir,
         prune = prune, strategy = strategy)
       System.err.println(
         s"convert: blocks $start..$latest -> $outDir (strategy $strategy)")
       s.stop()
     case "txbodies" :: tablesDir :: outDir :: Nil =>
-      val s = session()
+      val s = Sessions.local()
       val (files, blocks, bytes) = txbodies(s, tablesDir, outDir)
       System.err.println(
         s"txbodies: $blocks blocks, $bytes bytes in $files files -> $outDir")
       s.stop()
     case "copy" :: inDir :: outDir :: sIn :: sOut :: Nil =>
-      val s = session()
+      val s = Sessions.local()
       spark.CopyFile.convert(s, inDir, outDir, sIn.toInt, sOut.toInt)
       s.stop()
     case "show" :: rest => Show.main(rest.toArray)
@@ -193,7 +182,7 @@ object Cli {
       finally in.close()
     case "asof" :: dir :: strategyStr :: addrHex :: blockStr :: rest
         if rest.size <= 1 =>
-      val s = session()
+      val s = Sessions.local()
       val res = asOf(s, dir, strategyStr.toInt, addrHex, blockStr.toLong,
         rest.headOption)
       res match {
@@ -228,7 +217,7 @@ object Cli {
     case "compact" :: dir :: strategyStr :: rest if rest.size <= 1 =>
       // dataset maintenance: collapse accumulated increments into one
       // fresh range-sorted generation (see StateFiles.compact)
-      val s = session()
+      val s = Sessions.local()
       val target = rest.headOption.map(_.toInt).getOrElse(1)
       val before = spark.StateFiles.manifestField(dir, "files")
         .getOrElse(sys.error(s"no manifest in $dir"))
@@ -239,7 +228,7 @@ object Cli {
     case "check" :: dir :: strategyStr :: Nil =>
       // dataset integrity: decode EVERYTHING, compare against the
       // manifest's committed totals
-      val s = session()
+      val s = Sessions.local()
       val strategy = strategyStr.toInt
       val items = spark.StateFiles.read(s, dir, strategy)
       val counts = items.toDF().groupBy(col("isStorage")).count()

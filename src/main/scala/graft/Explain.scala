@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Writes EXPLAIN.md: formatted physical plans of the flagship queries, so
   * the scan/shuffle/broadcast structure is reviewable without running
@@ -35,11 +34,7 @@ object Explain {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = Sessions.withDefaults(SparkSession.builder())
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(4)
     spark.sparkContext.setLogLevel("ERROR")
     val dir = "/root/testdata/sf0.001"
     val interesting = Seq(

@@ -46,6 +46,23 @@ object Sessions {
     // replace this one silently.
     "spark.sql.extensions" -> "graft.GraftExtensions")
 
+  /** `local[cpus]` with `cpus` shuffle partitions and the UI off, log
+    * level WARN: the session of every command-line main. `cpus` comes
+    * from SPARK_GRAFT_CPUS, default 4.
+    */
+  def local(cpus: Int = envCpus): SparkSession = {
+    val s = withDefaults(SparkSession.builder())
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  /** SPARK_GRAFT_CPUS, default 4. */
+  def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
   /** Fold the graft read defaults into a builder:
     * `Sessions.withDefaults(SparkSession.builder().master(...))`. */
   def withDefaults(b: SparkSession.Builder): SparkSession.Builder =

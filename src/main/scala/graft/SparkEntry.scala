@@ -27,15 +27,38 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map { case (k, v) => k -> v.fn }
 
+  /** Builds entry `name` on `dir`, hands the frame to `use`, and then
+    * releases the ownership-tagged localCheckpoints its plan created
+    * (the packIdStream / epochAllocation discipline) in a FINALLY: a run
+    * whose action throws would otherwise park its checkpoint generation
+    * until the lazy ContextCleaner — the r16 l43 slow-creep mode. The
+    * one run protocol of Bench, Verify and the Dev main.
+    */
+  def run[A](spark: SparkSession, dir: String, name: String)
+            (use: DataFrame => A): A = {
+    var df: DataFrame = null
+    try {
+      df = registry(name).fn(spark, dir)
+      use(df)
+    } finally if (df != null) {
+      try org.apache.spark.sql.graftshim.Bridge
+        .unpersistOwnedPlanCheckpoints(df)
+      catch { case _: Throwable => () }
+    }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted for non-SQL-expressible ops.
     * Late-bound oracles (fixture-path/probe-literal SQL) are evaluated
     * here — i.e. at Verify dump time, after the queries have run, against
-    * the SAME sf dir the queries ran on. A throwing builder degrades ITS
+    * the SAME sf dir the queries ran on. Only the builders of `names`
+    * run: a late builder reads what its entry captured, so one whose
+    * entry was not run can only fail. A throwing builder degrades ITS
     * entry to rows-only instead of killing the whole dump (which would
     * zero every entry's oracle). */
-  def oracleSqlFor(sfDir: String): Map[String, String] =
-    registry.flatMap { case (k, qs) =>
+  def oracleSqlFor(sfDir: String,
+                   names: String => Boolean = _ => true): Map[String, String] =
+    registry.filter { case (k, _) => names(k) }.flatMap { case (k, qs) =>
       qs.oracle.orElse(qs.oracleLate.flatMap { f =>
         val t = scala.util.Try(f(sfDir))
         t.failed.foreach(e => System.err.println(

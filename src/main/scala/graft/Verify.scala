@@ -1,39 +1,29 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Sessions.withDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     // local-iteration filter (unset in the driver's invocation): dump only
     // the named entries, e.g. SPARK_GRAFT_ONLY=l29_bpe_encode,l06_token_count
     val only = sys.env.get("SPARK_GRAFT_ONLY")
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only.fold(SparkEntry.queries)(names =>
-      SparkEntry.queries.view.filterKeys(names).toMap)
+    val selected = only.fold(SparkEntry.registry.keySet)(
+      SparkEntry.registry.keySet.intersect)
     // every selected key MUST produce a result directory: a throwing
     // entry writes a one-row sentinel frame whose schema ("err") can
     // never match its oracle, so the driver's compare records an
     // explicit per-entry failure instead of silently shrinking the
     // registry (r8: st02/st04 vanished from CORRECTNESS rather than
     // appearing as failures — VERDICT item 6)
-    val status = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      var df: org.apache.spark.sql.DataFrame = null
+    val status = selected.toSeq.sorted.map { name =>
       val err: Option[String] =
         try {
-          df = fn(spark, sfDir)
-          df.coalesce(1).write.mode("overwrite")
-            .parquet(s"$outDir/$name")
+          SparkEntry.run(spark, sfDir, name)(_.coalesce(1).write
+            .mode("overwrite").parquet(s"$outDir/$name"))
           None
         } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
@@ -52,13 +42,6 @@ object Verify {
               s"failed: ${e2.getMessage}")
           }
           Some(msg)
-        } finally if (df != null) {
-          // the dump (or the failure) is the plan's last execution —
-          // release ownership-tagged localCheckpoints on BOTH paths
-          // (packIdStream / epochAllocation discipline)
-          try org.apache.spark.sql.graftshim.Bridge
-            .unpersistOwnedPlanCheckpoints(df)
-          catch { case _: Throwable => () }
         }
       name -> err
     }
@@ -74,8 +57,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSqlFor(sfDir)
-      .filter { case (k, _) => only.forall(_.contains(k)) }
+    val json = SparkEntry.oracleSqlFor(sfDir, selected)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // machine-readable per-entry outcome beside the dumps (null = wrote
@@ -89,7 +71,7 @@ object Verify {
         s"${status.size} entries failed (sentinel rows written)")
     // self-check LAST: by here oracle_sql.json and verify_status.json
     // exist, so a loud failure still leaves the driver its inputs
-    val missing = selected.keySet.filterNot(n =>
+    val missing = selected.filterNot(n =>
       new java.io.File(s"$outDir/$n").isDirectory)
     require(missing.isEmpty,
       s"verify self-check: entries with no result dir: $missing")

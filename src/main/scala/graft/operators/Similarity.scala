@@ -549,17 +549,11 @@ object Similarity {
   // median-of-N loop, a Verify pass after a bench, a FRESH JVM running
   // the same suite — should pay the k-means cost ONCE and measure the
   // query path. Two layers, both keyed by (corpus key, fit params):
-  // a JVM-lifetime TrieMap (the Fixtures.generate simCache convention)
-  // over a CROSS-JVM disk cache under target/fitcache (the
+  // graft.Memo over a CROSS-JVM disk cache under target/fitcache (the
   // sigstore/golden write-once convention — doubles serialize via
   // shortest-roundtrip toString, which parseDouble inverts EXACTLY, so
   // a reloaded matrix is bit-identical to the fitted one and every
   // downstream oracle capture is unaffected).
-
-  private val centroidCache = scala.collection.concurrent.TrieMap[
-    (String, Int, Int, Long), Array[Array[Double]]]()
-  private val codebookCache = scala.collection.concurrent.TrieMap[
-    (String, Int, Int, Int, Long), Array[Array[Array[Double]]]]()
 
   private[graft] def fitCachePath(kind: String, key: Product): java.nio.file.Path = {
     val raw = key.productIterator.mkString("_")
@@ -607,7 +601,7 @@ object Similarity {
                          maxIter: Int = 10,
                          seed: Long = 7L): Array[Array[Double]] = {
     val key = (s"$corpusKey|$vecCol", nCentroids, maxIter, seed)
-    centroidCache.getOrElseUpdate(key, {
+    graft.Memo(("similarity.cents", key)) {
       val p = fitCachePath("cents", key)
       diskLoad(p).filter(_.length == nCentroids).getOrElse {
         val fitted = fitIvfCentroids(vectors, nCentroids, vecCol,
@@ -615,7 +609,7 @@ object Similarity {
         diskStore(p, fitted)
         fitted
       }
-    })
+    }
   }
 
   /** [[fitPqCodebooks]] memoized per (corpusKey, params) — in-JVM and
@@ -626,7 +620,7 @@ object Similarity {
                         vecCol: String = "embedding", maxIter: Int = 10,
                         seed: Long = 7L): Array[Array[Array[Double]]] = {
     val key = (s"$corpusKey|$vecCol", m, k, maxIter, seed)
-    codebookCache.getOrElseUpdate(key, {
+    graft.Memo(("similarity.books", key)) {
       val p = fitCachePath("books", key)
       diskLoad(p).filter(_.length == m * k)
         .map(_.grouped(k).toArray)
@@ -635,7 +629,7 @@ object Similarity {
           diskStore(p, fitted.flatten)
           fitted
         }
-    })
+    }
   }
 
   /** PQ code assignment: `array<int>` of one codeword id per subspace.
@@ -945,11 +939,6 @@ object Similarity {
     (rows.map(_.getDouble(1)), rows.map(_.getDouble(2)))
   }
 
-  private val sqBoundsCache = scala.collection.concurrent.TrieMap[
-    String, (Array[Double], Array[Double])]()
-  private val bqMuCache = scala.collection.concurrent.TrieMap[
-    String, Array[Double]]()
-
   /** [[fitSqBounds]] memoized per corpusKey — in-JVM and on disk (the
     * [[ivfCentroidsCached]] convention extended to the aggregate-only
     * fits: deterministic min/max, so cached == fitted; the fit is
@@ -958,7 +947,7 @@ object Similarity {
   def fitSqBoundsCached(corpusKey: String, vectors: => DataFrame,
                         vecCol: String = "embedding")
       : (Array[Double], Array[Double]) =
-    sqBoundsCache.getOrElseUpdate(s"$corpusKey|$vecCol", {
+    graft.Memo(("similarity.sqbounds", s"$corpusKey|$vecCol")) {
       val p = fitCachePath("sqbounds", (s"$corpusKey|$vecCol", 0))
       diskLoad(p).filter(_.length == 2)
         .map(r => (r(0), r(1)))
@@ -967,14 +956,14 @@ object Similarity {
           diskStore(p, Array(f._1, f._2))
           f
         }
-    })
+    }
 
   /** [[fitBqThresholds]] memoized per corpusKey — in-JVM and on disk
     * (same rationale as [[fitSqBoundsCached]]).
     */
   def fitBqThresholdsCached(corpusKey: String, vectors: => DataFrame,
                             vecCol: String = "embedding"): Array[Double] =
-    bqMuCache.getOrElseUpdate(s"$corpusKey|$vecCol", {
+    graft.Memo(("similarity.bqmu", s"$corpusKey|$vecCol")) {
       val p = fitCachePath("bqmu", (s"$corpusKey|$vecCol", 0))
       diskLoad(p).filter(_.length == 1).map(_.head)
         .getOrElse {
@@ -982,7 +971,7 @@ object Similarity {
           diskStore(p, Array(f))
           f
         }
-    })
+    }
 
   /** 8-bit scalar quantization: code_d = clamp₀₂₅₅(⌊(x−lo)/(hi−lo)·255
     * + 0.5⌋) — round-half-up via floor, the rounding both engines

@@ -69,25 +69,14 @@ object Fixtures {
                            nBlocks: Long, totalTxs: Long,
                            dupBlocks: Seq[Long])
 
-  // memo entries carry their owning session: DataFrames from a stopped
-  // SparkContext must be regenerated, not served
-  private val txCache =
-    scala.collection.mutable.Map[(Int, Long), (SparkSession, TxWorld)]()
-
   /** BlockBody/BlockTransaction tables with contiguous tx ranges and
     * planted reorg duplicates (every 10th block has a second body with its
     * own tx range — the duplicate-block case of erigon_extract.c:1852-1869).
     */
   def generateTxWorld(spark: SparkSession, nBlocks: Int = 100,
-                      seed: Long = 7L): TxWorld = synchronized {
-    txCache.get((nBlocks, seed)) match {
-      case Some((owner, w)) if owner eq spark => w
-      case _ =>
-        val w = generateTxWorldUncached(spark, nBlocks, seed)
-        txCache((nBlocks, seed)) = (spark, w)
-        w
-    }
-  }
+                      seed: Long = 7L): TxWorld =
+    graft.Memo(spark, ("fixtures.txWorld", nBlocks, seed))(
+      generateTxWorldUncached(spark, nBlocks, seed))
 
   /** Pure generation result — the tx-bodies ground truth WITHOUT any Spark
     * dependency, usable both to build the DataFrames and to derive oracle
@@ -138,21 +127,11 @@ object Fixtures {
   }
 
   // memoized per (params): Verify/Bench call several queries that share one
-  // world; regeneration is pure driver-side waste. Entries carry their
-  // owning session (see txCache).
-  private val cache =
-    scala.collection.mutable.Map[(Int, Int, Long), (SparkSession, World)]()
-
+  // world; regeneration is pure driver-side waste
   def generate(spark: SparkSession, nAddresses: Int = 30,
-               nBlocks: Int = 200, seed: Long = 42L): World = synchronized {
-    cache.get((nAddresses, nBlocks, seed)) match {
-      case Some((owner, w)) if owner eq spark => w
-      case _ =>
-        val w = parquetBacked(spark, nAddresses, nBlocks, seed)
-        cache((nAddresses, nBlocks, seed)) = (spark, w)
-        w
-    }
-  }
+               nBlocks: Int = 200, seed: Long = 42L): World =
+    graft.Memo(spark, ("fixtures.world", nAddresses, nBlocks, seed))(
+      parquetBacked(spark, nAddresses, nBlocks, seed))
 
   /** Absolute on-disk location of the parquet cache for these params —
     * also the `read_parquet` root the pipeline oracle SQL points DuckDB at
@@ -229,9 +208,6 @@ object Fixtures {
                        accountOracle: Seq[AccountAfter],
                        storageOracle: Seq[StorageAfter])
 
-  private val simCache =
-    scala.collection.mutable.Map[(Int, Int, Long), Sim]()
-
   private def generateUncached(spark: SparkSession, nAddresses: Int,
                nBlocks: Int, seed: Long): World = {
     val sim = simulate(nAddresses, nBlocks, seed)
@@ -249,10 +225,9 @@ object Fixtures {
 
   /** Deterministic pure chain simulation (memoized per params). */
   def simulate(nAddresses: Int, nBlocks: Int,
-               seed: Long = 42L): Sim = synchronized {
-    simCache.getOrElseUpdate((nAddresses, nBlocks, seed),
+               seed: Long = 42L): Sim =
+    graft.Memo(("fixtures.sim", nAddresses, nBlocks, seed))(
       simulateUncached(nAddresses, nBlocks, seed))
-  }
 
   private def simulateUncached(nAddresses: Int, nBlocks: Int,
                                seed: Long): Sim = {

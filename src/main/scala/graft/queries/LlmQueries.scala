@@ -29,23 +29,26 @@ object LlmQueries {
   // real pipeline gets from caching the pairs frame between the pair report
   // and the clustering step. Eager localCheckpoint: the LSH lineage runs
   // once, and the blocks are GC-reclaimed with the frame.
-  // cache entries carry their owning session: a checkpointed frame from a
-  // STOPPED SparkContext would otherwise be served to a new session and
-  // die with IllegalStateException instead of recomputing
-  private val pairsCache = scala.collection.mutable.Map[String,
-    (org.apache.spark.sql.SparkSession, org.apache.spark.sql.DataFrame)]()
   private def lshPairs(s: org.apache.spark.sql.SparkSession,
                        dir: String): org.apache.spark.sql.DataFrame =
-    synchronized {
-      pairsCache.get(dir) match {
-        case Some((owner, df)) if owner eq s => df
-        case _ =>
-          val df = Dedup.minhashLsh(parallelDocs(s, dir), threshold = 0.5)
-            .localCheckpoint()
-          pairsCache(dir) = (s, df)
-          df
-      }
-    }
+    graft.Memo(s, ("l02.pairs", dir))(
+      Dedup.minhashLsh(parallelDocs(s, dir), threshold = 0.5)
+        .localCheckpoint())
+
+  /** The candidate pairs the l02 family's entries used for `dir`, for
+    * the dump-time oracles; a dir the queries never ran degrades the
+    * `reader` entry to rows-only via the builder throw.
+    */
+  private def capturedPairs(dir: String,
+                            reader: String): Array[(Long, Long)] = {
+    val df = graft.Memo
+      .peek[org.apache.spark.sql.DataFrame](("l02.pairs", dir))
+      .getOrElse(sys.error(s"l02/$reader never ran for $dir — no pairs"))
+    val pairs = df.select(col("id_a"), col("id_b")).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    require(pairs.nonEmpty, "no near-dup pairs — VALUES would be empty")
+    pairs
+  }
 
   val all: Map[String, QuerySpec] = Map(
 
@@ -754,7 +757,6 @@ object LlmQueries {
     "l42_quality_classifier" -> QuerySpec(
       (s, dir) => {
         val model = l42ModelCached(s, dir)
-        l42ModelByDir(dir) = model
         graft.operators.QualityClassifier
           .scoreUnits(Tables(s, dir, "documents"), model)
           .orderBy(col("doc_id"))
@@ -1594,8 +1596,7 @@ object LlmQueries {
     "l111_curriculum_schedule" -> QuerySpec(
       (s, dir) => {
         val docs = Tables(s, dir, "documents")
-        // l42ModelCached registers the model in l42ModelByDir itself
-        // (getOrElseUpdate) — the l111Sql late oracle reads it there
+        // the l111Sql late oracle reads this model back (l42Model)
         val model = l42ModelCached(s, dir)
         val margin = graft.functions.expressions.TextHashExpressions
           .hashed_margin_units(coalesce(col("text"), lit("")),
@@ -1920,7 +1921,7 @@ object LlmQueries {
         // merge-table training is l26's operator and fully deterministic
         // per dir — memoized so this entry benches the ENCODE path (the
         // fit-cache stance the ANN entries follow)
-        val merges = l29MergesByDir.getOrElseUpdate(dir,
+        val merges = graft.Memo(("l29.merges", dir))(
           TextAnalysis.bpeTrainMerges(
               Tables(s, dir, "documents").select(col("text")))
             .orderBy(col("rank")).collect()
@@ -2103,7 +2104,7 @@ object LlmQueries {
     "l84_bbpe_encode_ids" -> QuerySpec(
       (s, dir) => {
         ensureBbpeIdsGoldens(s, dir)
-        val merges = l44MergesByDir.getOrElseUpdate(dir,
+        val merges = graft.Memo(("l44.merges", dir))(
           TextAnalysis.bbpeTrainMerges(
               Tables(s, dir, "documents").select(col("text")))
             .orderBy(col("rank")).collect()
@@ -2550,7 +2551,7 @@ object LlmQueries {
     "l44_bbpe_encode" -> QuerySpec(
       (s, dir) => {
         ensureBbpeEncodeGoldens(s, dir)
-        val merges = l44MergesByDir.getOrElseUpdate(dir,
+        val merges = graft.Memo(("l44.merges", dir))(
           TextAnalysis.bbpeTrainMerges(
               Tables(s, dir, "documents").select(col("text")))
             .orderBy(col("rank")).collect()
@@ -5875,8 +5876,7 @@ object LlmQueries {
     * division, so the top-200 cut hashes.
     */
   private[queries] def l111Sql(dir: String): String = {
-    val m = l42ModelByDir.getOrElse(dir,
-      sys.error(s"l111/l42 never ran for $dir — no model captured"))
+    val m = l42Model(dir, "l111/l42")
     val wu = m.weightUnits()
     val bu = m.biasUnits()
     val nz = wu.zipWithIndex.collect { case (v, i) if v != 0L => s"($i, $v)" }
@@ -7088,31 +7088,25 @@ object LlmQueries {
     })
   }
 
-  private val unigramSoftMarkedModelByDir = scala.collection.concurrent
-    .TrieMap[String, graft.operators.TextAnalysis.Unigram.Model]()
   private def unigramSoftMarkedModelCached(
       s: org.apache.spark.sql.SparkSession, dir: String)
       : graft.operators.TextAnalysis.Unigram.Model =
-    unigramSoftMarkedModelByDir.getOrElseUpdate(dir,
+    graft.Memo(("unigram.softMarkedModel", dir))(
       graft.operators.TextAnalysis.unigramTrainSoft(
         Tables(s, dir, "documents").select(col("text")),
         markWords = true))
 
-  private val unigramSoftModelByDir = scala.collection.concurrent
-    .TrieMap[String, graft.operators.TextAnalysis.Unigram.Model]()
   private def unigramSoftModelCached(
       s: org.apache.spark.sql.SparkSession, dir: String)
       : graft.operators.TextAnalysis.Unigram.Model =
-    unigramSoftModelByDir.getOrElseUpdate(dir,
+    graft.Memo(("unigram.softModel", dir))(
       graft.operators.TextAnalysis.unigramTrainSoft(
         Tables(s, dir, "documents").select(col("text"))))
 
-  private val unigramMarkedModelByDir = scala.collection.concurrent
-    .TrieMap[String, graft.operators.TextAnalysis.Unigram.Model]()
   private[queries] def unigramMarkedModelCached(
       s: org.apache.spark.sql.SparkSession, dir: String)
       : graft.operators.TextAnalysis.Unigram.Model =
-    unigramMarkedModelByDir.getOrElseUpdate(dir,
+    graft.Memo(("unigram.markedModel", dir))(
       graft.operators.TextAnalysis.unigramTrain(
         Tables(s, dir, "documents").select(col("text")),
         markWords = true))
@@ -7250,12 +7244,10 @@ object LlmQueries {
   // training is deterministic per dir — memoized so l80 benches the
   // ENCODE path and both entries share one model (the l29 fit-cache
   // stance)
-  private val unigramModelByDir = scala.collection.concurrent.TrieMap[
-    String, graft.operators.TextAnalysis.Unigram.Model]()
   private[queries] def unigramModelCached(s: org.apache.spark.sql.SparkSession,
                                  dir: String)
       : graft.operators.TextAnalysis.Unigram.Model =
-    unigramModelByDir.getOrElseUpdate(dir,
+    graft.Memo(("unigram.model", dir))(
       graft.operators.TextAnalysis.unigramTrain(
         Tables(s, dir, "documents").select(col("text"))))
 
@@ -7524,9 +7516,6 @@ object LlmQueries {
   }
 
   // ---- byte-level BPE goldens (l43/l44) ----
-
-  private val l44MergesByDir = scala.collection.concurrent.TrieMap[
-    String, Seq[(String, String)]]()
 
   private def l43GoldenName(dir: String): String =
     s"l43-bbpe-${graft.operators.TextAnalysis.ByteBpe.NumMerges}-" +
@@ -7938,9 +7927,6 @@ object LlmQueries {
     s"$base/vecs"
   }
 
-  private val s13MuCache =
-    scala.collection.concurrent.TrieMap[Int, Array[Double]]()
-
   /** One measured 1x-vs-10x run of the PQ-ADC and packed-BQ QUERY paths
     * ([[Similarity.pqTopK]] / [[Similarity.bqTopK]]) against fits
     * trained once on the 1x corpus (PQ codebooks via the cross-JVM disk
@@ -7959,7 +7945,7 @@ object LlmQueries {
     val p10 = s13CorpusPath(s, n * 10)
     val books = Similarity.pqCodebooksCached(s"s13corpus:$n",
       s.read.parquet(p1))
-    val mu = s13MuCache.getOrElseUpdate(n,
+    val mu = graft.Memo(("s13.bqMu", n))(
       Similarity.fitBqThresholds(s.read.parquet(p1)))
     def timed(path: String,
         f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame)
@@ -8086,8 +8072,7 @@ object LlmQueries {
   /** l10's dump-time oracle: the checkpointed candidate pairs (tiny —
     * ids only) become VALUES literals and DuckDB independently computes
     * connected components via a recursive CTE (min reachable id = the
-    * cluster / keep decision). Keyed by dir through pairsCache; a dir
-    * the queries never ran degrades to rows-only via the builder throw.
+    * cluster / keep decision), read through [[capturedPairs]].
     */
   private def l10Sql(dir: String): String =
     s"""${lshReachCte(dir)}
@@ -8100,16 +8085,7 @@ object LlmQueries {
     * keeper policies cannot drift from the clustering).
     */
   private def lshReachCte(dir: String): String = {
-    val df = synchronized {
-      pairsCache.get(dir) match {
-        case Some((owner, df)) if !owner.sparkContext.isStopped => df
-        case _ => sys.error(s"l02/l10 never ran for $dir — no pairs")
-      }
-    }
-    val pairs = df.select(col("id_a"), col("id_b")).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    require(pairs.nonEmpty, "no near-dup pairs — VALUES would be empty")
-    val edges = pairs
+    val edges = capturedPairs(dir, "l10")
       .flatMap { case (a, b) => Seq(s"($a::BIGINT,$b::BIGINT)",
         s"($b::BIGINT,$a::BIGINT)") }
       .mkString(", ")
@@ -8125,15 +8101,8 @@ object LlmQueries {
     * documents' sources, unordered-pair canonicalized.
     */
   private def l99Sql(dir: String): String = {
-    val df = synchronized {
-      pairsCache.get(dir) match {
-        case Some((owner, df)) if !owner.sparkContext.isStopped => df
-        case _ => sys.error(s"l02/l99 never ran for $dir — no pairs")
-      }
-    }
-    val pairs = df.select(col("id_a"), col("id_b")).collect()
-      .map(r => s"(${r.getLong(0)}::BIGINT,${r.getLong(1)}::BIGINT)")
-    require(pairs.nonEmpty, "no near-dup pairs — VALUES would be empty")
+    val pairs = capturedPairs(dir, "l99")
+      .map { case (a, b) => s"($a::BIGINT,$b::BIGINT)" }
     s"""WITH pr(id_a, id_b) AS (
        |  SELECT * FROM (VALUES ${pairs.mkString(", ")}) t(id_a, id_b)),
        |s AS (SELECT doc_id, source FROM documents)
@@ -8196,15 +8165,8 @@ object LlmQueries {
     * non-novel iff some pair links it to an old-snapshot (even) doc.
     */
   private def l107Sql(dir: String): String = {
-    val df = synchronized {
-      pairsCache.get(dir) match {
-        case Some((owner, df)) if !owner.sparkContext.isStopped => df
-        case _ => sys.error(s"l02/l107 never ran for $dir — no pairs")
-      }
-    }
-    val pairs = df.select(col("id_a"), col("id_b")).collect()
-      .map(r => s"(${r.getLong(0)}::BIGINT,${r.getLong(1)}::BIGINT)")
-    require(pairs.nonEmpty, "no near-dup pairs — VALUES would be empty")
+    val pairs = capturedPairs(dir, "l107")
+      .map { case (a, b) => s"($a::BIGINT,$b::BIGINT)" }
     s"""WITH pr(id_a, id_b) AS (
        |  SELECT * FROM (VALUES ${pairs.mkString(", ")}) t(id_a, id_b)),
        |ndup AS (SELECT DISTINCT
@@ -8224,15 +8186,8 @@ object LlmQueries {
     * mirror — token mass per source, split novel vs cross-snapshot dup.
     */
   private def l109Sql(dir: String): String = {
-    val df = synchronized {
-      pairsCache.get(dir) match {
-        case Some((owner, df)) if !owner.sparkContext.isStopped => df
-        case _ => sys.error(s"l02/l109 never ran for $dir — no pairs")
-      }
-    }
-    val pairs = df.select(col("id_a"), col("id_b")).collect()
-      .map(r => s"(${r.getLong(0)}::BIGINT,${r.getLong(1)}::BIGINT)")
-    require(pairs.nonEmpty, "no near-dup pairs — VALUES would be empty")
+    val pairs = capturedPairs(dir, "l109")
+      .map { case (a, b) => s"($a::BIGINT,$b::BIGINT)" }
     s"""WITH pr(id_a, id_b) AS (
        |  SELECT * FROM (VALUES ${pairs.mkString(", ")}) t(id_a, id_b)),
        |ndup AS (SELECT DISTINCT
@@ -8309,8 +8264,6 @@ object LlmQueries {
     String, (Array[Double], Array[Double])]()
   private val s10CapturesByDir = scala.collection.concurrent.TrieMap[
     String, (Array[Array[Double]], Array[Double], Array[Double])]()
-  private val l29MergesByDir = scala.collection.concurrent.TrieMap[
-    String, Seq[(String, String)]]()
   private val s11ThresholdsByDir = scala.collection.concurrent.TrieMap[
     String, Array[Double]]()
   private val s16DimsByDir = scala.collection.concurrent.TrieMap[
@@ -8347,16 +8300,14 @@ object LlmQueries {
   private val s06CapturesByDir = scala.collection.concurrent.TrieMap[
     String, (Array[Array[Double]], Array[Array[Array[Double]]])]()
 
-  // l42: the trained model is plain data (weights + bias), so the cache
+  // l42: the trained model is plain data (weights + bias), so the memo
   // is keyed by dir alone — training happens once per JVM per corpus
   // (the fit-cache stance: training is train-time; the entry measures
   // the scoring path), and the SAME model object both scores and feeds
   // the oracle builder, so the two sides can never diverge.
-  private val l42ModelByDir = scala.collection.concurrent.TrieMap[
-    String, graft.operators.QualityClassifier.Model]()
   private[queries] def l42ModelCached(s: org.apache.spark.sql.SparkSession,
                              dir: String): graft.operators.QualityClassifier.Model =
-    l42ModelByDir.getOrElseUpdate(dir,
+    graft.Memo(("l42.model", dir))(
       graft.operators.QualityClassifier.train(
         parallelDocs(s, dir).withColumn("label", col("lang") === "en"),
         labelCol = "label",
@@ -8366,6 +8317,13 @@ object LlmQueries {
         // world unigrams cannot split
         wordNgrams = 2))
 
+  /** The model l42's entry scored `dir` with. */
+  private def l42Model(dir: String, reader: String)
+      : graft.operators.QualityClassifier.Model =
+    graft.Memo.peek[graft.operators.QualityClassifier.Model](
+      ("l42.model", dir))
+      .getOrElse(sys.error(s"$reader never ran for $dir — no model captured"))
+
   /** l42 oracle: DuckDB re-derives every margin from the captured
     * micro-unit weights — same tokenization as every token oracle, the
     * md5-prefix bucket hash, a LEFT JOIN onto the non-zero weights, and
@@ -8373,8 +8331,7 @@ object LlmQueries {
     * bias via the outer join.
     */
   private[queries] def l42Sql(dir: String): String = {
-    val m = l42ModelByDir.getOrElse(dir,
-      sys.error(s"l42 never ran for $dir — no model captured"))
+    val m = l42Model(dir, "l42")
     val wu = m.weightUnits()
     val bu = m.biasUnits()
     val nz = wu.zipWithIndex.collect { case (v, i) if v != 0L => s"($i, $v)" }
@@ -8462,12 +8419,10 @@ object LlmQueries {
     docs.select(id, langTrue.as("lang_true"), text.as("text"))
   }
 
-  private val l77ModelByDir = scala.collection.concurrent.TrieMap[
-    String, graft.operators.LangClassifier.Model]()
   private[queries] def l77ModelCached(s: org.apache.spark.sql.SparkSession,
                                       dir: String)
       : graft.operators.LangClassifier.Model =
-    l77ModelByDir.getOrElseUpdate(dir,
+    graft.Memo(("l77.model", dir))(
       graft.operators.LangClassifier.train(
         langWorld(s, dir).filter(col("lang_true") =!= ""),
         langCol = "lang_true", dim = 1024))
@@ -8507,8 +8462,9 @@ object LlmQueries {
     * margin with the smallest-code tie-break).
     */
   private def l77PickCte(dir: String): String = {
-    val m = l77ModelByDir.getOrElse(dir,
-      sys.error(s"l77 never ran for $dir — no model captured"))
+    val m = graft.Memo.peek[graft.operators.LangClassifier.Model](
+      ("l77.model", dir))
+      .getOrElse(sys.error(s"l77 never ran for $dir — no model captured"))
     val wu = m.weightUnits()
     val bu = m.biasUnits()
     val wvals = (for (ki <- m.langs.indices; bi <- 0 until m.dim
