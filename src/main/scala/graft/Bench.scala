@@ -237,7 +237,7 @@ object Bench {
       var err: Option[String] = None
       def once(): Double = {
         val t0 = System.nanoTime()
-        try SparkEntry.run(spark, sfDir, name)(_.count())
+        try SparkEntry.run(spark, sfDir, name)(_.df.count())
         catch { case e: Throwable =>
           err = Some(s"${e.getClass.getSimpleName}: " +
             Option(e.getMessage).getOrElse("").take(120))

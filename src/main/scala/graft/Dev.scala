@@ -46,7 +46,7 @@ object Dev {
         picked(filters).foreach { name =>
           def once(): (Double, Long) = {
             val t0 = System.nanoTime()
-            val rows = SparkEntry.run(spark, sfDir, name)(_.count())
+            val rows = SparkEntry.run(spark, sfDir, name)(_.df.count())
             ((System.nanoTime() - t0) / 1e9, rows)
           }
           // an erroring entry must not abort the rest of the sweep
@@ -67,7 +67,7 @@ object Dev {
         val spark = session()
         picked(filters).foreach { name =>
           try {
-            val plan = SparkEntry.run(spark, sfDir, name)(_.queryExecution
+            val plan = SparkEntry.run(spark, sfDir, name)(_.df.queryExecution
               .explainString(ExplainMode.fromString("formatted")))
             Files.write(out.resolve(s"${name}_$suffix.txt"),
               plan.getBytes(UTF_8))

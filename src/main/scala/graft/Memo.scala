@@ -36,12 +36,10 @@ import scala.annotation.tailrec
 object Memo {
   private final class Cell(val owner: SparkSession,
                            private[this] var compute: () => Any) {
-    @volatile var done = false
     // a lazy val initializes under this cell's own monitor
     lazy val value: Any = {
       val v = compute()
       compute = null // drop the closure's captures once the value exists
-      done = true
       v
     }
   }
@@ -56,16 +54,6 @@ object Memo {
     */
   def apply[A](spark: SparkSession, key: Any)(compute: => A): A =
     get(spark, key, () => compute)
-
-  /** The value a finished compute left under `key`, computing nothing:
-    * how an oracle builder reads the model or frame its entry used. A
-    * session-bound value whose SparkContext has stopped reads as None.
-    */
-  def peek[A](key: Any): Option[A] =
-    Option(cells.get(key))
-      .filter(c => c.done &&
-        (c.owner == null || !c.owner.sparkContext.isStopped))
-      .map(_.value.asInstanceOf[A])
 
   private def get[A](owner: SparkSession, key: Any,
                      compute: () => Any): A = {

@@ -1,13 +1,18 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.queries.{DeclaredQueries, LlmQueries, PipelineQueries, QuerySpec, StreamingQueries}
+import scala.util.control.NonFatal
+import graft.queries.{DeclaredQueries, LlmQueries, PipelineQueries, QuerySpec,
+  Run, StreamingQueries}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * `queries` is the full operator surface (one entry per implemented operator
   * from SURVEY.md §2 plus the LLM-pipeline extensions); `oracleSql` carries
-  * the DuckDB-equivalent SQL for every SQL-expressible entry.
+  * the DuckDB-equivalent SQL of every entry. Each entry builds a
+  * [[graft.queries.Run]]: its frame and an oracle thunk over the exact
+  * values that frame used, so a run's oracle is taken from that run and
+  * from nothing else ([[runOracle]]).
   */
 object SparkEntry {
 
@@ -21,13 +26,16 @@ object SparkEntry {
     * range-sorted, LAG-re-timestamped state history (SURVEY.md §3.1).
     */
   def entry(spark: SparkSession): DataFrame =
-    registry("p01_full_history").fn(spark, "/root/testdata/sf0.001")
+    registry("p01_full_history").run(spark, "/root/testdata/sf0.001").df
 
-  /** One per implemented operator from SURVEY.md §2. */
+  /** One per implemented operator from SURVEY.md §2: each entry's frame.
+    * Its oracle thunk is never called, so no oracle work is done.
+    */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    registry.map { case (k, v) => k -> v.fn }
+    registry.map { case (k, v) =>
+      k -> ((s: SparkSession, dir: String) => v.run(s, dir).df) }
 
-  /** Builds entry `name` on `dir`, hands the frame to `use`, and then
+  /** Builds entry `name` on `dir`, hands the run to `use`, and then
     * releases the ownership-tagged localCheckpoints its plan created
     * (the packIdStream / epochAllocation discipline) in a FINALLY: a run
     * whose action throws would otherwise park its checkpoint generation
@@ -35,40 +43,51 @@ object SparkEntry {
     * one run protocol of Bench, Verify and the Dev main.
     */
   def run[A](spark: SparkSession, dir: String, name: String)
-            (use: DataFrame => A): A = {
-    var df: DataFrame = null
+            (use: Run => A): A = {
+    var r: Run = null
     try {
-      df = registry(name).fn(spark, dir)
-      use(df)
-    } finally if (df != null) {
+      r = registry(name).run(spark, dir)
+      use(r)
+    } finally if (r != null) {
       try org.apache.spark.sql.graftshim.Bridge
-        .unpersistOwnedPlanCheckpoints(df)
+        .unpersistOwnedPlanCheckpoints(r.df)
       catch { case _: Throwable => () }
     }
   }
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omitted for non-SQL-expressible ops.
-    * Late-bound oracles (fixture-path/probe-literal SQL) are evaluated
-    * here — i.e. at Verify dump time, after the queries have run, against
-    * the SAME sf dir the queries ran on. Only the builders of `names`
-    * run: a late builder reads what its entry captured, so one whose
-    * entry was not run can only fail. A throwing builder degrades ITS
-    * entry to rows-only instead of killing the whole dump (which would
-    * zero every entry's oracle). */
-  def oracleSqlFor(sfDir: String,
-                   names: String => Boolean = _ => true): Map[String, String] =
-    registry.filter { case (k, _) => names(k) }.flatMap { case (k, qs) =>
-      qs.oracle.orElse(qs.oracleLate.flatMap { f =>
-        val t = scala.util.Try(f(sfDir))
-        t.failed.foreach(e => System.err.println(
-          s"[oracle] late SQL for $k failed: ${e.getMessage}"))
-        t.toOption
-      }).map(k -> _)
+  /** Runs `name` on `dir`, hands its frame to `write`, and then evaluates
+    * the run's oracle inside the same [[run]]: after its own frame, and
+    * before the checkpoints the oracle may still read are released (the
+    * l02 family's thunks collect a localCheckpointed pairs frame). The
+    * one path from a run to its oracle, shared by Verify and
+    * [[oracleSql]]: Right(the SQL), or Left(`describe` of what the oracle
+    * threw). An entry or a `write` that throws propagates.
+    */
+  def runOracle(spark: SparkSession, dir: String, name: String)
+               (write: DataFrame => Unit): Either[String, String] =
+    run(spark, dir, name) { r =>
+      write(r.df)
+      try Right(r.oracle())
+      catch { case NonFatal(e) => Left(describe(e)) }
     }
 
-  /** Contract-shaped convenience (driver consumes Verify's dump, which is
-    * dir-explicit; this default matches the driver's gate scale).
+  /** `Class: message` of a failure, the message cut to 500 chars. */
+  def describe(e: Throwable): String =
+    s"${e.getClass.getSimpleName}: ${
+      Option(e.getMessage).getOrElse("").take(500)}"
+
+  /** Contract-shaped convenience: every entry's oracle at the oracle
+    * gate's scale (sf0.01), each taken from a run of its entry through
+    * [[runOracle]] on the active session (or a [[Sessions.local]] one).
+    * The gate itself reads Verify's dump. Throws on the first entry
+    * whose run or oracle fails.
     */
-  def oracleSql: Map[String, String] = oracleSqlFor("/root/testdata/sf0.01")
+  def oracleSql: Map[String, String] = {
+    val dir = "/root/testdata/sf0.01"
+    val spark = SparkSession.getActiveSession.getOrElse(Sessions.local())
+    registry.keys.map { k =>
+      k -> runOracle(spark, dir, k)(_ => ())
+        .fold(msg => sys.error(s"oracle of $k failed: $msg"), identity)
+    }.toMap
+  }
 }

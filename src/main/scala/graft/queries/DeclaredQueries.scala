@@ -5,29 +5,33 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.Tables
 
-/** One declared query: a Spark DataFrame program plus (when SQL-expressible)
-  * the equivalent ANSI SQL the driver runs in DuckDB as the oracle.
+/** One run of a declared query: the Spark DataFrame program's result
+  * and the equivalent ANSI SQL the driver runs in DuckDB as its oracle.
   *
-  * Column names in `fn`'s result MUST match the oracle SQL's column names
-  * exactly (driver sorts columns by name before hashing). Every computed
-  * column is therefore aliased identically on both sides, and every SUM of a
+  * The oracle is evaluated after its own frame (Verify writes `df`, then
+  * calls `oracle()` inside the same run, before the run's checkpoints are
+  * released) and reads only what that run made: a thunk closes over the
+  * exact values its frame used — fitted centroids, codebooks, bounds,
+  * thresholds, the trained model, the near-dup pairs frame it collects —
+  * or derives its literals deterministically from the sf dir. Building a
+  * `Run` does no oracle work until `oracle()` is called.
+  *
+  * Column names in `df` MUST match the oracle SQL's column names exactly
+  * (driver sorts columns by name before hashing). Every computed column
+  * is therefore aliased identically on both sides, and every SUM of a
   * double is cast to DECIMAL(18,2) per-row (order-independent, bit-stable
   * across engines) and the aggregate re-cast to DECIMAL(18,2).
   */
-/** `oracle` is static SQL; `oracleLate` is built AT VERIFY-DUMP TIME (after
-  * every query has run), for oracles that embed runtime-determined
-  * literals — the fixture-cache absolute path, probe lists replayed from
-  * the deterministic simulation, golden-parquet locations. The builder
-  * receives the sf dir and must derive everything DETERMINISTICALLY from
-  * it (nFor(dir), cacheBase, …) or from per-dir keyed captures — never
-  * from shared mutable "last run" state, which would describe a different
-  * world than the query used when Verify runs a subset or reorders
-  * entries. Only one of the two should be set.
-  */
-final case class QuerySpec(
-    fn: (SparkSession, String) => DataFrame,
-    oracle: Option[String],
-    oracleLate: Option[String => String] = None)
+final case class Run(df: DataFrame, oracle: () => String)
+
+/** One declared query: builds its [[Run]] on a session and an sf dir. */
+final case class QuerySpec(run: (SparkSession, String) => Run)
+
+object QuerySpec {
+  /** An entry whose oracle is fixed SQL. */
+  def apply(fn: (SparkSession, String) => DataFrame, sql: String): QuerySpec =
+    QuerySpec((s, dir) => Run(fn(s, dir), () => sql))
+}
 
 /** The reference-parity declared-query surface — SURVEY.md §2.12 Q1–Q12.
   * Each query exercises one operator class of the reference
@@ -67,10 +71,10 @@ object DeclaredQueries {
           .select($"l_orderkey", $"l_linenumber", dec2($"l_quantity").as("qty"))
           .orderBy($"l_orderkey", $"l_linenumber")
       },
-      Some("""SELECT l_orderkey, l_linenumber,
-             |CAST(CAST(l_quantity AS DECIMAL(18,2)) AS DOUBLE) AS qty
-             |FROM lineitem WHERE l_orderkey BETWEEN 100 AND 1000
-             |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+      """SELECT l_orderkey, l_linenumber,
+        |CAST(CAST(l_quantity AS DECIMAL(18,2)) AS DOUBLE) AS qty
+        |FROM lineitem WHERE l_orderkey BETWEEN 100 AND 1000
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // Q2 — P1 projection + F4 predicate.
     "q02_project_predicate" -> QuerySpec(
@@ -81,10 +85,10 @@ object DeclaredQueries {
           .select($"o_orderkey", $"o_custkey", dec2($"o_totalprice").as("price"))
           .orderBy($"o_orderkey")
       },
-      Some("""SELECT o_orderkey, o_custkey,
-             |CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price
-             |FROM orders WHERE o_totalprice > 100000
-             |ORDER BY o_orderkey""".stripMargin)),
+      """SELECT o_orderkey, o_custkey,
+        |CAST(CAST(o_totalprice AS DECIMAL(18,2)) AS DOUBLE) AS price
+        |FROM orders WHERE o_totalprice > 100000
+        |ORDER BY o_orderkey""".stripMargin),
 
     // Q3 — J1 left-outer lookup join + coalesce
     // (code-hash probe, erigon_extract.c:262-292). nation is tiny → broadcast.
@@ -97,9 +101,9 @@ object DeclaredQueries {
           .select($"c_custkey", coalesce($"n_name", lit("UNKNOWN")).as("nation"))
           .orderBy($"c_custkey")
       },
-      Some("""SELECT c_custkey, COALESCE(n_name, 'UNKNOWN') AS nation
-             |FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
-             |ORDER BY c_custkey""".stripMargin)),
+      """SELECT c_custkey, COALESCE(n_name, 'UNKNOWN') AS nation
+        |FROM customer LEFT JOIN nation ON c_nationkey = n_nationkey
+        |ORDER BY c_custkey""".stripMargin),
 
     // Q4 — J2 sequence/equi join + per-group counts
     // (block→transactions join, erigon_extract.c:1934-1965).
@@ -114,10 +118,10 @@ object DeclaredQueries {
                sum2($"l_extendedprice").as("total"))
           .orderBy($"o_orderkey")
       },
-      Some("""SELECT o_orderkey, COUNT(l_linenumber) AS ntx,
-             |CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total
-             |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
-             |GROUP BY o_orderkey ORDER BY o_orderkey""".stripMargin)),
+      """SELECT o_orderkey, COUNT(l_linenumber) AS ntx,
+        |CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM orders JOIN lineitem ON o_orderkey = l_orderkey
+        |GROUP BY o_orderkey ORDER BY o_orderkey""".stripMargin),
 
     // Q5 — J3 ordered union-interleave (2-cursor changeset merge,
     // erigon_extract.c:1578-1594): unionByName + global sort.
@@ -132,11 +136,11 @@ object DeclaredQueries {
                   lit(1).as("is_storage"))
         o.unionByName(l).orderBy($"d", $"k", $"is_storage")
       },
-      Some("""SELECT * FROM (
-             |SELECT o_orderdate AS d, o_orderkey AS k, 0 AS is_storage FROM orders
-             |UNION ALL
-             |SELECT l_shipdate, l_orderkey, 1 FROM lineitem)
-             |ORDER BY d, k, is_storage""".stripMargin)),
+      """SELECT * FROM (
+        |SELECT o_orderdate AS d, o_orderkey AS k, 0 AS is_storage FROM orders
+        |UNION ALL
+        |SELECT l_shipdate, l_orderkey, 1 FROM lineitem)
+        |ORDER BY d, k, is_storage""".stripMargin),
 
     // Q6 — O1/O2 multi-column global sort (transpose comparator,
     // erigon_extract.c:2102-2157).
@@ -147,9 +151,9 @@ object DeclaredQueries {
           .select($"s_suppkey", $"s_nationkey", dec2($"s_acctbal").as("bal"))
           .orderBy($"s_nationkey", $"bal".desc, $"s_suppkey")
       },
-      Some("""SELECT s_suppkey, s_nationkey,
-             |CAST(CAST(s_acctbal AS DECIMAL(18,2)) AS DOUBLE) AS bal
-             |FROM supplier ORDER BY s_nationkey, bal DESC, s_suppkey""".stripMargin)),
+      """SELECT s_suppkey, s_nationkey,
+        |CAST(CAST(s_acctbal AS DECIMAL(18,2)) AS DOUBLE) AS bal
+        |FROM supplier ORDER BY s_nationkey, bal DESC, s_suppkey""".stripMargin),
 
     // Q7 — W1 per-key LAG re-timestamping (erigon_extract.c:2409-2419),
     // the reference's changeset→valid-from semantics conversion.
@@ -167,11 +171,11 @@ object DeclaredQueries {
           .select($"c_custkey", $"o_orderkey", $"valid_from")
           .orderBy($"c_custkey", $"o_orderkey")
       },
-      Some("""SELECT c_custkey, o_orderkey,
-             |LAG(o_orderdate, 1, TIMESTAMP '1970-01-01 00:00:00')
-             |  OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS valid_from
-             |FROM orders JOIN customer ON o_custkey = c_custkey
-             |ORDER BY c_custkey, o_orderkey""".stripMargin)),
+      """SELECT c_custkey, o_orderkey,
+        |LAG(o_orderdate, 1, TIMESTAMP '1970-01-01 00:00:00')
+        |  OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS valid_from
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |ORDER BY c_custkey, o_orderkey""".stripMargin),
 
     // Q8 — A1/A2 aggregation counters (erigon_extract.c:1627-1630, 1968-1972).
     "q08_agg_counters" -> QuerySpec(
@@ -184,11 +188,11 @@ object DeclaredQueries {
                sum2($"l_extendedprice").as("price"))
           .orderBy($"l_returnflag", $"l_linestatus")
       },
-      Some("""SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt,
-             |CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty,
-             |CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS price
-             |FROM lineitem GROUP BY l_returnflag, l_linestatus
-             |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
+      """SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt,
+        |CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty,
+        |CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS price
+        |FROM lineitem GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin),
 
     // Q9 — A3/O1 duplicate-key detection (duplicate full key aborts the
     // reference, erigon_extract.c:2153-2155; here surfaced as a query).
@@ -201,9 +205,9 @@ object DeclaredQueries {
           .filter($"c" > 1)
           .orderBy($"l_orderkey", $"l_linenumber")
       },
-      Some("""SELECT l_orderkey, l_linenumber, COUNT(*) AS c
-             |FROM lineitem GROUP BY l_orderkey, l_linenumber
-             |HAVING COUNT(*) > 1 ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+      """SELECT l_orderkey, l_linenumber, COUNT(*) AS c
+        |FROM lineitem GROUP BY l_orderkey, l_linenumber
+        |HAVING COUNT(*) > 1 ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // Q10 — F2 prune-to-tail filter (-P keeps last 90k blocks,
     // erigon_extract.c:2722-2726): scalar max then range filter.
@@ -217,9 +221,9 @@ object DeclaredQueries {
           .select($"event_id", $"ts", $"user_id")
           .orderBy($"ts", $"event_id")
       },
-      Some("""SELECT event_id, ts, user_id FROM events
-             |WHERE ts >= (SELECT MAX(ts) FROM events) - INTERVAL 7 DAY
-             |ORDER BY ts, event_id""".stripMargin)),
+      """SELECT event_id, ts, user_id FROM events
+        |WHERE ts >= (SELECT MAX(ts) FROM events) - INTERVAL 7 DAY
+        |ORDER BY ts, event_id""".stripMargin),
 
     // Q11 — O3 k-way merge as sorted union (erigon_extract.c:2290-2469).
     "q11_kway_merge" -> QuerySpec(
@@ -231,11 +235,11 @@ object DeclaredQueries {
           .select($"r_regionkey".cast("bigint").as("k"), $"r_name".as("v"))
         n.unionByName(r).orderBy($"k", $"v")
       },
-      Some("""SELECT * FROM (
-             |SELECT CAST(n_nationkey AS BIGINT) AS k, n_name AS v FROM nation
-             |UNION ALL
-             |SELECT CAST(r_regionkey AS BIGINT), r_name FROM region)
-             |ORDER BY k, v""".stripMargin)),
+      """SELECT * FROM (
+        |SELECT CAST(n_nationkey AS BIGINT) AS k, n_name AS v FROM nation
+        |UNION ALL
+        |SELECT CAST(r_regionkey AS BIGINT), r_name FROM region)
+        |ORDER BY k, v""".stripMargin),
 
     // Q12 — W2/A3 monotonicity guard via window (erigon_extract.c:2422-2433).
     "q12_monotonic_guard" -> QuerySpec(
@@ -247,9 +251,9 @@ object DeclaredQueries {
           .withColumn("prev_ts", lag($"ts", 1).over(w))
           .orderBy($"user_id", $"ts", $"event_id")
       },
-      Some("""SELECT user_id, event_id, ts,
-             |LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
-             |FROM events ORDER BY user_id, ts, event_id""".stripMargin)),
+      """SELECT user_id, event_id, ts,
+        |LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
+        |FROM events ORDER BY user_id, ts, event_id""".stripMargin),
 
     // Q13 — X-scale skew handling: two-phase SALTED aggregation must equal
     // the plain aggregate (the oracle runs the plain SQL). Values are
@@ -263,9 +267,9 @@ object DeclaredQueries {
             $"total".cast("double").as("total"))
           .orderBy($"user_id")
       },
-      Some("""SELECT user_id, COUNT(*) AS n,
-             |CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
-             |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin)),
+      """SELECT user_id, COUNT(*) AS n,
+        |CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total
+        |FROM events GROUP BY user_id ORDER BY user_id""".stripMargin),
 
     // Q14 — grouping sets: ROLLUP over the A1 counters (SURVEY §2.5 marks
     // hash-agg variants as Spark-built-in; proven against the oracle).
@@ -278,11 +282,11 @@ object DeclaredQueries {
           .orderBy($"l_returnflag".asc_nulls_first,
             $"l_linestatus".asc_nulls_first)
       },
-      Some("""SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt,
-             |CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-             |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
-             |ORDER BY l_returnflag ASC NULLS FIRST,
-             |  l_linestatus ASC NULLS FIRST""".stripMargin)),
+      """SELECT l_returnflag, l_linestatus, COUNT(*) AS cnt,
+        |CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
+        |FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus)
+        |ORDER BY l_returnflag ASC NULLS FIRST,
+        |  l_linestatus ASC NULLS FIRST""".stripMargin),
 
     // CUBE — q14's rollup widened to all 2^n grouping sets, with
     // grouping_id() disambiguating a rollup NULL from NULL data (the
@@ -300,13 +304,13 @@ object DeclaredQueries {
           .orderBy($"gid", $"l_returnflag".asc_nulls_first,
             $"l_linestatus".asc_nulls_first)
       },
-      Some("""SELECT l_returnflag, l_linestatus,
-             |CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
-             |COUNT(*) AS cnt,
-             |CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
-             |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
-             |ORDER BY gid, l_returnflag ASC NULLS FIRST,
-             |  l_linestatus ASC NULLS FIRST""".stripMargin)),
+      """SELECT l_returnflag, l_linestatus,
+        |CAST(GROUPING(l_returnflag, l_linestatus) AS BIGINT) AS gid,
+        |COUNT(*) AS cnt,
+        |CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS qty
+        |FROM lineitem GROUP BY CUBE(l_returnflag, l_linestatus)
+        |ORDER BY gid, l_returnflag ASC NULLS FIRST,
+        |  l_linestatus ASC NULLS FIRST""".stripMargin),
 
     // Q15 — set operations beyond UNION (SURVEY §2.7 ⊘-builtin):
     // INTERSECT and EXCEPT in one result.
@@ -321,15 +325,15 @@ object DeclaredQueries {
           .unionByName(c.except(sup).withColumn("op", lit("except")))
           .orderBy($"op", $"k")
       },
-      Some("""SELECT * FROM (
-             |SELECT k, 'intersect' AS op FROM
-             |  (SELECT c_nationkey AS k FROM customer
-             |   INTERSECT SELECT s_nationkey FROM supplier)
-             |UNION ALL
-             |SELECT k, 'except' AS op FROM
-             |  (SELECT c_nationkey AS k FROM customer
-             |   EXCEPT SELECT s_nationkey FROM supplier))
-             |ORDER BY op, k""".stripMargin)),
+      """SELECT * FROM (
+        |SELECT k, 'intersect' AS op FROM
+        |  (SELECT c_nationkey AS k FROM customer
+        |   INTERSECT SELECT s_nationkey FROM supplier)
+        |UNION ALL
+        |SELECT k, 'except' AS op FROM
+        |  (SELECT c_nationkey AS k FROM customer
+        |   EXCEPT SELECT s_nationkey FROM supplier))
+        |ORDER BY op, k""".stripMargin),
 
     // Q16 — the SKEWED-JOIN rewrite (Skew.saltedJoin): probe side salted,
     // build side exploded ×salts, join on (key, salt). The oracle is the
@@ -346,10 +350,10 @@ object DeclaredQueries {
             dec2($"l_extendedprice").as("price"))
           .orderBy($"l_orderkey", $"l_linenumber")
       },
-      Some("""SELECT l_orderkey, l_linenumber, s_name,
-             |CAST(CAST(l_extendedprice AS DECIMAL(18,2)) AS DOUBLE) AS price
-             |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
-             |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
+      """SELECT l_orderkey, l_linenumber, s_name,
+        |CAST(CAST(l_extendedprice AS DECIMAL(18,2)) AS DOUBLE) AS price
+        |FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin),
 
     // Q17 — the INTERVAL JOIN rewrite (RangeJoin.intervalJoin): Catalyst
     // plans a bare BETWEEN join as BroadcastNestedLoopJoin (or an
@@ -377,7 +381,7 @@ object DeclaredQueries {
           .select(col("user_id"), col("purchase_id"), col("click_id"))
           .orderBy(col("user_id"), col("purchase_id"), col("click_id"))
       },
-      Some(attributionWindowOracleSql)),
+      attributionWindowOracleSql),
 
     // q17's keyed interval join through the SALTED path — the hot-key
     // remedy for the case RangeJoinRewrite's auto mode deliberately
@@ -405,6 +409,6 @@ object DeclaredQueries {
           .select(col("user_id"), col("purchase_id"), col("click_id"))
           .orderBy(col("user_id"), col("purchase_id"), col("click_id"))
       },
-      Some(attributionWindowOracleSql)),
+      attributionWindowOracleSql),
   )
 }

@@ -91,7 +91,7 @@ object PipelineQueries {
       .map { case (a, sl) => (a, sl, 1L + rnd.nextInt(latestBlock.toInt)) }
   }
 
-  // ---- DuckDB oracles for the pipeline entries (late-bound) ----
+  // ---- DuckDB oracles for the pipeline entries ----
   //
   // The account/storage oracle tables in the fixture parquet cache are an
   // INDEPENDENT driver-side chain simulation (state-after-block per touch),
@@ -100,8 +100,9 @@ object PipelineQueries {
   // (decode → J1 join → union → sort → LAG → genesis drop). The mapping:
   // every oracle entry (address, P) is the history row valid FROM P, and
   // each key group additionally has one pre-first-touch zero-state row
-  // with valid_from_block = 0. Built at dump time because the SQL embeds
-  // the cache's absolute path and simulation-replayed literals.
+  // with valid_from_block = 0. Built by each run's oracle thunk, because
+  // the SQL embeds the cache's absolute path and simulation-replayed
+  // literals.
 
   // every oracle builder derives its world DETERMINISTICALLY from the sf
   // dir (same nFor the query functions use) — no shared "last run" state,
@@ -381,8 +382,8 @@ object PipelineQueries {
 
   private def p05Sql(dir: String): String = {
     val sim = Fixtures.txSimulate(nFor(dir))
-    // empty VALUES is a syntax error, not a degrade — throw instead so
-    // SparkEntry's Try drops just this entry to rows-only
+    // empty VALUES is a syntax error, not a degrade — throw instead, so
+    // Verify records this entry's oracle failure in its status
     require(sim.dups.nonEmpty, "no duplicate blocks in simulation")
     val vals = sim.dups.map(b => s"($b::BIGINT, 2::BIGINT)").mkString(", ")
     s"SELECT * FROM (VALUES $vals) AS t(block, n_bodies) ORDER BY block"
@@ -483,8 +484,7 @@ object PipelineQueries {
     // §3.1 full conversion: changesets+plainstate → sorted, re-timestamped
     // full history (J3+J1+O1/O2+W1+F3 in one DAG, single range exchange).
     "p01_full_history" -> QuerySpec(
-      (s, dir) => hexHistory(history(s, dir)),
-      None, Some(dir => p01Sql(dir))),
+      (s, dir) => Run(hexHistory(history(s, dir)), () => p01Sql(dir))),
 
     // The SAME conversion through the skew-tolerant W1 (range-split scan
     // + boundary fixup, FullHistory.buildSkewTolerant): hash-checked
@@ -492,12 +492,12 @@ object PipelineQueries {
     // the hot-key-safe plan is result-identical to the clustered-window
     // plan.
     "p11_full_history_skew" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         val w = world(s, dir)
         hexHistory(FullHistory.buildSkewTolerant(s, w.accountChangeset,
           w.storageChangeset, w.plainCodeHash, w.plainStateAccounts,
           w.plainStateStorage, w.latestBlock))
-      }, None, Some(dir => p01Sql(dir))),
+      }, () => p01Sql(dir))),
 
     // §2.9 E1: order-dependent encode fold + parallel decode (copy_file
     // round trip as a query). Output is the environment-independent
@@ -506,7 +506,7 @@ object PipelineQueries {
     // and lives in CodecSpec instead, so the driver's literal oracle
     // applies.
     "p02_state_codec" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         import s.implicits._
         val h = history(s, dir)
         val items = StateFormat.asItems(
@@ -516,11 +516,11 @@ object PipelineQueries {
         chunks.map(c => c.numItems)
           .agg(sum(col("value")).as("encoded_items"))
           .withColumn("decoded_total", lit(decodedCount))
-      }, None, Some(dir => p02Sql(dir))),
+      }, () => p02Sql(dir))),
 
     // §3.2/README.md:36-41 flagship read: account state as of a block.
     "p03_account_asof" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         val w = world(s, dir)
         val h = history(s, dir)
         val addr = w.accountOracle.head.addressHex
@@ -529,22 +529,22 @@ object PipelineQueries {
           .select(hex(col("address")).as("address"), col("valid_from_block"),
             col("nonce"), col("incarnation"),
             hex(col("balance")).as("balance"))
-      }, None, Some(dir => p03Sql(dir))),
+      }, () => p03Sql(dir))),
 
     // §3.1 step 2: BlockBody RLP decode (P3) + J2 sequence join + A2 stats
     // + A3 duplicate-block detection, one row of totals.
     "p04_txbodies_stats" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         val w = txWorld(s, dir)
         graft.pipeline.TxBodies.stats(
           graft.pipeline.TxBodies.decodeBodies(w.bodies), w.transactions)
-      }, None, Some(dir => p04Sql(dir))),
+      }, () => p04Sql(dir))),
 
     // S7/S8: write the full history as header-prefixed page-aligned .dat
     // files, read it back page-parallel, report per-file page counts and
     // the row-count equality.
     "p06_dat_roundtrip" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         import s.implicits._
         val w = world(s, dir)
         val h = history(s, dir)
@@ -562,7 +562,7 @@ object PipelineQueries {
         // multi-file layout itself is asserted in PipelineSpec
         Seq((items.count(), back.count()))
           .toDF("rows_written", "rows_read")
-      }, None, Some(dir => p06Sql(dir))),
+      }, () => p06Sql(dir))),
 
     // Source/sink FORMAT breadth: the documents frame round-tripped
     // through every columnar/text/row format Spark ships (parquet, ORC,
@@ -623,11 +623,11 @@ object PipelineQueries {
         rows.toDF("format", "n_rows", "content_ok")
           .orderBy(col("format"))
       },
-      Some("""WITH n AS (SELECT COUNT(*) AS c FROM documents)
-             |SELECT f.fmt AS format, n.c AS n_rows, TRUE AS content_ok
-             |FROM (VALUES ('avro'), ('csv'), ('json'), ('orc'),
-             |      ('parquet')) f(fmt)
-             |CROSS JOIN n ORDER BY format""".stripMargin)),
+      """WITH n AS (SELECT COUNT(*) AS c FROM documents)
+        |SELECT f.fmt AS format, n.c AS n_rows, TRUE AS content_ok
+        |FROM (VALUES ('avro'), ('csv'), ('json'), ('orc'),
+        |      ('parquet')) f(fmt)
+        |CROSS JOIN n ORDER BY format""".stripMargin),
 
     // WARC/WET ingestion round trip: the documents table is encoded as
     // Common Crawl-style multi-member .warc.gz part files (one gzip
@@ -651,10 +651,10 @@ object PipelineQueries {
             col("text"))
           .orderBy(col("url"))
       },
-      Some("""SELECT 'https://example.org/doc/' || doc_id AS url,
-             |  TIMESTAMP '2026-01-01 00:00:00' + to_seconds(doc_id) AS ts,
-             |  text
-             |FROM documents ORDER BY url""".stripMargin)),
+      """SELECT 'https://example.org/doc/' || doc_id AS url,
+        |  TIMESTAMP '2026-01-01 00:00:00' + to_seconds(doc_id) AS ts,
+        |  text
+        |FROM documents ORDER BY url""".stripMargin),
 
     // WARC through the DataSource V2 READ PATH (p18 — the r18 VERDICT
     // stretch item): the same fixture archive p17 round-trips and st13
@@ -678,15 +678,15 @@ object PipelineQueries {
             col("n_bytes"))
           .orderBy(col("url"))
       },
-      Some("""SELECT 'https://example.org/doc/' || doc_id AS url,
-             |  md5(text) AS digest,
-             |  octet_length(encode(text))::BIGINT AS n_bytes
-             |FROM documents ORDER BY url""".stripMargin)),
+      """SELECT 'https://example.org/doc/' || doc_id AS url,
+        |  md5(text) AS digest,
+        |  octet_length(encode(text))::BIGINT AS n_bytes
+        |FROM documents ORDER BY url""".stripMargin),
 
     // Batch as-of join: the flagship lookup as a set operation (one pass
     // for many (address, block) probes).
     "p07_asof_join" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         import s.implicits._
         val w = world(s, dir)
         val h = history(s, dir)
@@ -698,13 +698,13 @@ object PipelineQueries {
             col("valid_from_block"), col("nonce"), col("incarnation"),
             hex(col("balance")).as("balance"))
           .orderBy(col("address"), col("block"))
-      }, None, Some(dir => p07Sql(dir))),
+      }, () => p07Sql(dir))),
 
     // S9 sink + read-back: bodies+txs → varint-framed txbodies part files
     // (reference single-file layout split at record bounds) → decoded rows;
     // one row of equality counters.
     "p08_txbodies_roundtrip" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         import s.implicits._
         val w = txWorld(s, dir)
         val decoded = graft.pipeline.TxBodies.decodeBodies(w.bodies)
@@ -718,12 +718,12 @@ object PipelineQueries {
         val txsRead = back.agg(sum(size(col("txs")))).collect()(0).getLong(0)
         Seq((blocksWritten, back.count(), w.totalTxs, txsRead))
           .toDF("blocks_written", "blocks_read", "txs_expected", "txs_read")
-      }, None, Some(dir => p08Sql(dir))),
+      }, () => p08Sql(dir))),
 
     // Incremental append flow: convert in two block-range increments into
     // ONE dataset (the daily-increment shape), read back the union.
     "p10_dat_append" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         import s.implicits._
         val w = world(s, dir)
         val h = history(s, dir)
@@ -747,7 +747,7 @@ object PipelineQueries {
         org.apache.commons.io.FileUtils
           .deleteDirectory(new java.io.File(out))
         result
-      }, None, Some(dir => p06Sql(dir))),
+      }, () => p06Sql(dir))),
 
     // Dataset COMPACTION — the archive-maintenance lifecycle op: three
     // increments (write + two appends, the daily-increment flow) are
@@ -758,7 +758,7 @@ object PipelineQueries {
     // rows out across the rewrite, that the manifest's file count hit
     // the target, and that the generation id actually changed.
     "p14_dat_compact" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         import s.implicits._
         val w = world(s, dir)
         val h = history(s, dir)
@@ -798,12 +798,12 @@ object PipelineQueries {
         org.apache.commons.io.FileUtils
           .deleteDirectory(new java.io.File(out))
         result
-      }, None, Some(dir => p14Sql(dir))),
+      }, () => p14Sql(dir))),
 
     // Batch STORAGE as-of join: many (address, slot, block) probes in one
     // pass over the slot history.
     "p09_storage_asof_join" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         import s.implicits._
         val w = world(s, dir)
         val h = history(s, dir)
@@ -818,14 +818,14 @@ object PipelineQueries {
             col("valid_from_block"), col("incarnation"),
             hex(col("value")).as("value"))
           .orderBy(col("address"), col("slot"), col("block"))
-      }, None, Some(dir => p09Sql(dir))),
+      }, () => p09Sql(dir))),
 
     // The DSv2 WRITE path as a tracked benchmark entry (p06/p10 measure
     // the function sink): full history → df.write (overwrite: fresh part
     // numbers, two-phase manifest commit, old-snapshot GC) → DSv2 read
     // back; counts-only output so the sim-literal oracle applies.
     "p12_dat_dsv2_write" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         import s.implicits._
         val h = history(s, dir)
         val items = graft.spark.StateFormat.asItems(
@@ -843,7 +843,7 @@ object PipelineQueries {
         org.apache.commons.io.FileUtils
           .deleteDirectory(new java.io.File(out))
         result
-      }, None, Some(dir => p06Sql(dir))),
+      }, () => p06Sql(dir))),
 
     // Scale stress: the flagship conversion DAG (§3.1 — decode → J1 →
     // union → range sort → W1 → F3) executed at 1x and 10x fixture scale
@@ -860,11 +860,11 @@ object PipelineQueries {
     // flat-heap BOUNDS are enforced by PipelineSpec's retrying scale
     // check (and readable from any bench run's stderr).
     "p13_scale_stress" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         import s.implicits._
         val m = measureScaleStress(s, dir)
         Seq((m.rows1, m.rows10)).toDF("rows_1x", "rows_10x")
-      }, None, Some(dir => p13Sql(dir))),
+      }, () => p13Sql(dir))),
 
     // The reference's headline read (README.md:36-41) against a REAL
     // converted archive through the full IO path: 8 point as-of lookups
@@ -878,7 +878,7 @@ object PipelineQueries {
     // first 8 oracle addresses with a version visible at mid-chain, an
     // identical derivation on both sides.
     "p16_point_lookup_pages" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         val w = world(s, dir)
         val arch = archive(s, dir)
         val mid = nFor(dir).toLong / 2
@@ -905,15 +905,15 @@ object PipelineQueries {
             col("block").as("valid_from_block"), col("nonce"),
             col("incarnation"), hex(col("balance")).as("balance"))
           .orderBy(col("address"))
-      }, None, Some(dir => p16Sql(dir))),
+      }, () => p16Sql(dir))),
 
     // A3 surfaced: reorged duplicate block heights.
     "p05_txbodies_dups" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         val w = txWorld(s, dir)
         graft.pipeline.TxBodies.duplicateBlocks(
           graft.pipeline.TxBodies.decodeBodies(w.bodies))
           .orderBy(col("block"))
-      }, None, Some(dir => p05Sql(dir))),
+      }, () => p05Sql(dir))),
   )
 }

@@ -223,10 +223,10 @@ object StreamingQueries {
             col("n_events"), col("total_value"))
           .orderBy(col("day"), col("event_type"))
       },
-      Some("""SELECT date_trunc('day', ts) AS day, event_type,
-             |COUNT(*) AS n_events,
-             |CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-             |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin)),
+      """SELECT date_trunc('day', ts) AS day, event_type,
+        |COUNT(*) AS n_events,
+        |CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin),
 
     // Session windows over the event stream (gap-based sessionization) —
     // the batch form of the Structured Streaming session_window operator.
@@ -239,7 +239,7 @@ object StreamingQueries {
             col("user_id"), col("n_events"))
           .orderBy(col("user_id"), col("session_start"))
       },
-      Some(sessionOracleSql)),
+      sessionOracleSql),
 
     // The PRODUCTION ingestion path: a real file-source readStream over
     // the events table (no MemoryStream, no driver collect), windowed
@@ -264,10 +264,10 @@ object StreamingQueries {
         }
         s.table("st02_sink").orderBy(col("day"), col("event_type"))
       },
-      Some("""SELECT date_trunc('day', ts) AS day, event_type,
-             |COUNT(*) AS n_events,
-             |CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-             |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin)),
+      """SELECT date_trunc('day', ts) AS day, event_type,
+        |COUNT(*) AS n_events,
+        |CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+        |FROM events GROUP BY 1, 2 ORDER BY day, event_type""".stripMargin),
 
     // STREAM-STREAM interval join — the streaming twin of
     // q17_interval_join (batch oracle-identical by construction): two
@@ -307,7 +307,7 @@ object StreamingQueries {
         s.table("st12_sink")
           .orderBy(col("user_id"), col("purchase_id"), col("click_id"))
       },
-      Some(DeclaredQueries.attributionWindowOracleSql)),
+      DeclaredQueries.attributionWindowOracleSql),
 
     // Exact per-type value quantiles — Spark's exact `percentile`
     // (sort + linear interpolation) is the same estimator as DuckDB's
@@ -327,14 +327,14 @@ object StreamingQueries {
             count(lit(1)).as("n"))
           .orderBy(col("event_type"))
       },
-      Some("""SELECT event_type,
-             |  floor(quantile_cont(value, 0.5) * 10000.0::DOUBLE
-             |    + 0.5::DOUBLE) / 10000.0::DOUBLE AS p50,
-             |  floor(quantile_cont(value, 0.9) * 10000.0::DOUBLE
-             |    + 0.5::DOUBLE) / 10000.0::DOUBLE AS p90,
-             |  COUNT(*) AS n
-             |FROM events GROUP BY event_type
-             |ORDER BY event_type""".stripMargin)),
+      """SELECT event_type,
+        |  floor(quantile_cont(value, 0.5) * 10000.0::DOUBLE
+        |    + 0.5::DOUBLE) / 10000.0::DOUBLE AS p50,
+        |  floor(quantile_cont(value, 0.9) * 10000.0::DOUBLE
+        |    + 0.5::DOUBLE) / 10000.0::DOUBLE AS p90,
+        |  COUNT(*) AS n
+        |FROM events GROUP BY event_type
+        |ORDER BY event_type""".stripMargin),
 
     // MERGEABLE approximate quantiles — the sketch-family member w03's
     // exact percentile can't scale to: `percentile` materializes every
@@ -376,10 +376,10 @@ object StreamingQueries {
             col("p90_rank_ok"))
           .orderBy(col("event_type"))
       },
-      Some("""SELECT event_type, COUNT(*)::BIGINT AS n,
-             |  TRUE AS p50_rank_ok, TRUE AS p90_rank_ok
-             |FROM events GROUP BY event_type
-             |ORDER BY event_type""".stripMargin)),
+      """SELECT event_type, COUNT(*)::BIGINT AS n,
+        |  TRUE AS p50_rank_ok, TRUE AS p90_rank_ok
+        |FROM events GROUP BY event_type
+        |ORDER BY event_type""".stripMargin),
 
     // Gap-based SESSIONIZATION through a real file-source stream
     // (complete mode, AvailableNow): the streaming session_window state
@@ -403,7 +403,7 @@ object StreamingQueries {
         s.table("st04_sink")
           .orderBy(col("user_id"), col("session_start"))
       },
-      Some(sessionOracleSql)),
+      sessionOracleSql),
 
     // Streaming EXACT DEDUP: the l01 operator as a continuous query —
     // file-source stream, per-row digest, streaming dropDuplicates
@@ -427,7 +427,7 @@ object StreamingQueries {
     // otherwise make the two sides disagree by design. Production
     // callers keep the default 1000 cap.
     "st06_stream_neardup" -> QuerySpec(
-      (s, dir) => withStateSizing(s) {
+      (s, dir) => Run(withStateSizing(s) {
         LlmQueries.ensureMinhashGolden(s, dir)
         val raw = s.read.parquet(s"$dir/documents.parquet")
         val stream = s.readStream.schema(raw.schema)
@@ -443,8 +443,7 @@ object StreamingQueries {
           .start()
         q.awaitTermination()
         s.table("st06_sink").orderBy(col("id_a"), col("id_b"))
-      }, None,
-      Some(dir => LlmQueries.lshCandSql(LlmQueries.l02GoldenName(dir)))),
+      }, () => LlmQueries.lshCandSql(LlmQueries.l02GoldenName(dir)))),
 
     // Streaming frontier discovery (st16) — the crawl loop's feedback
     // edge: pages arrive as a stream, the l61 native outlink extractor
@@ -480,14 +479,14 @@ object StreamingQueries {
         q.awaitTermination()
         s.table("st16_sink").orderBy(col("dst_url"))
       },
-      Some("""WITH d AS (SELECT doc_id FROM documents)
-             |SELECT DISTINCT dst_url FROM (
-             |  SELECT 'https://hub.example/p' || (doc_id % 13)
-             |    AS dst_url FROM d
-             |  UNION ALL
-             |  SELECT 'https://s' || doc_id || '.example/u/' || doc_id
-             |  FROM d)
-             |ORDER BY dst_url""".stripMargin)),
+      """WITH d AS (SELECT doc_id FROM documents)
+        |SELECT DISTINCT dst_url FROM (
+        |  SELECT 'https://hub.example/p' || (doc_id % 13)
+        |    AS dst_url FROM d
+        |  UNION ALL
+        |  SELECT 'https://s' || doc_id || '.example/u/' || doc_id
+        |  FROM d)
+        |ORDER BY dst_url""".stripMargin),
 
     // Streaming image-gate (st17) — the m10 prune-before-decode sniff
     // over a REAL binaryFile stream (the object-store landing-prefix
@@ -530,16 +529,16 @@ object StreamingQueries {
         q.awaitTermination()
         s.table("st17_sink").orderBy(col("media_id"))
       },
-      Some("""SELECT id AS media_id,
-             |  CASE CAST(id % 5 AS INT)
-             |    WHEN 0 THEN 'bmp' WHEN 1 THEN 'jpeg'
-             |    WHEN 2 THEN 'png' WHEN 3 THEN 'gif' ELSE '' END
-             |    AS img_type,
-             |  (16 + CAST(id % 13 AS INT))::INT AS width,
-             |  (16 + CAST(id % 7 AS INT))::INT AS height
-             |FROM range(200) t(id)
-             |WHERE id % 5 <> 4 AND id % 13 >= 4 AND id % 7 >= 2
-             |ORDER BY media_id""".stripMargin)),
+      """SELECT id AS media_id,
+        |  CASE CAST(id % 5 AS INT)
+        |    WHEN 0 THEN 'bmp' WHEN 1 THEN 'jpeg'
+        |    WHEN 2 THEN 'png' WHEN 3 THEN 'gif' ELSE '' END
+        |    AS img_type,
+        |  (16 + CAST(id % 13 AS INT))::INT AS width,
+        |  (16 + CAST(id % 7 AS INT))::INT AS height
+        |FROM range(200) t(id)
+        |WHERE id % 5 <> 4 AND id % 13 >= 4 AND id % 7 >= 2
+        |ORDER BY media_id""".stripMargin),
 
     // Streaming politeness gate (st18) — the crawl loop CLOSED: st16's
     // discovered frontier (stateless outlink extraction per batch) is
@@ -603,19 +602,19 @@ object StreamingQueries {
         q.awaitTermination()
         s.table("st18_sink").orderBy(col("host"), col("url"))
       },
-      Some("""WITH adm AS (
-             |  SELECT 'h' || (doc_id % 4) || '.example' AS host,
-             |    'https://h' || (doc_id % 4) || '.example/pub/'
-             |      || doc_id AS url,
-             |    CAST(1 + (doc_id % 4) AS DOUBLE) AS delay
-             |  FROM documents WHERE doc_id % 4 <> 3),
-             |r AS (SELECT host, url, delay,
-             |    CAST(row_number() OVER (PARTITION BY host
-             |      ORDER BY url) - 1 AS BIGINT) AS slot
-             |  FROM adm)
-             |SELECT host, url, slot, delay,
-             |  slot * delay AS scheduled_at
-             |FROM r ORDER BY host, url""".stripMargin)),
+      """WITH adm AS (
+        |  SELECT 'h' || (doc_id % 4) || '.example' AS host,
+        |    'https://h' || (doc_id % 4) || '.example/pub/'
+        |      || doc_id AS url,
+        |    CAST(1 + (doc_id % 4) AS DOUBLE) AS delay
+        |  FROM documents WHERE doc_id % 4 <> 3),
+        |r AS (SELECT host, url, delay,
+        |    CAST(row_number() OVER (PARTITION BY host
+        |      ORDER BY url) - 1 AS BIGINT) AS slot
+        |  FROM adm)
+        |SELECT host, url, slot, delay,
+        |  slot * delay AS scheduled_at
+        |FROM r ORDER BY host, url""".stripMargin),
 
     "st03_stream_dedup" -> QuerySpec(
       (s, dir) => {
@@ -633,8 +632,8 @@ object StreamingQueries {
         q.awaitTermination()
         s.table("st03_sink").orderBy(col("digest"))
       },
-      Some("""SELECT DISTINCT md5(text) AS digest
-             |FROM documents ORDER BY digest""".stripMargin)),
+      """SELECT DISTINCT md5(text) AS digest
+        |FROM documents ORDER BY digest""".stripMargin),
 
     // The STREAMING corpus-prep funnel — l28's shape composed over a
     // real file-source stream: quality gate (token floor) → Unicode NFC
@@ -663,12 +662,12 @@ object StreamingQueries {
         q.awaitTermination()
         s.table("st10_sink").orderBy(col("digest"))
       },
-      Some("""SELECT DISTINCT md5(nfc_normalize(text)) AS digest
-             |FROM documents
-             |WHERE len(list_filter(
-             |    regexp_split_to_array(lower(trim(text)), '\s+'),
-             |    t -> length(t) > 0)) >= 5
-             |ORDER BY digest""".stripMargin)),
+      """SELECT DISTINCT md5(nfc_normalize(text)) AS digest
+        |FROM documents
+        |WHERE len(list_filter(
+        |    regexp_split_to_array(lower(trim(text)), '\s+'),
+        |    t -> length(t) > 0)) >= 5
+        |ORDER BY digest""".stripMargin),
 
     // Streaming WARC ingestion — the l28/st10 corpus funnel fed by the
     // REAL crawl input format: a binaryFile file-source stream tails a
@@ -726,29 +725,29 @@ object StreamingQueries {
         }
         s.table("st15_sink").orderBy(col("url"))
       },
-      Some("""WITH p AS (
-             |  SELECT doc_id,
-             |    'HTTPS://' ||
-             |    CASE CAST(doc_id % 5 AS INT)
-             |      WHEN 0 THEN 'WWW.EXAMPLE.ORG'
-             |      WHEN 1 THEN 'CDN.SPAM.TRACKER.NET:8443'
-             |      WHEN 2 THEN 'News.Site.com'
-             |      WHEN 3 THEN 'blog.example.org'
-             |      ELSE 'ads.DoubleClick.net' END ||
-             |    '/doc/' || doc_id || '?b=2&utm_source=feed&a=1#frag'
-             |      AS url,
-             |    '<html><head><title>Doc ' || doc_id
-             |      || '</title><style>p{color:red}</style>'
-             |      || '<script>var x = 1 < 2;</script></head>'
-             |      || '<body><!-- boilerplate --><h1>Doc ' || doc_id
-             |      || '</h1><p>' || text
-             |      || ' &amp;lt; tail &nbsp;&lt;b&gt;</p></body></html>'
-             |      AS body
-             |  FROM documents
-             |  WHERE doc_id % 9 <> 4)
-             |SELECT url, 200 AS http_status, 'utf-8' AS charset,
-             |  md5(body) AS digest
-             |FROM p ORDER BY url""".stripMargin)),
+      """WITH p AS (
+        |  SELECT doc_id,
+        |    'HTTPS://' ||
+        |    CASE CAST(doc_id % 5 AS INT)
+        |      WHEN 0 THEN 'WWW.EXAMPLE.ORG'
+        |      WHEN 1 THEN 'CDN.SPAM.TRACKER.NET:8443'
+        |      WHEN 2 THEN 'News.Site.com'
+        |      WHEN 3 THEN 'blog.example.org'
+        |      ELSE 'ads.DoubleClick.net' END ||
+        |    '/doc/' || doc_id || '?b=2&utm_source=feed&a=1#frag'
+        |      AS url,
+        |    '<html><head><title>Doc ' || doc_id
+        |      || '</title><style>p{color:red}</style>'
+        |      || '<script>var x = 1 < 2;</script></head>'
+        |      || '<body><!-- boilerplate --><h1>Doc ' || doc_id
+        |      || '</h1><p>' || text
+        |      || ' &amp;lt; tail &nbsp;&lt;b&gt;</p></body></html>'
+        |      AS body
+        |  FROM documents
+        |  WHERE doc_id % 9 <> 4)
+        |SELECT url, 200 AS http_status, 'utf-8' AS charset,
+        |  md5(body) AS digest
+        |FROM p ORDER BY url""".stripMargin),
 
     "st13_warc_stream" -> QuerySpec(
       (s, dir) => {
@@ -789,13 +788,13 @@ object StreamingQueries {
         }
         s.table("st13_sink").orderBy(col("url"))
       },
-      Some("""SELECT 'https://example.org/doc/' || doc_id AS url,
-             |  md5(text) AS digest
-             |FROM documents
-             |WHERE len(list_filter(
-             |    regexp_split_to_array(lower(trim(text)), '\s+'),
-             |    t -> length(t) > 0)) >= 5
-             |ORDER BY url""".stripMargin)),
+      """SELECT 'https://example.org/doc/' || doc_id AS url,
+        |  md5(text) AS digest
+        |FROM documents
+        |WHERE len(list_filter(
+        |    regexp_split_to_array(lower(trim(text)), '\s+'),
+        |    t -> length(t) > 0)) >= 5
+        |ORDER BY url""".stripMargin),
 
     // Streaming INFERENCE — the trained l42 classifier scoring a
     // document stream: weights enter the plan as one dim-sized map
@@ -820,8 +819,9 @@ object StreamingQueries {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        s.table("st14_sink").orderBy(col("doc_id"))
-      }, None, Some(dir => LlmQueries.l42Sql(dir))),
+        Run(s.table("st14_sink").orderBy(col("doc_id")),
+          () => LlmQueries.l42Sql(model))
+      }),
 
     // Streaming language-ID inference (st19) — the st14 convention
     // applied to the trained multiclass model: the planted-world
@@ -845,8 +845,9 @@ object StreamingQueries {
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
           .start()
         q.awaitTermination()
-        s.table("st19_sink").orderBy(col("doc_id"))
-      }, None, Some(dir => LlmQueries.l77Sql(dir))),
+        Run(s.table("st19_sink").orderBy(col("doc_id")),
+          () => LlmQueries.l77Sql(model))
+      }),
 
     // Streaming unigram-LM encode (st20) — the third trained-model
     // streaming twin (l42→st14, l77→st19, unigram→st20): per-doc
@@ -857,7 +858,7 @@ object StreamingQueries {
     // replay-trained word → n_pieces golden), so one hash proves
     // streaming-narrow ≡ batch-narrow ≡ the independent replay.
     "st20_unigram_stream" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         val model = LlmQueries.unigramModelCached(s, dir)
         LlmQueries.ensureUnigramEncodeGolden(s, dir)
         val raw = s.read.parquet(s"$dir/documents.parquet")
@@ -873,7 +874,7 @@ object StreamingQueries {
           .start()
         q.awaitTermination()
         s.table("st20_sink").orderBy(col("doc_id"))
-      }, None, Some(dir => LlmQueries.l80OracleSql(dir))),
+      }, () => LlmQueries.l80OracleSql(dir))),
 
     // Streaming token-ID emission (st21) — l83's streaming twin (the
     // st14/st19/st20 convention): whole-document id sequences from the
@@ -884,7 +885,7 @@ object StreamingQueries {
     // order, from the replay-trained word → ids golden), so one hash
     // proves streaming-narrow ≡ batch-narrow ≡ the independent replay.
     "st21_ids_stream" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         val model = LlmQueries.unigramModelCached(s, dir)
         LlmQueries.ensureUnigramIdsGolden(s, dir)
         val raw = s.read.parquet(s"$dir/documents.parquet")
@@ -903,7 +904,7 @@ object StreamingQueries {
           .start()
         q.awaitTermination()
         s.table("st21_sink").orderBy(col("doc_id"))
-      }, None, Some(dir => LlmQueries.l83OracleSql(dir))),
+      }, () => LlmQueries.l83OracleSql(dir))),
 
     // Streaming BYTE-FALLBACK token-ID emission (st22) — l93's
     // streaming twin, the st21 convention: the byte-fallback kernel is
@@ -914,7 +915,7 @@ object StreamingQueries {
     // so this entry shares l93's oracle VERBATIM: one hash proves
     // streaming ≡ batch ≡ replay for the byte-fallback id space too.
     "st22_ids_fb_stream" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         val model = LlmQueries.unigramMarkedModelCached(s, dir)
         LlmQueries.ensureUnigramFbGolden(s, dir)
         val raw = s.read.parquet(s"$dir/documents.parquet")
@@ -935,7 +936,7 @@ object StreamingQueries {
           .start()
         q.awaitTermination()
         s.table("st22_sink").orderBy(col("doc_id"))
-      }, None, Some(dir => LlmQueries.l93Sql(dir))),
+      }, () => LlmQueries.l93Sql(dir))),
 
     // Streaming multimodal pair GATE (st23) — the multimodal ingest
     // front-end as a stream: page extraction (the html_images kernel —
@@ -947,7 +948,7 @@ object StreamingQueries {
     // arithmetic with NO golden surface: one hash proves the streamed
     // extraction+join+score ≡ batch ≡ DuckDB.
     "st23_pair_gate_stream" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         val nImg = 40
         val raw = s.read.parquet(s"$dir/documents.parquet")
         val stream = s.readStream.schema(raw.schema)
@@ -967,7 +968,7 @@ object StreamingQueries {
           .start()
         q.awaitTermination()
         s.table("st23_sink").orderBy(col("src_url"), col("img_idx"))
-      }, None, Some(_ => LlmQueries.st23Sql(40))),
+      }, () => LlmQueries.st23Sql(40))),
 
     // Streaming DELETION gate (st25) — right-to-be-forgotten at INGEST
     // time (the other end of the pipeline from s19/l106's stored-state
@@ -980,7 +981,7 @@ object StreamingQueries {
     // so the gate costs one narrow pass per micro-batch at any corpus
     // size. One hash proves streamed gate ≡ batch predicate ≡ DuckDB.
     "st25_deletion_gate_stream" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         val raw = s.read.parquet(s"$dir/documents.parquet")
         val stream = s.readStream.schema(raw.schema)
           .option("pathGlobFilter", "documents.parquet")
@@ -998,8 +999,7 @@ object StreamingQueries {
           .start()
         q.awaitTermination()
         s.table("st25_sink").orderBy(col("doc_id"))
-      }, None, Some(_ =>
-        """SELECT doc_id, md5(text) AS text_md5 FROM documents
+      }, () => """SELECT doc_id, md5(text) AS text_md5 FROM documents
           |WHERE doc_id % 17 <> 5 ORDER BY doc_id""".stripMargin)),
 
     // Streaming POST-gate pair dedup (st24) — the stateful stage st23
@@ -1017,7 +1017,7 @@ object StreamingQueries {
     // st23 chain reduced to DISTINCT gated keys — pure documents/
     // embeddings arithmetic, no golden surface.
     "st24_pair_dedup_stream" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         val nImg = 40
         val raw = s.read.parquet(s"$dir/documents.parquet")
         val stream = s.readStream.schema(raw.schema)
@@ -1038,7 +1038,7 @@ object StreamingQueries {
           .start()
         q.awaitTermination()
         s.table("st24_sink").orderBy(col("img_url"), col("text"))
-      }, None, Some(_ => LlmQueries.st24Sql(40))),
+      }, () => LlmQueries.st24Sql(40))),
 
     // WARC landing-directory TAIL (st28) — the WarcDataSource
     // MicroBatchStream, the st08 contract on the crawl-archive format:
@@ -1125,14 +1125,14 @@ object StreamingQueries {
           org.apache.commons.io.FileUtils
             .deleteDirectory(new java.io.File(d)))
       },
-      Some("""SELECT 1 AS phase,
-             |  'https://example.org/doc/' || doc_id AS url,
-             |  md5(text) AS digest
-             |FROM documents WHERE doc_id % 2 = 0
-             |UNION ALL
-             |SELECT 2, 'https://example.org/doc/' || doc_id, md5(text)
-             |FROM documents WHERE doc_id % 2 = 1
-             |ORDER BY phase, url""".stripMargin)),
+      """SELECT 1 AS phase,
+        |  'https://example.org/doc/' || doc_id AS url,
+        |  md5(text) AS digest
+        |FROM documents WHERE doc_id % 2 = 0
+        |UNION ALL
+        |SELECT 2, 'https://example.org/doc/' || doc_id, md5(text)
+        |FROM documents WHERE doc_id % 2 = 1
+        |ORDER BY phase, url""".stripMargin),
 
     // Streaming PAIRED-SAMPLE loader (st29) — the multimodal landing
     // loop end-to-end (r19 VERDICT #3): a GROWING paired archive whose
@@ -1286,20 +1286,20 @@ object StreamingQueries {
               .deleteDirectory(new java.io.File(d)))
         }
       },
-      Some("""SELECT 1 AS phase,
-             |  'https://example.org/doc/' || doc_id AS src_url,
-             |  0::BIGINT AS img_idx,
-             |  'img://' || doc_id AS img_url,
-             |  text,
-             |  md5('IMG:' || text) AS media_md5,
-             |  octet_length(encode('IMG:' || text)) AS media_bytes
-             |FROM documents WHERE doc_id % 2 = 0
-             |UNION ALL
-             |SELECT 2, 'https://example.org/doc/' || doc_id, 0::BIGINT,
-             |  'img://' || doc_id, text, md5('IMG:' || text),
-             |  octet_length(encode('IMG:' || text))
-             |FROM documents WHERE doc_id % 2 = 1
-             |ORDER BY phase, src_url""".stripMargin)),
+      """SELECT 1 AS phase,
+        |  'https://example.org/doc/' || doc_id AS src_url,
+        |  0::BIGINT AS img_idx,
+        |  'img://' || doc_id AS img_url,
+        |  text,
+        |  md5('IMG:' || text) AS media_md5,
+        |  octet_length(encode('IMG:' || text)) AS media_bytes
+        |FROM documents WHERE doc_id % 2 = 0
+        |UNION ALL
+        |SELECT 2, 'https://example.org/doc/' || doc_id, 0::BIGINT,
+        |  'img://' || doc_id, text, md5('IMG:' || text),
+        |  octet_length(encode('IMG:' || text))
+        |FROM documents WHERE doc_id % 2 = 1
+        |ORDER BY phase, src_url""".stripMargin),
 
     // Streaming DRIFT twin (st27) — l105's pipeline-monitoring report
     // fed by a LIVE stream (the r18 VERDICT #6 decision: entry-worthy,
@@ -1335,7 +1335,7 @@ object StreamingQueries {
           q.awaitTermination()
         }
         graft.operators.TextAnalysis.driftReport(s.table("st27_sink"))
-      }, Some(LlmQueries.l105Sql)),
+      }, LlmQueries.l105Sql),
 
     // Measured STREAMING scale stress (st26) — the l21/l108 pattern on
     // the st-family's stateful shape (st24's dropDuplicates state): a
@@ -1349,14 +1349,14 @@ object StreamingQueries {
     // bounds live in StreamingSpec's retrying check (the l108
     // convention: environment-dependent bounds never gate the oracle).
     "st26_stream_scale_stress" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         import s.implicits._
         val n = st26NFor(dir)
         val (m, st1, st10) = measureStreamScaleStress(s, dir)
         Seq((n.toLong, n * 10L, m.rows1, m.rows10, st1, st10))
           .toDF("docs_1x", "docs_10x", "keys_1x", "keys_10x",
             "state_1x", "state_10x")
-      }, None, Some(dir => st26Sql(dir))),
+      }, () => st26Sql(dir))),
 
     // The TIME-BOUNDED streaming near-dup contract, proven against the
     // exact-global one on the same deterministic schedule (st06 covers
@@ -1432,20 +1432,20 @@ object StreamingQueries {
           .orderBy(col("contract"), col("id_a"), col("id_b"))
         } finally s.conf.set("spark.sql.shuffle.partitions", prev)
       },
-      Some("""WITH sched(id, grp, tsec) AS (VALUES
-             |  (101, 'a', 0), (102, 'a', 1), (301, 'c', 0),
-             |  (201, 'b', 600), (202, 'b', 601), (401, 'd', 630),
-             |  (302, 'c', 660)),
-             |p AS (SELECT a.id::BIGINT AS id_a, b.id::BIGINT AS id_b,
-             |        abs(a.tsec - b.tsec) AS dt
-             |      FROM sched a JOIN sched b
-             |        ON a.grp = b.grp AND a.id < b.id)
-             |SELECT contract, id_a, id_b FROM (
-             |  SELECT 'exact' AS contract, id_a, id_b FROM p
-             |  UNION ALL
-             |  SELECT 'windowed' AS contract, id_a, id_b FROM p
-             |  WHERE dt <= 60)
-             |ORDER BY contract, id_a, id_b""".stripMargin)),
+      """WITH sched(id, grp, tsec) AS (VALUES
+        |  (101, 'a', 0), (102, 'a', 1), (301, 'c', 0),
+        |  (201, 'b', 600), (202, 'b', 601), (401, 'd', 630),
+        |  (302, 'c', 660)),
+        |p AS (SELECT a.id::BIGINT AS id_a, b.id::BIGINT AS id_b,
+        |        abs(a.tsec - b.tsec) AS dt
+        |      FROM sched a JOIN sched b
+        |        ON a.grp = b.grp AND a.id < b.id)
+        |SELECT contract, id_a, id_b FROM (
+        |  SELECT 'exact' AS contract, id_a, id_b FROM p
+        |  UNION ALL
+        |  SELECT 'windowed' AS contract, id_a, id_b FROM p
+        |  WHERE dt <= 60)
+        |ORDER BY contract, id_a, id_b""".stripMargin),
 
     // The PRODUCTION shape of the incremental pipeline: the account
     // changeset table as a real FILE-SOURCE readStream (no MemoryStream,
@@ -1459,7 +1459,7 @@ object StreamingQueries {
     // sorts each group's batch slice by block, so arrival order within
     // the batch is irrelevant.
     "st05_history_stream" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         import s.implicits._
         val n = PipelineQueries.nFor(dir) // same world as the p-entries
         graft.pipeline.Fixtures.generate(s, n / 4, n) // materialize cache
@@ -1486,7 +1486,7 @@ object StreamingQueries {
           q.awaitTermination()
         }
         s.table("st05_sink").orderBy(col("key"), col("validFrom"))
-      }, None, Some(dir => st05Sql(dir))),
+      }, () => st05Sql(dir))),
 
     // (st01_incremental_history retired: the two-micro-batch
     // batch≡streaming proof it ran — MemoryStream fed by a harness-side
@@ -1508,7 +1508,7 @@ object StreamingQueries {
     // return every appended row; counts are checked against the
     // independent chain simulation's combined changeset size.
     "st07_stream_archive" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         import s.implicits._
         val n = PipelineQueries.nFor(dir)
         graft.pipeline.Fixtures.generate(s, n / 4, n)
@@ -1585,7 +1585,7 @@ object StreamingQueries {
         org.apache.commons.io.FileUtils
           .deleteDirectory(new java.io.File(out + "-ckpt"))
         result
-      }, None, Some(dir => st07Sql(dir))),
+      }, () => st07Sql(dir))),
 
     // The READ side of the §7.5 loop, closing it: a .dat archive is
     // TAILED incrementally by the DSv2 MicroBatchStream — new-file
@@ -1600,7 +1600,7 @@ object StreamingQueries {
     // foreachBatch sink: only fault-tolerant sinks may recover from a
     // checkpoint, and the resumed second drain is exactly a recovery.
     "st08_archive_tail" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         import s.implicits._
         val h = PipelineQueries.history(s, dir)
         val items = graft.spark.StateFormat.asItems(
@@ -1648,7 +1648,7 @@ object StreamingQueries {
         org.apache.commons.io.FileUtils
           .deleteDirectory(new java.io.File(ckpt))
         result
-      }, None, Some(dir => st08Sql(dir))),
+      }, () => st08Sql(dir))),
 
     // The whole §7.5 loop in ONE streaming query, both ends native DSv2:
     // tail a .dat archive (MicroBatchStream) and MIRROR it into a second
@@ -1660,7 +1660,7 @@ object StreamingQueries {
     // and mirrors ONLY the new increment. The mirror must batch-read
     // equal to the source — counts sim-exact.
     "st09_archive_mirror" -> QuerySpec(
-      (s, dir) => {
+      (s, dir) => Run({
         import s.implicits._
         val h = PipelineQueries.history(s, dir)
         val items = graft.spark.StateFormat.asItems(
@@ -1699,7 +1699,7 @@ object StreamingQueries {
         Seq(src, dst, ckpt).foreach(p => org.apache.commons.io.FileUtils
           .deleteDirectory(new java.io.File(p)))
         result
-      }, None, Some(dir => st09Sql(dir))),
+      }, () => st09Sql(dir))),
   )
 
   private def st09Sql(dir: String): String = {

@@ -236,8 +236,8 @@ class JpegSpec extends AnyFunSuite {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    val rows = graft.SparkEntry.registry("m04_jpeg_decode")
-      .fn(spark, "/root/testdata/sf0.001").collect()
+    val rows = graft.SparkEntry.queries("m04_jpeg_decode")(spark,
+      "/root/testdata/sf0.001").collect()
     assert(rows.length == 150)
     assert(rows.forall(_.getBoolean(3)), "a decode fell outside tolerance")
     // and the flag is FALSIFIABLE: a corrupted decode (wrong quant table

@@ -9,8 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.Fixtures
 
 /** The one memo's contract: compute once per key under concurrency,
-  * nesting without deadlock, session ownership, and `peek` for the
-  * dump-time oracle builders.
+  * nesting without deadlock, and session ownership.
   */
 class MemoSpec extends AnyFunSuite {
 
@@ -96,38 +95,5 @@ class MemoSpec extends AnyFunSuite {
       default.foreach(SparkSession.setDefaultSession)
       active.foreach(SparkSession.setActiveSession)
     }
-  }
-
-  test("peek: None before the compute, then the instance the compute made") {
-    val k = key("peek")
-    assert(Memo.peek[AnyRef](k).isEmpty)
-    val v = Memo(k)(new Object)
-    assert(Memo.peek[AnyRef](k).exists(_ eq v))
-
-    // the l42 oracle builder reads the model its entry scored with
-    val dir = "/root/testdata/sf0.001"
-    val model = ("l42.model", dir)
-    assert(Memo.peek[AnyRef](model).isEmpty)
-    SparkEntry.run(spark, dir, "l42_quality_classifier")(_.count())
-    val m = Memo.peek[AnyRef](model)
-    assert(m.isDefined)
-    assert(Memo[AnyRef](model)(fail("retrained")) eq m.get)
-    assert(SparkEntry.oracleSqlFor(dir, Set("l42_quality_classifier"))
-      .contains("l42_quality_classifier"))
-  }
-
-  test("oracleSqlFor runs only the selected builders") {
-    val subset = Set("q01_range_filter", "p01_full_history", "l62_pagerank")
-    val err = new java.io.ByteArrayOutputStream
-    val saved = System.err
-    System.setErr(new java.io.PrintStream(err, true))
-    val sql =
-      try SparkEntry.oracleSqlFor("/root/testdata/sf0.001", subset)
-      finally System.setErr(saved)
-    assert(sql.keySet == subset.filter { n =>
-      val q = SparkEntry.registry(n)
-      q.oracle.isDefined || q.oracleLate.isDefined
-    })
-    assert(!err.toString.contains("[oracle] late SQL"), err.toString)
   }
 }

@@ -6,6 +6,11 @@ Usage: oracle_check.py <sfDir> <verifyOutDir>
 For each query in <verifyOutDir>/oracle_sql.json: run the SQL in DuckDB with
 tables registered as views over <sfDir>/*.parquet, load the Spark result
 parquet, sort columns by name, and compare row counts, dtypes, and values.
+
+Every entry <verifyOutDir>/verify_status.json lists is accounted for: one
+whose status is not null (its run or its oracle threw) is a FAIL, and one
+that has no oracle is a FAIL counted as missing. The last line counts
+ok / fail / missing; the exit code is the number of FAIL lines.
 """
 import json
 import sys
@@ -29,8 +34,19 @@ def main(sf_dir: str, out_dir: str) -> int:
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     with open(f"{out_dir}/oracle_sql.json") as f:
         oracle = json.load(f)
-    n_fail = 0
+    with open(f"{out_dir}/verify_status.json") as f:
+        status = json.load(f)
+    n_ok = n_fail = n_missing = 0
+    for name in sorted(status):
+        if status[name] is not None:
+            print(f"FAIL {name}: status {status[name]}")
+            n_fail += 1
+        elif name not in oracle:
+            print(f"FAIL {name}: no oracle")
+            n_missing += 1
     for name, sql in sorted(oracle.items()):
+        if status.get(name) is not None:
+            continue
         try:
             want = canon(con.sql(sql).df())
             got = canon(pd.read_parquet(f"{out_dir}/{name}"))
@@ -65,7 +81,9 @@ def main(sf_dir: str, out_dir: str) -> int:
             n_fail += 1
         else:
             print(f"ok   {name} ({len(want)} rows)")
-    return n_fail
+            n_ok += 1
+    print(f"ok {n_ok} / fail {n_fail} / missing {n_missing}")
+    return n_fail + n_missing
 
 
 if __name__ == "__main__":
