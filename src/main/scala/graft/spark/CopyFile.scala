@@ -20,40 +20,21 @@ import org.apache.spark.sql.SparkSession
 object CopyFile {
 
   /** Library form: convert a dataset between strategies, preserving the
-    * manifest's block range. Returns (accounts, storageSlots) written.
+    * manifest's block range.
     */
   def convert(spark: SparkSession, inDir: String, outDir: String,
               strategyIn: Int, strategyOut: Int): Unit = {
-    val (blockStart, blockEnd) = manifestBlockRange(inDir)
     val items = StateFiles.read(spark, inDir, strategyIn)
-    StateFiles.write(items, outDir, strategyOut, blockStart, blockEnd)
-  }
-
-  private def manifestBlockRange(dir: String): (Long, Long) = {
-    val p = java.nio.file.Paths.get(dir, "_manifest.json")
-    if (!java.nio.file.Files.exists(p)) (0L, 0L)
-    else {
-      val s = new String(java.nio.file.Files.readAllBytes(p),
-        java.nio.charset.StandardCharsets.UTF_8)
-      def field(name: String): Long = {
-        val m = s"""\"$name\":(-?\\d+)""".r.findFirstMatchIn(s)
-        m.map(_.group(1).toLong).getOrElse(0L)
-      }
-      (field("block_start"), field("block_end"))
-    }
+    StateFiles.write(items, outDir, strategyOut,
+      StateFiles.manifestField(inDir, "block_start").getOrElse(0L),
+      StateFiles.manifestField(inDir, "block_end").getOrElse(0L))
   }
 
   def main(args: Array[String]): Unit = {
     require(args.length == 4,
       "usage: CopyFile <inDir> <outDir> <strategyIn> <strategyOut>")
     val Array(inDir, outDir, sIn, sOut) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.Sessions.withDefaults(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local()
     convert(spark, inDir, outDir, sIn.toInt, sOut.toInt)
     spark.stop()
   }

@@ -9,8 +9,9 @@ import graft.model.StateItem
 /** S7/S8 — the reference's `.dat` file format as a Spark source/sink
   * (erigon_extract.c:1340-1428 reader, 824-1269 writer, 2266-2288 header).
   *
-  * Sink: one `part-NNNNN.dat` per partition, each a 256-byte header plus
-  * page-aligned opcode stream (the merge output layout, page_shift 12).
+  * Sink: one `part-NNNNN.dat` per non-empty partition, each a 256-byte
+  * header plus page-aligned opcode stream (the merge output layout,
+  * page_shift 12), committed by [[publish]].
   *
   * Source: files are NOT read sequentially. Because the writer restarts
   * compression state at every 4 KiB page boundary, every page is
@@ -47,12 +48,13 @@ object StateFiles {
   private[spark] val PairSuffixLen: Int = PageSize
 
   /** Write a sorted Dataset[StateItem] as header-prefixed page-aligned .dat
-    * files, one per partition (partition ordering = caller's sort).
+    * files, one per non-empty partition (partition ordering = caller's
+    * sort), replacing whatever snapshot `dir` held ([[publish]]).
     */
   def write(items: Dataset[StateItem], dir: String, strategy: Int,
             blockStart: Long = 0L, blockEnd: Long = 0L): Unit =
-    writeCore(items, dir, strategy, blockStart, blockEnd, partBase = 0,
-      mergeManifest = false, streamBatchId = -1L)(identity)
+    writeCore(items, dir, strategy, blockStart, blockEnd,
+      overwrite = true)(identity)
 
   /** [[write]] of items paired with the W1 window's non-advancing flag
     * ([[graft.pipeline.FullHistory.buildFlagged]]): each encode task counts
@@ -63,8 +65,7 @@ object StateFiles {
                                   dir: String, strategy: Int,
                                   blockStart: Long = 0L,
                                   blockEnd: Long = 0L): Unit =
-    writeCore(rows, dir, strategy, blockStart, blockEnd, partBase = 0,
-      mergeManifest = false, streamBatchId = -1L,
+    writeCore(rows, dir, strategy, blockStart, blockEnd, overwrite = true,
       flag = Some((r: (StateItem, Boolean)) => r._2))(_._1)
 
   /** Incremental APPEND: new part files after the existing ones, manifest
@@ -73,15 +74,8 @@ object StateFiles {
     * as additional files). Reads stay pruned and correct because the
     * `.idx` bounds are true per-page min/max for ANY order — overlapping
     * address ranges across increments just mean more splits match.
-    *
-    * COMMIT PROTOCOL: the manifest's `file_list` is the authoritative
-    * snapshot — the DSv2 source reads exactly those files when a manifest
-    * is present — and the manifest is replaced ATOMICALLY as the LAST
-    * step. A crash mid-append leaves orphan part files on disk but
-    * readers still see the previous consistent snapshot; a retried
-    * append commits past the orphans (they stay unreferenced garbage, no
-    * duplicated rows). Single-writer: concurrent appends to one dataset
-    * are not supported (no lock service here).
+    * Committed through [[publish]]; single-writer: concurrent appends to
+    * one dataset are not supported (no lock service here).
     *
     * `streamBatchId` (optional, for streaming foreachBatch writers):
     * recorded in the manifest ATOMICALLY with the append, so a
@@ -93,32 +87,22 @@ object StateFiles {
   def append(items: Dataset[StateItem], dir: String, strategy: Int,
              blockStart: Long = 0L, blockEnd: Long = 0L,
              streamBatchId: Long = -1L, streamId: String = ""): Unit = {
-    val partBase = nextPartBase(dir)
-    // a dataset with part files but NO manifest is a torn write — its
-    // strategy and committed contents are unknowable; refuse rather than
-    // risk a mixed-strategy dataset that decodes as garbage
-    require(partBase == 0 || manifestField(dir, "strategy").isDefined,
-      s"$dir has part files but no manifest — cannot append to a torn " +
-        "dataset")
-    manifestField(dir, "strategy").foreach(s0 =>
-      require(s0 == strategy.toLong,
-        s"append strategy $strategy != dataset strategy $s0"))
+    requireAppendable(dir, strategy)
     // a streaming append must carry its writer identity: the batch id is
     // only monotone WITHIN one linear stream, so an id without an owner
     // cannot support the replay-skip contract
     require(streamBatchId < 0L || streamId.nonEmpty,
       "streaming append (streamBatchId >= 0) requires a streamId — " +
         "use StateFiles.streamIdentity(checkpointDir)")
-    // ownership check BEFORE any part file is written (commitManifest
-    // re-checks as a backstop, but by then orphans would exist)
+    // ownership check BEFORE any part file is staged (commitManifest
+    // re-checks as a backstop, but by then the job would have run)
     if (streamId.nonEmpty)
       manifestStringField(dir, "stream_id").foreach(owner =>
         require(owner == streamId,
           s"dataset $dir is stream-owned by $owner; " +
             s"refusing append from stream $streamId"))
-    writeCore(items, dir, strategy, blockStart, blockEnd, partBase,
-      mergeManifest = true, streamBatchId = streamBatchId,
-      streamId = streamId)(identity)
+    writeCore(items, dir, strategy, blockStart, blockEnd, overwrite = false,
+      streamBatchId = streamBatchId, streamId = streamId)(identity)
   }
 
   /** COMPACTION — the archive-maintenance op the incremental flows
@@ -144,16 +128,16 @@ object StateFiles {
     *  - only then is the old generation's files deleted (on an object
     *    store this delete would be a grace-period GC).
     *
-    * Crash safety: death before the swap leaves orphan new-generation
-    * parts invisible to the manifest (the established orphan contract);
-    * death after the swap but mid-GC leaves unreferenced old files —
-    * harmless garbage, re-deletable.
+    * That is [[publish]]'s overwrite, so crash safety is its contract:
+    * death before the swap leaves the old snapshot intact; death after
+    * the swap but mid-GC leaves unreferenced old files — harmless
+    * garbage, deleted by the next overwrite.
     */
   def compact(spark: SparkSession, dir: String, strategy: Int,
               targetParts: Int = 1): Unit = {
     require(targetParts >= 1, s"compact: targetParts $targetParts")
-    val oldFiles = manifestFileList(dir).getOrElse(
-      throw new IllegalStateException(s"compact: no manifest in $dir"))
+    if (manifestFileList(dir).isEmpty)
+      throw new IllegalStateException(s"compact: no manifest in $dir")
     manifestField(dir, "strategy").foreach(s0 =>
       require(s0 == strategy.toLong,
         s"compact strategy $strategy != dataset strategy $s0"))
@@ -172,18 +156,12 @@ object StateFiles {
     val sb = manifestField(dir, "stream_batch").getOrElse(-1L)
     val sid = manifestStringField(dir, "stream_id").getOrElse("")
     // the scan executes inside this job, strictly before the commit:
-    // writeCore's final manifest write REPLACES the snapshot (fresh
-    // dataset_id — overwrite semantics, not merge). The rows are the same,
-    // so the W1 count measured when they were built carries over.
-    writeCore(sorted, dir, strategy, bStart, bEnd,
-      partBase = nextPartBase(dir), mergeManifest = false,
+    // the overwrite REPLACES the snapshot (fresh dataset_id, not a
+    // merge). The rows are the same, so the W1 count measured when they
+    // were built carries over.
+    writeCore(sorted, dir, strategy, bStart, bEnd, overwrite = true,
       streamBatchId = sb, streamId = sid,
       nonAdvancing = manifestField(dir, NonAdvancingField))(identity)
-    oldFiles.foreach { f =>
-      Files.deleteIfExists(Paths.get(dir, f))
-      Files.deleteIfExists(
-        Paths.get(dir, f.stripSuffix(".dat") + ".idx"))
-    }
   }
 
   /** Small-files POLICY for [[compact]] — the threshold an [[append]] /
@@ -337,7 +315,7 @@ object StateFiles {
     * (row totals + write-time anomaly counters; `anomNonAdvancing` is
     * counted only by [[writeFlagged]]'s tasks).
     */
-  private[spark] final case class PartStats(pid: Int, bytes: Long,
+  private[spark] final case class PartStats(bytes: Long,
                                             accounts: Long, slots: Long,
                                             anomIncDecrease: Long,
                                             anomCodeHashNoInc: Long,
@@ -349,26 +327,11 @@ object StateFiles {
     */
   private[spark] final case class EncodedPart(dat: Array[Byte],
                                               idx: Array[Byte],
-                                              bodyBytes: Long,
-                                              accounts: Long, slots: Long,
-                                              anomIncDecrease: Long,
-                                              anomCodeHashNoInc: Long)
+                                              stats: PartStats)
 
-  /** Encode one partition's (pre-sorted) items into the reference layout.
-    * None for an empty partition (no file emitted).
-    */
-  private[spark] def encodePart(it: Iterator[StateItem], strategy: Int,
-                                blockStart: Long,
-                                blockEnd: Long): Option[EncodedPart] = {
-    if (!it.hasNext) return None
-    val w = new StateWriter(strategy, PageShift, baseOffset = Header.Size)
-    it.foreach(w.write)
-    Some(finishPart(w, strategy, blockStart, blockEnd))
-  }
-
-  /** Streaming form of [[encodePart]]: callers feed a [[StateWriter]] (of
-    * [[partWriter]]) row by row and finish here — the DSv2 DataWriter
-    * shape, same memory profile as the iterator form.
+  /** Encoder of one part: callers feed it row by row and finish with
+    * [[finishPart]] — the function sink's tasks and the DSv2 DataWriter
+    * alike.
     */
   private[spark] def partWriter(strategy: Int): StateWriter =
     new StateWriter(strategy, PageShift, baseOffset = Header.Size)
@@ -432,9 +395,9 @@ object StateFiles {
         java.util.Arrays.copyOf(full, math.min(full.length, PairPrefixLen)),
         java.util.Arrays.copyOfRange(full,
           math.max(0, full.length - PairSuffixLen), full.length)))
-    EncodedPart(full, idx, body.length.toLong, w.countAccounts,
+    EncodedPart(full, idx, PartStats(body.length.toLong, w.countAccounts,
       w.countStorageSlots, w.anomalyIncarnationDecrease,
-      w.anomalyCodeHashNoIncarnation)
+      w.anomalyCodeHashNoIncarnation))
   }
 
   private[spark] def atomicWrite(dir: String, name: String,
@@ -451,8 +414,9 @@ object StateFiles {
     * params in one JSON (the per-file headers remain byte-compatible). On
     * merge (append), totals accumulate and the block range widens. The
     * `file_list` snapshot is replaced ATOMICALLY as the last step — this
-    * IS the dataset-level commit point. Shared by the function sink and
-    * the DSv2 BatchWrite.commit.
+    * IS the dataset-level commit point, the commit step every `.dat`
+    * sink hands to [[publish]]. `parts` are (part number, stats) in
+    * publish order.
     *
     * `nonAdvancing` is the W1 window's non-advancing count for this
     * snapshot, when the write measured it or carries a measured value;
@@ -463,21 +427,22 @@ object StateFiles {
   private[spark] def commitManifest(dir: String, strategy: Int,
                                     blockStart: Long, blockEnd: Long,
                                     mergeManifest: Boolean,
-                                    parts: Seq[PartStats],
+                                    parts: Seq[(Int, PartStats)],
                                     streamBatchId: Long = -1L,
                                     streamId: String = "",
                                     nonAdvancing: Option[Long] = None): Unit = {
     def prev(name: String): Long =
       if (mergeManifest) manifestField(dir, name).getOrElse(0L) else 0L
-    val accounts = parts.map(_.accounts).sum + prev("accounts")
-    val slots = parts.map(_.slots).sum + prev("storage_slots")
-    val bytes = parts.map(_.bytes).sum + prev("bytes")
+    val stats = parts.map(_._2)
+    val accounts = stats.map(_.accounts).sum + prev("accounts")
+    val slots = stats.map(_.slots).sum + prev("storage_slots")
+    val bytes = stats.map(_.bytes).sum + prev("bytes")
     val files = parts.length + prev("files")
     // write-time anomaly telemetry (SURVEY §5 mechanism 3) accumulates
     // across appends exactly like the row totals
-    val anomInc = parts.map(_.anomIncDecrease).sum +
+    val anomInc = stats.map(_.anomIncDecrease).sum +
       prev("anomaly_incarnation_decrease")
-    val anomCh = parts.map(_.anomCodeHashNoInc).sum +
+    val anomCh = stats.map(_.anomCodeHashNoInc).sum +
       prev("anomaly_codehash_no_incarnation")
     val nonAdvJson = nonAdvancing
       .orElse(if (mergeManifest) manifestField(dir, NonAdvancingField)
@@ -493,7 +458,7 @@ object StateFiles {
         math.max(blockEnd,
           manifestField(dir, "block_end").getOrElse(blockEnd))
       else blockEnd
-    val newNames = parts.map(p => f"part-${p.pid}%05d.dat").sorted
+    val newNames = parts.map(p => partName(p._1, "dat"))
     val allNames =
       (if (mergeManifest) manifestFileList(dir).getOrElse(Seq.empty)
        else Seq.empty) ++ newNames
@@ -502,9 +467,10 @@ object StateFiles {
     // dataset GENERATION id: minted at the snapshot's first write,
     // preserved by every append, REPLACED by an overwrite — the streaming
     // source pins it in its offsets, so a stream whose consumed prefix
-    // was invalidated by an overwrite fails loudly even when the new
-    // snapshot reuses the same part names (the function sink numbers
-    // from 0 again; names alone cannot distinguish the generations).
+    // was invalidated by an overwrite fails loudly — [[publish]] gives an
+    // overwrite fresh part names, but a dataset deleted and rewritten
+    // from scratch numbers from 0 again, so names alone cannot
+    // distinguish the generations.
     // Merging into a pre-existing manifest that PREDATES the field keeps
     // it ABSENT rather than minting mid-life: a live stream pinned the
     // absent generation ("") at start, and minting on a legitimate
@@ -548,34 +514,151 @@ object StateFiles {
   }
 
   /** First part number AFTER the existing files (0 for a fresh dir). */
-  private[spark] def nextPartBase(dir: String): Int = {
-    if (!Files.exists(Paths.get(dir))) return 0
+  private[spark] def nextPartBase(dir: String): Int =
+    listNames(dir).filter(n => n.startsWith("part-") && n.endsWith(".dat"))
+      .flatMap(_.stripPrefix("part-").stripSuffix(".dat").toIntOption)
+      .maxOption.fold(0)(_ + 1)
+
+  /** File names in `dir`, empty when it does not exist. */
+  private def listNames(dir: String): Seq[String] = {
+    if (!Files.exists(Paths.get(dir))) return Seq.empty
     val stream = Files.list(Paths.get(dir))
     try {
       val it = stream.iterator()
-      var maxPart = -1
-      while (it.hasNext) {
-        val name = it.next().getFileName.toString
-        if (name.startsWith("part-") && name.endsWith(".dat")) {
-          val n = name.stripPrefix("part-").stripSuffix(".dat")
-          try maxPart = math.max(maxPart, n.toInt)
-          catch { case _: NumberFormatException => () }
-        }
-      }
-      maxPart + 1
+      val names = Seq.newBuilder[String]
+      while (it.hasNext) names += it.next().getFileName.toString
+      names.result()
     } finally stream.close()
   }
 
+  private[spark] def partName(n: Int, ext: String): String = f"part-$n%05d.$ext"
+
+  // ---- the commit protocol of every archive sink (`.dat` and txbodies:
+  // the function sinks below, TxBodyFiles, and the DSv2 batch and
+  // streaming writes) ----
+  //
+  // The manifest's `file_list` is the authoritative snapshot — readers
+  // read exactly those files when a manifest is present — and it is
+  // replaced ATOMICALLY as the commit point. So:
+  //  - tasks `stage` a part's files under hidden temp names unique to
+  //    the attempt: retried or speculative attempts never touch a name
+  //    any reader resolves, and never each other's files;
+  //  - the driver `publish`es once: it numbers the parts FRESH, past
+  //    every part file on disk, renames them into place, commits the
+  //    manifest, and only then, on an overwrite, deletes the parts the
+  //    new manifest does not list. No rename ever lands on a name a
+  //    previous snapshot used, so a reader that resolved the old manifest
+  //    keeps reading the old bytes (never new bytes under old pruning
+  //    metadata) until the GC removes them — and then fails cleanly
+  //    instead of silently mixing snapshots;
+  //  - a failed write `discard`s its temps and the previous snapshot
+  //    stays as it was, files and manifest.
+  // A crash before the manifest commit leaves temps or unlisted parts:
+  // invisible to readers, and a retried write numbers past them (no
+  // duplicated rows). A crash after it, mid-GC, leaves unlisted old
+  // parts, which the next overwrite deletes. Single-writer: concurrent
+  // writes to one dataset are not supported (no lock service here).
+
+  /** One part as a task staged it: its files' temp paths by final
+    * extension, and the stats the sink's manifest records. `partition`
+    * orders the parts when [[publish]] numbers them.
+    */
+  private[spark] final case class Staged[S](partition: Int,
+                                            files: Seq[(String, String)],
+                                            stats: S)
+
+  /** Task side: write one part's files, one stream per extension in
+    * `exts`, under hidden temp names that carry `writeId` and are unique
+    * to this attempt; `write` fills the streams and returns the part's
+    * stats. A `write` that throws leaves no temp behind.
+    */
+  private[spark] def stage[S](dir: String, writeId: String, partition: Int,
+                              exts: Seq[String])(
+                              write: Seq[java.io.OutputStream] => S)
+      : Staged[S] = {
+    val attempt = java.util.UUID.randomUUID()
+    val files = exts.map(e =>
+      e -> Paths.get(dir, s".$writeId-$partition-$attempt.$e.tmp").toString)
+    val outs = Seq.newBuilder[java.io.OutputStream]
+    try {
+      files.foreach(f => outs += new java.io.BufferedOutputStream(
+        Files.newOutputStream(Paths.get(f._2)), 1 << 18))
+      val stats = write(outs.result())
+      outs.result().foreach(_.close())
+      Staged(partition, files, stats)
+    } catch {
+      case e: Throwable =>
+        outs.result().foreach(o =>
+          try o.close() catch { case _: java.io.IOException => () })
+        files.foreach(f => Files.deleteIfExists(Paths.get(f._2)))
+        throw e
+    }
+  }
+
+  /** Driver side, once per write: number `staged` from [[nextPartBase]],
+    * contiguously in partition order; rename each file into place;
+    * `commit` the sink's manifest for the (part number, stats) list —
+    * merged for an append, replaced for an overwrite; then, on an
+    * overwrite only, delete every part file the new manifest does not
+    * list (best-effort: a leftover is unreferenced garbage).
+    */
+  private[spark] def publish[S](dir: String, staged: Seq[Staged[S]],
+                                overwrite: Boolean)(
+                                commit: Seq[(Int, S)] => Unit): Unit = {
+    val base = nextPartBase(dir)
+    val parts = staged.sortBy(_.partition).zipWithIndex.map {
+      case (p, i) =>
+        p.files.foreach { case (ext, tmp) =>
+          // fresh numbers never name a file any snapshot lists, so
+          // REPLACE_EXISTING cannot clobber committed bytes
+          Files.move(Paths.get(tmp), Paths.get(dir, partName(base + i, ext)),
+            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+        }
+        (base + i, p.stats)
+    }
+    commit(parts)
+    if (overwrite) {
+      val keep = parts.map(p => partName(p._1, "")).toSet
+      listNames(dir)
+        .filter(n => n.startsWith("part-") &&
+          !keep.contains(n.take(n.indexOf('.') + 1)))
+        .foreach(n =>
+          try Files.deleteIfExists(Paths.get(dir, n))
+          catch { case _: java.io.IOException => () })
+    }
+  }
+
+  /** Abort: delete every temp staged under `writeId` in `dir`. */
+  private[spark] def discard(dir: String, writeId: String): Unit =
+    listNames(dir).filter(_.startsWith(s".$writeId-"))
+      .foreach(n => Files.deleteIfExists(Paths.get(dir, n)))
+
+  /** The one append guard of every `.dat` sink. A dataset with part files
+    * but NO manifest is a torn write — its strategy and committed
+    * contents are unknowable — and a strategy mismatch would rewrite the
+    * manifest's strategy and make the existing parts decode as garbage;
+    * refuse both rather than risk a mixed-strategy dataset.
+    */
+  private[spark] def requireAppendable(dir: String, strategy: Int): Unit = {
+    val s0 = manifestField(dir, "strategy")
+    require(s0.isDefined || nextPartBase(dir) == 0,
+      s"$dir has part files but no manifest — cannot append to a torn " +
+        "dataset")
+    s0.foreach(s => require(s == strategy.toLong,
+      s"append strategy $strategy != dataset strategy $s"))
+  }
+
   /** The function sink: one encode task per partition of `rows`, each
-    * row's item taken by `item`. With a `flag`, each task also counts the
-    * rows it flags as it feeds them to the encoder, and the sum is the
-    * snapshot's measured `nonAdvancing`; without one, `nonAdvancing` is
-    * the value to carry (see [[commitManifest]]).
+    * row's item taken by `item`, each non-empty partition staged as one
+    * part and published as an overwrite or an append. With a `flag`, each
+    * task also counts the rows it flags as it feeds them to the encoder,
+    * and the sum is the snapshot's measured `nonAdvancing`; without one,
+    * `nonAdvancing` is the value to carry (see [[commitManifest]]).
     */
   private def writeCore[T](rows: Dataset[T], dir: String,
                            strategy: Int, blockStart: Long, blockEnd: Long,
-                           partBase: Int, mergeManifest: Boolean,
-                           streamBatchId: Long,
+                           overwrite: Boolean, streamBatchId: Long = -1L,
                            streamId: String = "",
                            flag: Option[T => Boolean] = None,
                            nonAdvancing: Option[Long] = None)(
@@ -583,30 +666,36 @@ object StateFiles {
     val spark = rows.sparkSession
     import spark.implicits._
     Files.createDirectories(Paths.get(dir))
-    val parts = rows.mapPartitions { it =>
-      val pid = partBase + org.apache.spark.TaskContext.getPartitionId()
-      var flagged = 0L
-      val items = flag match {
-        case None => it.map(item)
-        case Some(f) => it.map { r => if (f(r)) flagged += 1; item(r) }
+    val writeId = java.util.UUID.randomUUID().toString
+    val staged = try rows.mapPartitions { it =>
+      if (!it.hasNext) Iterator.empty
+      else {
+        var flagged = 0L
+        val w = partWriter(strategy)
+        flag match {
+          case None => it.foreach(r => w.write(item(r)))
+          case Some(f) =>
+            it.foreach { r => if (f(r)) flagged += 1; w.write(item(r)) }
+        }
+        val part = finishPart(w, strategy, blockStart, blockEnd)
+        Iterator.single(stage(dir, writeId,
+          org.apache.spark.TaskContext.getPartitionId(), DatExts) { out =>
+          out(0).write(part.dat); out(1).write(part.idx)
+          part.stats.copy(anomNonAdvancing = flagged)
+        })
       }
-      // encodePart drains `items`, so `flagged` is final once it returns
-      encodePart(items, strategy, blockStart, blockEnd) match {
-        case None => Iterator.empty
-        case Some(part) =>
-          // temp + atomic rename: retried/speculative attempts each
-          // produce a complete file; the rename is all-or-nothing
-          atomicWrite(dir, f"part-$pid%05d.dat", part.dat)
-          atomicWrite(dir, f"part-$pid%05d.idx", part.idx)
-          Iterator.single(PartStats(pid, part.bodyBytes, part.accounts,
-            part.slots, part.anomIncDecrease, part.anomCodeHashNoInc,
-            flagged))
-      }
-    }.collect()
-    commitManifest(dir, strategy, blockStart, blockEnd, mergeManifest,
-      parts.toSeq, streamBatchId, streamId,
-      flag.map(_ => parts.map(_.anomNonAdvancing).sum).orElse(nonAdvancing))
+    }.collect() catch {
+      case e: Throwable => discard(dir, writeId); throw e
+    }
+    publish(dir, staged.toSeq, overwrite)(parts =>
+      commitManifest(dir, strategy, blockStart, blockEnd,
+        mergeManifest = !overwrite, parts, streamBatchId, streamId,
+        flag.map(_ => staged.map(_.stats.anomNonAdvancing).sum)
+          .orElse(nonAdvancing)))
   }
+
+  /** The files of one `.dat` part, in [[stage]] order. */
+  private[spark] val DatExts: Seq[String] = Seq("dat", "idx")
 
   /** Page-parallel read, delegated to the DataSource V2
     * ([[graft.spark.datasource.DatDataSource]]): ranged `RandomAccessFile`

@@ -18,7 +18,9 @@ import graft.codec.TxBodyCodec
   *
   * Scale: records are range-partitioned on (block, block_hash) — globally
   * ordered across files — and each task streams its partition straight to
-  * disk. Reading parallelizes per FILE (the format has no page restarts,
+  * disk, staged and published through StateFiles' commit protocol (part
+  * numbers follow partition order, so file order is block order).
+  * Reading parallelizes per FILE (the format has no page restarts,
   * unlike the state `.dat`s, so a file is the smallest independently
   * decodable unit; write with enough partitions to get read parallelism).
   */
@@ -26,7 +28,8 @@ object TxBodyFiles {
 
   /** Write encoded body records (from
     * [[graft.pipeline.TxBodies.encodeBlocks]]: block, block_hash, record)
-    * as a txbodies dataset under `dir`. Returns (files, blocks, bytes).
+    * as a txbodies dataset under `dir`, replacing the snapshot it held.
+    * Returns (files, blocks, bytes).
     */
   def write(encodedBlocks: DataFrame, dir: String,
             blockStart: Long = 0L, blockEnd: Long = 0L,
@@ -44,58 +47,49 @@ object TxBodyFiles {
     val pre = encodedBlocks
       .select(col("block"), col("block_hash"), col("record"))
       .localCheckpoint()
-    val stats = pre
+    // each task stages its part and the driver publishes them as a
+    // fresh snapshot — StateFiles' commit protocol, with this format's
+    // own manifest as the commit step (see StateFiles.publish)
+    val writeId = java.util.UUID.randomUUID().toString
+    val staged = try pre
       .repartitionByRange(n, col("block"), col("block_hash"))
       .sortWithinPartitions(col("block"), col("block_hash"))
       .select(col("record"))
       .as[Array[Byte]]
       .mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
         if (it.isEmpty) Iterator.empty
-        else {
-          // write-to-temp + atomic rename: a speculative or retried task
-          // attempt never interleaves with another attempt's partial file
-          // — each attempt produces a complete temp and the rename is
-          // all-or-nothing (attempts write identical content: the
-          // partition's sort is deterministic)
-          val path = Paths.get(dir, f"part-$pid%05d.dat")
-          val tmp = Paths.get(dir,
-            f".part-$pid%05d.tmp-${java.util.UUID.randomUUID()}")
-          val out = new java.io.BufferedOutputStream(
-            Files.newOutputStream(tmp), 1 << 18)
-          var blocks = 0L
-          var bytes = 0L
-          try it.foreach { rec =>
-            out.write(rec); blocks += 1; bytes += rec.length
-          } finally out.close()
-          Files.move(tmp, path,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-          Iterator.single((pid, blocks, bytes))
-        }
-      }.collect()
+        else Iterator.single(StateFiles.stage(dir, writeId,
+            org.apache.spark.TaskContext.getPartitionId(), Seq("dat")) {
+          out =>
+            var blocks = 0L
+            var bytes = 0L
+            it.foreach { rec =>
+              out(0).write(rec); blocks += 1; bytes += rec.length
+            }
+            (blocks, bytes)
+        })
+      }.collect() catch {
+      case e: Throwable => StateFiles.discard(dir, writeId); throw e
+    }
     // the write job above was the exchange's last consumer
     org.apache.spark.sql.graftshim.Bridge.unpersistLocalCheckpoint(pre)
-    val blocks = stats.map(_._2).sum
-    val bytes = stats.map(_._3).sum
-    // the manifest IS the commit point (same protocol as StateFiles):
-    // its file_list names exactly the part files of this completed write,
-    // so a reader never sees orphan parts from a crashed/concurrent
-    // attempt; the manifest itself lands by atomic rename
-    val fileListJson = stats.map(_._1).sorted
-      .map(pid => "\"" + f"part-$pid%05d.dat" + "\"")
-      .mkString("[", ",", "]")
-    val manifest =
-      s"""{"format":"graft-txbodies","block_start":$blockStart,""" +
-        s""""block_end":$blockEnd,"files":${stats.length},""" +
-        s""""blocks":$blocks,"bytes":$bytes,"file_list":$fileListJson}"""
-    val mTmp = Paths.get(dir, s".manifest.tmp-${java.util.UUID.randomUUID()}")
-    Files.write(mTmp,
-      manifest.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    Files.move(mTmp, Paths.get(dir, "_manifest.json"),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    (stats.length.toLong, blocks, bytes)
+    val blocks = staged.map(_.stats._1).sum
+    val bytes = staged.map(_.stats._2).sum
+    StateFiles.publish(dir, staged.toSeq, overwrite = true) { parts =>
+      // the manifest IS the commit point: its file_list names exactly the
+      // part files of this completed write, so a reader never sees orphan
+      // parts from a crashed/concurrent attempt
+      val fileListJson = parts
+        .map(p => "\"" + StateFiles.partName(p._1, "dat") + "\"")
+        .mkString("[", ",", "]")
+      val manifest =
+        s"""{"format":"graft-txbodies","block_start":$blockStart,""" +
+          s""""block_end":$blockEnd,"files":${parts.length},""" +
+          s""""blocks":$blocks,"bytes":$bytes,"file_list":$fileListJson}"""
+      StateFiles.atomicWrite(dir, "_manifest.json",
+        manifest.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    }
+    (staged.length.toLong, blocks, bytes)
   }
 
   /** Read a txbodies dataset back: one task per file, sequential decode,
@@ -107,8 +101,7 @@ object TxBodyFiles {
     // a failed write attempt are invisible. Directory listing only for
     // ad-hoc (manifest-less) dirs.
     val sorted = StateFiles.manifestFileList(dir) match {
-      case Some(list) =>
-        list.sorted.map(n => Paths.get(dir, n).toString)
+      case Some(list) => list.map(n => Paths.get(dir, n).toString)
       case None =>
         val files = Files.list(Paths.get(dir)).iterator()
         val names = Seq.newBuilder[String]

@@ -281,10 +281,10 @@ private[datasource] case class DatTaskMetric(metricName: String,
   * and appends only ever EXTEND the list (StateFiles.commitManifest
   * merges `existing ++ new`), so a consumed prefix is immutable for any
   * sequence of appends — the (name, generation) pair pins that: an
-  * overwrite either publishes fresh part numbers (DSv2 truncate — the
-  * name stops matching) or reuses names from part 0 (function sink —
-  * the generation id changes), and the stream fails loudly in both
-  * cases instead of silently treating a new snapshot as a continuation.
+  * overwrite publishes fresh part numbers (StateFiles.publish — the name
+  * stops matching) and a new generation id (which also catches a dataset
+  * deleted and rewritten from part 0), and the stream fails loudly
+  * instead of silently treating a new snapshot as a continuation.
   */
 case class DatOffset(files: Int, lastFile: String, datasetId: String)
     extends org.apache.spark.sql.connector.read.streaming.Offset {
@@ -412,8 +412,9 @@ class DatMicroBatchStream(path: String, strategy: Int, pagesPerSplit: Int,
 
   /** The consumed prefix must still be the list's prefix (`files(n-1)`
     * carries the recorded name) AND belong to the same dataset
-    * generation — the function sink's overwrite reuses part names from
-    * 0, so names alone cannot tell a new snapshot from a continuation.
+    * generation — a dataset deleted and rewritten numbers its parts from
+    * 0 again, so names alone cannot tell a new snapshot from a
+    * continuation.
     * An offset that consumed nothing is compatible with anything.
     */
   private def requirePrefix(files: Seq[String], o: DatOffset): Unit = {
@@ -818,21 +819,33 @@ class DatReaderFactory(strategy: Int) extends PartitionReaderFactory {
   }
 }
 
-// ---- write path (S8 as a first-class DataSource V2 sink) ----
+// ---- write path (S8 as a first-class DataSource V2 sink, batch and
+// streaming) ----
 //
 //   df.write.format("graft.spark.datasource.DatDataSource")
 //     .option("strategy", "1").option("blockStart", "0")
 //     .option("blockEnd", "1000").mode("append").save(dir)
 //
-// Each task streams its (pre-sorted) partition through the reference
-// encoder into TEMP files; the part files are renamed and the dataset
-// manifest replaced only in BatchWrite.commit — i.e. the manifest-as-
-// commit-point protocol of StateFiles, expressed through DSv2's native
-// two-phase commit (task messages carry temp names; driver commit
-// publishes; abort deletes temps and leaves the previous snapshot
-// untouched). mode("append") adds an increment; mode("overwrite")
-// publishes a fresh snapshot and garbage-collects the old files AFTER
-// the new manifest lands.
+//   df.writeStream.format("graft.spark.datasource.DatDataSource")
+//     .option("strategy", "0").option("checkpointLocation", ckpt)
+//     .start(dir)
+//
+// StateFiles' commit protocol expressed through DSv2's native two-phase
+// commit: each task streams its (pre-sorted) partition through the
+// reference encoder and stages the part (StateFiles.stage), the commit
+// message carries the staged temps to the driver, and the driver's
+// commit publishes them (StateFiles.publish); abort discards the write's
+// temps and leaves the previous snapshot untouched. mode("append") adds
+// an increment; mode("overwrite") publishes a fresh snapshot.
+//
+// A streaming epoch is one append increment, merged into the manifest
+// with (stream_batch = epochId, stream_id = the streaming QUERY id —
+// Spark persists it in the checkpoint, so restarts keep it and a reset
+// checkpoint mints a new one). A replayed epoch (crash between the
+// manifest commit and the streaming checkpoint commit) is detected via
+// lastStreamBatch and discarded — the same exactly-once contract
+// StateFiles.append offers foreachBatch writers, expressed through
+// DSv2's native epoch protocol.
 
 class DatWriteBuilder(path: String, strategy: Int, blockStart: Long,
                       blockEnd: Long, queryId: String = "")
@@ -846,18 +859,31 @@ class DatWriteBuilder(path: String, strategy: Int, blockStart: Long,
     new DatWrite(path, strategy, blockStart, blockEnd, doTruncate, queryId)
 }
 
-case class DatCommitMessage(pid: Int, datTmp: String, idxTmp: String,
-                            bodyBytes: Long, accounts: Long, slots: Long,
-                            anomIncDecrease: Long, anomCodeHashNoInc: Long)
+/** One task's part, or None for an empty input partition (repartitionByRange
+  * routinely produces those, so this is the common case, not a corner).
+  */
+case class DatCommitMessage(
+    part: Option[graft.spark.StateFiles.Staged[graft.spark.StateFiles.PartStats]])
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
 class DatWrite(path: String, strategy: Int, blockStart: Long,
                blockEnd: Long, truncate: Boolean, queryId: String = "")
     extends org.apache.spark.sql.connector.write.Write
-    with org.apache.spark.sql.connector.write.BatchWrite {
+    with org.apache.spark.sql.connector.write.BatchWrite
+    with org.apache.spark.sql.connector.write.streaming.StreamingWrite {
   import org.apache.spark.sql.connector.write._
+  import graft.spark.StateFiles
+
+  /** Every temp this write stages carries this id (a streaming epoch's
+    * temps add the epoch), so abort can discard them all.
+    */
+  private val writeId = java.util.UUID.randomUUID().toString
 
   override def toBatch: BatchWrite = this
+
+  // both interfaces default this; Spark's coordinator picks one committing
+  // attempt per partition for the batch and the streaming write alike
+  override def useCommitCoordinator(): Boolean = true
 
   override def toStreaming
       : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
@@ -866,107 +892,77 @@ class DatWrite(path: String, strategy: Int, blockStart: Long,
     require(!truncate,
       "dat streaming sink supports append output mode only")
     require(queryId.nonEmpty, "streaming write without a query id")
-    new DatStreamingWrite(path, strategy, blockStart, blockEnd, queryId)
+    this
+  }
+
+  /** Runs on the driver before the write's (or the epoch's) tasks start:
+    * an append's guards must fail before any part is staged.
+    */
+  private def factory(): DatWriterFactory = {
+    Files.createDirectories(Paths.get(path))
+    if (!truncate) StateFiles.requireAppendable(path, strategy)
+    new DatWriterFactory(path, strategy, blockStart, blockEnd, writeId)
   }
 
   override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory = {
-    Files.createDirectories(Paths.get(path))
-    // Fresh part numbers for EVERY write, truncate included: an
-    // overwrite's files can then never collide with the previous
-    // snapshot's names, so a reader that resolved the old manifest keeps
-    // reading the old bytes (never new bytes under old pruning metadata)
-    // until commit's post-manifest GC removes them — at which point the
-    // reader fails cleanly instead of silently mixing snapshots.
-    val partBase = graft.spark.StateFiles.nextPartBase(path)
-    if (!truncate) {
-      // mirror the function sink's append guards (StateFiles.append): a
-      // torn dir (part files, no manifest) has unknowable committed
-      // contents, and a strategy mismatch would silently rewrite the
-      // manifest's strategy and make the existing parts decode as garbage
-      require(partBase == 0 ||
-        graft.spark.StateFiles.manifestField(path, "strategy").isDefined,
-        s"$path has part files but no manifest — cannot append to a " +
-          "torn dataset")
-      graft.spark.StateFiles.manifestField(path, "strategy").foreach(s0 =>
-        require(s0 == strategy.toLong,
-          s"append strategy $strategy != dataset strategy $s0"))
-    }
-    new DatWriterFactory(path, strategy, blockStart, blockEnd, partBase)
-  }
+      info: PhysicalWriteInfo): DataWriterFactory = factory()
 
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    // empty input partitions commit the pid = -1 sentinel (no temp file
-    // written) — drop them here, or the rename below would move
-    // Paths.get("") and the manifest would record a bogus part--0001.dat.
-    // repartitionByRange routinely produces empty partitions, so this is
-    // the common case, not a corner.
-    val parts = messages
-      .collect { case m: DatCommitMessage if m.pid >= 0 => m }
-      .sortBy(_.pid)
-    // publish: rename every temp into place, THEN swap the manifest —
-    // readers keep the previous consistent snapshot until the last move.
-    // Part numbers are FRESH for every write (see
-    // createBatchWriterFactory), so no rename ever lands on a name a
-    // previous snapshot used: REPLACE_EXISTING only covers a retried
-    // commit of THIS write.
-    parts.foreach { m =>
-      Files.move(Paths.get(m.datTmp), Paths.get(path, f"part-${m.pid}%05d.dat"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      Files.move(Paths.get(m.idxTmp), Paths.get(path, f"part-${m.pid}%05d.idx"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    }
-    val keepOld = !truncate &&
-      Files.exists(Paths.get(path, "_manifest.json"))
-    graft.spark.StateFiles.commitManifest(path, strategy, blockStart,
-      blockEnd, mergeManifest = keepOld,
-      parts.map(m => graft.spark.StateFiles.PartStats(m.pid, m.bodyBytes,
-        m.accounts, m.slots, m.anomIncDecrease, m.anomCodeHashNoInc)).toSeq)
-    if (truncate) {
-      // snapshot is live; old files are unreferenced garbage now
-      val keep = parts.map(m => f"part-${m.pid}%05d").toSet
-      val listed = Files.list(Paths.get(path))
-      try {
-        val it = listed.iterator()
-        while (it.hasNext) {
-          val f = it.next()
-          val n = f.getFileName.toString
-          if ((n.endsWith(".dat") || n.endsWith(".idx")) &&
-              n.startsWith("part-") &&
-              !keep.contains(n.stripSuffix(".dat").stripSuffix(".idx")))
-            try Files.deleteIfExists(f)
-            catch { case _: java.io.IOException => () } // best-effort GC
-        }
-      } finally listed.close()
-    }
-  }
+  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
+      : streaming.StreamingDataWriterFactory = factory()
+
+  private def publish(messages: Array[WriterCommitMessage],
+                      streamBatchId: Long, streamId: String): Unit =
+    StateFiles.publish(path,
+      messages.toSeq.flatMap(_.asInstanceOf[DatCommitMessage].part),
+      overwrite = truncate)(parts =>
+      StateFiles.commitManifest(path, strategy, blockStart, blockEnd,
+        mergeManifest = !truncate, parts, streamBatchId, streamId))
+
+  override def commit(messages: Array[WriterCommitMessage]): Unit =
+    publish(messages, -1L, "")
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
-    // skip the empty-partition sentinels: their temp names are "" and
-    // Paths.get("") resolves to the working directory
-    messages.collect { case m: DatCommitMessage if m.pid >= 0 => m }
-      .foreach { m =>
-        Files.deleteIfExists(Paths.get(m.datTmp))
-        Files.deleteIfExists(Paths.get(m.idxTmp))
-      }
+    StateFiles.discard(path, writeId)
+
+  override def commit(epochId: Long,
+                      messages: Array[WriterCommitMessage]): Unit =
+    // replay guard: the manifest carries the last committed epoch FOR
+    // THIS QUERY; an older-or-equal epoch re-delivered after a crash
+    // must drop its temps, not append twice. A different stream_id in
+    // the manifest fails loudly inside lastStreamBatch.
+    if (StateFiles.lastStreamBatch(path, queryId).exists(_ >= epochId))
+      abort(epochId, messages)
+    else publish(messages, epochId, queryId)
+
+  override def abort(epochId: Long,
+                     messages: Array[WriterCommitMessage]): Unit =
+    StateFiles.discard(path, DatWriterFactory.epochWriteId(writeId, epochId))
 }
 
+/** The one DataWriter factory of the batch and the streaming write: the
+  * streaming form tags its temps with the epoch, so one epoch's abort
+  * never discards another's.
+  */
 class DatWriterFactory(path: String, strategy: Int, blockStart: Long,
-                       blockEnd: Long, partBase: Int)
-    extends org.apache.spark.sql.connector.write.DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-      private val w = graft.spark.StateFiles.partWriter(strategy)
+                       blockEnd: Long, writeId: String)
+    extends org.apache.spark.sql.connector.write.DataWriterFactory
+    with org.apache.spark.sql.connector.write.streaming
+      .StreamingDataWriterFactory {
+  import org.apache.spark.sql.connector.write.{DataWriter, WriterCommitMessage}
+  import graft.spark.StateFiles
+
+  override def createWriter(partitionId: Int,
+                            taskId: Long): DataWriter[InternalRow] =
+    writer(partitionId, writeId)
+
+  override def createWriter(partitionId: Int, taskId: Long,
+                            epochId: Long): DataWriter[InternalRow] =
+    writer(partitionId, DatWriterFactory.epochWriteId(writeId, epochId))
+
+  private def writer(partitionId: Int, id: String) =
+    new DataWriter[InternalRow] {
+      private val w = StateFiles.partWriter(strategy)
       private var rows = 0L
-      // temp names carry the task id so speculative attempts never
-      // collide; only the committed attempt's names reach the driver
-      private val datTmp = Paths.get(path,
-        f".part-${partBase + partitionId}%05d.dat.tmp-$taskId").toString
-      private val idxTmp = Paths.get(path,
-        f".part-${partBase + partitionId}%05d.idx.tmp-$taskId").toString
 
       override def write(r: InternalRow): Unit = {
         w.write(StateItem(r.getBinary(0), r.getLong(1), r.getBoolean(2),
@@ -975,165 +971,23 @@ class DatWriterFactory(path: String, strategy: Int, blockStart: Long,
         rows += 1
       }
 
-      override def commit()
-          : org.apache.spark.sql.connector.write.WriterCommitMessage = {
-        if (rows == 0) DatCommitMessage(-1, "", "", 0L, 0L, 0L, 0L, 0L)
-        else {
-          val part = graft.spark.StateFiles.finishPart(w, strategy,
-            blockStart, blockEnd)
-          Files.write(Paths.get(datTmp), part.dat)
-          Files.write(Paths.get(idxTmp), part.idx)
-          DatCommitMessage(partBase + partitionId, datTmp, idxTmp,
-            part.bodyBytes, part.accounts, part.slots,
-            part.anomIncDecrease, part.anomCodeHashNoInc)
-        }
-      }
+      override def commit(): WriterCommitMessage =
+        DatCommitMessage(if (rows == 0) None else {
+          val part = StateFiles.finishPart(w, strategy, blockStart, blockEnd)
+          Some(StateFiles.stage(path, id, partitionId, StateFiles.DatExts) {
+            out => out(0).write(part.dat); out(1).write(part.idx); part.stats
+          })
+        })
 
-      override def abort(): Unit = {
-        Files.deleteIfExists(Paths.get(datTmp))
-        Files.deleteIfExists(Paths.get(idxTmp))
-      }
+      // nothing is on disk before commit(), and a failed stage leaves no
+      // temp behind
+      override def abort(): Unit = ()
 
       override def close(): Unit = ()
     }
 }
 
-// ---- streaming write path (the sink side of the §7.5 loop as native
-// DSv2 instead of foreachBatch) ----
-//
-//   df.writeStream.format("graft.spark.datasource.DatDataSource")
-//     .option("strategy", "0").option("checkpointLocation", ckpt)
-//     .start(dir)
-//
-// Each epoch is one append increment: tasks stream their partitions into
-// epoch-tagged temp files; the DRIVER's commit(epochId) assigns fresh
-// part numbers, renames, and merges the manifest with
-// (stream_batch = epochId, stream_id = the streaming QUERY id — Spark
-// persists it in the checkpoint, so restarts keep it and a reset
-// checkpoint mints a new one). A replayed epoch (crash between the
-// manifest commit and the streaming checkpoint commit) is detected via
-// lastStreamBatch and skipped — the same exactly-once contract
-// StateFiles.append offers foreachBatch writers, expressed through
-// DSv2's native epoch protocol.
-
-case class DatStreamCommitMessage(partitionId: Int, rows: Long,
-    datTmp: String, idxTmp: String, bodyBytes: Long, accounts: Long,
-    slots: Long, anomIncDecrease: Long, anomCodeHashNoInc: Long)
-    extends org.apache.spark.sql.connector.write.WriterCommitMessage
-
-class DatStreamingWrite(path: String, strategy: Int, blockStart: Long,
-                        blockEnd: Long, queryId: String)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  import org.apache.spark.sql.connector.write._
-  import org.apache.spark.sql.connector.write.streaming._
-
-  override def createStreamingWriterFactory(
-      info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-    Files.createDirectories(Paths.get(path))
-    // the append guards run ONCE at query start (driver): a torn dir or
-    // a strategy mismatch must fail before any epoch writes
-    require(graft.spark.StateFiles.nextPartBase(path) == 0 ||
-      graft.spark.StateFiles.manifestField(path, "strategy").isDefined,
-      s"$path has part files but no manifest — cannot stream-append to " +
-        "a torn dataset")
-    graft.spark.StateFiles.manifestField(path, "strategy").foreach(s0 =>
-      require(s0 == strategy.toLong,
-        s"stream strategy $strategy != dataset strategy $s0"))
-    new DatStreamingWriterFactory(path, strategy, blockStart, blockEnd)
-  }
-
-  override def commit(epochId: Long,
-                      messages: Array[WriterCommitMessage]): Unit = {
-    val parts = messages
-      .collect { case m: DatStreamCommitMessage if m.rows > 0 => m }
-      .sortBy(_.partitionId)
-    // replay guard: the manifest carries the last committed epoch FOR
-    // THIS QUERY; an older-or-equal epoch re-delivered after a crash
-    // must drop its temps, not append twice. A different stream_id in
-    // the manifest fails loudly inside lastStreamBatch.
-    if (graft.spark.StateFiles.lastStreamBatch(path, queryId)
-          .exists(_ >= epochId)) {
-      parts.foreach { m =>
-        Files.deleteIfExists(Paths.get(m.datTmp))
-        Files.deleteIfExists(Paths.get(m.idxTmp))
-      }
-      return
-    }
-    val partBase = graft.spark.StateFiles.nextPartBase(path)
-    val finals = parts.zipWithIndex.map { case (m, i) =>
-      val pid = partBase + i
-      Files.move(Paths.get(m.datTmp),
-        Paths.get(path, f"part-$pid%05d.dat"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      Files.move(Paths.get(m.idxTmp),
-        Paths.get(path, f"part-$pid%05d.idx"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      graft.spark.StateFiles.PartStats(pid, m.bodyBytes, m.accounts,
-        m.slots, m.anomIncDecrease, m.anomCodeHashNoInc)
-    }
-    graft.spark.StateFiles.commitManifest(path, strategy, blockStart,
-      blockEnd, mergeManifest = true, finals.toSeq,
-      streamBatchId = epochId, streamId = queryId)
-  }
-
-  override def abort(epochId: Long,
-                     messages: Array[WriterCommitMessage]): Unit =
-    messages.collect { case m: DatStreamCommitMessage if m.rows > 0 => m }
-      .foreach { m =>
-        Files.deleteIfExists(Paths.get(m.datTmp))
-        Files.deleteIfExists(Paths.get(m.idxTmp))
-      }
-}
-
-class DatStreamingWriterFactory(path: String, strategy: Int,
-                                blockStart: Long, blockEnd: Long)
-    extends org.apache.spark.sql.connector.write.streaming
-      .StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long)
-      : org.apache.spark.sql.connector.write.DataWriter[InternalRow] =
-    new org.apache.spark.sql.connector.write.DataWriter[InternalRow] {
-      private val w = graft.spark.StateFiles.partWriter(strategy)
-      private var rows = 0L
-      // temp names carry epoch + partition + task id: epochs never
-      // collide with each other, speculative attempts never collide
-      // within an epoch, and final part numbers are assigned at commit
-      // (appends accumulate across epochs, so partition id alone cannot
-      // name the final file)
-      private val datTmp = Paths.get(path,
-        f".stream-e$epochId%d-p$partitionId%05d.dat.tmp-$taskId").toString
-      private val idxTmp = Paths.get(path,
-        f".stream-e$epochId%d-p$partitionId%05d.idx.tmp-$taskId").toString
-
-      override def write(r: InternalRow): Unit = {
-        w.write(graft.model.StateItem(r.getBinary(0), r.getLong(1),
-          r.getBoolean(2), r.getLong(3), r.getLong(4), r.getBinary(5),
-          r.getBinary(6), r.getBinary(7), r.getBinary(8)))
-        rows += 1
-      }
-
-      override def commit()
-          : org.apache.spark.sql.connector.write.WriterCommitMessage = {
-        if (rows == 0)
-          DatStreamCommitMessage(partitionId, 0L, "", "", 0L, 0L, 0L, 0L,
-            0L)
-        else {
-          val part = graft.spark.StateFiles.finishPart(w, strategy,
-            blockStart, blockEnd)
-          Files.write(Paths.get(datTmp), part.dat)
-          Files.write(Paths.get(idxTmp), part.idx)
-          DatStreamCommitMessage(partitionId, rows, datTmp, idxTmp,
-            part.bodyBytes, part.accounts, part.slots,
-            part.anomIncDecrease, part.anomCodeHashNoInc)
-        }
-      }
-
-      override def abort(): Unit = {
-        Files.deleteIfExists(Paths.get(datTmp))
-        Files.deleteIfExists(Paths.get(idxTmp))
-      }
-
-      override def close(): Unit = ()
-    }
+object DatWriterFactory {
+  def epochWriteId(writeId: String, epochId: Long): String =
+    s"$writeId-e$epochId"
 }

@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.codec.AccountBlob
@@ -530,36 +530,70 @@ class PipelineSpec extends AnyFunSuite {
     assert(nFiles > 0 && nFiles <= 10, s"expected <=10 part files, $nFiles")
   }
 
-  test("DSv2 overwrite: fresh part names, old snapshot never rewritten") {
-    val items = StateFormat.asItems(
+  // every `.dat` front-end's overwrite, as (name, rewrite of the dir's
+  // snapshot returning the row count it leaves); each starts from the same
+  // two-increment snapshot
+  private def datOverwrites: Seq[(String, String => Long)] = {
+    def items = StateFormat.asItems(
       history.withColumnRenamed("valid_from_block", "block"))
-    val fmt = "graft.spark.datasource.DatDataSource"
-    val dir = Files.createTempDirectory("graft-dsv2-iso").toString
-    def partNames = new java.io.File(dir).listFiles()
-      .map(_.getName).filter(_.endsWith(".dat")).toSet
-    items.toDF().write.format(fmt).option("strategy", "0")
-      .mode("append").save(dir)
-    val oldNames = partNames
-    val oldBytes = oldNames.map(n => n ->
-      Files.readAllBytes(java.nio.file.Paths.get(dir, n))).toMap
-    val mid = world.latestBlock / 2
-    items.toDF().filter(col("block") <= mid).write.format(fmt)
-      .option("strategy", "0").mode("overwrite").save(dir)
-    val newNames = partNames
-    // isolation: the new snapshot's names are disjoint from the old ones,
-    // so at no instant did an old-manifest reader see new bytes under an
-    // old name — old files are either intact or GC'd, never rewritten
-    assert(newNames.intersect(oldNames).isEmpty,
-      s"overwrite reused old part names: ${newNames.intersect(oldNames)}")
-    assert(oldNames.forall(n =>
-      !Files.exists(java.nio.file.Paths.get(dir, n)) ||
-        Files.readAllBytes(java.nio.file.Paths.get(dir, n))
-          .sameElements(oldBytes(n))),
-      "old snapshot bytes changed in place")
-    val back = spark.read.format(fmt).option("strategy", "0").load(dir)
-    assert(back.count() ==
-      items.toDF().filter(col("block") <= mid).count())
+    def half = items.filter(col("block") <= world.latestBlock / 2)
+    Seq(
+      "DSv2" -> { dir =>
+        half.toDF().write.format("graft.spark.datasource.DatDataSource")
+          .option("strategy", "0").mode("overwrite").save(dir)
+        half.count()
+      },
+      "StateFiles.write" -> { dir =>
+        graft.spark.StateFiles.write(half, dir, strategy = 0)
+        half.count()
+      },
+      "StateFiles.compact" -> { dir =>
+        val rows = graft.spark.StateFiles.read(spark, dir, 0).count()
+        graft.spark.StateFiles.compact(spark, dir, strategy = 0,
+          targetParts = 2)
+        rows
+      })
   }
+
+  for ((writer, overwrite) <- datOverwrites)
+    test(s"$writer overwrite: fresh part names, old snapshot never " +
+        "rewritten") {
+      val items = StateFormat.asItems(
+        history.withColumnRenamed("valid_from_block", "block"))
+      val dir = Files.createTempDirectory("graft-overwrite-iso").toString
+      graft.spark.StateFiles.write(items, dir, strategy = 0)
+      graft.spark.StateFiles.append(items, dir, strategy = 0)
+      var expected = 0L
+      SinkCommit.assertOverwriteIsolated(dir) { expected = overwrite(dir) }
+      assert(graft.spark.StateFiles.read(spark, dir, 0).count() == expected)
+    }
+
+  // a rewrite whose last task throws after partition 0's task finished
+  for ((writer, rewrite) <- Seq[(String, (Dataset[StateItem], String) => Unit)](
+      "StateFiles.write" -> ((ds, dir) =>
+        graft.spark.StateFiles.write(ds, dir, strategy = 0)),
+      "StateFiles.append" -> ((ds, dir) =>
+        graft.spark.StateFiles.append(ds, dir, strategy = 0)),
+      "DSv2" -> ((ds, dir) =>
+        ds.toDF().write.format("graft.spark.datasource.DatDataSource")
+          .option("strategy", "0").mode("overwrite").save(dir))))
+    test(s"$writer: a failed rewrite leaves the committed snapshot intact") {
+      import spark.implicits._
+      val items = StateFormat.asItems(
+        history.withColumnRenamed("valid_from_block", "block"))
+      val dir = Files.createTempDirectory("graft-failed-write").toString
+      graft.spark.StateFiles.write(items, dir, strategy = 0)
+      def rows = graft.spark.StateFiles.read(spark, dir, 0).toDF().collect()
+        .map(_.toSeq.map {
+          case b: Array[Byte] => Bytes.hex(b)
+          case v => String.valueOf(v)
+        }.mkString(",")).sorted
+      val before = rows
+      SinkCommit.assertFailedWriteLeavesSnapshot(dir) {
+        rewrite(SinkCommit.failingLastTask(items, 2), dir)
+      }
+      assert(rows.sameElements(before), "the old snapshot reads back changed")
+    }
 
   test("DSv2 append guards: strategy mismatch and torn dir refused") {
     val items = StateFormat.asItems(
@@ -606,13 +640,20 @@ class PipelineSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft-dsv2-cache").toString
     val mid = world.latestBlock / 2
     val half = items.filter(col("block") <= mid).as[graft.model.StateItem]
-    graft.spark.StateFiles.write(half, dir, strategy = 0)
+    graft.spark.StateFiles.write(half.coalesce(1), dir, strategy = 0)
     val c1 = graft.spark.StateFiles.read(spark, dir, 0).count()
     assert(c1 == half.count())
-    // the FUNCTION sink reuses part numbers on rewrite (same names, new
-    // bytes/size/mtime) — the plan-time validation cache must re-validate,
-    // not serve the old page count/bounds
-    graft.spark.StateFiles.write(items.repartition(2), dir, strategy = 0)
+    // rewrite a live part IN PLACE (same name, new bytes/size/mtime — a
+    // tool outside the commit protocol, which never reuses names): copy
+    // a different dataset's same-named part over it. The plan-time
+    // validation cache must re-validate, not serve the old page
+    // count/bounds.
+    val other = Files.createTempDirectory("graft-dsv2-cache-other").toString
+    graft.spark.StateFiles.write(items.coalesce(1), other, strategy = 0)
+    for (ext <- Seq("dat", "idx"))
+      Files.copy(java.nio.file.Paths.get(other, s"part-00000.$ext"),
+        java.nio.file.Paths.get(dir, s"part-00000.$ext"),
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     val c2 = graft.spark.StateFiles.read(spark, dir, 0).count()
     assert(c2 == items.count(),
       s"stale sidecar cache: read $c2 of ${items.count()} after rewrite")

@@ -190,6 +190,22 @@ class TxBodiesSpec extends AnyFunSuite {
     assert(fileFirstBlocks.sameElements(fileFirstBlocks.sorted))
   }
 
+  test("TxBodyFiles.write overwrite: fresh part names, old snapshot " +
+      "never rewritten") {
+    val enc = TxBodies.encodeBlocks(decoded, world.transactions)
+    val dir = java.nio.file.Files
+      .createTempDirectory("graft-txbodies-iso").toString
+    graft.spark.TxBodyFiles.write(enc, dir, blockStart = 1L,
+      blockEnd = world.nBlocks)
+    val half = enc.filter(
+      org.apache.spark.sql.functions.col("block") <= world.nBlocks / 2)
+    SinkCommit.assertOverwriteIsolated(dir) {
+      graft.spark.TxBodyFiles.write(half, dir, blockStart = 1L,
+        blockEnd = world.nBlocks / 2)
+    }
+    assert(graft.spark.TxBodyFiles.read(spark, dir).count() == half.count())
+  }
+
   test("S9 manifest is the commit point: orphan part files are invisible") {
     import graft.codec.{ByteBuf, TxBodyCodec}
     val enc = TxBodies.encodeBlocks(decoded, world.transactions)
