@@ -136,34 +136,21 @@ object MultimodalGolden {
   def goldenBase(name: String): String =
     new java.io.File(s"target/golden/$name").getAbsolutePath
 
-  /** Write a golden parquet once per (name, n) — content is deterministic,
-    * so an existing directory is already valid (same _OK convention as the
-    * fixture cache). Returns the absolute path the oracle SQL should read.
+  /** Write a golden parquet once per (name, n) through [[graft.Stored]]
+    * (content is deterministic, so a committed directory is already
+    * valid). Returns the absolute path the oracle SQL should read.
     */
   def ensureGolden[T <: Product : org.apache.spark.sql.Encoder](
       spark: SparkSession, name: String, rows: => Seq[T]): String = {
-    val base = goldenBase(name)
-    val ok = java.nio.file.Paths.get(base, "_OK")
-    if (!java.nio.file.Files.exists(ok)) {
-      import spark.implicits._
-      rows.toDS().coalesce(1).write.mode("overwrite").parquet(base)
-      java.nio.file.Files.write(ok, Array.emptyByteArray)
-    }
-    base
+    import spark.implicits._
+    ensureGoldenDf(name, rows.toDS().toDF())
   }
 
   /** DataFrame variant of [[ensureGolden]] for goldens computed
-    * DISTRIBUTED (e.g. a typed-map replay over a source table) — same
-    * write-once `_OK` convention.
+    * DISTRIBUTED (e.g. a typed-map replay over a source table).
     */
   def ensureGoldenDf(name: String,
-                     df: => org.apache.spark.sql.DataFrame): String = {
-    val base = goldenBase(name)
-    val ok = java.nio.file.Paths.get(base, "_OK")
-    if (!java.nio.file.Files.exists(ok)) {
-      df.coalesce(1).write.mode("overwrite").parquet(base)
-      java.nio.file.Files.write(ok, Array.emptyByteArray)
-    }
-    base
-  }
+                     df: => org.apache.spark.sql.DataFrame): String =
+    graft.Stored.dir(goldenBase(name))(
+      df.coalesce(1).write.mode("overwrite").parquet(_))
 }

@@ -582,8 +582,11 @@ object Similarity {
                         rows: Array[Array[Double]]): Unit = {
     java.nio.file.Files.createDirectories(p.getParent)
     val body = rows.map(_.mkString(" ")).mkString("\n")
-    // temp + atomic move: a concurrent reader never sees a torn file
-    val tmp = p.resolveSibling(p.getFileName.toString + ".tmp")
+    // temp + atomic move: a concurrent reader never sees a torn file, and
+    // a per-write temp name keeps two JVMs storing the same fit from
+    // moving each other's temp
+    val tmp = p.resolveSibling(
+      s"${p.getFileName}.tmp-${java.util.UUID.randomUUID()}")
     java.nio.file.Files.write(tmp,
       body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     java.nio.file.Files.move(tmp, p,

@@ -159,9 +159,7 @@ object Fixtures {
   private def parquetBacked(spark: SparkSession, nAddresses: Int,
                             nBlocks: Int, seed: Long): World = {
     import spark.implicits._
-    val base = cacheBase(nAddresses, nBlocks, seed)
-    val ok = java.nio.file.Paths.get(base, "_OK")
-    if (!java.nio.file.Files.exists(ok)) {
+    val base = graft.Stored.dir(cacheBase(nAddresses, nBlocks, seed)) { base =>
       val w = generateUncached(spark, nAddresses, nBlocks, seed)
       val par = spark.sparkContext.defaultParallelism
       def dump(df: DataFrame, name: String, wide: Boolean): Unit =
@@ -180,7 +178,6 @@ object Fixtures {
       dump(w.storageOracle.zipWithIndex
         .map { case (s, i) => (i.toLong, s) }.toDF(),
         "storage_oracle", wide = false)
-      java.nio.file.Files.write(ok, Array.emptyByteArray)
     }
     new World(
       spark.read.parquet(s"$base/account_changeset"),

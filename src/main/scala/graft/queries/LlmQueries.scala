@@ -881,26 +881,7 @@ object LlmQueries {
         val dirTag = new java.io.File(dir).getName
           .replaceAll("[^A-Za-z0-9]", "_") + "_" + docsDriftKey(dir)
         val table = s"graft_sig_store_$dirTag"
-        val path = new java.io.File(s"target/sigstore/$dirTag")
-          .getAbsolutePath
-        val ok = java.nio.file.Paths.get(path, "_OK")
-        // re-attach needs the store's recorded bucket spec; a store from
-        // before the spec sidecar existed is re-materialized once
-        val spec = java.nio.file.Paths.get(path, "t", Dedup.bucketSpecFile)
-        if (!s.catalog.tableExists(table)) {
-          // a store left by a previous JVM re-ATTACHES (one DDL) instead
-          // of re-materializing (a corpus scan) — the amortization the
-          // stable path exists for
-          if (java.nio.file.Files.exists(ok) &&
-              java.nio.file.Files.exists(spec))
-            Dedup.registerSignatureStore(s, table, s"$path/t")
-          else {
-            Dedup.materializeSignatures(docs, table, s"$path/t")
-            java.nio.file.Files.createDirectories(
-              java.nio.file.Paths.get(path))
-            java.nio.file.Files.write(ok, Array.emptyByteArray)
-          }
-        }
+        signatureStore(s, table, s"target/sigstore/$dirTag", docs)
         val cand = Dedup.storedCandidates(s, table)
         Dedup.ngramJaccard(docs, threshold = 0.5, candidates = Some(cand))
           .orderBy(col("id_a"), col("id_b"))
@@ -927,21 +908,7 @@ object LlmQueries {
         val dirTag = new java.io.File(dir).getName
           .replaceAll("[^A-Za-z0-9]", "_") + "_" + docsDriftKey(dir)
         val table = s"graft_sig_store_old_$dirTag"
-        val path = new java.io.File(s"target/sigstore_inc/$dirTag")
-          .getAbsolutePath
-        val ok = java.nio.file.Paths.get(path, "_OK")
-        val spec = java.nio.file.Paths.get(path, "t", Dedup.bucketSpecFile)
-        if (!s.catalog.tableExists(table)) {
-          if (java.nio.file.Files.exists(ok) &&
-              java.nio.file.Files.exists(spec))
-            Dedup.registerSignatureStore(s, table, s"$path/t")
-          else {
-            Dedup.materializeSignatures(oldDocs, table, s"$path/t")
-            java.nio.file.Files.createDirectories(
-              java.nio.file.Paths.get(path))
-            java.nio.file.Files.write(ok, Array.emptyByteArray)
-          }
-        }
+        signatureStore(s, table, s"target/sigstore_inc/$dirTag", oldDocs)
         // uncapped (the cap-free-oracle stance, st06 convention): the
         // production default keeps the 1000 cap
         val cand = Dedup.incrementalCandidates(s, table, newDocs,
@@ -4296,11 +4263,7 @@ object LlmQueries {
       (s, dir) => {
         val e = Tables(s, dir, "embeddings")
         val cents = Similarity.ivfCentroidsCached(dir, e)
-        val path = s17IndexPath(dir, cents)
-        s17BuildLock.synchronized {
-          if (!new java.io.File(path, "_SUCCESS").isFile)
-            Similarity.writeIvfIndex(e, cents, path)
-        }
+        val path = s17Index(dir, e, cents)
         Run(Similarity.queryIvfIndex(path, cents,
             e.filter(col("vec_id") < 5), k = 10)
           .orderBy(col("query_id"), col("rank")),
@@ -4314,8 +4277,8 @@ object LlmQueries {
     // entry proving merge ∘ delete ≡ an index built over (union minus
     // tombstones) under the primary's centroids, which is what lets a
     // store interleave compactions and deletions in any order without
-    // drift. Shares s18's segment/merged stores (same paths, same
-    // lock) so the composition adds only the compaction rewrite.
+    // drift. Shares s18's segment/merged stores (same paths) so the
+    // composition adds only the compaction rewrite.
     "s20_ivf_lifecycle" -> QuerySpec(
       (s, dir) => {
         val e = Tables(s, dir, "embeddings")
@@ -4327,21 +4290,10 @@ object LlmQueries {
         // every warm run
         val centsA = Similarity.ivfCentroidsCached(s"$dir|s18prim", ea)
         val centsB = Similarity.ivfCentroidsCached(s"$dir|s18sec", eb)
-        val pa = s18IndexPath(dir, centsA, "prim")
-        val pb = s18IndexPath(dir, centsB, "sec")
-        val pm = s18IndexPath(dir, centsA, "merged")
-        val pl = s18IndexPath(dir, centsA, "live")
-        s18BuildLock.synchronized {
-          if (!new java.io.File(pm, "_SUCCESS").isFile) {
-            Similarity.writeIvfIndex(ea, centsA, pa)
-            Similarity.writeIvfIndex(eb, centsB, pb)
-            Similarity.mergeIvfIndex(s, pa, pb, centsA, pm)
-          }
-          if (!new java.io.File(pl, "_SUCCESS").isFile)
-            Similarity.compactIvfIndex(s, pm,
-              e.filter(col("vec_id") % 10 === 3).select(col("vec_id")),
-              pl)
-        }
+        val pm = s18MergedIndex(s, dir, ea, eb, centsA, centsB)
+        val pl = graft.Stored.dir(s18IndexPath(dir, centsA, "live"))(
+          Similarity.compactIvfIndex(s, pm,
+            e.filter(col("vec_id") % 10 === 3).select(col("vec_id")), _))
         Run(Similarity.queryIvfIndex(pl, centsA,
             e.filter(col("vec_id") < 5 && col("vec_id") % 10 =!= 3),
             k = 10)
@@ -4365,20 +4317,12 @@ object LlmQueries {
         val e = Tables(s, dir, "embeddings")
         val cents = Similarity.ivfCentroidsCached(dir, e)
         // the FULL index is s17's — same (dir, centroids) key, so the
-        // content is bit-identical; build it under s17's own lock if
-        // s17 hasn't run yet rather than paying a redundant build
-        val full = s17IndexPath(dir, cents)
-        val live = s18IndexPath(dir, cents, "s19live")
-        s17BuildLock.synchronized {
-          if (!new java.io.File(full, "_SUCCESS").isFile)
-            Similarity.writeIvfIndex(e, cents, full)
-        }
-        s19BuildLock.synchronized {
-          if (!new java.io.File(live, "_SUCCESS").isFile)
-            Similarity.compactIvfIndex(s, full,
-              e.filter(col("vec_id") % 10 === 3).select(col("vec_id")),
-              live)
-        }
+        // content is bit-identical; build it at s17's path if s17 hasn't
+        // run yet rather than paying a redundant build
+        val full = s17Index(dir, e, cents)
+        val live = graft.Stored.dir(s18IndexPath(dir, cents, "s19live"))(
+          Similarity.compactIvfIndex(s, full,
+            e.filter(col("vec_id") % 10 === 3).select(col("vec_id")), _))
         Run(Similarity.queryIvfIndex(live, cents,
             e.filter(col("vec_id") < 5 && col("vec_id") % 10 =!= 3),
             k = 10)
@@ -4409,16 +4353,7 @@ object LlmQueries {
         // drop out of every warm run (and s20 shares the same keys)
         val centsA = Similarity.ivfCentroidsCached(s"$dir|s18prim", ea)
         val centsB = Similarity.ivfCentroidsCached(s"$dir|s18sec", eb)
-        val pa = s18IndexPath(dir, centsA, "prim")
-        val pb = s18IndexPath(dir, centsB, "sec")
-        val pm = s18IndexPath(dir, centsA, "merged")
-        s18BuildLock.synchronized {
-          if (!new java.io.File(pm, "_SUCCESS").isFile) {
-            Similarity.writeIvfIndex(ea, centsA, pa)
-            Similarity.writeIvfIndex(eb, centsB, pb)
-            Similarity.mergeIvfIndex(s, pa, pb, centsA, pm)
-          }
-        }
+        val pm = s18MergedIndex(s, dir, ea, eb, centsA, centsB)
         Run(Similarity.queryIvfIndex(pm, centsA,
             e.filter(col("vec_id") < 5), k = 10)
           .orderBy(col("query_id"), col("rank")),
@@ -6023,40 +5958,25 @@ object LlmQueries {
     * subject is reading samples back through the DSv2 source, not the
     * write m17 already measures.
     */
-  private val shardedFixLock = new Object
   private def ensureShardedArchive(s: org.apache.spark.sql.SparkSession,
-      dir: String, nImg: Int): String = shardedFixLock.synchronized {
-    val base = new java.io.File("target/shardedarchive/" +
-      s"${new java.io.File(dir).getName}-${docsDriftKey(dir)}-ld-v1")
-    val done = new java.io.File(base, "_DONE")
-    if (!done.exists()) {
-      if (base.exists())
-        org.apache.commons.io.FileUtils.deleteDirectory(base)
-      // a partial build (no _DONE) must not linger: the next call would
-      // rebuild anyway, but an abandoned half-written archive dir reads
-      // as fixture state it isn't (ADVICE r19)
-      try {
-        val (keptPairs, members) = m17MemberFrames(s, dir, nImg)
-        // through the DSv2 sink (byte-identical to the library writer;
-        // WarcSpec-pinned) so the loader fixture exercises the same
-        // write path m17 does
-        val assigned = graft.sources.Warc.assignShards(
-          members, M17TargetBytes)
-        assigned.write
-          .format("graft.spark.datasource.WarcDataSource")
-          .mode("overwrite").save(base.toString)
-        org.apache.spark.sql.graftshim.Bridge
-          .unpersistOwnedPlanCheckpoints(assigned)
-        org.apache.spark.sql.graftshim.Bridge
-          .unpersistLocalCheckpoint(keptPairs)
-        done.createNewFile()
-      } catch { case e: Throwable =>
-        org.apache.commons.io.FileUtils.deleteQuietly(base)
-        throw e
-      }
+      dir: String, nImg: Int): String =
+    graft.Stored.dir("target/shardedarchive/" +
+        s"${new java.io.File(dir).getName}-${docsDriftKey(dir)}-ld-v1") {
+      base =>
+      val (keptPairs, members) = m17MemberFrames(s, dir, nImg)
+      // through the DSv2 sink (byte-identical to the library writer;
+      // WarcSpec-pinned) so the loader fixture exercises the same
+      // write path m17 does
+      val assigned = graft.sources.Warc.assignShards(
+        members, M17TargetBytes)
+      assigned.write
+        .format("graft.spark.datasource.WarcDataSource")
+        .mode("overwrite").save(base)
+      org.apache.spark.sql.graftshim.Bridge
+        .unpersistOwnedPlanCheckpoints(assigned)
+      org.apache.spark.sql.graftshim.Bridge
+        .unpersistLocalCheckpoint(keptPairs)
     }
-    base.getAbsolutePath
-  }
 
   /** m17's shard-rotation target: small enough that the sf0.001 fixture
     * already produces several shards (the rotation path is exercised at
@@ -7325,32 +7245,22 @@ object LlmQueries {
     * source parquet's (size, mtime) so testdata drift remints (the
     * st13 convention).
     */
-  private val crawlFixLock = new Object
   private[queries] def ensureCrawlFixture(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    crawlFixLock.synchronized {
-      val key = docsDriftKey(dir)
-      val base = new java.io.File(
-        s"target/crawlfix/${new java.io.File(dir).getName}-$key-v1")
-      val done = new java.io.File(base, "_DONE")
-      if (!done.exists()) {
-        if (base.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(base)
-        val host = expr("""CASE CAST(doc_id % 5 AS INT)
-          WHEN 0 THEN 'WWW.EXAMPLE.ORG'
-          WHEN 1 THEN 'CDN.SPAM.TRACKER.NET:8443'
-          WHEN 2 THEN 'News.Site.com'
-          WHEN 3 THEN 'blog.example.org'
-          ELSE 'ads.DoubleClick.net' END""")
-        val rows = Tables(s, dir, "documents").select(
-          concat(lit("HTTPS://"), host, lit("/doc/"), col("doc_id"),
-            lit("?b=2&utm_source=feed&a=1#frag")).as("url"),
-          lit("2026-01-01T00:00:00Z").as("warc_date"),
-          l45Page(col("doc_id"), col("text")).as("text"))
-        graft.sources.Warc.write(rows.repartition(4), base.toString)
-        done.createNewFile()
-      }
-      base.toString
+    graft.Stored.dir(s"target/crawlfix/${new java.io.File(dir).getName}-" +
+        s"${docsDriftKey(dir)}-v1") { base =>
+      val host = expr("""CASE CAST(doc_id % 5 AS INT)
+        WHEN 0 THEN 'WWW.EXAMPLE.ORG'
+        WHEN 1 THEN 'CDN.SPAM.TRACKER.NET:8443'
+        WHEN 2 THEN 'News.Site.com'
+        WHEN 3 THEN 'blog.example.org'
+        ELSE 'ads.DoubleClick.net' END""")
+      val rows = Tables(s, dir, "documents").select(
+        concat(lit("HTTPS://"), host, lit("/doc/"), col("doc_id"),
+          lit("?b=2&utm_source=feed&a=1#frag")).as("url"),
+        lit("2026-01-01T00:00:00Z").as("warc_date"),
+        l45Page(col("doc_id"), col("text")).as("text"))
+      graft.sources.Warc.write(rows.repartition(4), base)
     }
 
   /** l51's WARC fixture: RESPONSE records — each document's [[l45Page]]
@@ -7374,36 +7284,27 @@ object LlmQueries {
     */
   private[queries] def ensureHttpCrawlFixture(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    crawlFixLock.synchronized {
-      val key = docsDriftKey(dir)
-      val base = new java.io.File(
-        s"target/httpfix/${new java.io.File(dir).getName}-$key-v2")
-      val done = new java.io.File(base, "_DONE")
-      if (!done.exists()) {
-        if (base.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(base)
-        val host = expr("""CASE CAST(doc_id % 5 AS INT)
-          WHEN 0 THEN 'WWW.EXAMPLE.ORG'
-          WHEN 1 THEN 'CDN.SPAM.TRACKER.NET:8443'
-          WHEN 2 THEN 'News.Site.com'
-          WHEN 3 THEN 'blog.example.org'
-          ELSE 'ads.DoubleClick.net' END""")
-        import s.implicits._
-        val rows = Tables(s, dir, "documents").select(
-            col("doc_id"),
-            concat(lit("HTTPS://"), host, lit("/doc/"), col("doc_id"),
-              lit("?b=2&utm_source=feed&a=1#frag")).as("url"),
-            l45Page(col("doc_id"), col("text")).as("page"))
-          .as[(Long, String, String)]
-          .map { case (id, url, page) =>
-            (url, "2026-01-01T00:00:00Z", buildHttpMessage(id, page)) }
-          .toDF("url", "warc_date", "payload")
-        graft.sources.Warc.writeRecords(rows.repartition(4),
-          base.toString, recType = "response",
-          contentType = "application/http; msgtype=response")
-        done.createNewFile()
-      }
-      base.toString
+    graft.Stored.dir(s"target/httpfix/${new java.io.File(dir).getName}-" +
+        s"${docsDriftKey(dir)}-v2") { base =>
+      val host = expr("""CASE CAST(doc_id % 5 AS INT)
+        WHEN 0 THEN 'WWW.EXAMPLE.ORG'
+        WHEN 1 THEN 'CDN.SPAM.TRACKER.NET:8443'
+        WHEN 2 THEN 'News.Site.com'
+        WHEN 3 THEN 'blog.example.org'
+        ELSE 'ads.DoubleClick.net' END""")
+      import s.implicits._
+      val rows = Tables(s, dir, "documents").select(
+          col("doc_id"),
+          concat(lit("HTTPS://"), host, lit("/doc/"), col("doc_id"),
+            lit("?b=2&utm_source=feed&a=1#frag")).as("url"),
+          l45Page(col("doc_id"), col("text")).as("page"))
+        .as[(Long, String, String)]
+        .map { case (id, url, page) =>
+          (url, "2026-01-01T00:00:00Z", buildHttpMessage(id, page)) }
+        .toDF("url", "warc_date", "payload")
+      graft.sources.Warc.writeRecords(rows.repartition(4),
+        base, recType = "response",
+        contentType = "application/http; msgtype=response")
     }
 
   /** One fixture HTTP response message (see [[ensureHttpCrawlFixture]]
@@ -7474,27 +7375,18 @@ object LlmQueries {
     */
   private[queries] def ensureCharsetFixture(
       s: org.apache.spark.sql.SparkSession, dir: String): String =
-    crawlFixLock.synchronized {
-      val key = docsDriftKey(dir)
-      val base = new java.io.File(
-        s"target/charsetfix/${new java.io.File(dir).getName}-$key-v1")
-      val done = new java.io.File(base, "_DONE")
-      if (!done.exists()) {
-        if (base.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(base)
-        import s.implicits._
-        val rows = Tables(s, dir, "documents").select(col("doc_id"))
-          .as[Long]
-          .map { id =>
-            (s"https://cs${id % 4}.example/d/$id",
-              "2026-01-01T00:00:00Z", buildCharsetMessage(id)) }
-          .toDF("url", "warc_date", "payload")
-        graft.sources.Warc.writeRecords(rows.repartition(4),
-          base.toString, recType = "response",
-          contentType = "application/http; msgtype=response")
-        done.createNewFile()
-      }
-      base.toString
+    graft.Stored.dir(s"target/charsetfix/${new java.io.File(dir).getName}-" +
+        s"${docsDriftKey(dir)}-v1") { base =>
+      import s.implicits._
+      val rows = Tables(s, dir, "documents").select(col("doc_id"))
+        .as[Long]
+        .map { id =>
+          (s"https://cs${id % 4}.example/d/$id",
+            "2026-01-01T00:00:00Z", buildCharsetMessage(id)) }
+        .toDF("url", "warc_date", "payload")
+      graft.sources.Warc.writeRecords(rows.repartition(4),
+        base, recType = "response",
+        contentType = "application/http; msgtype=response")
     }
 
   /** One l65 fixture message (see [[ensureCharsetFixture]] for the
@@ -7719,9 +7611,7 @@ object LlmQueries {
     */
   private def l21CorpusPath(s: org.apache.spark.sql.SparkSession,
                             n: Int): String = {
-    val base = new java.io.File(s"target/l21corpus/$n").getAbsolutePath
-    val ok = java.nio.file.Paths.get(base, "_OK")
-    if (!java.nio.file.Files.exists(ok)) {
+    val base = graft.Stored.dir(s"target/l21corpus/$n") { base =>
       import s.implicits._
       val f = n / 10
       (0 until n).map { id =>
@@ -7733,7 +7623,6 @@ object LlmQueries {
       }.toDF("doc_id", "text")
         .repartition(8)
         .write.mode("overwrite").parquet(s"$base/docs")
-      java.nio.file.Files.write(ok, Array.emptyByteArray)
     }
     s"$base/docs"
   }
@@ -7853,15 +7742,12 @@ object LlmQueries {
   private def l74EdgesPath(s: org.apache.spark.sql.SparkSession,
                            n: Int): String = {
     require(n >= 211, s"l74 world needs n >= 211, got $n")
-    val base = new java.io.File(s"target/l74graph/$n").getAbsolutePath
-    val ok = java.nio.file.Paths.get(base, "_OK")
-    if (!java.nio.file.Files.exists(ok)) {
+    val base = graft.Stored.dir(s"target/l74graph/$n") { base =>
       import s.implicits._
       (0 until n).map(i => (s"n$i", s"n${(7 * i + 3) % 211}"))
         .toDF("src", "dst")
         .repartition(8)
         .write.mode("overwrite").parquet(s"$base/edges")
-      java.nio.file.Files.write(ok, Array.emptyByteArray)
     }
     s"$base/edges"
   }
@@ -7928,16 +7814,13 @@ object LlmQueries {
     */
   private def s13CorpusPath(s: org.apache.spark.sql.SparkSession,
                             n: Int): String = {
-    val base = new java.io.File(s"target/s13corpus/$n").getAbsolutePath
-    val ok = java.nio.file.Paths.get(base, "_OK")
-    if (!java.nio.file.Files.exists(ok)) {
+    val base = graft.Stored.dir(s"target/s13corpus/$n") { base =>
       s.range(n.toLong).select(col("id").as("vec_id"),
         transform(sequence(lit(0), lit(63)),
           d => (pmod(xxhash64(col("id"), d), lit(2000L)).cast("double")
             / lit(1000.0d) - lit(1.0d)).cast("float")).as("embedding"))
         .repartition(8)
         .write.mode("overwrite").parquet(s"$base/vecs")
-      java.nio.file.Files.write(ok, Array.emptyByteArray)
     }
     s"$base/vecs"
   }
@@ -8270,9 +8153,6 @@ object LlmQueries {
 
   // ---- persistent IVF index stores (s17–s20) ----
 
-  private val s17BuildLock = new Object
-  private val s18BuildLock = new Object
-  private val s19BuildLock = new Object
   private def s18IndexPath(dir: String, cents: Array[Array[Double]],
                            role: String): String = {
     val key = java.security.MessageDigest.getInstance("MD5")
@@ -8290,6 +8170,43 @@ object LlmQueries {
       .digest((dir + "|" + cents.map(_.mkString(",")).mkString(";"))
         .getBytes("UTF-8")).map("%02x".format(_)).mkString
     s"target/annindex/ivf-$key"
+  }
+
+  /** s17's index of `e` under `cents` (s19 compacts the same one). */
+  private def s17Index(dir: String, e: org.apache.spark.sql.DataFrame,
+                       cents: Array[Array[Double]]): String =
+    graft.Stored.dir(s17IndexPath(dir, cents))(
+      Similarity.writeIvfIndex(e, cents, _))
+
+  /** s18's merged index: segment `ea` under its own centroids `centsA`,
+    * with segment `eb` (indexed under `centsB`) merged in under `centsA`.
+    * s20 compacts the same one.
+    */
+  private def s18MergedIndex(s: org.apache.spark.sql.SparkSession,
+      dir: String, ea: org.apache.spark.sql.DataFrame,
+      eb: org.apache.spark.sql.DataFrame, centsA: Array[Array[Double]],
+      centsB: Array[Array[Double]]): String =
+    graft.Stored.dir(s18IndexPath(dir, centsA, "merged")) { pm =>
+      def segment(v: org.apache.spark.sql.DataFrame,
+                  cents: Array[Array[Double]], role: String) =
+        graft.Stored.dir(s18IndexPath(dir, cents, role))(
+          Similarity.writeIvfIndex(v, cents, _))
+      Similarity.mergeIvfIndex(s, segment(ea, centsA, "prim"),
+        segment(eb, centsB, "sec"), centsA, pm)
+    }
+
+  /** l14/l50's bucketed signature store of `docs`, registered as `table`.
+    * A store a previous JVM left re-ATTACHES (one DDL, with the bucket
+    * spec recorded beside the data) instead of re-materializing (a corpus
+    * scan): the amortization the stable path exists for.
+    */
+  private def signatureStore(s: org.apache.spark.sql.SparkSession,
+      table: String, path: String,
+      docs: org.apache.spark.sql.DataFrame): Unit = {
+    val base = graft.Stored.dir(path)(p =>
+      Dedup.materializeSignatures(docs, table, s"$p/t"))
+    if (!s.catalog.tableExists(table))
+      Dedup.registerSignatureStore(s, table, s"$base/t")
   }
 
   // l42: the trained model is plain data (weights + bias), so the memo

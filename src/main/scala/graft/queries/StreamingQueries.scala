@@ -118,42 +118,35 @@ object StreamingQueries {
     * stable path; ids are seed-deterministic so no drift key is
     * needed (the fixture derives from nothing in the sf dir).
     */
-  private val imageFixLock = new Object
-  private[queries] def ensureImageFixture(): String =
-    imageFixLock.synchronized {
-      val n = 200
-      val base = new java.io.File(s"target/imagefix/n$n-v1")
-      val done = new java.io.File(base, "_DONE")
-      if (!done.exists()) {
-        if (base.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(base)
-        base.mkdirs()
-        (0 until n).foreach { i =>
-          val id = i.toLong
-          val w = 16 + (id % 13).toInt
-          val h = 16 + (id % 7).toInt
-          val rnd = new scala.util.Random(42L + id)
-          val rgb = graft.operators.Multimodal.smoothRgb(w, h, rnd)
-          val bytes = (id % 5) match {
-            case 0 => graft.operators.Multimodal.Codecs.encodeBmp(w, h, rgb)
-            case 1 => graft.codec.Jpeg.encode(w, h, rgb)
-            case 2 => graft.codec.Png.encode(w, h, rgb)
-            case 3 =>
-              val pal = Array.tabulate(256)(x => (x << 16) | (x << 8) | x)
-              graft.codec.Gif.encode(w, h, pal,
-                graft.operators.Multimodal.Codecs.lumaOf(rgb))
-            case _ =>
-              val junk = new Array[Byte](64); rnd.nextBytes(junk)
-              junk(0) = 0x42; junk(1) = 0x00
-              junk
-          }
-          java.nio.file.Files.write(
-            new java.io.File(base, f"media-$id%05d.bin").toPath, bytes)
+  private[queries] def ensureImageFixture(): String = {
+    val n = 200
+    graft.Stored.dir(s"target/imagefix/n$n-v1") { dir =>
+      val base = new java.io.File(dir)
+      base.mkdirs()
+      (0 until n).foreach { i =>
+        val id = i.toLong
+        val w = 16 + (id % 13).toInt
+        val h = 16 + (id % 7).toInt
+        val rnd = new scala.util.Random(42L + id)
+        val rgb = graft.operators.Multimodal.smoothRgb(w, h, rnd)
+        val bytes = (id % 5) match {
+          case 0 => graft.operators.Multimodal.Codecs.encodeBmp(w, h, rgb)
+          case 1 => graft.codec.Jpeg.encode(w, h, rgb)
+          case 2 => graft.codec.Png.encode(w, h, rgb)
+          case 3 =>
+            val pal = Array.tabulate(256)(x => (x << 16) | (x << 8) | x)
+            graft.codec.Gif.encode(w, h, pal,
+              graft.operators.Multimodal.Codecs.lumaOf(rgb))
+          case _ =>
+            val junk = new Array[Byte](64); rnd.nextBytes(junk)
+            junk(0) = 0x42; junk(1) = 0x00
+            junk
         }
-        done.createNewFile()
+        java.nio.file.Files.write(
+          new java.io.File(base, f"media-$id%05d.bin").toPath, bytes)
       }
-      base.getAbsolutePath
     }
+  }
 
   /** st13's WARC fixture: [[PipelineQueries.warcRows]] encoded ONCE per
     * sf dir at a stable path (the golden/fixture write-once convention —
@@ -163,27 +156,14 @@ object StreamingQueries {
     * parquet's (size, mtime) — the s17 drift-remint stance with a
     * filesystem stat instead of a content hash — so driver testdata
     * regeneration mints a fresh fixture instead of streaming stale rows
-    * against a freshly-recomputed oracle. The _DONE marker commits the
-    * write; a partial dir from a crashed run is rebuilt.
+    * against a freshly-recomputed oracle.
     */
-  private val warcFixLock = new Object
   private[queries] def ensureWarcFixture(s: org.apache.spark.sql.SparkSession,
                                 dir: String): String =
-    warcFixLock.synchronized {
-      val key = LlmQueries.docsDriftKey(dir)
-      val base = new java.io.File(
-        s"target/warcfix/${new java.io.File(dir).getName}-$key-v1")
-      val done = new java.io.File(base, "_DONE")
-      if (!done.exists()) {
-        if (base.exists())
-          org.apache.commons.io.FileUtils.deleteDirectory(base)
-        graft.sources.Warc.write(
-          PipelineQueries.warcRows(s, dir).repartition(4),
-          base.toString)
-        done.createNewFile()
-      }
-      base.toString
-    }
+    graft.Stored.dir(s"target/warcfix/${new java.io.File(dir).getName}-" +
+        s"${LlmQueries.docsDriftKey(dir)}-v1")(
+      graft.sources.Warc.write(
+        PipelineQueries.warcRows(s, dir).repartition(4), _))
 
   /** Gap-based sessionization oracle (lag + running sum): an event at
     * exactly prev+30min starts a NEW session, matching Spark's half-open

@@ -312,11 +312,13 @@ object StateFiles {
   private[graft] val NonAdvancingField = "anomaly_non_advancing_block"
 
   /** Per-part stat bundle carried from tasks to the manifest commit
-    * (row totals + write-time anomaly counters; `anomNonAdvancing` is
-    * counted only by [[writeFlagged]]'s tasks).
+    * (row totals, the block range the part's header records, and
+    * write-time anomaly counters; `anomNonAdvancing` is counted only by
+    * [[writeFlagged]]'s tasks).
     */
   private[spark] final case class PartStats(bytes: Long,
                                             accounts: Long, slots: Long,
+                                            blockStart: Long, blockEnd: Long,
                                             anomIncDecrease: Long,
                                             anomCodeHashNoInc: Long,
                                             anomNonAdvancing: Long = 0L)
@@ -396,8 +398,8 @@ object StateFiles {
         java.util.Arrays.copyOfRange(full,
           math.max(0, full.length - PairSuffixLen), full.length)))
     EncodedPart(full, idx, PartStats(body.length.toLong, w.countAccounts,
-      w.countStorageSlots, w.anomalyIncarnationDecrease,
-      w.anomalyCodeHashNoIncarnation))
+      w.countStorageSlots, blockStart, blockEnd,
+      w.anomalyIncarnationDecrease, w.anomalyCodeHashNoIncarnation))
   }
 
   private[spark] def atomicWrite(dir: String, name: String,

@@ -61,10 +61,7 @@ class DatTable(path: String, strategy: Int, pagesPerSplit: Int)
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
-    new DatWriteBuilder(path, strategy,
-      Option(info.options.get("blockStart")).map(_.toLong).getOrElse(0L),
-      Option(info.options.get("blockEnd")).map(_.toLong).getOrElse(0L),
-      info.queryId())
+    new DatWriteBuilder(path, strategy, info.queryId())
 }
 
 class DatScanBuilder(path: String, strategy: Int, pagesPerSplit: Int,
@@ -823,8 +820,7 @@ class DatReaderFactory(strategy: Int) extends PartitionReaderFactory {
 // streaming) ----
 //
 //   df.write.format("graft.spark.datasource.DatDataSource")
-//     .option("strategy", "1").option("blockStart", "0")
-//     .option("blockEnd", "1000").mode("append").save(dir)
+//     .option("strategy", "1").mode("append").save(dir)
 //
 //   df.writeStream.format("graft.spark.datasource.DatDataSource")
 //     .option("strategy", "0").option("checkpointLocation", ckpt)
@@ -838,6 +834,11 @@ class DatReaderFactory(strategy: Int) extends PartitionReaderFactory {
 // temps and leaves the previous snapshot untouched. mode("append") adds
 // an increment; mode("overwrite") publishes a fresh snapshot.
 //
+// The block range comes from the rows: each part's header records the
+// min and max `block` its task encoded, and the commit records the range
+// over the write's parts (0/0 for a write with no rows), which an append
+// widens the manifest's range by.
+//
 // A streaming epoch is one append increment, merged into the manifest
 // with (stream_batch = epochId, stream_id = the streaming QUERY id —
 // Spark persists it in the checkpoint, so restarts keep it and a reset
@@ -847,8 +848,7 @@ class DatReaderFactory(strategy: Int) extends PartitionReaderFactory {
 // StateFiles.append offers foreachBatch writers, expressed through
 // DSv2's native epoch protocol.
 
-class DatWriteBuilder(path: String, strategy: Int, blockStart: Long,
-                      blockEnd: Long, queryId: String = "")
+class DatWriteBuilder(path: String, strategy: Int, queryId: String = "")
     extends org.apache.spark.sql.connector.write.WriteBuilder
     with org.apache.spark.sql.connector.write.SupportsTruncate {
   private var doTruncate = false
@@ -856,7 +856,7 @@ class DatWriteBuilder(path: String, strategy: Int, blockStart: Long,
     doTruncate = true; this
   }
   override def build(): org.apache.spark.sql.connector.write.Write =
-    new DatWrite(path, strategy, blockStart, blockEnd, doTruncate, queryId)
+    new DatWrite(path, strategy, doTruncate, queryId)
 }
 
 /** One task's part, or None for an empty input partition (repartitionByRange
@@ -866,8 +866,8 @@ case class DatCommitMessage(
     part: Option[graft.spark.StateFiles.Staged[graft.spark.StateFiles.PartStats]])
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
-class DatWrite(path: String, strategy: Int, blockStart: Long,
-               blockEnd: Long, truncate: Boolean, queryId: String = "")
+class DatWrite(path: String, strategy: Int, truncate: Boolean,
+               queryId: String = "")
     extends org.apache.spark.sql.connector.write.Write
     with org.apache.spark.sql.connector.write.BatchWrite
     with org.apache.spark.sql.connector.write.streaming.StreamingWrite {
@@ -901,7 +901,7 @@ class DatWrite(path: String, strategy: Int, blockStart: Long,
   private def factory(): DatWriterFactory = {
     Files.createDirectories(Paths.get(path))
     if (!truncate) StateFiles.requireAppendable(path, strategy)
-    new DatWriterFactory(path, strategy, blockStart, blockEnd, writeId)
+    new DatWriterFactory(path, strategy, writeId)
   }
 
   override def createBatchWriterFactory(
@@ -914,9 +914,13 @@ class DatWrite(path: String, strategy: Int, blockStart: Long,
                       streamBatchId: Long, streamId: String): Unit =
     StateFiles.publish(path,
       messages.toSeq.flatMap(_.asInstanceOf[DatCommitMessage].part),
-      overwrite = truncate)(parts =>
-      StateFiles.commitManifest(path, strategy, blockStart, blockEnd,
-        mergeManifest = !truncate, parts, streamBatchId, streamId))
+      overwrite = truncate) { parts =>
+      val stats = parts.map(_._2)
+      StateFiles.commitManifest(path, strategy,
+        stats.map(_.blockStart).minOption.getOrElse(0L),
+        stats.map(_.blockEnd).maxOption.getOrElse(0L),
+        mergeManifest = !truncate, parts, streamBatchId, streamId)
+    }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
     publish(messages, -1L, "")
@@ -943,8 +947,7 @@ class DatWrite(path: String, strategy: Int, blockStart: Long,
   * streaming form tags its temps with the epoch, so one epoch's abort
   * never discards another's.
   */
-class DatWriterFactory(path: String, strategy: Int, blockStart: Long,
-                       blockEnd: Long, writeId: String)
+class DatWriterFactory(path: String, strategy: Int, writeId: String)
     extends org.apache.spark.sql.connector.write.DataWriterFactory
     with org.apache.spark.sql.connector.write.streaming
       .StreamingDataWriterFactory {
@@ -962,18 +965,22 @@ class DatWriterFactory(path: String, strategy: Int, blockStart: Long,
   private def writer(partitionId: Int, id: String) =
     new DataWriter[InternalRow] {
       private val w = StateFiles.partWriter(strategy)
-      private var rows = 0L
+      // the block range of the rows written so far; empty while lo > hi
+      private var lo = Long.MaxValue
+      private var hi = Long.MinValue
 
       override def write(r: InternalRow): Unit = {
-        w.write(StateItem(r.getBinary(0), r.getLong(1), r.getBoolean(2),
+        val block = r.getLong(1)
+        w.write(StateItem(r.getBinary(0), block, r.getBoolean(2),
           r.getLong(3), r.getLong(4), r.getBinary(5), r.getBinary(6),
           r.getBinary(7), r.getBinary(8)))
-        rows += 1
+        lo = math.min(lo, block)
+        hi = math.max(hi, block)
       }
 
       override def commit(): WriterCommitMessage =
-        DatCommitMessage(if (rows == 0) None else {
-          val part = StateFiles.finishPart(w, strategy, blockStart, blockEnd)
+        DatCommitMessage(if (lo > hi) None else {
+          val part = StateFiles.finishPart(w, strategy, lo, hi)
           Some(StateFiles.stage(path, id, partitionId, StateFiles.DatExts) {
             out => out(0).write(part.dat); out(1).write(part.idx); part.stats
           })

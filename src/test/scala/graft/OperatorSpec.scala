@@ -1108,6 +1108,25 @@ class OperatorSpec extends AnyFunSuite {
         s"row $i drifted")
   }
 
+  test("fit disk cache: concurrent stores of one fit all succeed") {
+    // writers that miss the same fit key (threads here, JVMs in a bench
+    // run) each store it; one shared temp name lets one writer move
+    // another's temp away, and that writer's move then throws
+    val p = java.nio.file.Files.createTempDirectory("graft-fitc")
+      .resolve("m.txt")
+    val rows = Array(Array(1.0, 2.0), Array(3.0, 4.0))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val fs = (0 until 4).map(_ => pool.submit(new Runnable {
+        def run(): Unit = (0 until 200).foreach(_ => Similarity.diskStore(p, rows))
+      }))
+      fs.foreach(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally pool.shutdownNow()
+    assert(Similarity.diskLoad(p).get.map(_.toSeq).toSeq ==
+      rows.map(_.toSeq).toSeq)
+    assert(p.getParent.toFile.list().toSeq == Seq("m.txt"), "temps left")
+  }
+
   test("semantic dedup clusters cell-local near-dup vectors to min id") {
     val vecs = Seq(
       (1L, Array(1.0f, 0.01f)),   // cell 0

@@ -471,17 +471,23 @@ class PipelineSpec extends AnyFunSuite {
     val fmt = "graft.spark.datasource.DatDataSource"
     val total = df.count()
     val mid = world.latestBlock / 2
+    // the block range the rows of `d` hold: the write derives its range
+    // from its rows, no option states it
+    def range(d: org.apache.spark.sql.DataFrame): (Long, Long) = {
+      val r = d.agg(min("block"), max("block")).head()
+      (r.getLong(0), r.getLong(1))
+    }
+    val (lowHalf, highHalf) =
+      (df.filter(col("block") <= mid), df.filter(col("block") > mid))
 
     // increment 1 + increment 2 via mode("append") — the daily-increment
     // flow through the standard writer API
-    df.filter(col("block") <= mid).write.format(fmt)
-      .option("strategy", "1").option("blockStart", "0")
-      .option("blockEnd", mid.toString).mode("append").save(dir)
-    df.filter(col("block") > mid).write.format(fmt)
-      .option("strategy", "1")
-      .option("blockStart", (mid + 1).toString)
-      .option("blockEnd", (world.latestBlock + 1).toString)
-      .mode("append").save(dir)
+    lowHalf.write.format(fmt).option("strategy", "1").mode("append").save(dir)
+    SinkCommit.assertBlockRange(dir, range(lowHalf))
+    highHalf.write.format(fmt).option("strategy", "1").mode("append").save(dir)
+    // the append widens the manifest's range over both increments
+    SinkCommit.assertBlockRange(dir, range(df))
+    assert(range(highHalf)._1 > 0L)
     val back = spark.read.format(fmt).option("strategy", "1").load(dir)
     assert(back.count() == total, "append increments must union")
     val mf = new String(Files.readAllBytes(
@@ -495,15 +501,21 @@ class PipelineSpec extends AnyFunSuite {
       .count() == total, "orphan part leaked into the committed snapshot")
 
     // overwrite publishes a fresh snapshot and GCs the old increment's
-    // files after the new manifest lands
-    df.filter(col("block") <= mid).write.format(fmt)
-      .option("strategy", "1").option("blockStart", "0")
-      .option("blockEnd", mid.toString).mode("overwrite").save(dir)
+    // files after the new manifest lands; its range is the new rows' alone
+    highHalf.write.format(fmt).option("strategy", "1").mode("overwrite")
+      .save(dir)
+    SinkCommit.assertBlockRange(dir, range(highHalf))
     val after = spark.read.format(fmt).option("strategy", "1").load(dir)
-    assert(after.count() == df.filter(col("block") <= mid).count())
+    assert(after.count() == highHalf.count())
     val mf2 = new String(Files.readAllBytes(
       java.nio.file.Paths.get(dir, "_manifest.json")))
     assert(!mf2.contains("\"files\":0"), mf2)
+    // a write with no rows saw no block: it records 0/0
+    df.limit(0).write.format(fmt).option("strategy", "1").mode("overwrite")
+      .save(dir)
+    assert(Seq("block_start", "block_end")
+      .map(graft.spark.StateFiles.manifestField(dir, _)) ==
+      Seq(Some(0L), Some(0L)))
   }
 
   test("DSv2 write: empty input partitions commit cleanly") {

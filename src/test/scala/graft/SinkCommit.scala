@@ -69,6 +69,27 @@ object SinkCommit {
     assert(temps.isEmpty, s"a failed write left temps: ${temps.toSeq}")
   }
 
+  /** The block range of `dir`'s manifest must be `range`, and the
+    * 256-byte headers of the parts it lists must cover exactly that
+    * range: no header outside it, the lowest start and highest end on it.
+    */
+  def assertBlockRange(dir: String, range: (Long, Long)): Unit = {
+    def field(name: String) =
+      graft.spark.StateFiles.manifestField(dir, name).get
+    assert((field("block_start"), field("block_end")) == range,
+      s"manifest block range of $dir")
+    val headers = graft.spark.StateFiles.manifestFileList(dir).get.map { n =>
+      val bb = java.nio.ByteBuffer.wrap(Files.readAllBytes(Paths.get(dir, n)))
+        .order(java.nio.ByteOrder.LITTLE_ENDIAN)
+      (bb.getLong(32), bb.getLong(40))
+    }
+    assert(headers.nonEmpty &&
+      headers.forall { case (lo, hi) =>
+        range._1 <= lo && lo <= hi && hi <= range._2 } &&
+      headers.map(_._1).min == range._1 && headers.map(_._2).max == range._2,
+      s"part header block ranges $headers do not cover $range")
+  }
+
   @volatile private var firstDone = new CountDownLatch(1)
 
   /** `ds` over `parts` partitions whose LAST task throws, but only once

@@ -418,6 +418,10 @@ class StreamingSpec extends AnyFunSuite {
     graft.spark.StateFiles.append(items, src, 0)
     mirror()
     assert(datCount(dst) == n)
+    // each epoch's parts and the manifest record the blocks the mirrored
+    // rows hold, with no write option stating them
+    val blocks = items.agg(min("block"), max("block")).head()
+    SinkCommit.assertBlockRange(dst, (blocks.getLong(0), blocks.getLong(1)))
     // the mirror's manifest records the stream identity: the query id,
     // which Spark persists in the checkpoint
     val qid = graft.spark.StateFiles
