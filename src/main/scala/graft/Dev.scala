@@ -2,6 +2,7 @@ package graft
 
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Paths}
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Development main: timings and plan dumps for named registry entries,
@@ -15,12 +16,20 @@ object Dev {
     """usage: runMain graft.Dev time [runs] <entry-substring>...
       |         per entry: one cold run, then `runs` (default 3) timed
       |         count()s after Bench's fixture warmup; prints the warm
-      |         median/min/max, the cold run and the row count
+      |         median/min/max, the cold run, the row count and
+      |         compiled=<classes compiled cold>/<warm median>
       |       runMain graft.Dev plan <outDir> <suffix> <entry-substring>...
       |         writes each entry's explain("formatted") to
       |         <outDir>/<name>_<suffix>.txt
       |No substring selects every entry.
       |Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS.""".stripMargin
+
+  /** Classes compiled by Janino in this JVM so far: a warm run that
+    * compiles any shows a thrashing codegen cache or a plan whose generated
+    * source differs per run.
+    */
+  private def compiled(): Long =
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -44,18 +53,23 @@ object Dev {
         val spark = session()
         graft.queries.PipelineQueries.warmFixtures(spark, sfDir)
         picked(filters).foreach { name =>
-          def once(): (Double, Long) = {
+          // seconds, rows, and the classes Janino compiled during the run
+          def once(): (Double, Long, Long) = {
+            val c0 = compiled()
             val t0 = System.nanoTime()
             val rows = SparkEntry.run(spark, sfDir, name)(_.df.count())
-            ((System.nanoTime() - t0) / 1e9, rows)
+            ((System.nanoTime() - t0) / 1e9, rows, compiled() - c0)
           }
           // an erroring entry must not abort the rest of the sweep
           try {
-            val (cold, rows) = once()
-            val times = Seq.fill(runs)(once()._1).sorted
+            val (cold, rows, coldCompiled) = once()
+            val warm = Seq.fill(runs)(once())
+            val times = warm.map(_._1).sorted
+            val warmCompiled = warm.map(_._3).sorted
             println(f"[time] $name%-34s median=${times(runs / 2)}%8.3f " +
               f"min=${times.head}%8.3f max=${times.last}%8.3f " +
-              f"cold=$cold%8.3f rows=$rows")
+              f"cold=$cold%8.3f rows=$rows " +
+              s"compiled=$coldCompiled/${warmCompiled(runs / 2)}")
           } catch { case e: Throwable =>
             System.err.println(s"[time] $name ERR " +
               Option(e.getMessage).getOrElse(e.getClass.getName).take(120))

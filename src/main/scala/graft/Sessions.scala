@@ -20,6 +20,34 @@ import org.apache.spark.sql.SparkSession
   * conf is a no-op for the latter but keeps the former readable.
   * [[Tables.normalizeTs]] then canonicalizes whatever arrived to one
   * µs-instant TimestampType so downstream plans never see the drift.
+  *
+  * Generated code is compiled once per JVM. Spark keeps every class
+  * Janino compiles in one LRU keyed by the generated source, 100 entries
+  * by default (`spark.sql.codegen.cache.maxEntries`). One pass over the
+  * four-entry curate panel (l53, l20, l05, l62) generates about 155
+  * distinct classes, so at the default the LRU evicts each class before
+  * its next use and a warm pass recompiles about 150 of them; Janino then
+  * held 23.6 % of a warm loop's CPU samples. 1000 entries hold the panel,
+  * `Cli.convert` and the as-of reads with room to spare. The cache is a
+  * JVM-global static, sized from the conf active at the JVM's first
+  * codegen, so the value must be there when the first session is built:
+  * a later `conf.set`, or a builder value given to a second session, does
+  * not resize it. Cost: none measurable. After 30 passes over the panel
+  * (local[1], 1,000 documents, 400 vectors) metaspace held 168.4 MB,
+  * against 171.6 MB at Spark's defaults, where every pass loads about 150
+  * new classes; here the cache stops growing once it holds the working
+  * set.
+  *
+  * `spark.sql.codegen.useIdInClassName=false` keeps the whole-stage
+  * codegen stage id out of the generated source. Adaptive execution
+  * numbers a query's stages in the order it creates them, and that order
+  * follows which stages finish first, so with the id in the class name a
+  * warm run can generate a renamed copy of a class it already holds (l20
+  * did on 4 of 29 warm passes of one loop). Without it, stages that
+  * generate the same pipeline share one class, and a cold pass over the
+  * panel compiles 135 classes instead of 155. Plans still print their
+  * stage ids (`*(5)`); only the class name reads `GeneratedIterator`.
+  * CodegenSpec pins that a second pass over the panel compiles nothing.
   */
 object Sessions {
   val readDefaults: Seq[(String, String)] = Seq(
@@ -44,7 +72,10 @@ object Sessions {
     // GraftFunctions.register + experimental.extraOptimizations; a bare
     // later .config("spark.sql.extensions", "com.their.Ext") would
     // replace this one silently.
-    "spark.sql.extensions" -> "graft.GraftExtensions")
+    "spark.sql.extensions" -> "graft.GraftExtensions",
+    // generated code is compiled once per JVM (see the scaladoc above)
+    "spark.sql.codegen.cache.maxEntries" -> "1000",
+    "spark.sql.codegen.useIdInClassName" -> "false")
 
   /** `local[cpus]` with `cpus` shuffle partitions and the UI off, log
     * level WARN: the session of every command-line main. `cpus` comes

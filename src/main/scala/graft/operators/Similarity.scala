@@ -106,11 +106,18 @@ object Similarity {
 
   /** First row's embedding dimensionality — one driver-side metadata
     * lookup (0 for an empty frame), used to size literal plane/centroid
-    * matrices.
+    * matrices. The first row in partition order is read with the physical
+    * plan's `executeTake`, not `take(1)`: a `take` plans a LIMIT that
+    * Catalyst pushes below unions and joins, and each codegen'd LIMIT
+    * names its counter from a JVM-global sequence, so every call would
+    * compile fresh classes.
     */
   private[graft] def dimsOf(df: DataFrame, vecCol: String): Int =
-    df.select(size(col(vecCol)).as("d")).take(1)
-      .headOption.map(_.getInt(0)).getOrElse(0)
+    df.select(size(col(vecCol))).queryExecution.executedPlan.executeTake(1)
+      .headOption.map { r =>
+        require(!r.isNullAt(0), s"$vecCol is null in the first row")
+        r.getInt(0)
+      }.getOrElse(0)
 
   /** LSH-bucketed ANN top-k with multi-probe: each query scores vectors in
     * its own bucket plus every bucket at hamming distance 1 (flipping each

@@ -1,0 +1,39 @@
+package graft
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.SparkSession
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Generated code is compiled once per JVM: a second pass over the curate
+  * panel, each entry's full result written to the noop sink, compiles no
+  * class. It fails when Spark's codegen cache is smaller than the panel's
+  * working set (the default 100 entries: about 150 classes a pass) or when
+  * an entry's generated source differs from run to run (a codegen'd LIMIT
+  * names its counter from a JVM-global sequence).
+  */
+class CodegenSpec extends AnyFunSuite {
+
+  lazy val spark: SparkSession = Sessions.withDefaults(SparkSession.builder())
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  private val dir = "/root/testdata/sf0.001"
+  private val panel = Seq("l53_pii_redact", "l20_bm25_terms",
+    "l05_embedding_neardup", "l62_pagerank")
+
+  /** Classes compiled by Janino while each panel entry runs in full. */
+  private def pass(): Map[String, Long] = panel.map { name =>
+    val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    SparkEntry.run(spark, dir, name)(
+      _.df.write.format("noop").mode("overwrite").save())
+    name -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+  }.toMap
+
+  test("a repeated pass over l53, l20, l05 and l62 compiles no class") {
+    val first = pass()
+    val second = pass()
+    assert(second == panel.map(_ -> 0L).toMap, s"first pass compiled $first")
+  }
+}
