@@ -389,9 +389,9 @@ object Explain {
         "second shuffle exist to review. m15_pair_media_export runs " +
         "the m14 gate plan (pinned above) to the kept-url DISTINCT, " +
         "one url equi-join against the media store, then the " +
-        "distributed WARC writer's foreachPartition (each task " +
-        "streams its own part, attempt-unique temp + rename commit — " +
-        "the p17 write path) and the binaryFile-listed " +
+        "WarcDataSource DSv2 sink (each task streams its own part " +
+        "into an attempt-unique temp, the driver renames once all " +
+        "succeeded — the p17 write path) and the binaryFile-listed " +
         "mapPartitions-narrow resource read back.\n")
       sb.append("\n## l100 / l101 / l104 / m16 / st24 — " +
         "inherits-from notes\n\n")
@@ -411,7 +411,7 @@ object Explain {
         "output. m16_paired_archive is m15's gate + media join with " +
         "the per-pair metadata projection unioned in (both sides " +
         "narrow over already-joined frames) through the same " +
-        "foreachPartition WARC writer, read back by the readRaw " +
+        "DSv2 WARC sink, read back by the readRaw " +
         "mapPartitions-narrow scan. st24_pair_dedup_stream is st23's " +
         "stream plan plus Spark's streaming dropDuplicates state " +
         "store keyed by the (img_url, text) pair key — state bounded " +
@@ -440,7 +440,7 @@ object Explain {
         "a pure function of the member set and spec-pinned identical " +
         "under any input partitioning. Each shard is then written " +
         "whole by one task (records hash to tasks BY SHARD, files " +
-        "rotate on the boundary, attempt-unique temp + rename commit) " +
+        "rotate on the boundary, driver-side rename commit) " +
         "and the entry's manifest digests the READ-BACK bytes per " +
         "shard — one hash spans gate → rotation → write → archive. " +
         "m18_paired_samples is the loop's read half: the shard dir " +

@@ -703,8 +703,11 @@ object Dedup {
       // change detection rides the SAME materialization as the new labels
       // (a __chg flag inside the checkpointed frame) instead of a separate
       // next-vs-old join: one job per round computes, one narrow
-      // early-exit scan checks convergence — halving the per-round job
-      // count that dominated wall-clock on small graphs
+      // aggregate over the checkpoint checks convergence — halving the
+      // per-round job count that dominated wall-clock on small graphs.
+      // An aggregate, not limit(1).count(): a codegen'd LIMIT names its
+      // counter from a JVM-global sequence, so each round would compile
+      // fresh classes
       val next = labels.join(neighborMin, Seq("id"), "left_outer")
         .select(col("id"),
           least(col("cluster"), coalesce(col("nmin"), col("cluster")))
@@ -712,7 +715,7 @@ object Dedup {
           (coalesce(col("nmin"), col("cluster")) < col("cluster"))
             .as("__chg"))
         .localCheckpoint()
-      converged = next.filter(col("__chg")).limit(1).count() == 0L
+      converged = next.filter(col("__chg")).count() == 0L
       labels = next.drop("__chg")
       i += 1
     }

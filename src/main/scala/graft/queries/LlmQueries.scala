@@ -5225,17 +5225,11 @@ object LlmQueries {
         val (keptPairs, members) = m17MemberFrames(s, dir, nImg)
         val out = "target/shardedarchive/" +
           s"${new java.io.File(dir).getName}-${docsDriftKey(dir)}-v1"
-        // the archive build goes through the native DSv2 sink (r20):
-        // assignShards' pure rotation column + a declared-distribution
-        // write — byte-identical to writeShardedTypedRecords
-        // (WarcSpec-pinned), with the .dat-style two-phase commit
-        val assigned = graft.sources.Warc.assignShards(
-          members, M17TargetBytes)
-        assigned.write
-          .format("graft.spark.datasource.WarcDataSource")
-          .mode("overwrite").save(out)
-        org.apache.spark.sql.graftshim.Bridge
-          .unpersistOwnedPlanCheckpoints(assigned)
+        // assignShards' pure rotation column + the DSv2 sink's
+        // declared-distribution write, with the .dat-style two-phase
+        // commit
+        graft.sources.Warc.writeShardedTypedRecords(
+          members, out, M17TargetBytes)
         org.apache.spark.sql.graftshim.Bridge
           .unpersistLocalCheckpoint(keptPairs)
         graft.sources.Warc.readRaw(s, out)
@@ -5964,16 +5958,9 @@ object LlmQueries {
         s"${new java.io.File(dir).getName}-${docsDriftKey(dir)}-ld-v1") {
       base =>
       val (keptPairs, members) = m17MemberFrames(s, dir, nImg)
-      // through the DSv2 sink (byte-identical to the library writer;
-      // WarcSpec-pinned) so the loader fixture exercises the same
-      // write path m17 does
-      val assigned = graft.sources.Warc.assignShards(
-        members, M17TargetBytes)
-      assigned.write
-        .format("graft.spark.datasource.WarcDataSource")
-        .mode("overwrite").save(base)
-      org.apache.spark.sql.graftshim.Bridge
-        .unpersistOwnedPlanCheckpoints(assigned)
+      // the same sharded write m17 runs
+      graft.sources.Warc.writeShardedTypedRecords(
+        members, base, M17TargetBytes)
       org.apache.spark.sql.graftshim.Bridge
         .unpersistLocalCheckpoint(keptPairs)
     }

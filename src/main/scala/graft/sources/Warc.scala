@@ -3,7 +3,7 @@ package graft.sources
 import java.io.{BufferedInputStream, EOFException, InputStream, PushbackInputStream}
 import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.TaskContext
 
 /** WARC/WET ingestion — the Common Crawl corpus format, the most common
@@ -38,18 +38,21 @@ import org.apache.spark.TaskContext
   * on an executor picks up core-site.xml but NOT programmatic
   * `spark.hadoop.*` session settings — on a real cluster reading
   * `s3a://commoncrawl/...` with session-set credentials the listing
-  * would succeed and every parse task would fail auth. [[read]],
-  * [[readResponses]] and the writers all broadcast
-  * `sessionState.newHadoopConf()` (core-site + `spark.hadoop.*` +
-  * SQL-conf overrides, the same merge Spark's own file sources use).
+  * would succeed and every parse task would fail auth. [[read]] and
+  * [[readResponses]] broadcast `sessionState.newHadoopConf()`
+  * (core-site + `spark.hadoop.*` + SQL-conf overrides, the same merge
+  * Spark's own file sources use), and the DSv2 sink ships the same
+  * conf in its writer factory.
   *
   * [[write]] exists to produce fixtures and test round-trips: one
   * `warcinfo` member at the head of each part file, then one
   * `conversion` (WET-style) member per row, each its own gzip member.
-  * Tasks write to an attempt-unique temp name and commit by rename, so
-  * a retried or speculative attempt can never interleave with or
-  * truncate another attempt's part file, and a reader never observes a
-  * partially written part.
+  * Every writer here is a thin call into the DSv2 sink
+  * (`WarcDataSource`, overwrite mode), the one place WARC files are
+  * created: tasks stream into hidden attempt-unique temps, and the
+  * driver renames them into place only after every task has
+  * succeeded, then deletes the previous snapshot's other files. A
+  * failed write leaves the previous snapshot as it was.
   */
 object Warc {
 
@@ -122,7 +125,7 @@ object Warc {
     org.apache.spark.sql.graftshim.Bridge.sessionHadoopConf(spark)
 
   // One ShippedConf broadcast per (session, conf-fingerprint), reused by
-  // every read/readResponses/writeRecords call: a long-running session
+  // every read/readRaw/readResponses call: a long-running session
   // issuing many WARC operations would otherwise mint a new broadcast
   // per call and accumulate broadcast blocks on driver and executors
   // for the session lifetime (none were ever destroyed — destroying is
@@ -754,11 +757,11 @@ object Warc {
   // ---- write path (fixture generator / round-trip proof) -------------
 
   /** Write `df` (columns url, warc_date, text) as WET-style
-    * `part-NNNNN.warc.gz` files under `dir`, one file per partition:
-    * a `warcinfo` member first, then one `conversion` member per row —
-    * EVERY record its own gzip member (the Common Crawl framing).
-    * Distributed: each task streams its own partition; nothing passes
-    * through the driver.
+    * `part-NNNNN.warc.gz` files under `dir`, one file per non-empty
+    * partition: a `warcinfo` member first, then one `conversion` member
+    * per row — EVERY record its own gzip member (the Common Crawl
+    * framing). Distributed: each task streams its own partition;
+    * nothing passes through the driver.
     */
   def write(df: DataFrame, dir: String): Unit = {
     import org.apache.spark.sql.functions.{col, encode}
@@ -772,11 +775,8 @@ object Warc {
     * `part-NNNNN.warc.gz` files of `recType` records (e.g. `response`
     * records whose payloads are full HTTP messages — use
     * `application/http; msgtype=response` as the contentType, the
-    * Common Crawl convention). Per-task commit protocol: each task
-    * writes to an attempt-unique temp name and renames into place on
-    * success, so retried/speculative attempts never interleave and a
-    * reader never sees a partial part file; when two attempts race, the
-    * first rename wins and the loser discards its temp.
+    * Common Crawl convention). Overwrites `dir` with the
+    * [[writeTypedRecords]] commit.
     */
   def writeRecords(df: DataFrame, dir: String, recType: String,
                    contentType: String): Unit = {
@@ -794,63 +794,20 @@ object Warc {
     * WebDataset-tar analog in WARC form: `resource` media members
     * interleaved with `metadata` members describing each kept pair,
     * one self-describing archive instead of two sidecars that can
-    * drift). Same per-task temp+rename commit protocol as
-    * [[writeRecords]].
+    * drift). An overwrite through the DSv2 sink: row order within a
+    * part is the partition's, part numbers are fresh (after the largest
+    * existing one), and the previous snapshot — plus any temp
+    * leftover of a killed run — is deleted only after the new parts
+    * are published. A failed job publishes nothing.
     */
   def writeTypedRecords(df: DataFrame, dir: String): Unit = {
     import org.apache.spark.sql.functions.col
-    val spark = df.sparkSession
-    import spark.implicits._
-    val bc = shippedConfBc(spark)
-    // job-level overwrite semantics: clear previous parts (and orphaned
-    // temps from a killed run) on the DRIVER before tasks launch — so a
-    // task-side rename that loses to an existing destination can only
-    // mean a concurrent attempt of THIS job already committed, and
-    // discarding the loser's temp is correct
-    locally {
-      val d = new org.apache.hadoop.fs.Path(dir)
-      val fs = d.getFileSystem(sessionHadoopConf(spark))
-      if (fs.exists(d)) {
-        val stale = fs.globStatus(new org.apache.hadoop.fs.Path(dir,
-          "{part-*.warc.gz,.tmp-part-*.warc.gz}"))
-        if (stale != null) stale.foreach(s => fs.delete(s.getPath, false))
-      }
-    }
+    // the sink's shape check wants exact types
     df.select(col("rec_type").cast("string"), col("url").cast("string"),
         col("warc_date").cast("string"),
         col("content_type").cast("string"), col("payload").cast("binary"))
-      .as[(String, String, String, String, Array[Byte])]
-      .foreachPartition {
-        (rows: Iterator[(String, String, String, String, Array[Byte])]) =>
-        val ctx = TaskContext.get()
-        val pid = ctx.partitionId()
-        val attempt = ctx.taskAttemptId()
-        val dst = new org.apache.hadoop.fs.Path(
-          dir, f"part-$pid%05d.warc.gz")
-        val tmp = new org.apache.hadoop.fs.Path(
-          dir, f".tmp-part-$pid%05d-attempt-$attempt.warc.gz")
-        val fs = dst.getFileSystem(bc.value.value)
-        val out = fs.create(tmp, true)
-        var ok = false
-        try {
-          writeMember(out, "warcinfo", "", "2026-01-01T00:00:00Z",
-            "application/warc-fields",
-            "software: graft-warc-fixture/1.0\r\n".getBytes("UTF-8"))
-          rows.foreach { case (recType, url, date, contentType, payload) =>
-            writeMember(out, recType, url, date, contentType, payload)
-          }
-          ok = true
-        } finally {
-          try out.close() finally if (!ok) fs.delete(tmp, false)
-        }
-        // commit by rename; a racing attempt that lost discards its temp
-        if (!fs.rename(tmp, dst)) {
-          if (fs.exists(dst)) fs.delete(tmp, false)
-          else throw new java.io.IOException(
-            s"WARC part commit failed: rename $tmp -> $dst")
-        }
-        ()
-      }
+      .write.format("graft.spark.datasource.WarcDataSource")
+      .mode("overwrite").save(dir)
   }
 
   /** Deterministic SIZE-TARGETED shard assignment over typed records —
@@ -948,100 +905,22 @@ object Warc {
   }
 
   /** [[writeTypedRecords]] with size-targeted shard ROTATION: the
-    * [[assignShards]] assignment, then `shard-NNNNN.warc.gz` files —
-    * each shard written whole by exactly one task (records hash to
-    * tasks BY SHARD, a task streams its shards sequentially, switching
-    * files on the shard boundary), same attempt-unique temp + rename
-    * commit as [[writeTypedRecords]]. Member order inside a shard is
-    * the global (rec_type, url) order restricted to the shard, so the
-    * archive bytes are deterministic end-to-end. Returns the number of
-    * shard files written — the count of DISTINCT assigned ids, which
-    * is LESS than max_id+1 when an oversized record skips ids (see
-    * [[assignShards]]); file names carry the id, so never enumerate
-    * 0..n.
+    * [[assignShards]] assignment, then an overwrite of `dir` with
+    * `shard-NNNNN.warc.gz` files through the DSv2 sink, which clusters
+    * records by shard and orders them by (shard_id, rec_type, url), so
+    * each shard is written whole by one task and the archive bytes are
+    * deterministic end-to-end. File names carry the (possibly gapped)
+    * shard id — see [[assignShards]] — so never enumerate 0..n.
     */
   def writeShardedTypedRecords(df: DataFrame, dir: String,
-                               targetBytes: Long): Long = {
-    import org.apache.spark.sql.functions.col
-    val spark = df.sparkSession
-    import spark.implicits._
-    val bc = shippedConfBc(spark)
-    locally {
-      val d = new org.apache.hadoop.fs.Path(dir)
-      val fs = d.getFileSystem(sessionHadoopConf(spark))
-      if (fs.exists(d)) {
-        val stale = fs.globStatus(new org.apache.hadoop.fs.Path(dir,
-          "{shard-*.warc.gz,.tmp-shard-*.warc.gz}"))
-        if (stale != null) stale.foreach(s => fs.delete(s.getPath, false))
-      }
-    }
+                               targetBytes: Long): Unit = {
     val assigned = assignShards(df, targetBytes)
-    // DISTINCT ids, not max+1: an oversized record skips ids, and the
-    // return value must equal the file count (review r19 finding)
-    val nShards = assigned.agg(org.apache.spark.sql.functions
-      .countDistinct(col("shard_id"))).head().getLong(0)
-    if (nShards == 0L) { // empty input: no shards, no files
-      org.apache.spark.sql.graftshim.Bridge
-        .unpersistOwnedPlanCheckpoints(assigned)
-      return 0L
-    }
-    assigned
-      .repartition(col("shard_id"))
-      .sortWithinPartitions(col("shard_id"), col("rec_type"), col("url"))
-      .as[(String, String, String, String, Array[Byte], Long)]
-      .foreachPartition {
-        (rows: Iterator[(String, String, String, String, Array[Byte],
-          Long)]) =>
-        val ctx = TaskContext.get()
-        val attempt = ctx.taskAttemptId()
-        var cur = -1L
-        var out: org.apache.hadoop.fs.FSDataOutputStream = null
-        var tmp: org.apache.hadoop.fs.Path = null
-        var fs: org.apache.hadoop.fs.FileSystem = null
-        var ok = false
-        def commit(): Unit = if (out != null) {
-          try { out.close(); ok = true } finally if (!ok)
-            fs.delete(tmp, false)
-          val dst = new org.apache.hadoop.fs.Path(
-            dir, f"shard-$cur%05d.warc.gz")
-          if (!fs.rename(tmp, dst)) {
-            if (fs.exists(dst)) fs.delete(tmp, false)
-            else throw new java.io.IOException(
-              s"WARC shard commit failed: rename $tmp -> $dst")
-          }
-          out = null
-        }
-        try {
-          rows.foreach { case (recType, url, date, contentType, payload,
-              shard) =>
-            if (shard != cur) {
-              commit()
-              cur = shard
-              ok = false
-              tmp = new org.apache.hadoop.fs.Path(
-                dir, f".tmp-shard-$cur%05d-attempt-$attempt.warc.gz")
-              if (fs == null) fs = tmp.getFileSystem(bc.value.value)
-              out = fs.create(tmp, true)
-              writeMember(out, "warcinfo", "", "2026-01-01T00:00:00Z",
-                "application/warc-fields",
-                "software: graft-warc-fixture/1.0\r\n".getBytes("UTF-8"))
-            }
-            writeMember(out, recType, url, date, contentType, payload)
-          }
-          commit()
-        } finally {
-          if (out != null) { // an exception mid-shard: discard the temp
-            try out.close() catch { case _: java.io.IOException => () }
-            fs.delete(tmp, false)
-          }
-        }
-        ()
-      }
-    // the fold's range-partitioned checkpoint has been consumed by both
+    // the fold's range-partitioned checkpoint is consumed by both
     // passes and the write — release it eagerly (packIdStream hygiene)
-    org.apache.spark.sql.graftshim.Bridge
+    try assigned.write.format("graft.spark.datasource.WarcDataSource")
+      .mode("overwrite").save(dir)
+    finally org.apache.spark.sql.graftshim.Bridge
       .unpersistOwnedPlanCheckpoints(assigned)
-    nShards
   }
 
   /** One WARC record as ONE complete gzip member on `out`. */

@@ -59,6 +59,25 @@ object WarcDataSource {
     StructField("content_type", StringType, nullable = false),
     StructField("n_bytes", LongType, nullable = false),
     StructField("payload", BinaryType, nullable = false)))
+
+  /** The files directly under `dir` matching the glob `pattern`. */
+  private[datasource] def glob(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path,
+      pattern: String): Seq[org.apache.hadoop.fs.FileStatus] =
+    Option(fs.globStatus(new org.apache.hadoop.fs.Path(dir, pattern)))
+      .fold(Seq.empty[org.apache.hadoop.fs.FileStatus])(_.toSeq)
+
+  /** Every `*.warc.gz` / `*.warc` file directly under `path`, by full
+    * path in name order — the batch scan's splits and the stream's
+    * offset order.
+    */
+  def listFiles(path: String): Seq[String] = {
+    val dir = new org.apache.hadoop.fs.Path(path)
+    val fs = dir.getFileSystem(
+      graft.sources.Warc.sessionHadoopConf(SparkSession.active))
+    Seq("*.warc.gz", "*.warc").flatMap(glob(fs, dir, _))
+      .filter(_.isFile).map(_.getPath.toString).distinct.sorted
+  }
 }
 
 class WarcTable(path: String) extends Table with SupportsRead
@@ -141,18 +160,9 @@ class WarcScanBuilder(path: String,
       s"${urlPrefix.fold("")(p => s" url^=$p")}] " +
       s"columns=[${required.fieldNames.mkString(",")}]"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val spark = SparkSession.active
-    val conf = graft.sources.Warc.sessionHadoopConf(spark)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val files = Seq("*.warc.gz", "*.warc").flatMap { g =>
-      Option(fs.globStatus(new org.apache.hadoop.fs.Path(path, g)))
-        .fold(Seq.empty[org.apache.hadoop.fs.FileStatus])(_.toSeq)
-    }
-    files.filter(_.isFile).map(_.getPath.toString).distinct.sorted
+  override def planInputPartitions(): Array[InputPartition] =
+    WarcDataSource.listFiles(path)
       .map(f => WarcInputPartition(f): InputPartition).toArray
-  }
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val spark = SparkSession.active
@@ -221,16 +231,6 @@ class WarcMicroBatchStream(path: String, maxFilesPerTrigger: Option[Int])
       .SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit, ReadMaxFiles}
 
-  private def listedFiles(): Seq[String] = {
-    val conf = graft.sources.Warc.sessionHadoopConf(SparkSession.active)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    Seq("*.warc.gz", "*.warc").flatMap { g =>
-      Option(fs.globStatus(new org.apache.hadoop.fs.Path(path, g)))
-        .fold(Seq.empty[org.apache.hadoop.fs.FileStatus])(_.toSeq)
-    }.filter(_.isFile).map(_.getPath.toString).distinct.sorted
-  }
-
   private def offsetAt(files: Seq[String], n: Int): WarcOffset = {
     val last = if (n == 0) "" else files(n - 1)
     // hand-built offset JSON, no escaping: a quote/backslash in a file
@@ -243,7 +243,7 @@ class WarcMicroBatchStream(path: String, maxFilesPerTrigger: Option[Int])
   @volatile private var availableNowTarget: Option[WarcOffset] = None
 
   override def prepareForTriggerAvailableNow(): Unit = {
-    val files = listedFiles()
+    val files = WarcDataSource.listFiles(path)
     availableNowTarget = Some(offsetAt(files, files.length))
   }
 
@@ -263,7 +263,7 @@ class WarcMicroBatchStream(path: String, maxFilesPerTrigger: Option[Int])
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val s = start.asInstanceOf[WarcOffset]
-    val files = listedFiles()
+    val files = WarcDataSource.listFiles(path)
     val target = availableNowTarget.getOrElse(
       offsetAt(files, files.length))
     limit match {
@@ -276,7 +276,7 @@ class WarcMicroBatchStream(path: String, maxFilesPerTrigger: Option[Int])
   }
 
   override def reportLatestOffset(): Offset = {
-    val files = listedFiles()
+    val files = WarcDataSource.listFiles(path)
     offsetAt(files, files.length)
   }
 
@@ -299,7 +299,7 @@ class WarcMicroBatchStream(path: String, maxFilesPerTrigger: Option[Int])
                                    end: Offset): Array[InputPartition] = {
     val s = start.asInstanceOf[WarcOffset]
     val e = end.asInstanceOf[WarcOffset]
-    val files = listedFiles()
+    val files = WarcDataSource.listFiles(path)
     requirePrefix(files, s)
     requirePrefix(files, e)
     files.slice(s.files, e.files)
@@ -358,12 +358,13 @@ class WarcReaderFactory(conf: graft.sources.Warc.ShippedConf,
   }
 }
 // ---- write path (the paired-corpus sink as first-class DSv2; r19
-// VERDICT #2) ----
+// VERDICT #2) — the ONE writer of WARC files: every graft.sources.Warc
+// write entry point is a thin overwrite through it ----
 //
-//   Warc.assignShards(df, targetBytes)             // sharded build
-//     .write.format("graft.spark.datasource.WarcDataSource")
-//     .mode("overwrite").save(dir)
+//   Warc.writeShardedTypedRecords(df, dir, targetBytes)  // sharded
+//     = assignShards + write.format(...).mode("overwrite").save(dir)
 //
+//   Warc.writeTypedRecords(df, dir)                // plain overwrite
 //   df.write.format(...).mode("append").save(dir)  // plain parts
 //
 //   df.writeStream.format(...).option("checkpointLocation", ckpt)
@@ -381,8 +382,10 @@ class WarcReaderFactory(conf: graft.sources.Warc.ShippedConf,
 // their (pre-arranged) partitions into attempt-unique TEMP names and
 // send (finalName, tempName) pairs to the driver; BatchWrite.commit
 // renames everything into place (truncate additionally GCs the
-// previous snapshot's files AFTER the renames); abort deletes temps
-// and leaves the previous files untouched. The STREAMING sink appends
+// previous snapshot's files and any .tmp-* leftover of a killed run
+// AFTER the renames); abort deletes temps and leaves the previous files
+// untouched, so a failed overwrite keeps the old snapshot readable.
+// Empty partitions write no file. The STREAMING sink appends
 // one increment per epoch under lexically-INCREASING names
 // (stream-<epoch>-<seq>.warc.gz — the micro-batch source's append-only
 // landing contract), with a replay guard persisted in a `_warc_stream`
@@ -395,15 +398,16 @@ class WarcReaderFactory(conf: graft.sources.Warc.ShippedConf,
 // RequiresDistributionAndOrdering (clustered by shard_id, ordered by
 // (shard_id, rec_type, url)) and Spark plans the exchange + sort —
 // each shard file is then written whole by exactly one task, rotating
-// on the boundary, byte-identical to writeShardedTypedRecords' output
-// (WarcSpec-pinned). Sharded mode is a BUILD operation: ids restart at
-// 0 for every assignment, so appending into a dir that already has
-// shard files would collide — overwrite only — and an overwrite's
-// commit REPLACES same-named shard files one by one (names carry the
-// id, so they cannot be fresh): a rebuild of a live archive is not a
-// reader-isolated snapshot swap; the plain part-* path, whose numbers
-// ARE fresh per write, keeps that property. Streaming + shard_id is
-// rejected for the same reason (ids would collide across epochs).
+// on the boundary, byte-identical to a driver-side serialization of
+// the assignment (WarcSpec-pinned). Sharded mode is a BUILD operation:
+// ids restart at 0 for every assignment, so appending into a dir that
+// already has shard files would collide — overwrite only — and an
+// overwrite's commit REPLACES same-named shard files one by one (names
+// carry the id, so they cannot be fresh): a rebuild of a live archive
+// is not a reader-isolated snapshot swap; the plain part-* path, whose
+// numbers ARE fresh per write, keeps that property. Streaming +
+// shard_id is rejected for the same reason (ids would collide across
+// epochs).
 
 class WarcWriteBuilder(path: String, schema: StructType, queryId: String)
     extends org.apache.spark.sql.connector.write.WriteBuilder
@@ -478,13 +482,11 @@ object WarcWrite {
       fs: org.apache.hadoop.fs.FileSystem,
       dir: org.apache.hadoop.fs.Path): Int = {
     val re = "part-(\\d+)\\.warc\\.gz".r
-    val listed = Option(fs.globStatus(
-      new org.apache.hadoop.fs.Path(dir, "part-*.warc.gz")))
-      .fold(Seq.empty[org.apache.hadoop.fs.FileStatus])(_.toSeq)
-    listed.map(_.getPath.getName).flatMap {
-      case re(n) => Some(n.toInt)
-      case _     => None
-    }.maxOption.fold(0)(_ + 1)
+    WarcDataSource.glob(fs, dir, "part-*.warc.gz")
+      .map(_.getPath.getName).flatMap {
+        case re(n) => Some(n.toInt)
+        case _     => None
+      }.maxOption.fold(0)(_ + 1)
   }
 
   /** The publish loop shared by the batch and streaming commits: every
@@ -580,8 +582,7 @@ class WarcWrite(path: String, schema: StructType, truncate: Boolean,
 
   // shard rotation is planned, not improvised: Spark inserts the
   // clustered exchange + per-partition sort, and the writer only
-  // rotates files on the boundary — the same plan
-  // writeShardedTypedRecords builds by hand
+  // rotates files on the boundary
   override def requiredDistribution()
       : org.apache.spark.sql.connector.distributions.Distribution =
     if (sharded)
@@ -611,9 +612,7 @@ class WarcWrite(path: String, schema: StructType, truncate: Boolean,
     if (sharded && !truncate) {
       // shard ids restart at 0 per assignment — appending a second
       // assignment into the same dir would collide names/ids
-      val existing = Option(fs.globStatus(
-        new org.apache.hadoop.fs.Path(dir, "shard-*.warc.gz")))
-        .fold(0)(_.length)
+      val existing = WarcDataSource.glob(fs, dir, "shard-*.warc.gz").length
       require(existing == 0,
         s"warc sink $path: cannot append a sharded assignment into a " +
           s"directory with $existing existing shard files (ids would " +
@@ -632,17 +631,16 @@ class WarcWrite(path: String, schema: StructType, truncate: Boolean,
     val (fs, dir) = WarcWrite.fs(path)
     WarcWrite.publish(fs, dir, files, "commit")
     if (truncate) {
-      // snapshot is live; files outside the committed set are garbage
+      // snapshot is live; files outside the committed set are garbage,
+      // and so are the .tmp-* leftovers of a killed run
       val keep = files.map(_._1).toSet
-      Seq("part-*.warc.gz", "shard-*.warc.gz").foreach { g =>
-        Option(fs.globStatus(new org.apache.hadoop.fs.Path(dir, g)))
-          .fold(Seq.empty[org.apache.hadoop.fs.FileStatus])(_.toSeq)
-          .foreach { s =>
-            if (!keep.contains(s.getPath.getName))
-              try fs.delete(s.getPath, false)
-              catch { case _: java.io.IOException => () } // best-effort
-          }
-      }
+      Seq("part-*.warc.gz", "shard-*.warc.gz", ".tmp-*")
+        .flatMap(WarcDataSource.glob(fs, dir, _))
+        .foreach { s =>
+          if (!keep.contains(s.getPath.getName))
+            try fs.delete(s.getPath, false)
+            catch { case _: java.io.IOException => () } // best-effort
+        }
     }
   }
 
@@ -834,9 +832,7 @@ class WarcStreamingWrite(path: String, schema: StructType,
     // rows at the consumer — delete before publishing (review r20)
     locally {
       val keep = files.map(_._1).toSet
-      Option(fs.globStatus(new org.apache.hadoop.fs.Path(dir,
-          f"stream-$epochId%012d-*.warc.gz")))
-        .fold(Seq.empty[org.apache.hadoop.fs.FileStatus])(_.toSeq)
+      WarcDataSource.glob(fs, dir, f"stream-$epochId%012d-*.warc.gz")
         .foreach { s =>
           if (!keep.contains(s.getPath.getName))
             fs.delete(s.getPath, false)

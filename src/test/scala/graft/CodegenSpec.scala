@@ -5,11 +5,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Generated code is compiled once per JVM: a second pass over the curate
-  * panel, each entry's full result written to the noop sink, compiles no
-  * class. It fails when Spark's codegen cache is smaller than the panel's
-  * working set (the default 100 entries: about 150 classes a pass) or when
-  * an entry's generated source differs from run to run (a codegen'd LIMIT
-  * names its counter from a JVM-global sequence).
+  * panel and l10, each entry's full result written to the noop sink,
+  * compiles no class. It fails when Spark's codegen cache is smaller than
+  * the panel's working set (the default 100 entries: about 150 classes a
+  * pass) or when an entry's generated source differs from run to run (a
+  * codegen'd LIMIT names its counter from a JVM-global sequence; l10's
+  * label propagation checks convergence once per round).
   */
 class CodegenSpec extends AnyFunSuite {
 
@@ -21,7 +22,7 @@ class CodegenSpec extends AnyFunSuite {
 
   private val dir = "/root/testdata/sf0.001"
   private val panel = Seq("l53_pii_redact", "l20_bm25_terms",
-    "l05_embedding_neardup", "l62_pagerank")
+    "l05_embedding_neardup", "l62_pagerank", "l10_dedup_clusters")
 
   /** Classes compiled by Janino while each panel entry runs in full. */
   private def pass(): Map[String, Long] = panel.map { name =>
@@ -31,7 +32,7 @@ class CodegenSpec extends AnyFunSuite {
     name -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
   }.toMap
 
-  test("a repeated pass over l53, l20, l05 and l62 compiles no class") {
+  test("a repeated pass over l53, l20, l05, l62 and l10 compiles no class") {
     val first = pass()
     val second = pass()
     assert(second == panel.map(_ -> 0L).toMap, s"first pass compiled $first")

@@ -923,8 +923,8 @@ class WarcSpec extends AnyFunSuite {
   }
 
   test("oversized records SKIP shard ids (offset-derived labels, not " +
-      "sequence numbers) and the writer's return equals the actual " +
-      "file count") {
+      "sequence numbers) and the writer writes one file per distinct " +
+      "id") {
     // one 2000-byte record among ~100-byte ones at a 600-byte target:
     // the id after the giant advances by floor-width, leaving gaps
     val rows = (0 until 20).map { i =>
@@ -940,11 +940,11 @@ class WarcSpec extends AnyFunSuite {
     assert(ids.size < ids.max + 1,
       s"fixture must produce a gap: $ids") // the giant skipped ids
     val dir = Files.createTempDirectory("graft-warc-oversize").toString
-    val n = Warc.writeShardedTypedRecords(rows, dir, 600L)
+    Warc.writeShardedTypedRecords(rows, dir, 600L)
     val files = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".warc.gz"))
-    assert(files.length == n && n == ids.size,
-      s"writer returned $n, wrote ${files.length}, ids ${ids.size}")
+    assert(files.length == ids.size,
+      s"wrote ${files.length} files for ${ids.size} distinct ids")
     // every member still lands in its assigned (possibly gapped) shard
     val got = Warc.readRaw(spark, dir)
       .filter(col("rec_type") =!= "warcinfo").count()
@@ -958,13 +958,14 @@ class WarcSpec extends AnyFunSuite {
       "assignShards computed") {
     val base = typedRows(60)
     val dir = Files.createTempDirectory("graft-warc-shard").toString
-    val n = Warc.writeShardedTypedRecords(base, dir, targetBytes = 600L)
+    Warc.writeShardedTypedRecords(base, dir, targetBytes = 600L)
+    val expected = Warc.assignShards(base, 600L)
+      .select("url", "shard_id").as[(String, Long)].collect().toMap
+    val n = expected.values.toSet.size
     val files = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".warc.gz")).map(_.getName).sorted
     assert(files.length == n, s"expected $n shard files, got $files")
     assert(files.forall(_.matches("shard-\\d{5}\\.warc\\.gz")), files)
-    val expected = Warc.assignShards(base, 600L)
-      .select("url", "shard_id").as[(String, Long)].collect().toMap
     val got = Warc.readRaw(spark, dir)
       .filter(col("rec_type") =!= "warcinfo")
       .select(regexp_extract(col("file"),
@@ -1086,30 +1087,80 @@ class WarcSpec extends AnyFunSuite {
       .map(f => f.getName ->
         java.nio.file.Files.readAllBytes(f.toPath).toSeq).toMap
 
-  test("DSv2 sharded write is byte-identical to " +
-      "writeShardedTypedRecords: assignShards + " +
+  test("DSv2 sharded write is byte-identical to a driver-side " +
+      "serialization of the assignment: assignShards + " +
       "df.write.format(...).mode(overwrite) produces the same shard " +
       "files from ANY input partitioning") {
     val base = typedRows(60)
-    val viaLib = Files.createTempDirectory("graft-wsink-lib").toString
-    Warc.writeShardedTypedRecords(base, viaLib, targetBytes = 600L)
+    // the reference: every shard's warcinfo, then its members in
+    // (rec_type, url) order, serialized on the driver
+    val reference = Warc.assignShards(base, 600L)
+      .as[(String, String, String, String, Array[Byte], Long)].collect()
+      .groupBy(_._6).map { case (shard, members) =>
+        val bos = new java.io.ByteArrayOutputStream()
+        Warc.writeMember(bos, "warcinfo", "", "2026-01-01T00:00:00Z",
+          "application/warc-fields",
+          "software: graft-warc-fixture/1.0\r\n".getBytes("UTF-8"))
+        members.sortBy(r => (r._1, r._2)).foreach {
+          case (rt, url, date, ct, payload, _) =>
+            Warc.writeMember(bos, rt, url, date, ct, payload)
+        }
+        f"shard-$shard%05d.warc.gz" -> bos.toByteArray.toSeq
+      }
+    assert(reference.size > 3, "fixture must exercise rotation")
     val viaSink = Files.createTempDirectory("graft-wsink-dsv2").toString
     // scramble the input: the Write DECLARES clustering/ordering on
     // shard_id and Spark must plan the exchange + sort itself
     Warc.assignShards(base, 600L).orderBy(rand(7)).repartition(5)
       .write.format("graft.spark.datasource.WarcDataSource")
       .mode("overwrite").save(viaSink)
-    val lib = fileBytes(viaLib)
     val sink = fileBytes(viaSink)
-    assert(sink.keySet == lib.keySet,
-      s"shard sets differ: ${sink.keySet} vs ${lib.keySet}")
+    assert(sink.keySet == reference.keySet,
+      s"shard sets differ: ${sink.keySet} vs ${reference.keySet}")
     sink.keySet.foreach { n =>
-      assert(sink(n) == lib(n), s"shard $n bytes differ")
+      assert(sink(n) == reference(n), s"shard $n bytes differ")
     }
     assert(new java.io.File(viaSink).listFiles()
       .forall(!_.getName.startsWith(".tmp")), "temp files leaked")
-    Seq(viaLib, viaSink).foreach(d => org.apache.commons.io.FileUtils
-      .deleteDirectory(new java.io.File(d)))
+    org.apache.commons.io.FileUtils
+      .deleteDirectory(new java.io.File(viaSink))
+  }
+
+  test("a failed overwrite keeps the previous snapshot: Warc.read " +
+      "returns exactly its records and no temp file is left; a later " +
+      "overwrite sweeps a stale .tmp- leftover") {
+    val dir = Files.createTempDirectory("graft-warc-failed").toString
+    val a = mkRows(12)
+    Warc.write(a.toDF("url", "warc_date", "text").repartition(2), dir)
+    def snapshot = Warc.read(spark, dir)
+      .filter(col("rec_type") === "conversion")
+      .select("url", "warc_date", "text")
+      .as[(String, String, String)].collect().toSet
+    def names = new java.io.File(dir).listFiles().map(_.getName).toSet
+    assert(snapshot == a.toSet)
+    // one partition, so the raising row arrives after members are
+    // already streaming into the task's temp
+    val failing = spark.range(0, 6, 1, 1).select(
+      concat(lit("https://t.example/new/"), col("id")).as("url"),
+      lit("2026-03-01T00:00:00Z").as("warc_date"),
+      when(col("id") === 4, raise_error(lit("planted write failure")))
+        .otherwise(concat(lit("new body "), col("id"))).as("text"))
+    val e = intercept[Exception](Warc.write(failing, dir))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => Option(c.getMessage)
+        .exists(_.contains("planted write failure"))), e)
+    assert(snapshot == a.toSet, "a failed overwrite degraded the snapshot")
+    assert(!names.exists(_.contains(".tmp")), s"temp leftovers: $names")
+    // a killed run's temps (this sink's name, and the shape the removed
+    // per-task writers used) are garbage to the next overwrite
+    val stale = Seq(".tmp-part-00007.warc.gz-attempt-99",
+      ".tmp-part-00000-attempt-3.warc.gz")
+    stale.foreach(n => Files.write(Paths.get(dir, n), Array[Byte](1, 2)))
+    Warc.write(mkRows(3).toDF("url", "warc_date", "text").coalesce(1), dir)
+    assert(!names.exists(_.contains(".tmp")), s"stale temps kept: $names")
+    assert(snapshot == mkRows(3).toSet)
+    org.apache.commons.io.FileUtils
+      .deleteDirectory(new java.io.File(dir))
   }
 
   test("DSv2 plain batch write: append assigns FRESH part numbers " +
