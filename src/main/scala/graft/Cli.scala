@@ -62,11 +62,10 @@ object Cli {
     val history = pipeline.FullHistory.buildFlagged(sess, accCs, stoCs,
       t("plain_code_hash"), t("plain_state_accounts"),
       t("plain_state_storage"), latest, blockStart = blockStart)
-    val rows = spark.StateFormat.asFlaggedItems(
-      history.withColumnRenamed("valid_from_block", "block"),
-      pipeline.FullHistory.NonAdvancing)
-    spark.StateFiles.writeFlagged(rows, outDir, strategy,
-      blockStart = blockStart, blockEnd = latest)
+    // the item columns plus the W1 flag, which the sink's tasks count
+    spark.StateFiles.save(history.withColumnRenamed("valid_from_block",
+      "block"), outDir, strategy, overwrite = true,
+      blockStart = Some(blockStart), blockEnd = Some(latest))
     // SURVEY §5 mechanism 3: the reference PRINTS warn-but-tolerate
     // anomalies during -M conversion (incarnation decrease, codeHash
     // change without incarnation, non-advancing adjusted block); a

@@ -16,7 +16,8 @@ object Dev {
     """usage: runMain graft.Dev time [runs] <entry-substring>...
       |         per entry: one cold run, then `runs` (default 3) timed
       |         count()s after Bench's fixture warmup; prints the warm
-      |         median/min/max, the cold run, the row count and
+      |         median/min/max, the warm median of the JVM's CPU
+      |         seconds, the cold run, the row count and
       |         compiled=<classes compiled cold>/<warm median>
       |       runMain graft.Dev plan <outDir> <suffix> <entry-substring>...
       |         writes each entry's explain("formatted") to
@@ -30,6 +31,11 @@ object Dev {
     */
   private def compiled(): Long =
     CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** CPU seconds of every thread of this JVM so far (local tasks, GC). */
+  private def cpu(): Double = java.lang.management.ManagementFactory
+    .getOperatingSystemMXBean.asInstanceOf[
+      com.sun.management.OperatingSystemMXBean].getProcessCpuTime / 1e9
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -53,21 +59,24 @@ object Dev {
         val spark = session()
         graft.queries.PipelineQueries.warmFixtures(spark, sfDir)
         picked(filters).foreach { name =>
-          // seconds, rows, and the classes Janino compiled during the run
-          def once(): (Double, Long, Long) = {
+          // seconds, rows, classes Janino compiled, CPU seconds
+          def once(): (Double, Long, Long, Double) = {
             val c0 = compiled()
+            val u0 = cpu()
             val t0 = System.nanoTime()
             val rows = SparkEntry.run(spark, sfDir, name)(_.df.count())
-            ((System.nanoTime() - t0) / 1e9, rows, compiled() - c0)
+            ((System.nanoTime() - t0) / 1e9, rows, compiled() - c0,
+              cpu() - u0)
           }
           // an erroring entry must not abort the rest of the sweep
           try {
-            val (cold, rows, coldCompiled) = once()
+            val (cold, rows, coldCompiled, _) = once()
             val warm = Seq.fill(runs)(once())
             val times = warm.map(_._1).sorted
             val warmCompiled = warm.map(_._3).sorted
             println(f"[time] $name%-34s median=${times(runs / 2)}%8.3f " +
               f"min=${times.head}%8.3f max=${times.last}%8.3f " +
+              f"cpu=${warm.map(_._4).sorted.apply(runs / 2)}%8.3f " +
               f"cold=$cold%8.3f rows=$rows " +
               s"compiled=$coldCompiled/${warmCompiled(runs / 2)}")
           } catch { case e: Throwable =>

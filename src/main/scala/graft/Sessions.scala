@@ -48,6 +48,12 @@ import org.apache.spark.sql.SparkSession
   * panel compiles 135 classes instead of 155. Plans still print their
   * stage ids (`*(5)`); only the class name reads `GeneratedIterator`.
   * CodegenSpec pins that a second pass over the panel compiles nothing.
+  *
+  * `spark.sql.artifact.isolation.enabled=false`: with session artifact
+  * isolation on, each streaming query's tasks run under a new class
+  * loader, which is part of the codegen cache's key, so every streaming
+  * run recompiled its classes (st04 18, st12 19 per warm run). graft adds
+  * no session artifacts, so isolation has nothing to isolate.
   */
 object Sessions {
   val readDefaults: Seq[(String, String)] = Seq(
@@ -75,7 +81,8 @@ object Sessions {
     "spark.sql.extensions" -> "graft.GraftExtensions",
     // generated code is compiled once per JVM (see the scaladoc above)
     "spark.sql.codegen.cache.maxEntries" -> "1000",
-    "spark.sql.codegen.useIdInClassName" -> "false")
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** `local[cpus]` with `cpus` shuffle partitions and the UI off, log
     * level WARN: the session of every command-line main. `cpus` comes

@@ -24,14 +24,7 @@ final case class StateItem(
     balance: Array[Byte],  // 32 bytes, account only (unsigned 256-bit BE)
     codeHash: Array[Byte], // 32 bytes, account only
     slot: Array[Byte],     // 32 bytes, storage only
-    value: Array[Byte]) {  // 32 bytes, storage only (unsigned 256-bit BE)
-
-  def keyEquals(o: StateItem): Boolean =
-    java.util.Arrays.equals(address, o.address) &&
-      isStorage == o.isStorage &&
-      (!isStorage || (incarnation == o.incarnation &&
-        java.util.Arrays.equals(slot, o.slot)))
-}
+    value: Array[Byte])    // 32 bytes, storage only (unsigned 256-bit BE)
 
 object StateItem {
   val AddressLen = 20

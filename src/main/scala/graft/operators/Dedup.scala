@@ -694,10 +694,13 @@ object Dedup {
       .distinct().withColumn("cluster", col("id")).localCheckpoint()
     var converged = false
     var i = 0
+    // both joins are hinted sort-merge: adaptive execution made one a
+    // broadcast join when a side's shuffle stage finished first, so the
+    // classes a round compiled depended on task timing
     while (!converged && i < maxIterations) {
       val neighborMin = edges
         .join(labels.withColumnRenamed("id", "dst")
-          .withColumnRenamed("cluster", "dst_cluster"), "dst")
+          .withColumnRenamed("cluster", "dst_cluster").hint("merge"), "dst")
         .groupBy(col("src").as("id"))
         .agg(min(col("dst_cluster")).as("nmin"))
       // change detection rides the SAME materialization as the new labels
@@ -708,7 +711,8 @@ object Dedup {
       // An aggregate, not limit(1).count(): a codegen'd LIMIT names its
       // counter from a JVM-global sequence, so each round would compile
       // fresh classes
-      val next = labels.join(neighborMin, Seq("id"), "left_outer")
+      val next = labels.join(neighborMin.hint("merge"), Seq("id"),
+          "left_outer")
         .select(col("id"),
           least(col("cluster"), coalesce(col("nmin"), col("cluster")))
             .as("cluster"),

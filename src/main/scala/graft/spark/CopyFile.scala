@@ -20,14 +20,16 @@ import org.apache.spark.sql.SparkSession
 object CopyFile {
 
   /** Library form: convert a dataset between strategies, preserving the
-    * manifest's block range.
+    * manifest's block range; an input without one (no manifest, or one
+    * that records no range) declares none, so the output records its
+    * rows' range.
     */
   def convert(spark: SparkSession, inDir: String, outDir: String,
               strategyIn: Int, strategyOut: Int): Unit = {
-    val items = StateFiles.read(spark, inDir, strategyIn)
-    StateFiles.write(items, outDir, strategyOut,
-      StateFiles.manifestField(inDir, "block_start").getOrElse(0L),
-      StateFiles.manifestField(inDir, "block_end").getOrElse(0L))
+    StateFiles.save(StateFiles.read(spark, inDir, strategyIn).toDF(), outDir,
+      strategyOut, overwrite = true,
+      blockStart = StateFiles.manifestField(inDir, "block_start"),
+      blockEnd = StateFiles.manifestField(inDir, "block_end"))
   }
 
   def main(args: Array[String]): Unit = {

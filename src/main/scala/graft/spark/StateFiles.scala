@@ -11,7 +11,10 @@ import graft.model.StateItem
   *
   * Sink: one `part-NNNNN.dat` per non-empty partition, each a 256-byte
   * header plus page-aligned opcode stream (the merge output layout,
-  * page_shift 12), committed by [[publish]].
+  * page_shift 12), committed by [[publish]]. [[write]], [[append]] and
+  * [[compact]] save through the DataSource V2 sink
+  * ([[graft.spark.datasource.DatDataSource]]), the one `.dat` writer;
+  * this object holds its encoder, commit protocol and manifest.
   *
   * Source: files are NOT read sequentially. Because the writer restarts
   * compression state at every 4 KiB page boundary, every page is
@@ -50,23 +53,15 @@ object StateFiles {
   /** Write a sorted Dataset[StateItem] as header-prefixed page-aligned .dat
     * files, one per non-empty partition (partition ordering = caller's
     * sort), replacing whatever snapshot `dir` held ([[publish]]).
+    *
+    * `blockStart`/`blockEnd` declare the dataset's block range, recorded
+    * as given. Left negative (the default), no range is declared and the
+    * write records its rows' min and max block.
     */
   def write(items: Dataset[StateItem], dir: String, strategy: Int,
-            blockStart: Long = 0L, blockEnd: Long = 0L): Unit =
-    writeCore(items, dir, strategy, blockStart, blockEnd,
-      overwrite = true)(identity)
-
-  /** [[write]] of items paired with the W1 window's non-advancing flag
-    * ([[graft.pipeline.FullHistory.buildFlagged]]): each encode task counts
-    * its partition's flags, and the manifest records their sum as
-    * `anomaly_non_advancing_block` — the only write that measures it.
-    */
-  private[graft] def writeFlagged(rows: Dataset[(StateItem, Boolean)],
-                                  dir: String, strategy: Int,
-                                  blockStart: Long = 0L,
-                                  blockEnd: Long = 0L): Unit =
-    writeCore(rows, dir, strategy, blockStart, blockEnd, overwrite = true,
-      flag = Some((r: (StateItem, Boolean)) => r._2))(_._1)
+            blockStart: Long = -1L, blockEnd: Long = -1L): Unit =
+    save(items.toDF(), dir, strategy, overwrite = true,
+      blockStart = declared(blockStart), blockEnd = declared(blockEnd))
 
   /** Incremental APPEND: new part files after the existing ones, manifest
     * totals merged — the daily-increment flow (changesets are an
@@ -82,28 +77,16 @@ object StateFiles {
     * micro-batch replayed after a crash BETWEEN the manifest commit and
     * the streaming checkpoint commit can be detected via
     * [[lastStreamBatch]] and skipped — exactly-once appends for a
-    * linear (monotone-batch-id) stream.
+    * linear (monotone-batch-id) stream; an id needs its `streamId`, and
+    * another stream's append is refused before any part is staged.
     */
   def append(items: Dataset[StateItem], dir: String, strategy: Int,
-             blockStart: Long = 0L, blockEnd: Long = 0L,
-             streamBatchId: Long = -1L, streamId: String = ""): Unit = {
-    requireAppendable(dir, strategy)
-    // a streaming append must carry its writer identity: the batch id is
-    // only monotone WITHIN one linear stream, so an id without an owner
-    // cannot support the replay-skip contract
-    require(streamBatchId < 0L || streamId.nonEmpty,
-      "streaming append (streamBatchId >= 0) requires a streamId — " +
-        "use StateFiles.streamIdentity(checkpointDir)")
-    // ownership check BEFORE any part file is staged (commitManifest
-    // re-checks as a backstop, but by then the job would have run)
-    if (streamId.nonEmpty)
-      manifestStringField(dir, "stream_id").foreach(owner =>
-        require(owner == streamId,
-          s"dataset $dir is stream-owned by $owner; " +
-            s"refusing append from stream $streamId"))
-    writeCore(items, dir, strategy, blockStart, blockEnd, overwrite = false,
-      streamBatchId = streamBatchId, streamId = streamId)(identity)
-  }
+             blockStart: Long = -1L, blockEnd: Long = -1L,
+             streamBatchId: Long = -1L, streamId: String = ""): Unit =
+    save(items.toDF(), dir, strategy, overwrite = false,
+      blockStart = declared(blockStart), blockEnd = declared(blockEnd),
+      streamBatchId = declared(streamBatchId),
+      streamId = Some(streamId).filter(_.nonEmpty))
 
   /** COMPACTION — the archive-maintenance op the incremental flows
     * eventually need: [[append]] and the streaming sink each land one
@@ -141,8 +124,6 @@ object StateFiles {
     manifestField(dir, "strategy").foreach(s0 =>
       require(s0 == strategy.toLong,
         s"compact strategy $strategy != dataset strategy $s0"))
-    val bStart = manifestField(dir, "block_start").getOrElse(0L)
-    val bEnd = manifestField(dir, "block_end").getOrElse(0L)
     val items = read(spark, dir, strategy)
     val sorted = items
       .repartitionByRange(targetParts, col("address"), col("isStorage"),
@@ -152,16 +133,47 @@ object StateFiles {
     // a stream-owned dataset keeps its writer identity and replay
     // watermark across the rewrite: the DATA is equivalent, so the
     // exactly-once guard (lastStreamBatch) must survive — dropping the
-    // fields would reset the skip and let a replayed epoch double-append
-    val sb = manifestField(dir, "stream_batch").getOrElse(-1L)
-    val sid = manifestStringField(dir, "stream_id").getOrElse("")
-    // the scan executes inside this job, strictly before the commit:
-    // the overwrite REPLACES the snapshot (fresh dataset_id, not a
-    // merge). The rows are the same, so the W1 count measured when they
-    // were built carries over.
-    writeCore(sorted, dir, strategy, bStart, bEnd, overwrite = true,
-      streamBatchId = sb, streamId = sid,
-      nonAdvancing = manifestField(dir, NonAdvancingField))(identity)
+    // fields would reset the skip and let a replayed epoch double-append.
+    // The scan runs inside this job, before the commit; the overwrite
+    // REPLACES the snapshot (fresh dataset_id). The rows are the same, so
+    // the range and the W1 count measured when they were built carry over.
+    save(sorted.toDF(), dir, strategy, overwrite = true,
+      blockStart = manifestField(dir, "block_start"),
+      blockEnd = manifestField(dir, "block_end"),
+      streamBatchId = manifestField(dir, "stream_batch"),
+      streamId = manifestStringField(dir, "stream_id"),
+      nonAdvancing = manifestField(dir, NonAdvancingField))
+  }
+
+  /** A value of the public signatures' "negative means none" form. */
+  private def declared(v: Long): Option[Long] = Some(v).filter(_ >= 0L)
+
+  /** The one caller of the DSv2 `.dat` sink's write options: the body of
+    * [[write]], [[append]], [[compact]], `Cli.convert` and
+    * `CopyFile.convert`. Saves the item columns at their schema types (a
+    * typed view may hold upcastable or extra ones) plus the W1
+    * `non_advancing` flag when `rows` has it; each option that is set
+    * becomes the sink's option of the same name (the sink refuses
+    * malformed ones, such as half a range).
+    */
+  private[graft] def save(rows: DataFrame, dir: String, strategy: Int,
+                          overwrite: Boolean,
+                          blockStart: Option[Long] = None,
+                          blockEnd: Option[Long] = None,
+                          streamBatchId: Option[Long] = None,
+                          streamId: Option[String] = None,
+                          nonAdvancing: Option[Long] = None): Unit = {
+    val flag = graft.pipeline.FullHistory.NonAdvancing
+    val cols = StateItem.schema.fields.map(f => col(f.name).cast(f.dataType))
+    val longs = Seq("blockStart" -> blockStart, "blockEnd" -> blockEnd,
+      "streamBatchId" -> streamBatchId, "nonAdvancing" -> nonAdvancing)
+    rows.select((cols ++ rows.columns.filter(_ == flag).map(col))
+        .toIndexedSeq: _*)
+      .write.format("graft.spark.datasource.DatDataSource")
+      .option("strategy", strategy.toString)
+      .options((longs.collect { case (k, Some(v)) => k -> v.toString } ++
+        streamId.map("streamId" -> _)).toMap)
+      .mode(if (overwrite) "overwrite" else "append").save(dir)
   }
 
   /** Small-files POLICY for [[compact]] — the threshold an [[append]] /
@@ -307,40 +319,39 @@ object StateFiles {
     }
 
   /** Manifest field of the W1 non-advancing count — present only when a
-    * write fed by the W1 window measured it (see [[commitManifest]]).
+    * write's frame carried the window's `non_advancing` flag
+    * (`Cli.convert`), or a compaction carries a measured count (see
+    * [[commitManifest]]).
     */
   private[graft] val NonAdvancingField = "anomaly_non_advancing_block"
 
-  /** Per-part stat bundle carried from tasks to the manifest commit
-    * (row totals, the block range the part's header records, and
-    * write-time anomaly counters; `anomNonAdvancing` is counted only by
-    * [[writeFlagged]]'s tasks).
+  /** Per-part stat bundle carried from the DSv2 `DataWriter` to the
+    * manifest commit: row totals, the block range the part's header
+    * records, and write-time anomaly counters; `anomNonAdvancing` counts
+    * the rows a write's `non_advancing` column flags.
     */
   private[spark] final case class PartStats(bytes: Long,
                                             accounts: Long, slots: Long,
                                             blockStart: Long, blockEnd: Long,
                                             anomIncDecrease: Long,
                                             anomCodeHashNoInc: Long,
-                                            anomNonAdvancing: Long = 0L)
+                                            anomNonAdvancing: Long)
 
-  /** One encoded part: the full `.dat` bytes (header + page-aligned body)
-    * and its `.idx` sidecar, plus the stat counters. Shared by the
-    * function sink below and the DataSource V2 write path.
-    */
-  private[spark] final case class EncodedPart(dat: Array[Byte],
-                                              idx: Array[Byte],
-                                              stats: PartStats)
-
-  /** Encoder of one part: callers feed it row by row and finish with
-    * [[finishPart]] — the function sink's tasks and the DSv2 DataWriter
-    * alike.
+  /** Encoder of one part: the DSv2 DataWriter feeds it row by row and
+    * [[stagePart]] finishes it.
     */
   private[spark] def partWriter(strategy: Int): StateWriter =
     new StateWriter(strategy, PageShift, baseOffset = Header.Size)
 
-  private[spark] def finishPart(w: StateWriter, strategy: Int,
-                                blockStart: Long,
-                                blockEnd: Long): EncodedPart = {
+  /** Task side: the full `.dat` (a header recording
+    * `[blockStart, blockEnd]` + the page-aligned body) and its `.idx`
+    * sidecar, [[stage]]d as partition `partition` of write `writeId`.
+    */
+  private[spark] def stagePart(w: StateWriter, strategy: Int,
+                               blockStart: Long, blockEnd: Long,
+                               nonAdvancing: Long, dir: String,
+                               writeId: String,
+                               partition: Int): Staged[PartStats] = {
     val body = w.toArray
     val header = Header.build(
       endOfStates = Header.Size.toLong + body.length, PageShift,
@@ -397,9 +408,12 @@ object StateFiles {
         java.util.Arrays.copyOf(full, math.min(full.length, PairPrefixLen)),
         java.util.Arrays.copyOfRange(full,
           math.max(0, full.length - PairSuffixLen), full.length)))
-    EncodedPart(full, idx, PartStats(body.length.toLong, w.countAccounts,
-      w.countStorageSlots, blockStart, blockEnd,
-      w.anomalyIncarnationDecrease, w.anomalyCodeHashNoIncarnation))
+    stage(dir, writeId, partition, Seq("dat", "idx")) { out =>
+      out(0).write(full); out(1).write(idx)
+      PartStats(body.length.toLong, w.countAccounts, w.countStorageSlots,
+        blockStart, blockEnd, w.anomalyIncarnationDecrease,
+        w.anomalyCodeHashNoIncarnation, nonAdvancing)
+    }
   }
 
   private[spark] def atomicWrite(dir: String, name: String,
@@ -420,6 +434,10 @@ object StateFiles {
     * sink hands to [[publish]]. `parts` are (part number, stats) in
     * publish order.
     *
+    * `range` is the write's block range (None for a write with no rows
+    * and no declared range: a merge keeps the previous range, any other
+    * write records 0/0).
+    *
     * `nonAdvancing` is the W1 window's non-advancing count for this
     * snapshot, when the write measured it or carries a measured value;
     * otherwise a merge keeps the previous manifest's value unchanged (an
@@ -427,7 +445,7 @@ object StateFiles {
     * rather than record an unmeasured 0.
     */
   private[spark] def commitManifest(dir: String, strategy: Int,
-                                    blockStart: Long, blockEnd: Long,
+                                    range: Option[(Long, Long)],
                                     mergeManifest: Boolean,
                                     parts: Seq[(Int, PartStats)],
                                     streamBatchId: Long = -1L,
@@ -450,16 +468,12 @@ object StateFiles {
       .orElse(if (mergeManifest) manifestField(dir, NonAdvancingField)
               else None)
       .fold("")(n => s""""$NonAdvancingField":$n,""")
+    def prevRange(name: String): Option[Long] =
+      if (mergeManifest) manifestField(dir, name) else None
     val bStart =
-      if (mergeManifest)
-        math.min(blockStart,
-          manifestField(dir, "block_start").getOrElse(blockStart))
-      else blockStart
+      (range.map(_._1) ++ prevRange("block_start")).minOption.getOrElse(0L)
     val bEnd =
-      if (mergeManifest)
-        math.max(blockEnd,
-          manifestField(dir, "block_end").getOrElse(blockEnd))
-      else blockEnd
+      (range.map(_._2) ++ prevRange("block_end")).maxOption.getOrElse(0L)
     val newNames = parts.map(p => partName(p._1, "dat"))
     val allNames =
       (if (mergeManifest) manifestFileList(dir).getOrElse(Seq.empty)
@@ -488,9 +502,6 @@ object StateFiles {
     // checkpoint) must not silently adopt another stream's id sequence.
     val prevSid =
       if (mergeManifest) manifestStringField(dir, "stream_id") else None
-    require(streamId.isEmpty || prevSid.forall(_ == streamId),
-      s"dataset $dir is stream-owned by ${prevSid.getOrElse("?")}; " +
-        s"refusing append from stream $streamId")
     val sb = math.max(streamBatchId,
       if (mergeManifest) manifestField(dir, "stream_batch").getOrElse(-1L)
       else -1L)
@@ -522,7 +533,7 @@ object StateFiles {
       .maxOption.fold(0)(_ + 1)
 
   /** File names in `dir`, empty when it does not exist. */
-  private def listNames(dir: String): Seq[String] = {
+  private[spark] def listNames(dir: String): Seq[String] = {
     if (!Files.exists(Paths.get(dir))) return Seq.empty
     val stream = Files.list(Paths.get(dir))
     try {
@@ -536,8 +547,7 @@ object StateFiles {
   private[spark] def partName(n: Int, ext: String): String = f"part-$n%05d.$ext"
 
   // ---- the commit protocol of every archive sink (`.dat` and txbodies:
-  // the function sinks below, TxBodyFiles, and the DSv2 batch and
-  // streaming writes) ----
+  // the DSv2 batch and streaming `.dat` writes, and TxBodyFiles) ----
   //
   // The manifest's `file_list` is the authoritative snapshot — readers
   // read exactly those files when a manifest is present — and it is
@@ -640,64 +650,22 @@ object StateFiles {
     * but NO manifest is a torn write — its strategy and committed
     * contents are unknowable — and a strategy mismatch would rewrite the
     * manifest's strategy and make the existing parts decode as garbage;
-    * refuse both rather than risk a mixed-strategy dataset.
+    * refuse both rather than risk a mixed-strategy dataset. An append
+    * from a stream (`streamId`) must come from the dataset's owner.
     */
-  private[spark] def requireAppendable(dir: String, strategy: Int): Unit = {
+  private[spark] def requireAppendable(dir: String, strategy: Int,
+                                       streamId: String): Unit = {
     val s0 = manifestField(dir, "strategy")
     require(s0.isDefined || nextPartBase(dir) == 0,
       s"$dir has part files but no manifest — cannot append to a torn " +
         "dataset")
     s0.foreach(s => require(s == strategy.toLong,
       s"append strategy $strategy != dataset strategy $s"))
+    if (streamId.nonEmpty)
+      manifestStringField(dir, "stream_id").foreach(owner =>
+        require(owner == streamId, s"dataset $dir is stream-owned by " +
+          s"$owner; refusing append from stream $streamId"))
   }
-
-  /** The function sink: one encode task per partition of `rows`, each
-    * row's item taken by `item`, each non-empty partition staged as one
-    * part and published as an overwrite or an append. With a `flag`, each
-    * task also counts the rows it flags as it feeds them to the encoder,
-    * and the sum is the snapshot's measured `nonAdvancing`; without one,
-    * `nonAdvancing` is the value to carry (see [[commitManifest]]).
-    */
-  private def writeCore[T](rows: Dataset[T], dir: String,
-                           strategy: Int, blockStart: Long, blockEnd: Long,
-                           overwrite: Boolean, streamBatchId: Long = -1L,
-                           streamId: String = "",
-                           flag: Option[T => Boolean] = None,
-                           nonAdvancing: Option[Long] = None)(
-                           item: T => StateItem): Unit = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    Files.createDirectories(Paths.get(dir))
-    val writeId = java.util.UUID.randomUUID().toString
-    val staged = try rows.mapPartitions { it =>
-      if (!it.hasNext) Iterator.empty
-      else {
-        var flagged = 0L
-        val w = partWriter(strategy)
-        flag match {
-          case None => it.foreach(r => w.write(item(r)))
-          case Some(f) =>
-            it.foreach { r => if (f(r)) flagged += 1; w.write(item(r)) }
-        }
-        val part = finishPart(w, strategy, blockStart, blockEnd)
-        Iterator.single(stage(dir, writeId,
-          org.apache.spark.TaskContext.getPartitionId(), DatExts) { out =>
-          out(0).write(part.dat); out(1).write(part.idx)
-          part.stats.copy(anomNonAdvancing = flagged)
-        })
-      }
-    }.collect() catch {
-      case e: Throwable => discard(dir, writeId); throw e
-    }
-    publish(dir, staged.toSeq, overwrite)(parts =>
-      commitManifest(dir, strategy, blockStart, blockEnd,
-        mergeManifest = !overwrite, parts, streamBatchId, streamId,
-        flag.map(_ => staged.map(_.stats.anomNonAdvancing).sum)
-          .orElse(nonAdvancing)))
-  }
-
-  /** The files of one `.dat` part, in [[stage]] order. */
-  private[spark] val DatExts: Seq[String] = Seq("dat", "idx")
 
   /** Page-parallel read, delegated to the DataSource V2
     * ([[graft.spark.datasource.DatDataSource]]): ranged `RandomAccessFile`

@@ -64,17 +64,6 @@ object StateFormat {
     df.select(itemCols.map(col): _*).as[StateItem]
   }
 
-  /** [[asItems]] keeping one boolean column beside each item — the form
-    * [[StateFiles.writeFlagged]] counts while it encodes.
-    */
-  private[graft] def asFlaggedItems(
-      df: DataFrame, flag: String): Dataset[(StateItem, Boolean)] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    df.select(struct(itemCols.map(col): _*).as("_1"), col(flag).as("_2"))
-      .as[(StateItem, Boolean)]
-  }
-
   private val itemCols = Seq("address", "block", "isStorage", "nonce",
     "incarnation", "balance", "codeHash", "slot", "value")
 }

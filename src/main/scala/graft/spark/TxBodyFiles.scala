@@ -100,17 +100,10 @@ object TxBodyFiles {
     // manifest file_list = the committed snapshot; orphan part files from
     // a failed write attempt are invisible. Directory listing only for
     // ad-hoc (manifest-less) dirs.
-    val sorted = StateFiles.manifestFileList(dir) match {
-      case Some(list) => list.map(n => Paths.get(dir, n).toString)
-      case None =>
-        val files = Files.list(Paths.get(dir)).iterator()
-        val names = Seq.newBuilder[String]
-        while (files.hasNext) {
-          val f = files.next()
-          if (f.toString.endsWith(".dat")) names += f.toString
-        }
-        names.result().sorted
-    }
+    val sorted = StateFiles.manifestFileList(dir).getOrElse {
+      require(Files.isDirectory(Paths.get(dir)), s"$dir: no such dataset")
+      StateFiles.listNames(dir).filter(_.endsWith(".dat")).sorted
+    }.map(n => Paths.get(dir, n).toString)
     spark.createDataset(sorted)
       .repartition(math.max(1, sorted.length))
       .flatMap { f =>

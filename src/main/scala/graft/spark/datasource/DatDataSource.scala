@@ -29,7 +29,7 @@ import graft.model.StateItem
 class DatDataSource extends TableProvider {
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    DatDataSource.schema
+    StateItem.schema
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: util.Map[String, String]): Table =
@@ -38,21 +38,19 @@ class DatDataSource extends TableProvider {
       Option(properties.get("pagesPerSplit")).map(_.toInt).getOrElse(256))
 }
 
-object DatDataSource {
-  /** Decoded stream schema (FIXTURES.md §a6). */
-  val schema: StructType = StateItem.schema
-}
-
 class DatTable(path: String, strategy: Int, pagesPerSplit: Int)
     extends Table with SupportsRead
     with org.apache.spark.sql.connector.catalog.SupportsWrite {
   override def name(): String = s"dat($path)"
-  override def schema(): StructType = DatDataSource.schema
+  override def schema(): StructType = StateItem.schema
+  // ACCEPT_ANY_SCHEMA: a write may carry the W1 flag beside the item
+  // columns, which Spark's byName output resolution would reject, so the
+  // sink checks the shape itself (DatWriteSpec)
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ,
       TableCapability.MICRO_BATCH_READ,
       TableCapability.BATCH_WRITE, TableCapability.STREAMING_WRITE,
-      TableCapability.TRUNCATE)
+      TableCapability.TRUNCATE, TableCapability.ACCEPT_ANY_SCHEMA)
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new DatScanBuilder(path, strategy, pagesPerSplit,
       Option(options.get("maxFilesPerTrigger")).map(_.toInt),
@@ -61,7 +59,13 @@ class DatTable(path: String, strategy: Int, pagesPerSplit: Int)
   override def newWriteBuilder(
       info: org.apache.spark.sql.connector.write.LogicalWriteInfo)
       : org.apache.spark.sql.connector.write.WriteBuilder =
-    new DatWriteBuilder(path, strategy, info.queryId())
+    new org.apache.spark.sql.connector.write.WriteBuilder
+        with org.apache.spark.sql.connector.write.SupportsTruncate {
+      private var doTruncate = false
+      override def truncate() = { doTruncate = true; this }
+      override def build() = new DatWrite(path, strategy, doTruncate,
+        DatWriteSpec(path, info.schema(), info.options()), info.queryId())
+    }
 }
 
 class DatScanBuilder(path: String, strategy: Int, pagesPerSplit: Int,
@@ -104,29 +108,18 @@ class DatScanBuilder(path: String, strategy: Int, pagesPerSplit: Int,
   override def pushedFilters(): Array[Filter] = Array.empty
 
   override def build(): Scan = this
-  override def readSchema(): StructType = DatDataSource.schema
+  override def readSchema(): StructType = StateItem.schema
   override def toBatch: Batch = this
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val pageSize = 1 << 12
     // the manifest's file_list is the COMMITTED snapshot: when present,
     // read exactly those files, so orphan part files from a failed
     // append are invisible (directory listing is the manifest-less
     // fallback for ad-hoc dirs)
-    val committed: Iterator[java.nio.file.Path] =
-      graft.spark.StateFiles.manifestFileList(path) match {
-        case Some(names) => names.iterator.map(n => Paths.get(path, n))
-        case None =>
-          val listed = Files.list(Paths.get(path))
-          // materialize so the directory stream closes deterministically
-          val buf = Seq.newBuilder[java.nio.file.Path]
-          try {
-            val it = listed.iterator()
-            while (it.hasNext) buf += it.next()
-          } finally listed.close()
-          buf.result().iterator
-      }
-    val files = committed
+    val files = graft.spark.StateFiles.manifestFileList(path).getOrElse {
+      require(Files.isDirectory(Paths.get(path)), s"$path: no such dataset")
+      graft.spark.StateFiles.listNames(path)
+    }.iterator.map(n => Paths.get(path, n))
     // the blockGte/blockLte OPTIONS prune batch scans too (merged with
     // any pushed filters — intersection of the two ranges), so the same
     // option means the same thing on read and readStream
@@ -817,7 +810,7 @@ class DatReaderFactory(strategy: Int) extends PartitionReaderFactory {
 }
 
 // ---- write path (S8 as a first-class DataSource V2 sink, batch and
-// streaming) ----
+// streaming): the only code that encodes a `.dat` part ----
 //
 //   df.write.format("graft.spark.datasource.DatDataSource")
 //     .option("strategy", "1").mode("append").save(dir)
@@ -826,37 +819,80 @@ class DatReaderFactory(strategy: Int) extends PartitionReaderFactory {
 //     .option("strategy", "0").option("checkpointLocation", ckpt)
 //     .start(dir)
 //
-// StateFiles' commit protocol expressed through DSv2's native two-phase
-// commit: each task streams its (pre-sorted) partition through the
-// reference encoder and stages the part (StateFiles.stage), the commit
-// message carries the staged temps to the driver, and the driver's
-// commit publishes them (StateFiles.publish); abort discards the write's
-// temps and leaves the previous snapshot untouched. mode("append") adds
-// an increment; mode("overwrite") publishes a fresh snapshot.
+// StateFiles.save (write/append/compact, Cli.convert, CopyFile) saves
+// through it. Each task encodes its (pre-sorted) partition and stages
+// the part; the driver's commit publishes the parts (StateFiles.stage/
+// publish); abort discards the temps and leaves the previous snapshot
+// untouched.
 //
-// The block range comes from the rows: each part's header records the
-// min and max `block` its task encoded, and the commit records the range
-// over the write's parts (0/0 for a write with no rows), which an append
-// widens the manifest's range by.
+// Input: the nine StateItem columns at their types, by name, plus an
+// optional `non_advancing: boolean` (the W1 flag), which the tasks count
+// into anomaly_non_advancing_block. The table accepts any schema, so
+// DatWriteSpec refuses any other shape while the write is planned, and
+// the tasks refuse a null in any of these columns.
+//
+// Options, parsed once by DatWriteSpec, refused when malformed:
+//   strategy                 codec strategy (default 0)
+//   blockStart, blockEnd     a declared block range, both or neither
+//   streamBatchId, streamId  a foreachBatch append's replay watermark
+//                            and owner, which factory() checks
+//   nonAdvancing             a W1 count to carry (StateFiles.compact)
+//
+// Block range, one rule in DatWrite's commit: a declared range is
+// recorded as given, in every part header and the manifest; otherwise
+// each header records its rows' min and max block, the manifest the
+// range over the parts (0/0 for no rows). An append widens the
+// manifest's range. A declared range is not checked against the rows:
+// a pruned convert keeps block-0 rows below its start (the LAG default),
+// and a plain-state key listed twice leaves a row at latest + 1 above
+// its end, a tolerated anomaly (CliSpec) that CopyFile and compact carry.
 //
 // A streaming epoch is one append increment, merged into the manifest
-// with (stream_batch = epochId, stream_id = the streaming QUERY id —
-// Spark persists it in the checkpoint, so restarts keep it and a reset
-// checkpoint mints a new one). A replayed epoch (crash between the
-// manifest commit and the streaming checkpoint commit) is detected via
-// lastStreamBatch and discarded — the same exactly-once contract
-// StateFiles.append offers foreachBatch writers, expressed through
-// DSv2's native epoch protocol.
+// with (stream_batch = epochId, stream_id = the streaming query id,
+// which the checkpoint keeps); a replayed epoch is detected via
+// lastStreamBatch and discarded.
 
-class DatWriteBuilder(path: String, strategy: Int, queryId: String = "")
-    extends org.apache.spark.sql.connector.write.WriteBuilder
-    with org.apache.spark.sql.connector.write.SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): org.apache.spark.sql.connector.write.WriteBuilder = {
-    doTruncate = true; this
+/** A write's input ordinals (StateItem fields in schema order; `flag` is
+  * `non_advancing`'s, -1 when absent) and options, resolved on the driver.
+  */
+final case class DatWriteSpec(ordinals: Array[Int], flag: Int,
+                              range: Option[(Long, Long)],
+                              streamBatchId: Long, streamId: String,
+                              nonAdvancing: Option[Long])
+
+object DatWriteSpec {
+  private val Flag = graft.pipeline.FullHistory.NonAdvancing
+
+  def apply(path: String, schema: StructType,
+            options: CaseInsensitiveStringMap): DatWriteSpec = {
+    val types = schema.fields.map(f => f.name -> f.dataType).toMap
+    def refuse(why: String) = throw new IllegalArgumentException(
+      s"dat sink $path: $why (input ${schema.simpleString})")
+    StateItem.schema.fields.filterNot(f => types.get(f.name)
+        .contains(f.dataType)).foreach(f =>
+      refuse(s"input must carry ${f.name}: ${f.dataType.simpleString}"))
+    val extra = schema.fieldNames.toSet -- StateItem.schema.fieldNames - Flag
+    if (extra.nonEmpty) refuse(s"unexpected columns ${extra.mkString(", ")}")
+    if (types.get(Flag).exists(_ != BooleanType))
+      refuse(s"$Flag must be boolean")
+    def long(k: String): Option[Long] = Option(options.get(k)).map(v =>
+      v.toLongOption.getOrElse(refuse(s"option $k=$v is not an integer")))
+    val range = (long("blockStart"), long("blockEnd")) match {
+      case (None, None) => None
+      case (Some(s), Some(e)) if s >= 0 && e >= 0 => Some((s, e))
+      case r => refuse(s"blockStart and blockEnd declare a range together, " +
+        s"both >= 0 (got $r)")
+    }
+    val streamBatchId = long("streamBatchId").getOrElse(-1L)
+    val streamId = Option(options.get("streamId")).getOrElse("")
+    // the batch id is only monotone WITHIN one linear stream
+    if (streamBatchId >= 0L && streamId.isEmpty)
+      refuse("a streamBatchId needs its streamId — use " +
+        "StateFiles.streamIdentity(checkpointDir)")
+    DatWriteSpec(StateItem.schema.fieldNames.map(schema.fieldIndex),
+      if (types.contains(Flag)) schema.fieldIndex(Flag) else -1,
+      range, streamBatchId, streamId, long("nonAdvancing"))
   }
-  override def build(): org.apache.spark.sql.connector.write.Write =
-    new DatWrite(path, strategy, doTruncate, queryId)
 }
 
 /** One task's part, or None for an empty input partition (repartitionByRange
@@ -867,7 +903,7 @@ case class DatCommitMessage(
     extends org.apache.spark.sql.connector.write.WriterCommitMessage
 
 class DatWrite(path: String, strategy: Int, truncate: Boolean,
-               queryId: String = "")
+               spec: DatWriteSpec, queryId: String = "")
     extends org.apache.spark.sql.connector.write.Write
     with org.apache.spark.sql.connector.write.BatchWrite
     with org.apache.spark.sql.connector.write.streaming.StreamingWrite {
@@ -889,9 +925,10 @@ class DatWrite(path: String, strategy: Int, truncate: Boolean,
       : org.apache.spark.sql.connector.write.streaming.StreamingWrite = {
     // append-only sink: complete/update modes would truncate per epoch,
     // which the manifest's append-forever contract does not model
-    require(!truncate,
-      "dat streaming sink supports append output mode only")
+    require(!truncate, "dat streaming sink supports append output mode only")
     require(queryId.nonEmpty, "streaming write without a query id")
+    require(spec.streamBatchId < 0L && spec.streamId.isEmpty,
+      "dat streaming sink: streamBatchId/streamId are the epoch's")
     this
   }
 
@@ -900,8 +937,8 @@ class DatWrite(path: String, strategy: Int, truncate: Boolean,
     */
   private def factory(): DatWriterFactory = {
     Files.createDirectories(Paths.get(path))
-    if (!truncate) StateFiles.requireAppendable(path, strategy)
-    new DatWriterFactory(path, strategy, writeId)
+    if (!truncate) StateFiles.requireAppendable(path, strategy, spec.streamId)
+    new DatWriterFactory(path, strategy, spec, writeId)
   }
 
   override def createBatchWriterFactory(
@@ -910,20 +947,26 @@ class DatWrite(path: String, strategy: Int, truncate: Boolean,
   override def createStreamingWriterFactory(info: PhysicalWriteInfo)
       : streaming.StreamingDataWriterFactory = factory()
 
+  /** The one `.dat` commit: the declared range, else the range over the
+    * staged parts' headers (none for a write with no rows).
+    */
   private def publish(messages: Array[WriterCommitMessage],
-                      streamBatchId: Long, streamId: String): Unit =
-    StateFiles.publish(path,
-      messages.toSeq.flatMap(_.asInstanceOf[DatCommitMessage].part),
-      overwrite = truncate) { parts =>
-      val stats = parts.map(_._2)
-      StateFiles.commitManifest(path, strategy,
-        stats.map(_.blockStart).minOption.getOrElse(0L),
-        stats.map(_.blockEnd).maxOption.getOrElse(0L),
-        mergeManifest = !truncate, parts, streamBatchId, streamId)
-    }
+                      streamBatchId: Long, streamId: String): Unit = {
+    val staged =
+      messages.toSeq.flatMap(_.asInstanceOf[DatCommitMessage].part)
+    val stats = staged.map(_.stats)
+    val range = spec.range.orElse(
+      if (stats.isEmpty) None
+      else Some((stats.map(_.blockStart).min, stats.map(_.blockEnd).max)))
+    StateFiles.publish(path, staged, overwrite = truncate)(parts =>
+      StateFiles.commitManifest(path, strategy, range,
+        mergeManifest = !truncate, parts, streamBatchId, streamId,
+        if (spec.flag >= 0) Some(stats.map(_.anomNonAdvancing).sum)
+        else spec.nonAdvancing))
+  }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit =
-    publish(messages, -1L, "")
+    publish(messages, spec.streamBatchId, spec.streamId)
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     StateFiles.discard(path, writeId)
@@ -947,7 +990,8 @@ class DatWrite(path: String, strategy: Int, truncate: Boolean,
   * streaming form tags its temps with the epoch, so one epoch's abort
   * never discards another's.
   */
-class DatWriterFactory(path: String, strategy: Int, writeId: String)
+class DatWriterFactory(path: String, strategy: Int, spec: DatWriteSpec,
+                       writeId: String)
     extends org.apache.spark.sql.connector.write.DataWriterFactory
     with org.apache.spark.sql.connector.write.streaming
       .StreamingDataWriterFactory {
@@ -964,26 +1008,39 @@ class DatWriterFactory(path: String, strategy: Int, writeId: String)
 
   private def writer(partitionId: Int, id: String) =
     new DataWriter[InternalRow] {
+      import DatWriterFactory.Names
       private val w = StateFiles.partWriter(strategy)
+      private val o = spec.ordinals
+      // the item ordinals, then the flag's when present
+      private val checked = o ++ Some(spec.flag).filter(_ >= 0)
       // the block range of the rows written so far; empty while lo > hi
       private var lo = Long.MaxValue
       private var hi = Long.MinValue
+      private var flagged = 0L
 
       override def write(r: InternalRow): Unit = {
-        val block = r.getLong(1)
-        w.write(StateItem(r.getBinary(0), block, r.getBoolean(2),
-          r.getLong(3), r.getLong(4), r.getBinary(5), r.getBinary(6),
-          r.getBinary(7), r.getBinary(8)))
+        // the table accepts any schema, so Spark adds no not-null check:
+        // a null would read as 0, false or a null array
+        var i = 0
+        while (i < checked.length) {
+          require(!r.isNullAt(checked(i)), s"dat sink $path: null ${Names(i)}")
+          i += 1
+        }
+        val block = r.getLong(o(1))
+        w.write(StateItem(r.getBinary(o(0)), block, r.getBoolean(o(2)),
+          r.getLong(o(3)), r.getLong(o(4)), r.getBinary(o(5)),
+          r.getBinary(o(6)), r.getBinary(o(7)), r.getBinary(o(8))))
+        if (spec.flag >= 0 && r.getBoolean(spec.flag)) flagged += 1
         lo = math.min(lo, block)
         hi = math.max(hi, block)
       }
 
+      // the header records the declared range, else the rows'
       override def commit(): WriterCommitMessage =
         DatCommitMessage(if (lo > hi) None else {
-          val part = StateFiles.finishPart(w, strategy, lo, hi)
-          Some(StateFiles.stage(path, id, partitionId, StateFiles.DatExts) {
-            out => out(0).write(part.dat); out(1).write(part.idx); part.stats
-          })
+          val (start, end) = spec.range.getOrElse((lo, hi))
+          Some(StateFiles.stagePart(w, strategy, start, end, flagged, path,
+            id, partitionId))
         })
 
       // nothing is on disk before commit(), and a failed stage leaves no
@@ -995,6 +1052,9 @@ class DatWriterFactory(path: String, strategy: Int, writeId: String)
 }
 
 object DatWriterFactory {
+  private val Names =
+    StateItem.schema.fieldNames :+ graft.pipeline.FullHistory.NonAdvancing
+
   def epochWriteId(writeId: String, epochId: Long): String =
     s"$writeId-e$epochId"
 }

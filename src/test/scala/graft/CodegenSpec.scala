@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * the panel's working set (the default 100 entries: about 150 classes a
   * pass) or when an entry's generated source differs from run to run (a
   * codegen'd LIMIT names its counter from a JVM-global sequence; l10's
-  * label propagation checks convergence once per round).
+  * label propagation checks convergence once per round), or when a
+  * streaming query's tasks run under a class loader of their own (st04,
+  * st12: session artifact isolation).
   */
 class CodegenSpec extends AnyFunSuite {
 
@@ -22,7 +24,8 @@ class CodegenSpec extends AnyFunSuite {
 
   private val dir = "/root/testdata/sf0.001"
   private val panel = Seq("l53_pii_redact", "l20_bm25_terms",
-    "l05_embedding_neardup", "l62_pagerank", "l10_dedup_clusters")
+    "l05_embedding_neardup", "l62_pagerank", "l10_dedup_clusters",
+    "st04_session_stream", "st12_stream_interval_join")
 
   /** Classes compiled by Janino while each panel entry runs in full. */
   private def pass(): Map[String, Long] = panel.map { name =>
@@ -32,7 +35,8 @@ class CodegenSpec extends AnyFunSuite {
     name -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
   }.toMap
 
-  test("a repeated pass over l53, l20, l05, l62 and l10 compiles no class") {
+  test("a repeated pass over l53, l20, l05, l62, l10, st04 and st12 " +
+      "compiles no class") {
     val first = pass()
     val second = pass()
     assert(second == panel.map(_ -> 0L).toMap, s"first pass compiled $first")

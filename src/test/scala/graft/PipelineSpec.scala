@@ -567,17 +567,28 @@ class PipelineSpec extends AnyFunSuite {
       })
   }
 
+  // the min and max block of the rows `dir` holds
+  private def blockRange(dir: String): (Long, Long) = {
+    val r = graft.spark.StateFiles.read(spark, dir, 0)
+      .agg(min("block"), max("block")).head()
+    (r.getLong(0), r.getLong(1))
+  }
+
   for ((writer, overwrite) <- datOverwrites)
     test(s"$writer overwrite: fresh part names, old snapshot never " +
         "rewritten") {
       val items = StateFormat.asItems(
         history.withColumnRenamed("valid_from_block", "block"))
       val dir = Files.createTempDirectory("graft-overwrite-iso").toString
+      // a write and an append that declare no range record their rows'
       graft.spark.StateFiles.write(items, dir, strategy = 0)
       graft.spark.StateFiles.append(items, dir, strategy = 0)
+      SinkCommit.assertBlockRange(dir, blockRange(dir))
+      assert(blockRange(dir)._2 > 0L)
       var expected = 0L
       SinkCommit.assertOverwriteIsolated(dir) { expected = overwrite(dir) }
       assert(graft.spark.StateFiles.read(spark, dir, 0).count() == expected)
+      SinkCommit.assertBlockRange(dir, blockRange(dir))
     }
 
   // a rewrite whose last task throws after partition 0's task finished
@@ -640,6 +651,39 @@ class PipelineSpec extends AnyFunSuite {
       .mode("overwrite").save(torn)
     assert(spark.read.format(fmt).option("strategy", "0").load(torn)
       .count() == items.count())
+    // a frame that is not the item shape (plus the optional W1 flag) is
+    // refused while the write is planned: any task of `noTask` throws
+    import spark.implicits._
+    def taskRan(it: Iterator[StateItem]): Iterator[StateItem] =
+      throw new IllegalStateException("a task ran")
+    val noTask = items.mapPartitions(taskRan _).toDF()
+    for ((shape, msg) <- Seq(
+        noTask.withColumn("extra", lit(1)) -> "unexpected columns extra",
+        noTask.withColumn("nonce", col("nonce").cast("int")) ->
+          "nonce: bigint",
+        noTask.withColumn("non_advancing", lit(1)) ->
+          "non_advancing must be boolean")) {
+      val e = intercept[Exception](shape.write.format(fmt)
+        .option("strategy", "0").mode("overwrite").save(torn))
+      assert(exceptionChain(e).exists(m => Option(m.getMessage)
+        .exists(_.contains(msg))), e.toString)
+    }
+    assert(spark.read.format(fmt).option("strategy", "0").load(torn)
+      .count() == items.count())
+    // a null item column or flag is refused by the tasks, not read as 0,
+    // false or a null array, and the committed snapshot stays as it was
+    for ((name, typ) <- Seq("block" -> "bigint", "slot" -> "binary",
+        "non_advancing" -> "boolean")) {
+      var e: Throwable = null
+      SinkCommit.assertFailedWriteLeavesSnapshot(torn) {
+        try items.toDF().withColumn(name, lit(null).cast(typ))
+          .write.format(fmt).option("strategy", "0").mode("append")
+          .save(torn)
+        catch { case t: Throwable => e = t; throw t }
+      }
+      assert(exceptionChain(e).exists(m => Option(m.getMessage)
+        .exists(_.contains(s"null $name"))), e.toString)
+    }
   }
 
   private def exceptionChain(e: Throwable): List[Throwable] =
@@ -834,6 +878,14 @@ class PipelineSpec extends AnyFunSuite {
       java.nio.file.Paths.get(out, "_manifest.json")))
     assert(mf.contains("\"strategy\":1"), mf)
     assert(mf.contains(s"\"block_end\":${world.latestBlock}"), mf)
+    // an input without a manifest declares no range: the output records
+    // its rows'
+    Files.delete(java.nio.file.Paths.get(in, "_manifest.json"))
+    val bare = Files.createTempDirectory("graft-copy-bare").toString
+    graft.spark.CopyFile.convert(spark, in, bare,
+      strategyIn = 0, strategyOut = 0)
+    SinkCommit.assertBlockRange(bare, blockRange(bare))
+    assert(blockRange(bare)._2 > 0L)
   }
 
   test("compact: three increments collapse to one sorted generation, " +
