@@ -227,34 +227,13 @@ object Explain {
       sb.append("```\n")
     }
     locally {
-      import org.apache.spark.sql.functions.{col, expr}
       // st12's entry frame is the memory-sink TABLE (nothing to review);
       // the reviewable artifact is the STREAMING physical plan with the
-      // state-store join — rebuilt here exactly as the entry builds it
-      // and captured from StreamingQuery.explain()
-      val purchases = graft.queries.StreamingQueries
-        .eventFileStream(spark, dir)
-        .filter(col("event_type") === "purchase")
-        .select(col("user_id").as("p_user"),
-          col("event_id").as("purchase_id"), col("ts").as("p_ts"))
-        .withWatermark("p_ts", "0 seconds")
-      val clicks = graft.queries.StreamingQueries
-        .eventFileStream(spark, dir)
-        .filter(col("event_type") === "click")
-        .select(col("user_id").as("c_user"),
-          col("event_id").as("click_id"), col("ts").as("c_ts"))
-        .withWatermark("c_ts", "0 seconds")
-      val joined = clicks.join(purchases,
-        expr("c_user = p_user AND c_ts >= p_ts AND " +
-          "c_ts <= p_ts + interval 12 hours"))
-      val q = joined
-        .select(col("p_user").as("user_id"), col("purchase_id"),
-          col("click_id"))
-        .writeStream.format("memory").queryName("explain_st12")
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      // state-store join — the entry's own joined stream, drained as the
+      // entry drains it, captured from StreamingQuery.explain()
+      val q = graft.queries.StreamingQueries.drain(spark,
+        graft.queries.StreamingQueries.st12Joined(spark, dir)
+          .writeStream.format("memory").queryName("explain_st12"))
       val buf = new java.io.ByteArrayOutputStream
       Console.withOut(new java.io.PrintStream(buf, true, "UTF-8")) {
         q.explain()

@@ -453,6 +453,25 @@ object PipelineQueries {
   private val archDirs =
     scala.collection.concurrent.TrieMap[String, String]()
 
+  /** A fresh temp dir (named `prefix…`) for `body`, deleted when `body`
+    * returns or throws, so a failing entry leaks no scratch data on a
+    * retried sweep. `body`'s result must not read the dir lazily.
+    */
+  private[queries] def withScratchDir[A](prefix: String)(
+      body: String => A): A = {
+    val d = java.nio.file.Files.createTempDirectory(prefix).toFile
+    try body(d.toString)
+    finally org.apache.commons.io.FileUtils.deleteQuietly(d)
+  }
+
+  /** A fresh temp dir for a result that reads it lazily, deleted when the
+    * JVM exits. */
+  private def scratchDirUntilExit(prefix: String): String = {
+    val d = java.nio.file.Files.createTempDirectory(prefix)
+    sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
+    d.toString
+  }
+
   // p16's archive per (session, dir): the .dat dataset its point lookups
   // probe — built once from the shared history (the stored-dataset
   // deployment shape; a bench's repeat loop measures lookups, not the
@@ -460,12 +479,9 @@ object PipelineQueries {
   // dataset is (re)written there whenever its manifest is missing.
   private def archive(s: org.apache.spark.sql.SparkSession,
                       dir: String): String = synchronized {
-    val out = graft.Memo(s, ("pipeline.archive", dir)) {
-      val d = java.nio.file.Files.createTempDirectory("graft-p16-arch")
-      // no later session supersedes the JVM's last archive
-      sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(d.toFile))
-      d.toString
-    }
+    // no later session supersedes the JVM's last archive
+    val out = graft.Memo(s, ("pipeline.archive", dir))(
+      scratchDirUntilExit("graft-p16-arch"))
     if (!java.nio.file.Files.exists(
         java.nio.file.Paths.get(out, "_manifest.json"))) {
       val items = graft.spark.StateFormat.asItems(
@@ -554,18 +570,18 @@ object PipelineQueries {
         val h = history(s, dir)
         val items = graft.spark.StateFormat.asItems(
           h.withColumnRenamed("valid_from_block", "block"))
-        val out = java.nio.file.Files
-          .createTempDirectory("graft-dat-q").toString
-        graft.spark.StateFiles.write(items, out, strategy = 0,
-          blockStart = 0L, blockEnd = w.latestBlock)
-        // read back through the DataSource V2 (page-split, .idx-prunable)
-        val back = s.read.format("graft.spark.datasource.DatDataSource")
-          .option("strategy", "0").option("pagesPerSplit", "4").load(out)
-        // counts only (no n_files: file count = partition count, an
-        // environment knob) so the sim-literal oracle applies; the
-        // multi-file layout itself is asserted in PipelineSpec
-        Seq((items.count(), back.count()))
-          .toDF("rows_written", "rows_read")
+        withScratchDir("graft-dat-q") { out =>
+          graft.spark.StateFiles.write(items, out, strategy = 0,
+            blockStart = 0L, blockEnd = w.latestBlock)
+          // read back through the DataSource V2 (page-split, .idx-prunable)
+          val back = s.read.format("graft.spark.datasource.DatDataSource")
+            .option("strategy", "0").option("pagesPerSplit", "4").load(out)
+          // counts only (no n_files: file count = partition count, an
+          // environment knob) so the sim-literal oracle applies; the
+          // multi-file layout itself is asserted in PipelineSpec
+          Seq((items.count(), back.count()))
+            .toDF("rows_written", "rows_read")
+        }
       }, () => p06Sql(dir))),
 
     // Source/sink FORMAT breadth: the documents frame round-tripped
@@ -595,37 +611,35 @@ object PipelineQueries {
           (r.getLong(0), r.getLong(1))
         }
         val want = countAndDigest(docs)._2
-        val base = java.nio.file.Files
-          .createTempDirectory("graft-formats-q").toString
-        // the sandbox's spark-sql bundles the complete Avro v1 FileFormat
-        // classes but not the META-INF DataSourceRegister entry, so the
-        // "avro" alias doesn't resolve — the fully-qualified FileFormat
-        // class does, and is the same code the alias would dispatch to
-        val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
-        val rows = Seq("avro", "csv", "json", "orc", "parquet").map { fmt =>
-          val path = s"$base/$fmt"
-          fmt match {
-            case "avro" => docs.write.mode("overwrite")
-              .format(avroFmt).save(path)
-            case "csv" => csvWriteLossless(docs, path)
-            case "json" => docs.write.mode("overwrite").json(path)
-            case "orc" => docs.write.mode("overwrite").orc(path)
-            case _ => docs.write.mode("overwrite").parquet(path)
+        withScratchDir("graft-formats-q") { base =>
+          // the sandbox's spark-sql bundles the complete Avro v1 FileFormat
+          // classes but not the META-INF DataSourceRegister entry, so the
+          // "avro" alias doesn't resolve — the fully-qualified FileFormat
+          // class does, and is the same code the alias would dispatch to
+          val avroFmt = "org.apache.spark.sql.avro.AvroFileFormat"
+          val rows = Seq("avro", "csv", "json", "orc", "parquet").map { fmt =>
+            val path = s"$base/$fmt"
+            fmt match {
+              case "avro" => docs.write.mode("overwrite")
+                .format(avroFmt).save(path)
+              case "csv" => csvWriteLossless(docs, path)
+              case "json" => docs.write.mode("overwrite").json(path)
+              case "orc" => docs.write.mode("overwrite").orc(path)
+              case _ => docs.write.mode("overwrite").parquet(path)
+            }
+            val back = fmt match {
+              case "avro" => s.read.format(avroFmt).load(path)
+              case "csv" => csvReadLossless(s, docs.schema, path)
+              case "json" => s.read.schema(docs.schema).json(path)
+              case "orc" => s.read.orc(path)
+              case _ => s.read.parquet(path)
+            }
+            val (n, d) = countAndDigest(back)
+            (fmt, n, d == want)
           }
-          val back = fmt match {
-            case "avro" => s.read.format(avroFmt).load(path)
-            case "csv" => csvReadLossless(s, docs.schema, path)
-            case "json" => s.read.schema(docs.schema).json(path)
-            case "orc" => s.read.orc(path)
-            case _ => s.read.parquet(path)
-          }
-          val (n, d) = countAndDigest(back)
-          (fmt, n, d == want)
+          rows.toDF("format", "n_rows", "content_ok")
+            .orderBy(col("format"))
         }
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(base))
-        rows.toDF("format", "n_rows", "content_ok")
-          .orderBy(col("format"))
       },
       """WITH n AS (SELECT COUNT(*) AS c FROM documents)
         |SELECT f.fmt AS format, n.c AS n_rows, TRUE AS content_ok
@@ -644,8 +658,8 @@ object PipelineQueries {
     "p17_warc_ingest" -> QuerySpec(
       (s, dir) => {
         val rows = warcRows(s, dir)
-        val base = java.nio.file.Files
-          .createTempDirectory("graft-warc-q").toString
+        // the result frame reads the archive lazily
+        val base = scratchDirUntilExit("graft-warc-q")
         graft.sources.Warc.write(rows.repartition(4), base)
         graft.sources.Warc.read(s, base)
           .filter(col("rec_type") === "conversion")
@@ -714,14 +728,14 @@ object PipelineQueries {
         val decoded = graft.pipeline.TxBodies.decodeBodies(w.bodies)
         val enc = graft.pipeline.TxBodies.encodeBlocks(decoded,
           w.transactions)
-        val out = java.nio.file.Files
-          .createTempDirectory("graft-txbodies-q").toString
-        val (_, blocksWritten, _) = graft.spark.TxBodyFiles.write(
-          enc, out, blockStart = 1L, blockEnd = w.nBlocks)
-        val back = graft.spark.TxBodyFiles.read(s, out)
-        val txsRead = back.agg(sum(size(col("txs")))).collect()(0).getLong(0)
-        Seq((blocksWritten, back.count(), w.totalTxs, txsRead))
-          .toDF("blocks_written", "blocks_read", "txs_expected", "txs_read")
+        withScratchDir("graft-txbodies-q") { out =>
+          val (_, blocksWritten, _) = graft.spark.TxBodyFiles.write(
+            enc, out, blockStart = 1L, blockEnd = w.nBlocks)
+          val back = graft.spark.TxBodyFiles.read(s, out)
+          val txsRead = back.agg(sum(size(col("txs")))).collect()(0).getLong(0)
+          Seq((blocksWritten, back.count(), w.totalTxs, txsRead))
+            .toDF("blocks_written", "blocks_read", "txs_expected", "txs_read")
+        }
       }, () => p08Sql(dir))),
 
     // Incremental append flow: convert in two block-range increments into
@@ -734,23 +748,18 @@ object PipelineQueries {
         val items = graft.spark.StateFormat.asItems(
           h.withColumnRenamed("valid_from_block", "block"))
         val mid = w.latestBlock / 2
-        val out = java.nio.file.Files
-          .createTempDirectory("graft-dat-append-q").toString
-        graft.spark.StateFiles.write(
-          items.filter(col("block") <= mid).as[graft.model.StateItem],
-          out, strategy = 0, blockStart = 0L, blockEnd = mid)
-        graft.spark.StateFiles.append(
-          items.filter(col("block") > mid).as[graft.model.StateItem],
-          out, strategy = 0, blockStart = mid + 1, blockEnd = w.latestBlock)
-        val back = s.read.format("graft.spark.datasource.DatDataSource")
-          .option("strategy", "0").load(out)
-        val result = Seq((items.count(), back.count()))
-          .toDF("rows_written", "rows_read")
-        // counts already materialized into the local relation; drop the
-        // temp dataset so repeated harness runs don't accumulate garbage
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(out))
-        result
+        withScratchDir("graft-dat-append-q") { out =>
+          graft.spark.StateFiles.write(
+            items.filter(col("block") <= mid).as[graft.model.StateItem],
+            out, strategy = 0, blockStart = 0L, blockEnd = mid)
+          graft.spark.StateFiles.append(
+            items.filter(col("block") > mid).as[graft.model.StateItem],
+            out, strategy = 0, blockStart = mid + 1, blockEnd = w.latestBlock)
+          val back = s.read.format("graft.spark.datasource.DatDataSource")
+            .option("strategy", "0").load(out)
+          Seq((items.count(), back.count()))
+            .toDF("rows_written", "rows_read")
+        }
       }, () => p06Sql(dir))),
 
     // Dataset COMPACTION — the archive-maintenance lifecycle op: three
@@ -769,39 +778,36 @@ object PipelineQueries {
         val items = graft.spark.StateFormat.asItems(
           h.withColumnRenamed("valid_from_block", "block"))
         val third = math.max(w.latestBlock / 3, 1L)
-        val out = java.nio.file.Files
-          .createTempDirectory("graft-dat-compact-q").toString
-        graft.spark.StateFiles.write(
-          items.filter(col("block") <= third).as[graft.model.StateItem],
-          out, strategy = 0, blockStart = 0L, blockEnd = third)
-        graft.spark.StateFiles.append(
-          items.filter(col("block") > third
-            && col("block") <= 2 * third).as[graft.model.StateItem],
-          out, strategy = 0, blockStart = third + 1,
-          blockEnd = 2 * third)
-        graft.spark.StateFiles.append(
-          items.filter(col("block") > 2 * third)
-            .as[graft.model.StateItem],
-          out, strategy = 0, blockStart = 2 * third + 1,
-          blockEnd = w.latestBlock)
-        val genBefore = graft.spark.StateFiles
-          .manifestStringField(out, "dataset_id")
-        graft.spark.StateFiles.compact(s, out, strategy = 0,
-          targetParts = 2)
-        val back = s.read.format("graft.spark.datasource.DatDataSource")
-          .option("strategy", "0").load(out)
-        val genAfter = graft.spark.StateFiles
-          .manifestStringField(out, "dataset_id")
-        val filesAfter = graft.spark.StateFiles
-          .manifestField(out, "files").getOrElse(-1L)
-        val result = Seq((items.count(), back.count(), filesAfter,
-            genBefore.isDefined && genAfter.isDefined
-              && genBefore != genAfter))
-          .toDF("rows_written", "rows_read", "files_after",
-            "generation_changed")
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(out))
-        result
+        withScratchDir("graft-dat-compact-q") { out =>
+          graft.spark.StateFiles.write(
+            items.filter(col("block") <= third).as[graft.model.StateItem],
+            out, strategy = 0, blockStart = 0L, blockEnd = third)
+          graft.spark.StateFiles.append(
+            items.filter(col("block") > third
+              && col("block") <= 2 * third).as[graft.model.StateItem],
+            out, strategy = 0, blockStart = third + 1,
+            blockEnd = 2 * third)
+          graft.spark.StateFiles.append(
+            items.filter(col("block") > 2 * third)
+              .as[graft.model.StateItem],
+            out, strategy = 0, blockStart = 2 * third + 1,
+            blockEnd = w.latestBlock)
+          val genBefore = graft.spark.StateFiles
+            .manifestStringField(out, "dataset_id")
+          graft.spark.StateFiles.compact(s, out, strategy = 0,
+            targetParts = 2)
+          val back = s.read.format("graft.spark.datasource.DatDataSource")
+            .option("strategy", "0").load(out)
+          val genAfter = graft.spark.StateFiles
+            .manifestStringField(out, "dataset_id")
+          val filesAfter = graft.spark.StateFiles
+            .manifestField(out, "files").getOrElse(-1L)
+          Seq((items.count(), back.count(), filesAfter,
+              genBefore.isDefined && genAfter.isDefined
+                && genBefore != genAfter))
+            .toDF("rows_written", "rows_read", "files_after",
+              "generation_changed")
+        }
       }, () => p14Sql(dir))),
 
     // Batch STORAGE as-of join: many (address, slot, block) probes in one
@@ -834,19 +840,14 @@ object PipelineQueries {
         val h = history(s, dir)
         val items = graft.spark.StateFormat.asItems(
           h.withColumnRenamed("valid_from_block", "block"))
-        val out = java.nio.file.Files
-          .createTempDirectory("graft-dsv2-q").toString
-        items.toDF().write.format("graft.spark.datasource.DatDataSource")
-          .option("strategy", "1").mode("overwrite").save(out)
-        val back = s.read.format("graft.spark.datasource.DatDataSource")
-          .option("strategy", "1").load(out)
-        val result = Seq((items.count(), back.count()))
-          .toDF("rows_written", "rows_read")
-        // counts are materialized into the local relation; drop the temp
-        // dataset so repeated harness runs don't accumulate garbage
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(out))
-        result
+        withScratchDir("graft-dsv2-q") { out =>
+          items.toDF().write.format("graft.spark.datasource.DatDataSource")
+            .option("strategy", "1").mode("overwrite").save(out)
+          val back = s.read.format("graft.spark.datasource.DatDataSource")
+            .option("strategy", "1").load(out)
+          Seq((items.count(), back.count()))
+            .toDF("rows_written", "rows_read")
+        }
       }, () => p06Sql(dir))),
 
     // Scale stress: the flagship conversion DAG (§3.1 — decode → J1 →

@@ -1,15 +1,20 @@
 package graft.queries
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode,
+  StreamingQuery, Trigger}
 import graft.Tables
 import graft.streaming.Streams
 
-/** Streaming-surface queries. w01 checks the windowed aggregation logic
-  * against a DuckDB oracle in batch form (same plan Structured Streaming
-  * executes incrementally); st02–st05 run REAL streaming queries
-  * (file-source or memory-sink micro-batches) hash-checked against DuckDB
-  * oracles; the MemoryStream batch≡streaming equivalence proof lives in
-  * StreamingSpec.
+/** Streaming-surface queries. w01–w04 check the windowed aggregation
+  * logic against DuckDB oracles in batch form (the same plans Structured
+  * Streaming executes incrementally). Every st-entry runs a REAL
+  * streaming query hash-checked against a DuckDB oracle: 26 of them
+  * start through the one AvailableNow [[drain]] (file, binaryFile, .dat
+  * or WARC sources into a memory, foreachBatch or DSv2 sink); st11, st26
+  * and st29's producer feed MemoryStreams batch by batch. The
+  * MemoryStream batch≡streaming equivalence proof lives in StreamingSpec.
   */
 object StreamingQueries {
 
@@ -21,8 +26,8 @@ object StreamingQueries {
     * change broke st02/st04 precisely because this site had its own
     * unconditional copy of the conversion).
     */
-  private[graft] def eventFileStream(s: org.apache.spark.sql.SparkSession,
-      dir: String): org.apache.spark.sql.DataFrame = {
+  private[graft] def eventFileStream(s: SparkSession,
+      dir: String): DataFrame = {
     val raw = s.read.parquet(s"$dir/events.parquet")
     Tables.normalizeTs(
       s.readStream.schema(raw.schema)
@@ -30,15 +35,68 @@ object StreamingQueries {
         .parquet(dir))
   }
 
-  /** State-store sizing shared by every REAL streaming execution here
-    * (st02/st04/st05): a streaming query fixes its state-partition
+  /** File-source stream over the documents table, with the batch read's
+    * schema. */
+  private[graft] def documentStream(s: SparkSession,
+      dir: String): DataFrame = {
+    val raw = s.read.parquet(s"$dir/documents.parquet")
+    s.readStream.schema(raw.schema)
+      .option("pathGlobFilter", "documents.parquet")
+      .parquet(dir)
+  }
+
+  /** binaryFile stream over `dir`'s files, or those matching `glob`
+    * (st13, st15, st17). */
+  private def binaryFileStream(s: SparkSession, dir: String,
+      glob: Option[String] = None): DataFrame = {
+    val r = s.readStream.format("binaryFile").schema(org.apache.spark.sql
+      .execution.datasources.binaryfile.BinaryFileFormat.schema)
+    glob.fold(r)(r.option("pathGlobFilter", _)).load(dir)
+  }
+
+  /** The one AvailableNow drain, where every st-entry's query that reads
+    * a whole source starts (st11, st26 and st29's producer feed
+    * MemoryStreams batch by batch instead): `w` runs with an AvailableNow
+    * trigger until its source is drained, and the terminated query comes
+    * back (its `recentProgress` and `explain()` stay readable). A query
+    * that fails rethrows its StreamingQueryException here, stopped.
+    *
+    * State-store sizing: a streaming query fixes its state-partition
     * count at query start from `spark.sql.shuffle.partitions`, and each
     * micro-batch then pays per-partition task + state-store load/commit
     * overhead regardless of data volume. A fixture-scale keyed stream
     * doesn't need 32 state partitions' worth of that (measured: st04 went
-    * 19.6 s → ~1 s median at sf0.1 with 8). A production deployment sizes
-    * this to keyed-state volume — same knob, bigger number.
+    * 19.6 s → ~1 s median at sf0.1 with 8), so every drained query starts
+    * with 8 — the stateful ones (st02–st06, st10, st12, st16, st18, st24,
+    * st27) as state partitions, the rest as the shuffle width of their
+    * batch-local joins. A production deployment sizes this to keyed-state
+    * volume — same knob, bigger number.
     */
+  private[graft] def drain(s: SparkSession,
+      w: DataStreamWriter[_]): StreamingQuery =
+    withStateSizing(s) {
+      val q = w.trigger(Trigger.AvailableNow()).start()
+      try q.awaitTermination() finally q.stop()
+      q
+    }
+
+  /** [[drain]] `df` into a memory sink named `sink`; returns its table. */
+  private[graft] def drain(df: DataFrame, sink: String,
+      mode: OutputMode = OutputMode.Append()): DataFrame = {
+    drain(df.sparkSession,
+      df.writeStream.format("memory").queryName(sink).outputMode(mode))
+    df.sparkSession.table(sink)
+  }
+
+  /** Runs `body` with `parts` shuffle partitions, then restores the
+    * session's count. */
+  private def withStateSizing[A](s: SparkSession, parts: Int = 8)
+                                (body: => A): A = {
+    val prev = s.conf.get("spark.sql.shuffle.partitions")
+    s.conf.set("spark.sql.shuffle.partitions", parts.toString)
+    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
+  }
+
   /** st26's world sizes (1x row count; the 10x world multiplies rows by
     * 10 and distinct keys by only 2 — state must track the latter).
     */
@@ -102,13 +160,6 @@ object StreamingQueries {
        |  ${n / 5}::BIGINT AS keys_1x, ${2 * n / 5}::BIGINT AS keys_10x,
        |  ${n / 5}::BIGINT AS state_1x,
        |  ${2 * n / 5}::BIGINT AS state_10x""".stripMargin
-  }
-
-  private def withStateSizing[A](s: org.apache.spark.sql.SparkSession)
-                                (body: => A): A = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
   /** st17's image-file fixture: the m10 payload battery (BMP / JPEG /
@@ -188,6 +239,45 @@ object StreamingQueries {
       |FROM s GROUP BY user_id, sid
       |ORDER BY user_id, session_start""".stripMargin
 
+  /** st12's stream-stream interval join: clicks within 12 h after a
+    * purchase by the same user. The entry drains it; Explain prints the
+    * drained query's plan.
+    */
+  private[graft] def st12Joined(s: SparkSession, dir: String): DataFrame = {
+    val purchases = eventFileStream(s, dir)
+      .filter(col("event_type") === "purchase")
+      .select(col("user_id").as("p_user"),
+        col("event_id").as("purchase_id"), col("ts").as("p_ts"))
+      .withWatermark("p_ts", "0 seconds")
+    val clicks = eventFileStream(s, dir)
+      .filter(col("event_type") === "click")
+      .select(col("user_id").as("c_user"),
+        col("event_id").as("click_id"), col("ts").as("c_ts"))
+      .withWatermark("c_ts", "0 seconds")
+    clicks.join(purchases,
+        expr("c_user = p_user AND c_ts >= p_ts AND " +
+          "c_ts <= p_ts + interval 12 hours"))
+      .select(col("p_user").as("user_id"), col("purchase_id"),
+        col("click_id"))
+  }
+
+  /** st23/st24's stream: image-text pairs extracted from the documents
+    * stream, scored by the m14 embedding gate (two stream-static
+    * joins). The text join is hinted sort-merge: left to adaptive
+    * execution, it became a broadcast join with or without a shuffle of
+    * the stream side depending on which stage finished first, so a
+    * warm run could compile a new plan's classes.
+    */
+  private def pairGateStream(s: SparkSession, dir: String): DataFrame = {
+    val nImg = 40
+    val pairs = graft.operators.TextAnalysis.extractImagePairs(
+      LlmQueries.m14PagesOver(
+        documentStream(s, dir).select(col("doc_id")), nImg))
+    graft.operators.Multimodal.pairEmbedGate(pairs,
+      LlmQueries.m14ImgEmb(s, dir, nImg),
+      LlmQueries.m14TxtEmb(s, dir, nImg).hint("merge"), minScore = 0.9)
+  }
+
   val all: Map[String, QuerySpec] = Map(
 
     // Tumbling 1-day window over events — the batch form of
@@ -223,27 +313,19 @@ object StreamingQueries {
 
     // The PRODUCTION ingestion path: a real file-source readStream over
     // the events table (no MemoryStream, no driver collect), windowed
-    // aggregation, Trigger.AvailableNow, memory sink in complete mode.
+    // aggregation, an AvailableNow drain, memory sink in complete mode.
     // The streaming result equals the w01 batch plan on static input, so
     // the same DuckDB oracle hash-checks an actual streaming execution.
     "st02_file_stream" -> QuerySpec(
-      (s, dir) => {
-        val agg = eventFileStream(s, dir)
+      (s, dir) => drain(eventFileStream(s, dir)
           .groupBy(window(col("ts"), "1 day"), col("event_type"))
           .agg(count(lit(1)).as("n_events"),
             sum(col("value").cast("decimal(18,2)")).cast("double")
               .as("total_value"))
           .select(col("window.start").as("day"), col("event_type"),
-            col("n_events"), col("total_value"))
-        withStateSizing(s) {
-          val q = agg.writeStream.format("memory").queryName("st02_sink")
-            .outputMode("complete")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        s.table("st02_sink").orderBy(col("day"), col("event_type"))
-      },
+            col("n_events"), col("total_value")),
+        "st02_sink", OutputMode.Complete())
+        .orderBy(col("day"), col("event_type")),
       """SELECT date_trunc('day', ts) AS day, event_type,
         |COUNT(*) AS n_events,
         |CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
@@ -260,33 +342,8 @@ object StreamingQueries {
     // stream history. AvailableNow over the fixture file = one batch,
     // so append-mode inner-join output is complete and deterministic.
     "st12_stream_interval_join" -> QuerySpec(
-      (s, dir) => {
-        val purchases = eventFileStream(s, dir)
-          .filter(col("event_type") === "purchase")
-          .select(col("user_id").as("p_user"),
-            col("event_id").as("purchase_id"), col("ts").as("p_ts"))
-          .withWatermark("p_ts", "0 seconds")
-        val clicks = eventFileStream(s, dir)
-          .filter(col("event_type") === "click")
-          .select(col("user_id").as("c_user"),
-            col("event_id").as("click_id"), col("ts").as("c_ts"))
-          .withWatermark("c_ts", "0 seconds")
-        val joined = clicks.join(purchases,
-          expr("c_user = p_user AND c_ts >= p_ts AND " +
-            "c_ts <= p_ts + interval 12 hours"))
-        withStateSizing(s) {
-          val q = joined
-            .select(col("p_user").as("user_id"), col("purchase_id"),
-              col("click_id"))
-            .writeStream.format("memory").queryName("st12_sink")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        s.table("st12_sink")
-          .orderBy(col("user_id"), col("purchase_id"), col("click_id"))
-      },
+      (s, dir) => drain(st12Joined(s, dir), "st12_sink")
+        .orderBy(col("user_id"), col("purchase_id"), col("click_id")),
       DeclaredQueries.attributionWindowOracleSql),
 
     // Exact per-type value quantiles — Spark's exact `percentile`
@@ -367,22 +424,13 @@ object StreamingQueries {
     // input, so w02's DuckDB lag+running-sum oracle hash-checks a
     // streaming session-window execution.
     "st04_session_stream" -> QuerySpec(
-      (s, dir) => {
-        withStateSizing(s) {
-          val q = eventFileStream(s, dir)
-            .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-            .agg(count(lit(1)).as("n_events"))
-            .select(col("session_window.start").as("session_start"),
-              col("user_id"), col("n_events"))
-            .writeStream.format("memory").queryName("st04_sink")
-            .outputMode("complete")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        s.table("st04_sink")
-          .orderBy(col("user_id"), col("session_start"))
-      },
+      (s, dir) => drain(eventFileStream(s, dir)
+          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+          .agg(count(lit(1)).as("n_events"))
+          .select(col("session_window.start").as("session_start"),
+            col("user_id"), col("n_events")),
+        "st04_sink", OutputMode.Complete())
+        .orderBy(col("user_id"), col("session_start")),
       sessionOracleSql),
 
     // Streaming EXACT DEDUP: the l01 operator as a continuous query —
@@ -407,22 +455,13 @@ object StreamingQueries {
     // otherwise make the two sides disagree by design. Production
     // callers keep the default 1000 cap.
     "st06_stream_neardup" -> QuerySpec(
-      (s, dir) => Run(withStateSizing(s) {
+      (s, dir) => Run({
         LlmQueries.ensureMinhashGolden(s, dir)
-        val raw = s.read.parquet(s"$dir/documents.parquet")
-        val stream = s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        val q = graft.operators.Dedup
-          .streamingCandidatePairsDistinct(stream,
-            maxBucketSize = Int.MaxValue)
-          .toDF("id_a", "id_b")
-          .writeStream.format("memory").queryName("st06_sink")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table("st06_sink").orderBy(col("id_a"), col("id_b"))
+        drain(graft.operators.Dedup
+            .streamingCandidatePairsDistinct(documentStream(s, dir),
+              maxBucketSize = Int.MaxValue)
+            .toDF("id_a", "id_b"), "st06_sink")
+          .orderBy(col("id_a"), col("id_b"))
       }, () => LlmQueries.lshCandSql(LlmQueries.l02GoldenName(dir)))),
 
     // Streaming frontier discovery (st16) — the crawl loop's feedback
@@ -438,26 +477,17 @@ object StreamingQueries {
     // re-derives it from doc_id arithmetic alone (the st03 stance).
     "st16_frontier_stream" -> QuerySpec(
       (s, dir) => {
-        val raw = s.read.parquet(s"$dir/documents.parquet")
-        val stream = s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
         val id = col("doc_id")
         val html = concat(
           lit("<a href=\"https://hub.example/p"), id % 13,
           lit("\">h</a><a href=\"/u/"), id, lit("\">u</a>"))
-        val pages = stream.select(
+        val pages = documentStream(s, dir).select(
           concat(lit("https://s"), id, lit(".example/x/")).as("url"),
           html.as("html"))
-        val q = graft.operators.TextAnalysis.extractOutlinks(pages)
-          .select(col("dst_url"))
-          .dropDuplicates("dst_url")
-          .writeStream.format("memory").queryName("st16_sink")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table("st16_sink").orderBy(col("dst_url"))
+        drain(graft.operators.TextAnalysis.extractOutlinks(pages)
+            .select(col("dst_url"))
+            .dropDuplicates("dst_url"), "st16_sink")
+          .orderBy(col("dst_url"))
       },
       """WITH d AS (SELECT doc_id FROM documents)
         |SELECT DISTINCT dst_url FROM (
@@ -478,20 +508,8 @@ object StreamingQueries {
     // arithmetic alone (the m10 dims battery streamed).
     "st17_image_gate_stream" -> QuerySpec(
       (s, dir) => {
-        val imgDir = ensureImageFixture()
-        val binSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("path",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("modificationTime",
-            org.apache.spark.sql.types.TimestampType),
-          org.apache.spark.sql.types.StructField("length",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("content",
-            org.apache.spark.sql.types.BinaryType)))
         import s.implicits._
-        val q = s.readStream.format("binaryFile").schema(binSchema)
-          .option("pathGlobFilter", "*.bin")
-          .load(imgDir)
+        drain(binaryFileStream(s, ensureImageFixture(), Some("*.bin"))
           .select(col("path"), col("content"))
           .as[(String, Array[Byte])]
           .map { case (p, bytes) =>
@@ -501,13 +519,8 @@ object StreamingQueries {
             (id, m.map(_._1).getOrElse(""),
               m.map(_._2).getOrElse(-1), m.map(_._3).getOrElse(-1))
           }.toDF("media_id", "img_type", "width", "height")
-          .filter(col("width") >= 20 && col("height") >= 18)
-          .writeStream.format("memory").queryName("st17_sink")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table("st17_sink").orderBy(col("media_id"))
+          .filter(col("width") >= 20 && col("height") >= 18), "st17_sink")
+          .orderBy(col("media_id"))
       },
       """SELECT id AS media_id,
         |  CASE CAST(id % 5 AS INT)
@@ -537,17 +550,13 @@ object StreamingQueries {
     "st18_politeness_gate" -> QuerySpec(
       (s, dir) => {
         import s.implicits._
-        val raw = s.read.parquet(s"$dir/documents.parquet")
-        val stream = s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
         val id = col("doc_id")
         val host = concat(lit("h"), id % 4, lit(".example"))
         val html = concat(
           lit("<a href=\"https://"), host, lit("/pub/"), id,
           lit("\">p</a><a href=\"https://"), host, lit("/private/"),
           id, lit("\">q</a>"))
-        val pages = stream.select(
+        val pages = documentStream(s, dir).select(
           concat(lit("https://"), host, lit("/x/")).as("url"),
           html.as("html"))
         val robots = s.createDataFrame(Seq(
@@ -574,13 +583,8 @@ object StreamingQueries {
           .select(col("host"), col("dst_url").as("url"),
             coalesce(col("crawl_delay"), lit(1.0)).as("delay"))
           .as[Streams.FetchCandidate]
-        val q = Streams.politenessSchedule(admitted)
-          .writeStream.format("memory").queryName("st18_sink")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table("st18_sink").orderBy(col("host"), col("url"))
+        drain(Streams.politenessSchedule(admitted).toDF(), "st18_sink")
+          .orderBy(col("host"), col("url"))
       },
       """WITH adm AS (
         |  SELECT 'h' || (doc_id % 4) || '.example' AS host,
@@ -597,21 +601,10 @@ object StreamingQueries {
         |FROM r ORDER BY host, url""".stripMargin),
 
     "st03_stream_dedup" -> QuerySpec(
-      (s, dir) => {
-        val raw = s.read.parquet(s"$dir/documents.parquet")
-        val stream = s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        val q = stream
+      (s, dir) => drain(documentStream(s, dir)
           .select(md5(col("text")).as("digest"))
-          .dropDuplicates("digest")
-          .writeStream.format("memory").queryName("st03_sink")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table("st03_sink").orderBy(col("digest"))
-      },
+          .dropDuplicates("digest"), "st03_sink")
+        .orderBy(col("digest")),
       """SELECT DISTINCT md5(text) AS digest
         |FROM documents ORDER BY digest""".stripMargin),
 
@@ -624,23 +617,14 @@ object StreamingQueries {
     // surviving set through its own tokenizer and nfc_normalize.
     "st10_stream_funnel" -> QuerySpec(
       (s, dir) => {
-        val raw = s.read.parquet(s"$dir/documents.parquet")
-        val stream = s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
         val nfc = graft.functions.expressions.TextHashExpressions
           .nfc_normalize _
-        val q = stream
-          .filter(size(graft.operators.TextAnalysis.tokens(col("text")))
-            >= 5)
-          .select(md5(nfc(col("text"))).as("digest"))
-          .dropDuplicates("digest")
-          .writeStream.format("memory").queryName("st10_sink")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table("st10_sink").orderBy(col("digest"))
+        drain(documentStream(s, dir)
+            .filter(size(graft.operators.TextAnalysis.tokens(col("text")))
+              >= 5)
+            .select(md5(nfc(col("text"))).as("digest"))
+            .dropDuplicates("digest"), "st10_sink")
+          .orderBy(col("digest"))
       },
       """SELECT DISTINCT md5(nfc_normalize(text)) AS digest
         |FROM documents
@@ -671,39 +655,22 @@ object StreamingQueries {
     // charset decode, AND body byte-fidelity. Zero state, plain append.
     "st15_http_stream" -> QuerySpec(
       (s, dir) => {
-        val warcDir = LlmQueries.ensureHttpCrawlFixture(s, dir)
-        val binSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("path",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("modificationTime",
-            org.apache.spark.sql.types.TimestampType),
-          org.apache.spark.sql.types.StructField("length",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("content",
-            org.apache.spark.sql.types.BinaryType)))
         import s.implicits._
-        withStateSizing(s) {
-          val bc = s.sparkContext.broadcast(new graft.sources.Warc
-            .ShippedConf(graft.sources.Warc.sessionHadoopConf(s)))
-          val parsed = s.readStream.format("binaryFile").schema(binSchema)
-            .load(warcDir)
-            .select(col("path")).as[String]
-            .mapPartitions(paths => paths.flatMap(p =>
-              graft.sources.Warc.parseFileRaw(p, bc.value.value)
-                .filter(_.rec_type == "response")
-                .map(graft.sources.Warc.splitHttp)))
-            .toDF()
-          val q = parsed
+        val bc = s.sparkContext.broadcast(new graft.sources.Warc
+          .ShippedConf(graft.sources.Warc.sessionHadoopConf(s)))
+        val parsed = binaryFileStream(s,
+            LlmQueries.ensureHttpCrawlFixture(s, dir))
+          .select(col("path")).as[String]
+          .mapPartitions(paths => paths.flatMap(p =>
+            graft.sources.Warc.parseFileRaw(p, bc.value.value)
+              .filter(_.rec_type == "response")
+              .map(graft.sources.Warc.splitHttp)))
+          .toDF()
+        drain(parsed
             .filter(col("http_status") === 200)
             .select(col("url"), col("http_status"), col("charset"),
-              md5(col("body")).as("digest"))
-            .writeStream.format("memory").queryName("st15_sink")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        s.table("st15_sink").orderBy(col("url"))
+              md5(col("body")).as("digest")), "st15_sink")
+          .orderBy(col("url"))
       },
       """WITH p AS (
         |  SELECT doc_id,
@@ -731,42 +698,25 @@ object StreamingQueries {
 
     "st13_warc_stream" -> QuerySpec(
       (s, dir) => {
-        val warcDir = ensureWarcFixture(s, dir)
-        val binSchema = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("path",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("modificationTime",
-            org.apache.spark.sql.types.TimestampType),
-          org.apache.spark.sql.types.StructField("length",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("content",
-            org.apache.spark.sql.types.BinaryType)))
         import s.implicits._
-        withStateSizing(s) {
-          // ship the SESSION's Hadoop conf to the parse tasks (the
-          // Warc.read stance — a bare executor Configuration misses
-          // programmatic spark.hadoop.* settings)
-          val bc = s.sparkContext.broadcast(new graft.sources.Warc
-            .ShippedConf(graft.sources.Warc.sessionHadoopConf(s)))
-          val parsed = s.readStream.format("binaryFile").schema(binSchema)
-            .load(warcDir)
-            .select(col("path")).as[String]
-            .mapPartitions(paths =>
-              paths.flatMap(p =>
-                graft.sources.Warc.parseFile(p, bc.value.value)))
-            .toDF()
-          val q = parsed
+        // ship the SESSION's Hadoop conf to the parse tasks (the
+        // Warc.read stance — a bare executor Configuration misses
+        // programmatic spark.hadoop.* settings)
+        val bc = s.sparkContext.broadcast(new graft.sources.Warc
+          .ShippedConf(graft.sources.Warc.sessionHadoopConf(s)))
+        val parsed = binaryFileStream(s, ensureWarcFixture(s, dir))
+          .select(col("path")).as[String]
+          .mapPartitions(paths =>
+            paths.flatMap(p =>
+              graft.sources.Warc.parseFile(p, bc.value.value)))
+          .toDF()
+        drain(parsed
             .filter(col("rec_type") === "conversion")
             .filter(size(graft.operators.TextAnalysis.tokens(col("text")))
               >= 5)
-            .select(col("url"), md5(col("text")).as("digest"))
-            .writeStream.format("memory").queryName("st13_sink")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        s.table("st13_sink").orderBy(col("url"))
+            .select(col("url"), md5(col("text")).as("digest")),
+          "st13_sink")
+          .orderBy(col("url"))
       },
       """SELECT 'https://example.org/doc/' || doc_id AS url,
         |  md5(text) AS digest
@@ -788,18 +738,9 @@ object StreamingQueries {
     "st14_stream_score" -> QuerySpec(
       (s, dir) => {
         val model = LlmQueries.l42ModelCached(s, dir)
-        val raw = s.read.parquet(s"$dir/documents.parquet")
-        val stream = s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        val q = graft.operators.QualityClassifier
-          .scoreUnitsNarrow(stream, model)
-          .writeStream.format("memory").queryName("st14_sink")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        Run(s.table("st14_sink").orderBy(col("doc_id")),
+        Run(drain(graft.operators.QualityClassifier
+              .scoreUnitsNarrow(documentStream(s, dir), model), "st14_sink")
+            .orderBy(col("doc_id")),
           () => LlmQueries.l42Sql(model))
       }),
 
@@ -814,18 +755,10 @@ object StreamingQueries {
     "st19_langid_stream" -> QuerySpec(
       (s, dir) => {
         val model = LlmQueries.l77ModelCached(s, dir)
-        val raw = s.read.parquet(s"$dir/documents.parquet")
-        val stream = s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        val q = graft.operators.LangClassifier
-          .scoreUnitsNarrow(LlmQueries.langWorldOver(stream), model)
-          .writeStream.format("memory").queryName("st19_sink")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        Run(s.table("st19_sink").orderBy(col("doc_id")),
+        Run(drain(graft.operators.LangClassifier.scoreUnitsNarrow(
+              LlmQueries.langWorldOver(documentStream(s, dir)), model),
+            "st19_sink")
+            .orderBy(col("doc_id")),
           () => LlmQueries.l77Sql(model))
       }),
 
@@ -841,19 +774,10 @@ object StreamingQueries {
       (s, dir) => Run({
         val model = LlmQueries.unigramModelCached(s, dir)
         LlmQueries.ensureUnigramEncodeGolden(s, dir)
-        val raw = s.read.parquet(s"$dir/documents.parquet")
-        val stream = s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        val q = graft.operators.TextAnalysis
-          .unigramEncodeCounts(
-            stream.select(col("doc_id"), col("text")), model)
-          .writeStream.format("memory").queryName("st20_sink")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table("st20_sink").orderBy(col("doc_id"))
+        drain(graft.operators.TextAnalysis.unigramEncodeCounts(
+            documentStream(s, dir).select(col("doc_id"), col("text")),
+            model), "st20_sink")
+          .orderBy(col("doc_id"))
       }, () => LlmQueries.l80OracleSql(dir))),
 
     // Streaming token-ID emission (st21) — l83's streaming twin (the
@@ -868,22 +792,14 @@ object StreamingQueries {
       (s, dir) => Run({
         val model = LlmQueries.unigramModelCached(s, dir)
         LlmQueries.ensureUnigramIdsGolden(s, dir)
-        val raw = s.read.parquet(s"$dir/documents.parquet")
-        val stream = s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        val q = graft.operators.TextAnalysis
-          .unigramEncodeIds(
-            stream.select(col("doc_id"), col("text")), model)
-          .select(col("doc_id"), col("n_tokens"),
-            array_join(transform(col("token_ids"),
-              i => i.cast("string")), " ").as("ids_str"))
-          .writeStream.format("memory").queryName("st21_sink")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table("st21_sink").orderBy(col("doc_id"))
+        drain(graft.operators.TextAnalysis
+            .unigramEncodeIds(
+              documentStream(s, dir).select(col("doc_id"), col("text")),
+              model)
+            .select(col("doc_id"), col("n_tokens"),
+              array_join(transform(col("token_ids"),
+                i => i.cast("string")), " ").as("ids_str")), "st21_sink")
+          .orderBy(col("doc_id"))
       }, () => LlmQueries.l83OracleSql(dir))),
 
     // Streaming BYTE-FALLBACK token-ID emission (st22) — l93's
@@ -898,24 +814,15 @@ object StreamingQueries {
       (s, dir) => Run({
         val model = LlmQueries.unigramMarkedModelCached(s, dir)
         LlmQueries.ensureUnigramFbGolden(s, dir)
-        val raw = s.read.parquet(s"$dir/documents.parquet")
-        val stream = s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        val q = graft.operators.TextAnalysis
-          .unigramEncodeIds(
-            LlmQueries.l93WorldOver(
-              stream.select(col("doc_id"), col("text"))),
-            model, markWords = true, byteFallback = true)
-          .select(col("doc_id"), col("n_tokens"),
-            array_join(transform(col("token_ids"),
-              i => i.cast("string")), " ").as("ids_str"))
-          .writeStream.format("memory").queryName("st22_sink")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table("st22_sink").orderBy(col("doc_id"))
+        drain(graft.operators.TextAnalysis
+            .unigramEncodeIds(
+              LlmQueries.l93WorldOver(
+                documentStream(s, dir).select(col("doc_id"), col("text"))),
+              model, markWords = true, byteFallback = true)
+            .select(col("doc_id"), col("n_tokens"),
+              array_join(transform(col("token_ids"),
+                i => i.cast("string")), " ").as("ids_str")), "st22_sink")
+          .orderBy(col("doc_id"))
       }, () => LlmQueries.l93Sql(dir))),
 
     // Streaming multimodal pair GATE (st23) — the multimodal ingest
@@ -929,25 +836,10 @@ object StreamingQueries {
     // extraction+join+score ≡ batch ≡ DuckDB.
     "st23_pair_gate_stream" -> QuerySpec(
       (s, dir) => Run({
-        val nImg = 40
-        val raw = s.read.parquet(s"$dir/documents.parquet")
-        val stream = s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        val pairs = graft.operators.TextAnalysis.extractImagePairs(
-          LlmQueries.m14PagesOver(
-            stream.select(col("doc_id")), nImg))
-        val q = graft.operators.Multimodal.pairEmbedGate(pairs,
-            LlmQueries.m14ImgEmb(s, dir, nImg),
-            LlmQueries.m14TxtEmb(s, dir, nImg), minScore = 0.9)
-          .select(col("src_url"), col("img_idx"), col("clip_score"),
-            col("keep"))
-          .writeStream.format("memory").queryName("st23_sink")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table("st23_sink").orderBy(col("src_url"), col("img_idx"))
+        drain(pairGateStream(s, dir)
+            .select(col("src_url"), col("img_idx"), col("clip_score"),
+              col("keep")), "st23_sink")
+          .orderBy(col("src_url"), col("img_idx"))
       }, () => LlmQueries.st23Sql(40))),
 
     // Streaming DELETION gate (st25) — right-to-be-forgotten at INGEST
@@ -962,23 +854,15 @@ object StreamingQueries {
     // size. One hash proves streamed gate ≡ batch predicate ≡ DuckDB.
     "st25_deletion_gate_stream" -> QuerySpec(
       (s, dir) => Run({
-        val raw = s.read.parquet(s"$dir/documents.parquet")
-        val stream = s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
         val tombs = graft.Tables(s, dir, "documents")
           .filter(col("doc_id") % 17 === 5)
           .select(col("doc_id"), lit(1).as("tomb"))
-        val q = stream.select(col("doc_id"), col("text"))
-          .join(tombs, Seq("doc_id"), "left_outer")
-          .filter(col("tomb").isNull)
-          .select(col("doc_id"), md5(col("text")).as("text_md5"))
-          .writeStream.format("memory").queryName("st25_sink")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table("st25_sink").orderBy(col("doc_id"))
+        drain(documentStream(s, dir).select(col("doc_id"), col("text"))
+            .join(tombs, Seq("doc_id"), "left_outer")
+            .filter(col("tomb").isNull)
+            .select(col("doc_id"), md5(col("text")).as("text_md5")),
+          "st25_sink")
+          .orderBy(col("doc_id"))
       }, () => """SELECT doc_id, md5(text) AS text_md5 FROM documents
           |WHERE doc_id % 17 <> 5 ORDER BY doc_id""".stripMargin)),
 
@@ -998,26 +882,11 @@ object StreamingQueries {
     // embeddings arithmetic, no golden surface.
     "st24_pair_dedup_stream" -> QuerySpec(
       (s, dir) => Run({
-        val nImg = 40
-        val raw = s.read.parquet(s"$dir/documents.parquet")
-        val stream = s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        val pairs = graft.operators.TextAnalysis.extractImagePairs(
-          LlmQueries.m14PagesOver(
-            stream.select(col("doc_id")), nImg))
-        val q = graft.operators.Multimodal.pairEmbedGate(pairs,
-            LlmQueries.m14ImgEmb(s, dir, nImg),
-            LlmQueries.m14TxtEmb(s, dir, nImg), minScore = 0.9)
-          .filter(col("keep"))
-          .select(col("img_url"), col("text"), col("clip_score"))
-          .dropDuplicates("img_url", "text")
-          .writeStream.format("memory").queryName("st24_sink")
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        s.table("st24_sink").orderBy(col("img_url"), col("text"))
+        drain(pairGateStream(s, dir)
+            .filter(col("keep"))
+            .select(col("img_url"), col("text"), col("clip_score"))
+            .dropDuplicates("img_url", "text"), "st24_sink")
+          .orderBy(col("img_url"), col("text"))
       }, () => LlmQueries.st24Sql(40))),
 
     // WARC landing-directory TAIL (st28) — the WarcDataSource
@@ -1036,17 +905,17 @@ object StreamingQueries {
       (s, dir) => {
         import s.implicits._
         val docs = Tables(s, dir, "documents")
-        val streamDir = java.nio.file.Files
-          .createTempDirectory("graft-warc-tail").toString
-        val ckpt = streamDir + "-ckpt"
-        val outPq = streamDir + "-out"
-        def addIncrement(tag: String,
-            part: org.apache.spark.sql.DataFrame): Unit = {
-          val tmp = java.nio.file.Files
-            .createTempDirectory("graft-warc-inc").toString
-          // finally: a failed write/move must not leak the staging dir
-          // on every retried sweep (ADVICE r19)
-          try {
+        // a failure anywhere mid-entry (a drain throwing, a malformed
+        // landing file) must not leak the landing/checkpoint/sink dirs on
+        // every retried bench/verify sweep
+        PipelineQueries.withScratchDir("graft-warc-tail") { root =>
+          val streamDir = s"$root/landing"
+          val ckpt = s"$root/ckpt"
+          val outPq = s"$root/out"
+          new java.io.File(streamDir).mkdir()
+          def addIncrement(tag: String,
+              part: org.apache.spark.sql.DataFrame): Unit = {
+            val tmp = s"$root/inc-$tag"
             graft.sources.Warc.write(
               PipelineQueries.warcRowsOver(part).repartition(2), tmp)
             // move parts in under lexically-increasing names — the
@@ -1055,14 +924,10 @@ object StreamingQueries {
               .filter(_.getName.endsWith(".warc.gz")).sortBy(_.getName)
               .foreach { f =>
                 java.nio.file.Files.move(f.toPath,
-                  java.nio.file.Paths.get(streamDir,
-                    s"$tag-${f.getName}"))
+                  java.nio.file.Paths.get(streamDir, s"$tag-${f.getName}"))
               }
-          } finally org.apache.commons.io.FileUtils
-            .deleteDirectory(new java.io.File(tmp))
-        }
-        def drain(phase: Int): Unit = withStateSizing(s) {
-          val q = s.readStream
+          }
+          def consume(phase: Int): Unit = drain(s, s.readStream
             .format("graft.spark.datasource.WarcDataSource")
             .option("maxFilesPerTrigger", "1")
             .load(streamDir)
@@ -1076,34 +941,24 @@ object StreamingQueries {
                   .write.mode("append").parquet(outPq)
                 ()
             }
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+            .option("checkpointLocation", ckpt))
+            addIncrement("inc1", docs.filter(col("doc_id") % 2 === 0))
+            consume(1)
+            addIncrement("inc2", docs.filter(col("doc_id") % 2 === 1))
+            consume(2)
+            val result = s.read.parquet(outPq)
+              .orderBy(col("phase"), col("url")).collect()
+            val schema = org.apache.spark.sql.types.StructType(Seq(
+              org.apache.spark.sql.types.StructField("phase",
+                org.apache.spark.sql.types.IntegerType, nullable = false),
+              org.apache.spark.sql.types.StructField("url",
+                org.apache.spark.sql.types.StringType),
+              org.apache.spark.sql.types.StructField("digest",
+                org.apache.spark.sql.types.StringType)))
+            // localize (archive-sized — the fixture corpus) so the temp
+            // dirs can be deleted before the frame is consumed
+            s.createDataFrame(java.util.Arrays.asList(result: _*), schema)
         }
-        // finally: a failure anywhere mid-entry (a drain throwing, a
-        // malformed landing file) must not leak the landing/checkpoint/
-        // sink dirs on every retried bench/verify sweep (ADVICE r19)
-        try {
-          addIncrement("inc1", docs.filter(col("doc_id") % 2 === 0))
-          drain(1)
-          addIncrement("inc2", docs.filter(col("doc_id") % 2 === 1))
-          drain(2)
-          val result = s.read.parquet(outPq)
-            .orderBy(col("phase"), col("url")).collect()
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("phase",
-              org.apache.spark.sql.types.IntegerType, nullable = false),
-            org.apache.spark.sql.types.StructField("url",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("digest",
-              org.apache.spark.sql.types.StringType)))
-          // localize (archive-sized — the fixture corpus) so the temp
-          // dirs can be deleted before the frame is consumed
-          s.createDataFrame(java.util.Arrays.asList(result: _*), schema)
-        } finally Seq(streamDir, ckpt, outPq).foreach(d =>
-          org.apache.commons.io.FileUtils
-            .deleteDirectory(new java.io.File(d)))
       },
       """SELECT 1 AS phase,
         |  'https://example.org/doc/' || doc_id AS url,
@@ -1138,132 +993,128 @@ object StreamingQueries {
           s.sqlContext
         val docs = Tables(s, dir, "documents")
         val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
-        val landing = java.nio.file.Files
-          .createTempDirectory("graft-st29").toString
-        val prodCkpt = landing + "-prodckpt"
-        val consCkpt = landing + "-consckpt"
-        val outPq = landing + "-out"
-        // the producer handle lives OUTSIDE the try so the finally can
-        // stop it: a drain throwing mid-entry would otherwise leak a
-        // live streaming query whose landing/checkpoint dirs the same
-        // finally is deleting under it (review r20 — the exact leak
-        // class the st28 cleanup closed for directories)
-        var prod: org.apache.spark.sql.streaming.StreamingQuery = null
-        try {
-          val mem = org.apache.spark.sql.execution.streaming.runtime
-            .MemoryStream[Long]
-          val members = mem.toDS().toDF("doc_id")
-            .join(docs.select(col("doc_id"), col("text")), "doc_id")
-            .select(explode(array(
-              struct(lit("metadata").as("rec_type"),
-                concat(lit("meta://"), col("doc_id")).as("url"),
-                to_json(struct(
-                  concat(lit("https://example.org/doc/"),
-                    col("doc_id")).as("src_url"),
-                  lit(0L).as("img_idx"),
-                  concat(lit("img://"), col("doc_id")).as("img_url"),
-                  col("text").as("text"))).as("body")),
-              struct(lit("resource").as("rec_type"),
-                concat(lit("img://"), col("doc_id")).as("url"),
-                concat(lit("IMG:"), col("text")).as("body"))))
-              .as("m"))
-            .select(col("m.rec_type").as("rec_type"),
-              col("m.url").as("url"),
-              lit("2026-01-01T00:00:00Z").as("warc_date"),
-              when(col("m.rec_type") === "metadata",
-                lit("application/json"))
-                .otherwise(lit("application/octet-stream"))
-                .as("content_type"),
-              encode(col("m.body"), "UTF-8").as("payload"))
-          prod = members.writeStream
-            .format("graft.spark.datasource.WarcDataSource")
-            .option("checkpointLocation", prodCkpt)
-            .start(landing)
-          def produce(parity: Int): Unit = {
-            mem.addData((0L to maxId).filter(_ % 2 == parity))
-            prod.processAllAvailable()
-          }
-          val metaSchema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("src_url",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("img_idx",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("img_url",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("text",
-              org.apache.spark.sql.types.StringType)))
-          def drain(phase: Int): Unit = withStateSizing(s) {
-            val q = s.readStream
+        PipelineQueries.withScratchDir("graft-st29") { root =>
+          val landing = s"$root/landing"
+          val prodCkpt = s"$root/prodckpt"
+          val consCkpt = s"$root/consckpt"
+          val outPq = s"$root/out"
+          new java.io.File(landing).mkdir()
+          // the producer handle lives OUTSIDE the try so the finally can
+          // stop it: a drain throwing mid-entry would otherwise leak a
+          // live streaming query whose landing/checkpoint dirs
+          // withScratchDir then deletes under it
+          var prod: org.apache.spark.sql.streaming.StreamingQuery = null
+          try {
+            val mem = org.apache.spark.sql.execution.streaming.runtime
+              .MemoryStream[Long]
+            val members = mem.toDS().toDF("doc_id")
+              .join(docs.select(col("doc_id"), col("text")), "doc_id")
+              .select(explode(array(
+                struct(lit("metadata").as("rec_type"),
+                  concat(lit("meta://"), col("doc_id")).as("url"),
+                  to_json(struct(
+                    concat(lit("https://example.org/doc/"),
+                      col("doc_id")).as("src_url"),
+                    lit(0L).as("img_idx"),
+                    concat(lit("img://"), col("doc_id")).as("img_url"),
+                    col("text").as("text"))).as("body")),
+                struct(lit("resource").as("rec_type"),
+                  concat(lit("img://"), col("doc_id")).as("url"),
+                  concat(lit("IMG:"), col("text")).as("body"))))
+                .as("m"))
+              .select(col("m.rec_type").as("rec_type"),
+                col("m.url").as("url"),
+                lit("2026-01-01T00:00:00Z").as("warc_date"),
+                when(col("m.rec_type") === "metadata",
+                  lit("application/json"))
+                  .otherwise(lit("application/octet-stream"))
+                  .as("content_type"),
+                encode(col("m.body"), "UTF-8").as("payload"))
+            prod = members.writeStream
               .format("graft.spark.datasource.WarcDataSource")
-              .load(landing)
-              .writeStream
-              .foreachBatch {
-                (b: org.apache.spark.sql.Dataset[
-                   org.apache.spark.sql.Row], _: Long) =>
-                  // the m18 re-join, batch-local: the increment is
-                  // pair-complete, so the batch is too
-                  val meta = b.filter(col("rec_type") === "metadata")
-                    .select(from_json(col("payload").cast("string"),
-                      metaSchema).as("j0"))
-                    // a null struct would silently DROP the sample at
-                    // the join while the oracle still emits it (the
-                    // m18 loud-parse stance)
-                    .select(when(col("j0").isNull,
-                        raise_error(lit("st29: metadata payload " +
-                          "failed JSON parse")))
-                      .otherwise(col("j0")).as("j"))
-                    .select(col("j.src_url").as("src_url"),
-                      col("j.img_idx").as("img_idx"),
-                      col("j.img_url").as("img_url"),
-                      col("j.text").as("text"))
-                  val media = b.filter(col("rec_type") === "resource")
-                    .select(col("url").as("img_url"),
-                      md5(col("payload")).as("media_md5"),
-                      col("n_bytes").as("media_bytes"))
-                  meta.join(media, "img_url")
-                    .select(lit(phase).as("phase"), col("src_url"),
-                      col("img_idx"), col("img_url"), col("text"),
-                      col("media_md5"), col("media_bytes"))
-                    .write.mode("append").parquet(outPq)
-                  ()
-              }
-              .option("checkpointLocation", consCkpt)
-              .trigger(
-                org.apache.spark.sql.streaming.Trigger.AvailableNow())
-              .start()
-            q.awaitTermination()
+              .option("checkpointLocation", prodCkpt)
+              .start(landing)
+            def produce(parity: Int): Unit = {
+              mem.addData((0L to maxId).filter(_ % 2 == parity))
+              prod.processAllAvailable()
+            }
+            val metaSchema = org.apache.spark.sql.types.StructType(Seq(
+              org.apache.spark.sql.types.StructField("src_url",
+                org.apache.spark.sql.types.StringType),
+              org.apache.spark.sql.types.StructField("img_idx",
+                org.apache.spark.sql.types.LongType),
+              org.apache.spark.sql.types.StructField("img_url",
+                org.apache.spark.sql.types.StringType),
+              org.apache.spark.sql.types.StructField("text",
+                org.apache.spark.sql.types.StringType)))
+            def consume(phase: Int): Unit = drain(s, s.readStream
+                .format("graft.spark.datasource.WarcDataSource")
+                .load(landing)
+                .writeStream
+                .foreachBatch {
+                  (b: org.apache.spark.sql.Dataset[
+                     org.apache.spark.sql.Row], _: Long) =>
+                    // the m18 re-join, batch-local: the increment is
+                    // pair-complete, so the batch is too
+                    val meta = b.filter(col("rec_type") === "metadata")
+                      .select(from_json(col("payload").cast("string"),
+                        metaSchema).as("j0"))
+                      // a null struct would silently DROP the sample at
+                      // the join while the oracle still emits it (the
+                      // m18 loud-parse stance)
+                      .select(when(col("j0").isNull,
+                          raise_error(lit("st29: metadata payload " +
+                            "failed JSON parse")))
+                        .otherwise(col("j0")).as("j"))
+                      .select(col("j.src_url").as("src_url"),
+                        col("j.img_idx").as("img_idx"),
+                        col("j.img_url").as("img_url"),
+                        col("j.text").as("text"))
+                    val media = b.filter(col("rec_type") === "resource")
+                      .select(col("url").as("img_url"),
+                        md5(col("payload")).as("media_md5"),
+                        col("n_bytes").as("media_bytes"))
+                    // merge hint: left to adaptive execution, which side
+                    // becomes the broadcast build side depends on which
+                    // shuffle stage finishes first, so a warm run could
+                    // compile a new join class
+                    meta.join(media.hint("merge"), "img_url")
+                      .select(lit(phase).as("phase"), col("src_url"),
+                        col("img_idx"), col("img_url"), col("text"),
+                        col("media_md5"), col("media_bytes"))
+                      .write.mode("append").parquet(outPq)
+                    ()
+                }
+                .option("checkpointLocation", consCkpt))
+            produce(0)
+            consume(1)
+            produce(1)
+            consume(2)
+            val result = s.read.parquet(outPq)
+              .orderBy(col("phase"), col("src_url")).collect()
+            val schema = org.apache.spark.sql.types.StructType(Seq(
+              org.apache.spark.sql.types.StructField("phase",
+                org.apache.spark.sql.types.IntegerType, nullable = false),
+              org.apache.spark.sql.types.StructField("src_url",
+                org.apache.spark.sql.types.StringType),
+              org.apache.spark.sql.types.StructField("img_idx",
+                org.apache.spark.sql.types.LongType),
+              org.apache.spark.sql.types.StructField("img_url",
+                org.apache.spark.sql.types.StringType),
+              org.apache.spark.sql.types.StructField("text",
+                org.apache.spark.sql.types.StringType),
+              org.apache.spark.sql.types.StructField("media_md5",
+                org.apache.spark.sql.types.StringType),
+              org.apache.spark.sql.types.StructField("media_bytes",
+                org.apache.spark.sql.types.LongType)))
+            // localize (archive-sized) so the temp dirs can be deleted
+            // before the frame is consumed (the st28 convention)
+            s.createDataFrame(
+              java.util.Arrays.asList(result: _*), schema)
+          } finally {
+            if (prod != null)
+              try prod.stop() catch { case _: Throwable => () }
           }
-          produce(0)
-          drain(1)
-          produce(1)
-          drain(2)
-          val result = s.read.parquet(outPq)
-            .orderBy(col("phase"), col("src_url")).collect()
-          val schema = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("phase",
-              org.apache.spark.sql.types.IntegerType, nullable = false),
-            org.apache.spark.sql.types.StructField("src_url",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("img_idx",
-              org.apache.spark.sql.types.LongType),
-            org.apache.spark.sql.types.StructField("img_url",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("text",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("media_md5",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("media_bytes",
-              org.apache.spark.sql.types.LongType)))
-          // localize (archive-sized) so the temp dirs can be deleted
-          // before the frame is consumed (the st28 convention)
-          s.createDataFrame(
-            java.util.Arrays.asList(result: _*), schema)
-        } finally {
-          if (prod != null)
-            try prod.stop() catch { case _: Throwable => () }
-          Seq(landing, prodCkpt, consCkpt, outPq).foreach(d =>
-            org.apache.commons.io.FileUtils
-              .deleteDirectory(new java.io.File(d)))
         }
       },
       """SELECT 1 AS phase,
@@ -1295,26 +1146,15 @@ object StreamingQueries {
     // + batch division ≡ batch operator ≡ DuckDB (shared l105 oracle).
     "st27_drift_stream" -> QuerySpec(
       (s, dir) => {
-        val raw = s.read.parquet(s"$dir/documents.parquet")
-        val stream = s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
-        val counts = stream.select(
+        val counts = documentStream(s, dir).select(
             (col("doc_id") % 2 === 0).as("in_a"),
             explode(graft.operators.TextAnalysis.tokens(col("text")))
               .as("token"))
           .groupBy(col("token"))
           .agg(count(when(col("in_a"), lit(1))).as("cnt_a"),
             count(when(!col("in_a"), lit(1))).as("cnt_b"))
-        withStateSizing(s) {
-          val q = counts.writeStream.format("memory")
-            .queryName("st27_sink")
-            .outputMode("complete")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        graft.operators.TextAnalysis.driftReport(s.table("st27_sink"))
+        graft.operators.TextAnalysis.driftReport(
+          drain(counts, "st27_sink", OutputMode.Complete()))
       }, LlmQueries.l105Sql),
 
     // Measured STREAMING scale stress (st26) — the l21/l108 pattern on
@@ -1369,9 +1209,7 @@ object StreamingQueries {
         // carry the same proof at a fraction of the fixed cost
         // (identical texts collide in every band, and the oracle is
         // schedule-derived — band count cannot change the output)
-        val prev = s.conf.get("spark.sql.shuffle.partitions")
-        s.conf.set("spark.sql.shuffle.partitions", "2")
-        try {
+        withStateSizing(s, 2) {
         import s.implicits._
         implicit val sqlCtx = s.sqlContext
         val base = 1700000000000L // fixed epoch — event time, not wall
@@ -1410,7 +1248,7 @@ object StreamingQueries {
             .select(lit("windowed").as("contract"), col("id_a"),
               col("id_b")))
           .orderBy(col("contract"), col("id_a"), col("id_b"))
-        } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+        }
       },
       """WITH sched(id, grp, tsec) AS (VALUES
         |  (101, 'a', 0), (102, 'a', 1), (301, 'c', 0),
@@ -1457,15 +1295,8 @@ object StreamingQueries {
             concat_ws(":", col("d.nonce"), hex(col("d.balance")))
               .as("payload"))
           .as[Streams.Change]
-        withStateSizing(s) {
-          val q = Streams.incrementalHistory(changes)
-            .writeStream.format("memory").queryName("st05_sink")
-            .outputMode("append")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
-        s.table("st05_sink").orderBy(col("key"), col("validFrom"))
+        drain(Streams.incrementalHistory(changes).toDF(), "st05_sink")
+          .orderBy(col("key"), col("validFrom"))
       }, () => st05Sql(dir))),
 
     // (st01_incremental_history retired: the two-micro-batch
@@ -1499,72 +1330,67 @@ object StreamingQueries {
         val rawSto = s.read.parquet(srcSto)
         val nFiles = new java.io.File(src).listFiles()
           .count(_.getName.endsWith(".parquet"))
-        // temp archive + checkpoint, deleted after the counts materialize
-        // (the p12 convention — repeated harness runs leave no garbage)
-        val out = java.nio.file.Files
-          .createTempDirectory("graft-stream-archive").toString
-        // writer identity, persisted in the checkpoint: the replay-skip
-        // below is only valid for THIS linear stream — a different
-        // checkpoint (or a reset one restarting at batch 0) fails the
-        // manifest ownership check loudly instead of dropping batches
-        val sid = graft.spark.StateFiles.streamIdentity(out + "-ckpt")
-        val z32 = graft.model.StateItem.zeros(32)
-        val perTrigger = math.max(1, nFiles / 3).toString
-        val accounts = s.readStream.schema(raw.schema)
-          .option("pathGlobFilter", "*.parquet")
-          .option("maxFilesPerTrigger", perTrigger)
-          .parquet(src)
-          .withColumn("d", graft.functions.expressions.StateExpressions
-            .account_decode(col("account_blob")))
-          .select(col("address"), col("block"),
-            lit(false).as("isStorage"),
-            col("d.nonce").as("nonce"),
-            col("d.incarnation").as("incarnation"),
-            col("d.balance").as("balance"),
-            col("d.codeHash").as("codeHash"),
-            lit(z32).as("slot"), lit(z32).as("value"))
-        val storage = s.readStream.schema(rawSto.schema)
-          .option("pathGlobFilter", "*.parquet")
-          .option("maxFilesPerTrigger", perTrigger)
-          .parquet(srcSto)
-          .select(col("address"), col("block"),
-            lit(true).as("isStorage"),
-            lit(0L).as("nonce"), col("incarnation"),
-            lit(z32).as("balance"), lit(z32).as("codeHash"),
-            col("slot"),
-            graft.functions.expressions.StateExpressions
-              .pad_value32(col("value")).as("value"))
-        val q = accounts.unionByName(storage).writeStream
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[
-               org.apache.spark.sql.Row], batchId: Long) =>
-              // replay guard: a micro-batch whose append already reached
-              // the manifest (crash between manifest commit and
-              // checkpoint commit) must not append twice — the batch id
-              // travels IN the manifest, atomically with the data
-              if (!graft.spark.StateFiles.lastStreamBatch(out, sid)
-                    .exists(_ >= batchId)) {
-                val items = batch
-                  .sortWithinPartitions(col("address"),
-                    col("isStorage"), col("block"))
-                  .as[graft.model.StateItem]
-                graft.spark.StateFiles.append(items, out, strategy = 0,
-                  streamBatchId = batchId, streamId = sid)
-              }
-              ()
-          }
-          .option("checkpointLocation", out + "-ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val readBack = graft.spark.StateFiles.read(s, out, 0).count()
-        val result = Seq((raw.count() + rawSto.count(), readBack))
-          .toDF("rows_streamed", "rows_read")
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(out))
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(out + "-ckpt"))
-        result
+        // temp archive + checkpoint, deleted once the counts materialize
+        // or the entry throws (repeated harness runs leave no garbage)
+        PipelineQueries.withScratchDir("graft-stream-archive") { root =>
+          val out = s"$root/archive"
+          val ckpt = s"$root/ckpt"
+          new java.io.File(out).mkdir()
+          // writer identity, persisted in the checkpoint: the replay-skip
+          // below is only valid for THIS linear stream — a different
+          // checkpoint (or a reset one restarting at batch 0) fails the
+          // manifest ownership check loudly instead of dropping batches
+          val sid = graft.spark.StateFiles.streamIdentity(ckpt)
+          val z32 = graft.model.StateItem.zeros(32)
+          val perTrigger = math.max(1, nFiles / 3).toString
+          val accounts = s.readStream.schema(raw.schema)
+            .option("pathGlobFilter", "*.parquet")
+            .option("maxFilesPerTrigger", perTrigger)
+            .parquet(src)
+            .withColumn("d", graft.functions.expressions.StateExpressions
+              .account_decode(col("account_blob")))
+            .select(col("address"), col("block"),
+              lit(false).as("isStorage"),
+              col("d.nonce").as("nonce"),
+              col("d.incarnation").as("incarnation"),
+              col("d.balance").as("balance"),
+              col("d.codeHash").as("codeHash"),
+              lit(z32).as("slot"), lit(z32).as("value"))
+          val storage = s.readStream.schema(rawSto.schema)
+            .option("pathGlobFilter", "*.parquet")
+            .option("maxFilesPerTrigger", perTrigger)
+            .parquet(srcSto)
+            .select(col("address"), col("block"),
+              lit(true).as("isStorage"),
+              lit(0L).as("nonce"), col("incarnation"),
+              lit(z32).as("balance"), lit(z32).as("codeHash"),
+              col("slot"),
+              graft.functions.expressions.StateExpressions
+                .pad_value32(col("value")).as("value"))
+          drain(s, accounts.unionByName(storage).writeStream
+            .foreachBatch {
+              (batch: org.apache.spark.sql.Dataset[
+                 org.apache.spark.sql.Row], batchId: Long) =>
+                // replay guard: a micro-batch whose append already reached
+                // the manifest (crash between manifest commit and
+                // checkpoint commit) must not append twice — the batch id
+                // travels IN the manifest, atomically with the data
+                if (!graft.spark.StateFiles.lastStreamBatch(out, sid)
+                      .exists(_ >= batchId)) {
+                  val items = batch
+                    .sortWithinPartitions(col("address"),
+                      col("isStorage"), col("block"))
+                    .as[graft.model.StateItem]
+                  graft.spark.StateFiles.append(items, out, strategy = 0,
+                    streamBatchId = batchId, streamId = sid)
+                }
+                ()
+            }
+            .option("checkpointLocation", ckpt))
+          val readBack = graft.spark.StateFiles.read(s, out, 0).count()
+          Seq((raw.count() + rawSto.count(), readBack))
+            .toDF("rows_streamed", "rows_read")
+        }
       }, () => st07Sql(dir))),
 
     // The READ side of the §7.5 loop, closing it: a .dat archive is
@@ -1585,49 +1411,43 @@ object StreamingQueries {
         val h = PipelineQueries.history(s, dir)
         val items = graft.spark.StateFormat.asItems(
           h.withColumnRenamed("valid_from_block", "block"))
-        val out = java.nio.file.Files
-          .createTempDirectory("graft-archive-tail").toString
-        val ckpt = out + "-ckpt"
-        val got = new java.util.concurrent.atomic.AtomicLong
-        def drain(): Long = {
-          got.set(0L)
-          // files/3 per trigger (the st07 convention): a multi-batch
-          // drain without paying per-file micro-batch overhead ×32 part
-          // files — StreamingSpec's tail test keeps maxFilesPerTrigger=1
-          // for strict per-file admission control
-          val nFiles = math.max(1, new java.io.File(out).listFiles()
-            .count(_.getName.endsWith(".dat")))
-          val q = s.readStream
+        PipelineQueries.withScratchDir("graft-archive-tail") { root =>
+          val out = s"$root/archive"
+          val ckpt = s"$root/ckpt"
+          new java.io.File(out).mkdir()
+          val got = new java.util.concurrent.atomic.AtomicLong
+          def consume(): Long = {
+            got.set(0L)
+            // files/3 per trigger (the st07 convention): a multi-batch
+            // drain without paying per-file micro-batch overhead ×32 part
+            // files — StreamingSpec's tail test keeps maxFilesPerTrigger=1
+            // for strict per-file admission control
+            val nFiles = math.max(1, new java.io.File(out).listFiles()
+              .count(_.getName.endsWith(".dat")))
+            drain(s, s.readStream
+              .format("graft.spark.datasource.DatDataSource")
+              .option("strategy", "0")
+              .option("maxFilesPerTrigger",
+                math.max(1, nFiles / 3).toString)
+              .load(out)
+              .writeStream
+              .foreachBatch {
+                (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+                 _: Long) => got.addAndGet(b.count()); ()
+              }
+              .option("checkpointLocation", ckpt))
+            got.get()
+          }
+          graft.spark.StateFiles.append(items, out, 0)
+          val run1 = consume()
+          graft.spark.StateFiles.append(items, out, 0)
+          val run2 = consume()
+          val batchTotal = s.read
             .format("graft.spark.datasource.DatDataSource")
-            .option("strategy", "0")
-            .option("maxFilesPerTrigger",
-              math.max(1, nFiles / 3).toString)
-            .load(out)
-            .writeStream
-            .foreachBatch {
-              (b: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-               _: Long) => got.addAndGet(b.count()); ()
-            }
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-          got.get()
+            .option("strategy", "0").load(out).count()
+          Seq((run1, run2, batchTotal))
+            .toDF("rows_run1", "rows_run2", "rows_batch")
         }
-        graft.spark.StateFiles.append(items, out, 0)
-        val run1 = withStateSizing(s) { drain() }
-        graft.spark.StateFiles.append(items, out, 0)
-        val run2 = withStateSizing(s) { drain() }
-        val batchTotal = s.read
-          .format("graft.spark.datasource.DatDataSource")
-          .option("strategy", "0").load(out).count()
-        val result = Seq((run1, run2, batchTotal))
-          .toDF("rows_run1", "rows_run2", "rows_batch")
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(out))
-        org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(ckpt))
-        result
       }, () => st08Sql(dir))),
 
     // The whole §7.5 loop in ONE streaming query, both ends native DSv2:
@@ -1645,40 +1465,36 @@ object StreamingQueries {
         val h = PipelineQueries.history(s, dir)
         val items = graft.spark.StateFormat.asItems(
           h.withColumnRenamed("valid_from_block", "block"))
-        val src = java.nio.file.Files
-          .createTempDirectory("graft-mirror-src").toString
-        val dst = java.nio.file.Files
-          .createTempDirectory("graft-mirror-dst").toString
-        val ckpt = src + "-ckpt"
-        def mirror(): Unit = withStateSizing(s) {
-          val nFiles = math.max(1, new java.io.File(src).listFiles()
-            .count(_.getName.endsWith(".dat")))
-          val q = s.readStream
+        PipelineQueries.withScratchDir("graft-mirror") { root =>
+          val src = s"$root/src"
+          val dst = s"$root/dst"
+          val ckpt = s"$root/ckpt"
+          Seq(src, dst).foreach(new java.io.File(_).mkdir())
+          def mirror(): Unit = {
+            val nFiles = math.max(1, new java.io.File(src).listFiles()
+              .count(_.getName.endsWith(".dat")))
+            drain(s, s.readStream
+              .format("graft.spark.datasource.DatDataSource")
+              .option("strategy", "0")
+              .option("maxFilesPerTrigger",
+                math.max(1, nFiles / 3).toString)
+              .load(src)
+              .writeStream
+              .format("graft.spark.datasource.DatDataSource")
+              .option("strategy", "0")
+              .option("path", dst)
+              .option("checkpointLocation", ckpt))
+          }
+          graft.spark.StateFiles.append(items, src, 0)
+          mirror()
+          graft.spark.StateFiles.append(items, src, 0)
+          mirror()
+          def datCount(p: String): Long = s.read
             .format("graft.spark.datasource.DatDataSource")
-            .option("strategy", "0")
-            .option("maxFilesPerTrigger",
-              math.max(1, nFiles / 3).toString)
-            .load(src)
-            .writeStream
-            .format("graft.spark.datasource.DatDataSource")
-            .option("strategy", "0")
-            .option("checkpointLocation", ckpt)
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start(dst)
-          q.awaitTermination()
+            .option("strategy", "0").load(p).count()
+          Seq((datCount(src), datCount(dst)))
+            .toDF("rows_src", "rows_mirror")
         }
-        graft.spark.StateFiles.append(items, src, 0)
-        mirror()
-        graft.spark.StateFiles.append(items, src, 0)
-        mirror()
-        def datCount(p: String): Long = s.read
-          .format("graft.spark.datasource.DatDataSource")
-          .option("strategy", "0").load(p).count()
-        val result = Seq((datCount(src), datCount(dst)))
-          .toDF("rows_src", "rows_mirror")
-        Seq(src, dst, ckpt).foreach(p => org.apache.commons.io.FileUtils
-          .deleteDirectory(new java.io.File(p)))
-        result
       }, () => st09Sql(dir))),
   )
 

@@ -10,9 +10,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * the panel's working set (the default 100 entries: about 150 classes a
   * pass) or when an entry's generated source differs from run to run (a
   * codegen'd LIMIT names its counter from a JVM-global sequence; l10's
-  * label propagation checks convergence once per round), or when a
+  * label propagation checks convergence once per round), when a
   * streaming query's tasks run under a class loader of their own (st04,
-  * st12: session artifact isolation).
+  * st12, st16: session artifact isolation), or when adaptive execution
+  * plans a join differently from run to run (st23's gate join, st29's
+  * per-batch join: a shuffle stage finishing first decides it).
   */
 class CodegenSpec extends AnyFunSuite {
 
@@ -25,7 +27,9 @@ class CodegenSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
   private val panel = Seq("l53_pii_redact", "l20_bm25_terms",
     "l05_embedding_neardup", "l62_pagerank", "l10_dedup_clusters",
-    "st04_session_stream", "st12_stream_interval_join")
+    "st04_session_stream", "st12_stream_interval_join",
+    "st16_frontier_stream", "st23_pair_gate_stream",
+    "st29_paired_stream_loader")
 
   /** Classes compiled by Janino while each panel entry runs in full. */
   private def pass(): Map[String, Long] = panel.map { name =>
@@ -35,8 +39,7 @@ class CodegenSpec extends AnyFunSuite {
     name -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
   }.toMap
 
-  test("a repeated pass over l53, l20, l05, l62, l10, st04 and st12 " +
-      "compiles no class") {
+  test("a repeated pass over the codegen panel compiles no class") {
     val first = pass()
     val second = pass()
     assert(second == panel.map(_ -> 0L).toMap, s"first pass compiled $first")

@@ -679,6 +679,35 @@ class StreamingSpec extends AnyFunSuite {
         .deleteDirectory(new java.io.File(d)))
   }
 
+  test("drain: a query whose task throws rethrows, leaves no active " +
+      "query and restores the session's shuffle partitions") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    val mem = MemoryStream[Long]
+    mem.addData(1L, 2L, 3L)
+    val failing = mem.toDS().toDF("id")
+      .select(when(col("id") === 2L, raise_error(lit("drain spec boom")))
+        .otherwise(col("id")).as("id"))
+    val ex = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      graft.queries.StreamingQueries.drain(failing, "drain_spec_fail"))
+    assert(Iterator.iterate[Throwable](ex)(_.getCause).takeWhile(_ != null)
+      .exists(e => Option(e.getMessage).exists(_.contains("drain spec boom"))),
+      s"the task's error is not in the cause chain: $ex")
+    assert(spark.streams.active.isEmpty)
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == before)
+    // a query that succeeds keeps its state in the drain's 8 partitions
+    val ok = MemoryStream[Long]
+    ok.addData(1L, 1L, 2L)
+    val q = graft.queries.StreamingQueries.drain(spark,
+      ok.toDS().toDF("id").dropDuplicates("id")
+        .writeStream.format("memory").queryName("drain_spec_ok"))
+    assert(spark.table("drain_spec_ok").count() == 2)
+    assert(q.recentProgress.flatMap(_.stateOperators)
+      .map(_.numShufflePartitions).toSet == Set(8L))
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == before)
+  }
+
   test("st26 scale bounds: 10x rows through streaming dedup stays " +
       "sub-linear with flat driver heap, and the state store ends at " +
       "the distinct-key count — keys, not rows seen") {
