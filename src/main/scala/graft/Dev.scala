@@ -17,8 +17,9 @@ object Dev {
       |         per entry: one cold run, then `runs` (default 3) timed
       |         count()s after Bench's fixture warmup; prints the warm
       |         median/min/max, the warm median of the JVM's CPU
-      |         seconds, the cold run, the row count and
-      |         compiled=<classes compiled cold>/<warm median>
+      |         seconds (even `runs`: the mean of the middle two), the
+      |         cold run, the row count and compiled=<classes compiled
+      |         cold>/<each warm run's count, comma-separated>
       |       runMain graft.Dev plan <outDir> <suffix> <entry-substring>...
       |         writes each entry's explain("formatted") to
       |         <outDir>/<name>_<suffix>.txt
@@ -73,12 +74,13 @@ object Dev {
             val (cold, rows, coldCompiled, _) = once()
             val warm = Seq.fill(runs)(once())
             val times = warm.map(_._1).sorted
-            val warmCompiled = warm.map(_._3).sorted
-            println(f"[time] $name%-34s median=${times(runs / 2)}%8.3f " +
+            def median(xs: Seq[Double]): Double = // even runs: middle two
+              (xs.sorted.apply((runs - 1) / 2) + xs.sorted.apply(runs / 2)) / 2
+            println(f"[time] $name%-34s median=${median(times)}%8.3f " +
               f"min=${times.head}%8.3f max=${times.last}%8.3f " +
-              f"cpu=${warm.map(_._4).sorted.apply(runs / 2)}%8.3f " +
+              f"cpu=${median(warm.map(_._4))}%8.3f " +
               f"cold=$cold%8.3f rows=$rows " +
-              s"compiled=$coldCompiled/${warmCompiled(runs / 2)}")
+              s"compiled=$coldCompiled/${warm.map(_._3).mkString(",")}")
           } catch { case e: Throwable =>
             System.err.println(s"[time] $name ERR " +
               Option(e.getMessage).getOrElse(e.getClass.getName).take(120))

@@ -2,9 +2,11 @@ package graft.functions.expressions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodeGenerator, CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.graftshim.Bridge
 import org.apache.spark.sql.types._
 
@@ -77,8 +79,7 @@ object VectorExpressions {
       if (x > mu(i)) words(i >>> 6) |= 1L << (i & 63)
       i += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(words)
+    UnsafeArrayData.fromPrimitiveArray(words)
   }
 
   /** Hamming distance between two packed sign-bit vectors: Σ popcount of
@@ -97,6 +98,62 @@ object VectorExpressions {
       i += 1
     }
     s
+  }
+
+  /** `v[off, off + row.length) · row` in the column form's order
+    * (ascending index, `x.toDouble * row(i)` from 0.0): bit-identical.
+    */
+  def dotAt(v: ArrayData, off: Int, row: Array[Double],
+            floats: Boolean): Double = {
+    var s = 0.0
+    var i = 0
+    if (floats) while (i < row.length) {
+      s += v.getFloat(off + i).toDouble * row(i); i += 1
+    } else while (i < row.length) { s += v.getDouble(off + i) * row(i); i += 1 }
+    s
+  }
+
+  /** Raises unless `v` is `dims` wide (`Similarity.guardDims`' message);
+    * true when an element is null, which nulls every dot, as `x * s`
+    * does in the column form.
+    */
+  private def hasNullElement(v: ArrayData, dims: Int): Boolean = {
+    if (v == null || v.numElements() != dims)
+      throw new IllegalArgumentException(s"graft: expected $dims-dim " +
+        s"vector, got ${if (v == null) "null" else v.numElements()}")
+    var i = 0
+    while (i < dims && !v.isNullAt(i)) i += 1
+    i < dims
+  }
+
+  /** `v · m(r)` for every matrix row r, in [[dotAt]]'s order. */
+  def literalDots(v: ArrayData, m: Array[Array[Double]],
+                  floats: Boolean): ArrayData =
+    if (hasNullElement(v, m(0).length))
+      new GenericArrayData(new Array[Any](m.length))
+    else {
+      val out = new Array[Double](m.length)
+      var r = 0
+      while (r < m.length) { out(r) = dotAt(v, 0, m(r), floats); r += 1 }
+      UnsafeArrayData.fromPrimitiveArray(out)
+    }
+
+  /** Bit b set when `v · planes(b) > 0` under Spark's double order, which
+    * puts NaN above every number (so a NaN dot sets its bit, as
+    * `when(dot > 0, ...)` does); a null element clears every bit.
+    */
+  def hyperplaneSigns(v: ArrayData, planes: Array[Array[Double]],
+                      floats: Boolean): Long = {
+    var bits = 0L
+    if (!hasNullElement(v, planes(0).length)) {
+      var b = 0
+      while (b < planes.length) {
+        val d = dotAt(v, 0, planes(b), floats)
+        if (d > 0.0 || d.isNaN) bits |= 1L << b
+        b += 1
+      }
+    }
+    bits
   }
 
   /** PQ code assignment — the codegen form of the per-subspace argmax
@@ -124,23 +181,14 @@ object VectorExpressions {
       var bestCw = 0
       var j = 0
       while (j < cws.length) {
-        val c = cws(j)
-        var dot = 0.0
-        var i = 0
-        while (i < subLen) {
-          dot += (if (floats) v.getFloat(off + i).toDouble
-                  else v.getDouble(off + i)) * c(i)
-          i += 1
-        }
-        val s = dot * 2.0 - c2(sub)(j)
+        val s = dotAt(v, off, cws(j), floats) * 2.0 - c2(sub)(j)
         if (s >= best) { best = s; bestCw = j } // >= : ties to higher cw
         j += 1
       }
       out(sub) = bestCw
       sub += 1
     }
-    org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-      .fromPrimitiveArray(out)
+    UnsafeArrayData.fromPrimitiveArray(out)
   }
 
   /** ADC sum — codegen form of Σ_sub tables(sub)(codes(sub)), the
@@ -161,6 +209,14 @@ object VectorExpressions {
     }
     s
   }
+
+  def literal_dots(vec: Column, matrix: Array[Array[Double]]): Column =
+    Bridge.column(
+      LiteralDotsExpr(Bridge.expression(vec), matrix, signs = false))
+
+  def hyperplane_bucket(vec: Column, planes: Array[Array[Double]]): Column =
+    Bridge.column(
+      LiteralDotsExpr(Bridge.expression(vec), planes, signs = true))
 
   def pq_codes(vec: Column, books: Array[Array[Array[Double]]]): Column =
     Bridge.column(PqCodesExpr(Bridge.expression(vec), books))
@@ -191,21 +247,14 @@ object VectorExpressions {
 case class CosineSimExpr(left: Expression, right: Expression)
     extends BinaryExpression {
 
-  private def elemOk(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
   override def checkInputDataTypes(): TypeCheckResult =
-    if (elemOk(left.dataType) && left.dataType == right.dataType)
+    if (VectorKernel.isVector(left.dataType) && left.dataType == right.dataType)
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
       s"cosine_sim needs two array<float>|array<double>, got " +
         s"${left.dataType}/${right.dataType}")
 
-  private def floats: Boolean =
-    left.dataType == ArrayType(FloatType) ||
-      left.dataType.asInstanceOf[ArrayType].elementType == FloatType
+  private def floats: Boolean = VectorKernel.floats(left.dataType)
 
   override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine_sim"
@@ -224,30 +273,83 @@ case class CosineSimExpr(left: Expression, right: Expression)
       l: Expression, r: Expression): CosineSimExpr = copy(left = l, right = r)
 }
 
+/** A kernel over one array<float>|array<double> vector and a plan-time
+  * constant; `emptyConstant` names that constant when it is empty.
+  */
+trait VectorKernel extends UnaryExpression {
+  protected def emptyConstant: Option[String]
+
+  override def checkInputDataTypes(): TypeCheckResult = emptyConstant match {
+    case Some(c) => TypeCheckResult.TypeCheckFailure(s"$prettyName needs $c")
+    case None if VectorKernel.isVector(child.dataType) =>
+      TypeCheckResult.TypeCheckSuccess
+    case None => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName needs array<float>|array<double>, got ${child.dataType}")
+  }
+
+  protected def floats: Boolean = VectorKernel.floats(child.dataType)
+}
+
+object VectorKernel {
+  def isVector(t: DataType): Boolean = PartialFunction.cond(t) {
+    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true }
+  def floats(t: DataType): Boolean =
+    PartialFunction.cond(t) { case ArrayType(FloatType, _) => true }
+}
+
+/** literal_dots(vec, matrix): `vec` dotted with every row of a plan-time
+  * matrix; hyperplane_bucket(vec, planes) (`signs`): their sign bits as a
+  * bigint. One codegen'd loop where Spark's `aggregate`/`zip_with` are
+  * interpreted (`CodegenFallback`). A null or mis-sized vector raises.
+  */
+case class LiteralDotsExpr(child: Expression, matrix: Array[Array[Double]],
+                           signs: Boolean)
+    extends VectorKernel {
+
+  protected def emptyConstant: Option[String] =
+    Option.when(matrix == null || matrix.isEmpty)("a matrix")
+  override def nullable: Boolean = false
+  override def dataType: DataType =
+    if (signs) LongType else ArrayType(DoubleType, containsNull = true)
+  override def prettyName: String =
+    if (signs) "hyperplane_bucket" else "literal_dots"
+  // the matrix prints by value: plans show it, the same in every run
+  override def stringArgs: Iterator[Any] = Iterator(child,
+    matrix.map(_.mkString("[", ", ", "]")).mkString("[", ", ", "]"))
+
+  override def eval(input: InternalRow): Any = {
+    val v = child.eval(input).asInstanceOf[ArrayData]
+    if (signs) VectorExpressions.hyperplaneSigns(v, matrix, floats)
+    else VectorExpressions.literalDots(v, matrix, floats)
+  }
+
+  override protected def doGenCode(ctx: CodegenContext,
+                                   ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    val m = ctx.addReferenceObj("litMatrix", matrix, "double[][]")
+    val fn = if (signs) "hyperplaneSigns" else "literalDots"
+    ev.copy(code = code"""
+      ${c.code}
+      ${CodeGenerator.javaType(dataType)} ${ev.value} =
+        graft.functions.expressions.VectorExpressions.$fn(
+          ${c.isNull} ? null : ${c.value}, $m, $floats);""",
+      isNull = FalseLiteral)
+  }
+
+  override protected def withNewChildInternal(c: Expression): LiteralDotsExpr =
+    copy(child = c)
+}
+
 /** pq_codes(vec): per-subspace PQ codeword assignment against plan-time
   * codebooks (the fitted training product — codegen reference objects,
   * not per-row plan work).
   */
 case class PqCodesExpr(child: Expression,
                        books: Array[Array[Array[Double]]])
-    extends UnaryExpression {
+    extends VectorKernel {
 
-  private def elemOk(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (books == null || books.isEmpty || books.exists(_.isEmpty))
-      TypeCheckResult.TypeCheckFailure("pq_codes needs codebooks")
-    else if (elemOk(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"pq_codes needs array<float>|array<double>, got ${child.dataType}")
-
-  private def floats: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
+  protected def emptyConstant: Option[String] = Option.when(
+    books == null || books.isEmpty || books.exists(_.isEmpty))("codebooks")
 
   // ‖c‖² per codeword, accumulated ascending — identical to the column
   // form's driver-side c.map(x => x*x).sum
@@ -314,24 +416,10 @@ case class AdcScoreExpr(left: Expression, right: Expression)
   * reference object, not per-row work).
   */
 case class BqPackBitsExpr(child: Expression, mu: Array[Double])
-    extends UnaryExpression {
+    extends VectorKernel {
 
-  private def elemOk(t: DataType): Boolean = t match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => true
-    case _ => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (mu == null || mu.isEmpty)
-      TypeCheckResult.TypeCheckFailure("bq_pack_bits needs thresholds")
-    else if (elemOk(child.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"bq_pack_bits needs array<float>|array<double>, got ${child.dataType}")
-
-  private def floats: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _ => false
-  }
+  protected def emptyConstant: Option[String] =
+    Option.when(mu == null || mu.isEmpty)("thresholds")
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def prettyName: String = "bq_pack_bits"

@@ -616,11 +616,14 @@ object Dedup {
       .filter(col("u") =!= col("v"))
       .distinct().localCheckpoint()
 
+    // both stars' `d.join(m, "u")` carry a merge hint: left to adaptive
+    // execution, whether `m` becomes a broadcast build side depends on
+    // run-time sizes, so a warm run could plan (and compile) a new join
     def largeStar(e: DataFrame): DataFrame = {
       val d = e.union(e.select(col("v").as("u"), col("u").as("v")))
       val m = d.groupBy(col("u")).agg(min(col("v")).as("mn"))
         .select(col("u"), least(col("mn"), col("u")).as("m"))
-      d.join(m, "u").filter(col("v") > col("u"))
+      d.join(m.hint("merge"), "u").filter(col("v") > col("u"))
         .select(col("v").as("u"), col("m").as("v"))
         .filter(col("u") =!= col("v"))
         .distinct()
@@ -630,7 +633,7 @@ object Dedup {
       val d = e.select(greatest(col("u"), col("v")).as("u"),
         least(col("u"), col("v")).as("v")).distinct()
       val m = d.groupBy(col("u")).agg(min(col("v")).as("m")) // m < u
-      val nEdges = d.join(m, "u").filter(col("v") =!= col("m"))
+      val nEdges = d.join(m.hint("merge"), "u").filter(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
       val uEdges = m.select(col("u"), col("m").as("v"))
       nEdges.union(uEdges).filter(col("u") =!= col("v")).distinct()
@@ -882,30 +885,27 @@ object Dedup {
 
   /** Embedding near-dup via random-hyperplane LSH: `nBits` deterministic
     * Rademacher hyperplanes (seeded by xxhash64(bit, dim)) bucket the
-    * vectors; exact cosine verifies candidates. Only (id, bucket) shuffles.
+    * vectors; exact cosine verifies candidates. Each (id, bucket,
+    * vector) row shuffles once, by bucket, and the cosine runs on the
+    * bucket self-join's output: no id-keyed join brings vectors back.
+    * The price is a skewed bucket's memory: the join buffers its n rows
+    * WITH their vectors (n × dims × 4 bytes of floats, not n ids),
+    * spilling past Spark's threshold.
     */
   def embeddingNearDup(df: DataFrame, threshold: Double = 0.95,
                        nBits: Int = 12, idCol: String = "vec_id",
                        vecCol: String = "embedding"): DataFrame = {
     // literal planes (driver-generated, same seeded draws → identical
-    // buckets): per-row work is nBits fused dot products, not
-    // nBits×dims interpreted xxhash64 calls
+    // buckets): per-row work is one native loop of nBits dot products,
+    // not nBits×dims interpreted xxhash64 calls
     val planes = Similarity.rademacherPlanes(nBits,
       Similarity.dimsOf(df, vecCol))
-    val bucket = Similarity.hyperplaneBucket(col(vecCol), planes)
     val vecs = df.select(col(idCol).as("id"), col(vecCol).as("v"),
-      bucket.as("bucket"))
-    val pairs = vecs.select("id", "bucket").as("x")
-      .join(vecs.select("id", "bucket").as("y"),
+      Similarity.hyperplaneBucket(col(vecCol), planes).as("bucket"))
+    vecs.as("x").join(vecs.as("y"),
         col("x.bucket") === col("y.bucket") && col("x.id") < col("y.id"))
-      .select(col("x.id").as("id_a"), col("y.id").as("id_b"))
-    val v = vecs.select("id", "v")
-    pairs
-      .join(v.withColumnRenamed("id", "id_a").withColumnRenamed("v", "v_a"),
-        "id_a")
-      .join(v.withColumnRenamed("id", "id_b").withColumnRenamed("v", "v_b"),
-        "id_b")
-      .withColumn("cosine", Similarity.cosine(col("v_a"), col("v_b")))
+      .select(col("x.id").as("id_a"), col("y.id").as("id_b"),
+        Similarity.cosine(col("x.v"), col("y.v")).as("cosine"))
       .filter(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"),
         TextAnalysis.quant4(col("cosine")).as("cosine"))

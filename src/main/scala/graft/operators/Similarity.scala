@@ -12,11 +12,16 @@ import org.apache.spark.sql.functions._
   * [[Dedup.embeddingNearDup]]) probed bucket-locally, turning the O(N·Q)
   * scan into a bucket equi-join.
   *
-  * All math is explicit double-precision column arithmetic
-  * (`zip_with`/`aggregate`), sequential left-to-right — bit-reproducible
-  * across engines that do the same (the DuckDB oracle casts to DOUBLE[]).
+  * All math is double precision, sequential left-to-right —
+  * bit-reproducible across engines that do the same (the DuckDB oracle
+  * casts to DOUBLE[]). The per-row vector kernels are native codegen'd
+  * expressions ([[graft.functions.expressions.VectorExpressions]]); their
+  * interpreted `zip_with`/`aggregate` column forms stay as references.
   */
 object Similarity {
+
+  import graft.functions.expressions.VectorExpressions.{hyperplane_bucket,
+    literal_dots}
 
   /** Double-precision dot product of two array columns (column-function
     * form, kept as the reference implementation for tests).
@@ -35,6 +40,20 @@ object Similarity {
   def cosine(a: Column, b: Column): Column =
     graft.functions.expressions.VectorExpressions.cosine_sim(a, b)
 
+  /** Top-k neighbors per query by exact `cosine(v, q)` over candidate
+    * pairs (id, v, query_id, q), ties to the lower id: every
+    * single-vector ANN search's (query_id, rank, neighbor_id, cosine).
+    */
+  private def rankByCosine(pairs: DataFrame, k: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("query_id")).orderBy(col("cosine").desc, col("id"))
+    pairs.withColumn("cosine", cosine(col("v"), col("q")))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"),
+        round(col("cosine"), 6).as("cosine"))
+  }
+
   /** Brute-force exact top-k: every query (broadcast) against every vector,
     * ranked per query. The O(N·Q) baseline and recall oracle for the ANN
     * variants.
@@ -42,25 +61,26 @@ object Similarity {
   def bruteForceTopK(vectors: DataFrame, queries: DataFrame, k: Int,
                      idCol: String = "vec_id",
                      vecCol: String = "embedding"): DataFrame = {
-    val v = vectors.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q"))
-    val scored = v.join(broadcast(q), col("id") =!= col("query_id"))
-      .withColumn("cosine", cosine(col("v"), col("q")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"))
+    rankByCosine(allPairs(vectors, queries, idCol, vecCol), k)
   }
+
+  /** Every (id, v, query_id, q) pair but self-pairs, the queries
+    * broadcast; v is `vSide(vec)`, q is `qSide(vec)`.
+    */
+  private def allPairs(vectors: DataFrame, queries: DataFrame,
+                       idCol: String, vecCol: String,
+                       vSide: Column => Column = identity,
+                       qSide: Column => Column = identity): DataFrame =
+    vectors.select(col(idCol).as("id"), vSide(col(vecCol)).as("v"))
+      .join(broadcast(queries.select(col(idCol).as("query_id"),
+        qSide(col(vecCol)).as("q"))), col("id") =!= col("query_id"))
 
   /** Random-hyperplane signature (nBits-bit bucket id), deterministic via
     * seeded xxhash64 Rademacher planes — the column-function REFERENCE
     * implementation (like [[dot]]): it re-hashes nBits×dims per row
     * through an interpreted expression. Production paths use
     * [[hyperplaneBucket]] with driver-generated literal planes
-    * (identical values, fused codegen).
+    * (identical values, one native loop).
     */
   def lshBucket(vec: Column, nBits: Int): Column = {
     val dims = size(vec)
@@ -86,23 +106,27 @@ object Similarity {
       }
     }
 
-  /** nBits-bit hyperplane bucket from literal planes: one codegen'd
-    * zip_with dot product per bit (same ascending-index accumulation and
-    * the same seeded draws as [[lshBucket]] → identical bucket ids,
-    * asserted in OperatorSpec). Vectors whose length differs from the
-    * plane matrix raise (see [[guardDims]]) instead of silently
-    * mis-bucketing through zip_with NULL padding.
+  /** nBits-bit hyperplane bucket from literal planes: the native
+    * `hyperplane_bucket` kernel, one loop over the planes with the same
+    * ascending-index accumulation and the same seeded draws as
+    * [[lshBucket]] → identical bucket ids (asserted in OperatorSpec).
+    * Vectors whose length differs from the plane matrix raise with the
+    * [[guardDims]] message.
     */
   private[graft] def hyperplaneBucket(
       vec: Column, planes: Array[Array[Double]]): Column =
-    if (planes.isEmpty) lit(0L)
-    else guardDims(vec, planes.head.length,
-      planes.zipWithIndex.map { case (p, b) =>
-        val pl = array(p.map(lit).toIndexedSeq: _*)
-        val dot = aggregate(zip_with(vec, pl, (x, s) => x.cast("double") * s),
-          lit(0.0d), (a, d) => a + d)
-        when(dot > 0, lit(1L << b)).otherwise(lit(0L))
-      }.reduce(_.bitwiseOR(_)))
+    if (planes.isEmpty) lit(0L) else hyperplane_bucket(vec, planes)
+
+  /** The interpreted column-function REFERENCE form of `literal_dots`
+    * (the [[dot]]/[[lshBucket]] convention), kept for OperatorSpec to
+    * assert the native kernel matches it.
+    */
+  private[graft] def literalDotsColumnForm(
+      vec: Column, m: Array[Array[Double]]): Column =
+    guardDims(vec, m.head.length, array(m.toIndexedSeq.map { row =>
+      aggregate(zip_with(vec, array(row.map(lit).toIndexedSeq: _*),
+        (x, s) => x.cast("double") * s), lit(0.0d), (a, d) => a + d)
+    }: _*))
 
   /** First row's embedding dimensionality — one driver-side metadata
     * lookup (0 for an empty frame), used to size literal plane/centroid
@@ -138,16 +162,8 @@ object Similarity {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q"),
         hyperplaneBucket(col(vecCol), planes).as("bucket"))
       .withColumn("probe", explode(array(probes: _*)))
-    val scored = v.join(q,
-        v("bucket") === q("probe") && col("id") =!= col("query_id"))
-      .withColumn("cosine", cosine(col("v"), col("q")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"))
+    rankByCosine(v.join(q,
+        v("bucket") === q("probe") && col("id") =!= col("query_id")), k)
   }
 
   /** Seeded Rademacher PROJECTION matrix (projDims × dims, entries ±1)
@@ -169,20 +185,14 @@ object Similarity {
       }
     }
 
-  /** projDims-element reduced vector from literal projection rows: one
-    * codegen'd zip_with dot per output dimension (the [[hyperplaneBucket]]
-    * kernel, kept as a VALUE instead of collapsed to a sign bit).
-    * Dimension mismatches raise (see [[guardDims]]).
+  /** projDims-element reduced vector from literal projection rows: the
+    * native `literal_dots` kernel ([[hyperplaneBucket]]'s loop, each dot
+    * kept as a VALUE instead of collapsed to a sign bit). Dimension
+    * mismatches raise with the [[guardDims]] message.
     */
   private[graft] def projectVec(vec: Column,
                                 proj: Array[Array[Double]]): Column =
-    if (proj.isEmpty) array()
-    else guardDims(vec, proj.head.length,
-      array(proj.toIndexedSeq.map { row =>
-        val pl = array(row.map(lit).toIndexedSeq: _*)
-        aggregate(zip_with(vec, pl, (x, s) => x.cast("double") * s),
-          lit(0.0d), (a, d) => a + d)
-      }: _*))
+    if (proj.isEmpty) array() else literal_dots(vec, proj)
 
   /** Random-projection ANN (Johnson–Lindenstrauss): vectors and queries
     * project through a seeded ±1 matrix to `projDims` dimensions, the
@@ -203,27 +213,10 @@ object Similarity {
                            dims: Int = -1): DataFrame = {
     val d = if (dims >= 0) dims else dimsOf(vectors, vecCol)
     val proj = rademacherProjection(projDims, d)
-    val v = vectors.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q"))
-    val vp = v.select(col("id"), projectVec(col("v"), proj).as("p"))
-    val qp = q.select(col("query_id"), projectVec(col("q"), proj).as("qp"))
-    val approx = vp.crossJoin(broadcast(qp))
-      .filter(col("id") =!= col("query_id"))
-      .withColumn("s", cosine(col("p"), col("qp")))
-    val wA = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id")).orderBy(col("s").desc, col("id"))
-    val cand = approx.withColumn("arn", row_number().over(wA))
-      .filter(col("arn") <= shortlist)
-      .select(col("query_id"), col("id"))
-    val scored = cand.join(v, Seq("id")).join(broadcast(q), Seq("query_id"))
-      .withColumn("cosine", cosine(col("v"), col("q")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"))
+    val approx = allPairs(vectors, queries, idCol, vecCol,
+        projectVec(_, proj), projectVec(_, proj))
+      .withColumn("s", cosine(col("v"), col("q")))
+    rerankExact(approx, vectors, queries, idCol, vecCol, k, shortlist)
   }
 
   /** Driver-side replica of the in-plan `xxhash64(a, b)` over two
@@ -241,10 +234,11 @@ object Similarity {
 
   private def pmodL(x: Long, m: Long): Long = { val r = x % m; if (r < 0) r + m else r }
 
-  /** Per-row dimensionality guard for literal-matrix kernels: `zip_with`
-    * against a fixed-length literal NULL-pads a mismatched vector, which
-    * would silently zero bucket bits / skew cell scores — so a vector
-    * whose length differs from the matrix raises instead.
+  /** Per-row dimensionality guard for the column-form literal-matrix
+    * kernels: `zip_with` against a fixed-length literal NULL-pads a
+    * mismatched vector, which would silently zero bucket bits / skew
+    * codes — so a vector whose length differs from the matrix raises
+    * instead (the native kernels raise with the same message).
     */
   private def guardDims(vec: Column, dims: Int, out: Column): Column =
     when(size(vec) === lit(dims), out)
@@ -270,10 +264,11 @@ object Similarity {
     * Spark shape — centroid assignment as a narrow column expression, then
     * a cell equi-join — is exactly what a trained-IVF would use.
     *
-    * The centroid matrix is generated DRIVER-SIDE and enters the plan as
-    * literals through the same `zip_with` path as [[ivfTopKTrained]]: a
-    * 16×dims constant is plan metadata, not per-row work, so scoring
-    * stays one fused codegen loop instead of re-hashing 16×dims per row.
+    * The centroid matrix is generated DRIVER-SIDE and enters the plan
+    * through the same native `literal_dots` kernel as [[ivfTopKTrained]]:
+    * a 16×dims constant is plan metadata, not per-row work, so scoring is
+    * one codegen'd loop over the centroids instead of re-hashing 16×dims
+    * per row.
     * `dims` defaults to one driver-side metadata row (pass it explicitly
     * to avoid the lookup job); vectors of any other length raise.
     */
@@ -283,18 +278,8 @@ object Similarity {
               vecCol: String = "embedding", dims: Int = -1): DataFrame = {
     val d = if (dims >= 0) dims else dimsOf(vectors, vecCol)
     val cents = pseudoCentroids(nCentroids, d)
-    val cLit = array(cents.map(c => array(c.map(lit).toIndexedSeq: _*))
-      .toIndexedSeq: _*)
-    // dot(vec, centroid) with the same ascending-index double accumulation
-    // as the expression form — identical scores, identical cells
-    def centroidScores(vec: Column): Column =
-      guardDims(vec, d,
-        zip_with(cLit, sequence(lit(0), lit(nCentroids - 1)), (c, idx) =>
-          struct(
-            aggregate(zip_with(vec, c, (x, cc) => x.cast("double") * cc),
-              lit(0.0d), (a, d) => a + d).as("score"),
-            idx.as("cell"))))
-    ivfSearch(vectors, queries, k, nProbe, idCol, vecCol, centroidScores)
+    rankByCosine(cellPairs(vectors, queries,
+      cellScores(cents, (dot, _) => dot), nProbe, idCol, vecCol), k)
   }
 
   /** Fit k-means (Spark MLlib) on the corpus and return the centroid
@@ -325,13 +310,15 @@ object Similarity {
                            centroids: Array[Array[Double]], nProbe: Int = 4,
                            idCol: String = "vec_id",
                            vecCol: String = "embedding"): DataFrame =
-    ivfSearch(vectors, queries, k, nProbe, idCol, vecCol,
-      literalCellScores(centroids))
+    rankByCosine(cellPairs(vectors, queries, literalCellScores(centroids),
+      nProbe, idCol, vecCol), k)
 
   /** The ONE copy of the literal-centroid cell-scoring expression:
     * per cell, `2·v·c − ‖c‖²` (orders like −‖v−c‖², the ‖v‖² term being
     * constant per vector) with ‖c‖² folded in driver-side — one
-    * reproducible dot per cell, re-derivable by an external engine via
+    * reproducible dot per cell, all cells' dots from one native
+    * `literal_dots` loop (a `transform` over the cells then builds the
+    * structs), re-derivable by an external engine via
     * `list_inner_product(e, c) * 2 − c2`. Every consumer of the
     * centroid-matrix convention ([[ivfTopKWithCentroids]],
     * [[ivfPqTopK]], [[assignCells]]) MUST go through this helper: the
@@ -341,20 +328,20 @@ object Similarity {
   private[graft] def literalCellScores(
       centroids: Array[Array[Double]]): Column => Column = {
     require(centroids.nonEmpty, "empty centroid matrix")
-    val n = centroids.length
-    val cLit = array(centroids.map(c =>
-      array(c.map(lit).toIndexedSeq: _*)).toIndexedSeq: _*)
     val c2 = centroids.map(c => c.map(x => x * x).sum)
     val c2Lit = array(c2.map(lit).toIndexedSeq: _*)
-    vec =>
-      guardDims(vec, centroids.head.length,
-        zip_with(cLit, sequence(lit(0), lit(n - 1)), (c, idx) =>
-          struct(
-            (aggregate(zip_with(vec, c, (x, cc) => x.cast("double") * cc),
-              lit(0.0d), (a, d) => a + d) * lit(2.0d) -
-              element_at(c2Lit, idx.cast("int") + 1)).as("score"),
-            idx.as("cell"))))
+    cellScores(centroids,
+      (dot, idx) => dot * lit(2.0d) - element_at(c2Lit, idx + 1))
   }
+
+  /** Per-cell `struct(score, cell)` over one `literal_dots` of the vector
+    * with the centroid matrix; `score(dot, cell)` sees each cell's dot.
+    * The `transform` left is a loop over cells, not over dimensions.
+    */
+  private def cellScores(centroids: Array[Array[Double]],
+                         score: (Column, Column) => Column): Column => Column =
+    vec => transform(literal_dots(vec, centroids),
+      (dot, idx) => struct(score(dot, idx).as("score"), idx.as("cell")))
 
   /** Nearest-cell assignment against an explicit centroid matrix:
     * (id, v, cell), cell = argmax (2·v·c − ‖c‖²) with ties to the
@@ -456,26 +443,15 @@ object Similarity {
                     vecCol: String = "embedding"): DataFrame = {
     val spark = queries.sparkSession
     val scores = literalCellScores(centroids)
-    def topCells(vec: Column, nn: Int): Column =
-      transform(slice(reverse(array_sort(scores(vec))), 1, nn),
-        s => s.getField("cell"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q"),
-      explode(topCells(col(vecCol), nProbe)).as("cell"))
+      explode(topCells(scores, col(vecCol), nProbe)).as("cell"))
     val cells = q.select(col("cell")).distinct().collect()
       .map(_.getInt(0)).sorted
     val idx = spark.read.parquet(path)
       .filter(col("cell").isin(cells.map(Int.box).toIndexedSeq: _*))
       .select(col(idCol).as("id"), col(vecCol).as("v"), col("cell"))
-    val scored = idx.join(q, Seq("cell"))
-      .filter(col("id") =!= col("query_id"))
-      .withColumn("cosine", cosine(col("v"), col("q")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"))
+    rankByCosine(idx.join(q, Seq("cell"))
+      .filter(col("id") =!= col("query_id")), k)
   }
 
   /** IVF with TRAINED centroids: k-means fit, then the literal-centroid
@@ -686,20 +662,15 @@ object Similarity {
   }
 
   /** Per-query ADC lookup tables: `tables(sub)(codeword) = q_sub · c` —
-    * K·M doubles per query, computed once from the literal codebooks and
-    * broadcast with the query row.
+    * K·M doubles per query, one `literal_dots` per subspace slice against
+    * that subspace's codebook, broadcast with the query row.
     */
   private[graft] def pqQueryTables(vec: Column,
       books: Array[Array[Array[Double]]]): Column = {
     val subLen = books.head.head.length
     guardDims(vec, books.length * subLen,
       array(books.zipWithIndex.map { case (cws, sub) =>
-        val subVec = slice(vec, sub * subLen + 1, subLen)
-        array(cws.map { c =>
-          val cl = array(c.map(lit).toIndexedSeq: _*)
-          aggregate(zip_with(subVec, cl, (x, cc) => x.cast("double") * cc),
-            lit(0.0d), (a, dd) => a + dd)
-        }.toIndexedSeq: _*)
+        literal_dots(slice(vec, sub * subLen + 1, subLen), cws)
       }.toIndexedSeq: _*))
   }
 
@@ -734,16 +705,10 @@ object Similarity {
              vecCol: String = "embedding"): DataFrame = {
     // the candidate scan carries codes only — full vectors re-attach to
     // the ≤ rerank survivors inside rerankExact
-    val v = vectors.select(col(idCol).as("id"),
-      pqCodes(col(vecCol), books).as("codes"))
-    val q = queries.select(col(idCol).as("query_id"),
-      pqQueryTables(col(vecCol), books).as("tabs"))
-    val approx = v.join(broadcast(q), col("id") =!= col("query_id"))
-      .withColumn("s", adcScore(col("codes"), col("tabs")))
-    rerankExact(approx,
-      vectors.select(col(idCol).as("id"), col(vecCol).as("v")),
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("q")),
-      k, rerank)
+    val approx = allPairs(vectors, queries, idCol, vecCol,
+        pqCodes(_, books), pqQueryTables(_, books))
+      .withColumn("s", adcScore(col("v"), col("q")))
+    rerankExact(approx, vectors, queries, idCol, vecCol, k, rerank)
   }
 
   /** IVF-PQ: coarse cell equi-join (nearest of `centroids`, queries probe
@@ -758,23 +723,10 @@ object Similarity {
                 books: Array[Array[Array[Double]]], nProbe: Int = 4,
                 rerank: Int = 32, idCol: String = "vec_id",
                 vecCol: String = "embedding"): DataFrame = {
-    val centroidScores = literalCellScores(centroids)
-    def topCells(vec: Column, nn: Int): Column =
-      transform(slice(reverse(array_sort(centroidScores(vec))), 1, nn),
-        s => s.getField("cell"))
-    val v = vectors.select(col(idCol).as("id"),
-      pqCodes(col(vecCol), books).as("codes"),
-      element_at(topCells(col(vecCol), 1), 1).as("cell"))
-    val q = queries.select(col(idCol).as("query_id"),
-      pqQueryTables(col(vecCol), books).as("tabs"),
-      explode(topCells(col(vecCol), nProbe)).as("cell"))
-    val approx = v.join(q, Seq("cell"))
-      .filter(col("id") =!= col("query_id"))
-      .withColumn("s", adcScore(col("codes"), col("tabs")))
-    rerankExact(approx,
-      vectors.select(col(idCol).as("id"), col(vecCol).as("v")),
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("q")),
-      k, rerank)
+    val approx = cellPairs(vectors, queries, literalCellScores(centroids),
+        nProbe, idCol, vecCol, pqCodes(_, books), pqQueryTables(_, books))
+      .withColumn("s", adcScore(col("v"), col("q")))
+    rerankExact(approx, vectors, queries, idCol, vecCol, k, rerank)
   }
 
   /** Shared two-stage finish: approximate top-`rerank` candidates per
@@ -787,64 +739,59 @@ object Similarity {
     * exchanged both float arrays per candidate pair: 30×+ the bytes at
     * 64 dims, unboundedly worse at production widths). Survivors
     * (≤ rerank per query) re-attach the full vectors by id / query_id
-    * equi-joins against `vSide` (id, v) and `qSide` (query_id, q) —
+    * equi-joins against the vectors' (id, v) and the queries'
+    * (query_id, q) columns —
     * unhinted since r22, see the join-site comment — the "decide with
     * small rows, move big rows once" trade: one extra (column-pruned)
     * scan of the vector relation in exchange for a vector-free
     * candidate shuffle.
     */
-  private def rerankExact(approx: DataFrame, vSide: DataFrame,
-                          qSide: DataFrame, k: Int,
-                          rerank: Int): DataFrame = {
+  private def rerankExact(approx: DataFrame, vectors: DataFrame,
+                          queries: DataFrame, idCol: String, vecCol: String,
+                          k: Int, rerank: Int): DataFrame = {
     val wA = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id")).orderBy(col("s").desc, col("id"))
     val cand = approx.select(col("query_id"), col("id"), col("s"))
       .withColumn("arn", row_number().over(wA))
       .filter(col("arn") <= rerank)
       .select(col("query_id"), col("id"))
-    // no broadcast() hint on qSide (ADVICE r21): the IVF callers feed
+    // no broadcast() hint on the query side (ADVICE r21): the IVF callers feed
     // query relations of caller-controlled size, and an unconditional
     // hint is a driver/executor memory hazard at large query batches
     // (the resolveCodeHash no-hard-broadcast rationale). AQE/statistics
-    // still pick BHJ whenever qSide is actually small — which every
-    // fixture-scale caller is.
-    val scored = cand.join(vSide, Seq("id"))
-      .join(qSide, Seq("query_id"))
-      .withColumn("cosine", cosine(col("v"), col("q")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"))
+    // still pick BHJ whenever the query side is actually small — which
+    // every fixture-scale caller is.
+    rankByCosine(cand
+      .join(vectors.select(col(idCol).as("id"), col(vecCol).as("v")),
+        Seq("id"))
+      .join(queries.select(col(idCol).as("query_id"), col(vecCol).as("q")),
+        Seq("query_id")), k)
   }
 
-  /** Shared IVF probe: vectors assigned to their nearest cell, queries
-    * probe their nProbe best cells, exact cosine ranks within the probed
-    * union — a cell equi-join instead of an O(N·Q) scan.
+  /** Shared IVF probe: candidate pairs (id, v, query_id, q) from a cell
+    * equi-join instead of an O(N·Q) scan — each vector in its best cell
+    * by `scores`, carrying `vSide(vec)` as v, each query in its `nProbe`
+    * best cells, carrying `qSide(vec)` as q; self-pairs dropped.
     */
-  private def ivfSearch(vectors: DataFrame, queries: DataFrame, k: Int,
-                        nProbe: Int, idCol: String, vecCol: String,
-                        centroidScores: Column => Column): DataFrame = {
-    def topCells(vec: Column, n: Int): Column =
-      transform(slice(reverse(array_sort(centroidScores(vec))), 1, n),
-        s => s.getField("cell"))
-
-    val v = vectors.select(col(idCol).as("id"), col(vecCol).as("v"),
-      element_at(topCells(col(vecCol), 1), 1).as("cell"))
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("q"),
-      explode(topCells(col(vecCol), nProbe)).as("cell"))
-    val scored = v.join(q, Seq("cell")).filter(col("id") =!= col("query_id"))
-      .withColumn("cosine", cosine(col("v"), col("q")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("query_id"))
-      .orderBy(col("cosine").desc, col("id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("rank"), col("id").as("neighbor_id"),
-        round(col("cosine"), 6).as("cosine"))
+  private def cellPairs(vectors: DataFrame, queries: DataFrame,
+                        scores: Column => Column, nProbe: Int, idCol: String,
+                        vecCol: String, vSide: Column => Column = identity,
+                        qSide: Column => Column = identity): DataFrame = {
+    val vec = col(vecCol)
+    val v = vectors.select(col(idCol).as("id"), vSide(vec).as("v"),
+      element_at(topCells(scores, vec, 1), 1).as("cell"))
+    val q = queries.select(col(idCol).as("query_id"), qSide(vec).as("q"),
+      explode(topCells(scores, vec, nProbe)).as("cell"))
+    v.join(q, Seq("cell")).filter(col("id") =!= col("query_id"))
   }
+
+  /** Cell ids of the `n` best entries of `scores(vec)`: descending score,
+    * ties to the higher cell (a reverse of the ascending struct sort).
+    */
+  private def topCells(scores: Column => Column, vec: Column,
+                       n: Int): Column =
+    transform(slice(reverse(array_sort(scores(vec))), 1, n),
+      s => s.getField("cell"))
 
   // ---- filtered ANN: metadata predicate ∩ vector search ----
 
@@ -892,8 +839,8 @@ object Similarity {
                       nProbeOverride: Int = -1): DataFrame = {
     val np = if (nProbeOverride > 0) nProbeOverride
       else filteredProbeWidth(vectors, pred, nProbe, centroids.length)
-    ivfSearch(vectors.filter(pred), queries, k, np, idCol, vecCol,
-      literalCellScores(centroids))
+    rankByCosine(cellPairs(vectors.filter(pred), queries,
+      literalCellScores(centroids), np, idCol, vecCol), k)
   }
 
   /** Cluster-balanced sampling — the embedding-space curation step that
@@ -1025,21 +972,17 @@ object Similarity {
              lo: Array[Double], hi: Array[Double], rerank: Int = 64,
              idCol: String = "vec_id",
              vecCol: String = "embedding"): DataFrame = {
-    val v = vectors.select(col(idCol).as("id"),
-      sqCodes(col(vecCol), lo, hi).as("codes"))
-    val q = queries.select(col(idCol).as("query_id"),
-      sqCodes(col(vecCol), lo, hi).as("qcodes"))
-    val approx = v.join(broadcast(q), col("id") =!= col("query_id"))
-      .withColumn("s",
-        aggregate(zip_with(col("codes"), col("qcodes"),
-          (a, b) => ((a - lit(128)) * (b - lit(128))).cast("long")),
-          lit(0L), (acc, x) => acc + x)
-          .cast("double"))
-    rerankExact(approx,
-      vectors.select(col(idCol).as("id"), col(vecCol).as("v")),
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("q")),
-      k, rerank)
+    val approx = allPairs(vectors, queries, idCol, vecCol,
+        sqCodes(_, lo, hi), sqCodes(_, lo, hi))
+      .withColumn("s", sqDot(col("v"), col("q")))
+    rerankExact(approx, vectors, queries, idCol, vecCol, k, rerank)
   }
+
+  /** The centered integer SQ8 dot Σ (code_d−128)(qcode_d−128). */
+  private def sqDot(codes: Column, qcodes: Column): Column =
+    aggregate(zip_with(codes, qcodes,
+      (a, b) => ((a - lit(128)) * (b - lit(128))).cast("long")),
+      lit(0L), (acc, x) => acc + x).cast("double")
 
   /** IVF-SQ8: coarse cell equi-join + centered integer SQ dot + exact
     * re-rank — [[ivfPqTopK]]'s layout with the SQ8 code side instead of
@@ -1054,27 +997,10 @@ object Similarity {
                 hi: Array[Double], nProbe: Int = 4, rerank: Int = 64,
                 idCol: String = "vec_id",
                 vecCol: String = "embedding"): DataFrame = {
-    val centroidScores = literalCellScores(centroids)
-    def topCells(vec: Column, nn: Int): Column =
-      transform(slice(reverse(array_sort(centroidScores(vec))), 1, nn),
-        s => s.getField("cell"))
-    val v = vectors.select(col(idCol).as("id"),
-      sqCodes(col(vecCol), lo, hi).as("codes"),
-      element_at(topCells(col(vecCol), 1), 1).as("cell"))
-    val q = queries.select(col(idCol).as("query_id"),
-      sqCodes(col(vecCol), lo, hi).as("qcodes"),
-      explode(topCells(col(vecCol), nProbe)).as("cell"))
-    val approx = v.join(q, Seq("cell"))
-      .filter(col("id") =!= col("query_id"))
-      .withColumn("s",
-        aggregate(zip_with(col("codes"), col("qcodes"),
-          (a, b) => ((a - lit(128)) * (b - lit(128))).cast("long")),
-          lit(0L), (acc, x) => acc + x)
-          .cast("double"))
-    rerankExact(approx,
-      vectors.select(col(idCol).as("id"), col(vecCol).as("v")),
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("q")),
-      k, rerank)
+    val approx = cellPairs(vectors, queries, literalCellScores(centroids),
+        nProbe, idCol, vecCol, sqCodes(_, lo, hi), sqCodes(_, lo, hi))
+      .withColumn("s", sqDot(col("v"), col("q")))
+    rerankExact(approx, vectors, queries, idCol, vecCol, k, rerank)
   }
 
   // ---- BQ: 1-bit binary quantization ----
@@ -1131,18 +1057,12 @@ object Similarity {
              mu: Array[Double], rerank: Int = 128,
              idCol: String = "vec_id",
              vecCol: String = "embedding"): DataFrame = {
-    val v = vectors.select(col(idCol).as("id"),
-      bqPackedBits(col(vecCol), mu).as("bits"))
-    val q = queries.select(col(idCol).as("query_id"),
-      bqPackedBits(col(vecCol), mu).as("qbits"))
-    val approx = v.join(broadcast(q), col("id") =!= col("query_id"))
+    val approx = allPairs(vectors, queries, idCol, vecCol,
+        bqPackedBits(_, mu), bqPackedBits(_, mu))
       .withColumn("s",
         -graft.functions.expressions.VectorExpressions
-          .hamming_packed(col("bits"), col("qbits")).cast("double"))
-    rerankExact(approx,
-      vectors.select(col(idCol).as("id"), col(vecCol).as("v")),
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("q")),
-      k, rerank)
+          .hamming_packed(col("v"), col("q")).cast("double"))
+    rerankExact(approx, vectors, queries, idCol, vecCol, k, rerank)
   }
 
   /** IVF-BQ: coarse cell equi-join + packed-bit hamming + deep exact
@@ -1161,25 +1081,12 @@ object Similarity {
                 nProbe: Int = 4, rerank: Int = 128,
                 idCol: String = "vec_id",
                 vecCol: String = "embedding"): DataFrame = {
-    val centroidScores = literalCellScores(centroids)
-    def topCells(vec: Column, nn: Int): Column =
-      transform(slice(reverse(array_sort(centroidScores(vec))), 1, nn),
-        s => s.getField("cell"))
-    val v = vectors.select(col(idCol).as("id"),
-      bqPackedBits(col(vecCol), mu).as("bits"),
-      element_at(topCells(col(vecCol), 1), 1).as("cell"))
-    val q = queries.select(col(idCol).as("query_id"),
-      bqPackedBits(col(vecCol), mu).as("qbits"),
-      explode(topCells(col(vecCol), nProbe)).as("cell"))
-    val approx = v.join(q, Seq("cell"))
-      .filter(col("id") =!= col("query_id"))
+    val approx = cellPairs(vectors, queries, literalCellScores(centroids),
+        nProbe, idCol, vecCol, bqPackedBits(_, mu), bqPackedBits(_, mu))
       .withColumn("s",
         -graft.functions.expressions.VectorExpressions
-          .hamming_packed(col("bits"), col("qbits")).cast("double"))
-    rerankExact(approx,
-      vectors.select(col(idCol).as("id"), col(vecCol).as("v")),
-      queries.select(col(idCol).as("query_id"), col(vecCol).as("q")),
-      k, rerank)
+          .hamming_packed(col("v"), col("q")).cast("double"))
+    rerankExact(approx, vectors, queries, idCol, vecCol, k, rerank)
   }
 
   // ---- MaxSim: multi-vector late interaction ----

@@ -14,7 +14,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * streaming query's tasks run under a class loader of their own (st04,
   * st12, st16: session artifact isolation), or when adaptive execution
   * plans a join differently from run to run (st23's gate join, st29's
-  * per-batch join: a shuffle stage finishing first decides it).
+  * per-batch join: a shuffle stage finishing first decides it; l38's
+  * star joins: run-time sizes decide a broadcast).
   */
 class CodegenSpec extends AnyFunSuite {
 
@@ -27,6 +28,7 @@ class CodegenSpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
   private val panel = Seq("l53_pii_redact", "l20_bm25_terms",
     "l05_embedding_neardup", "l62_pagerank", "l10_dedup_clusters",
+    "l38_dedup_clusters_star",
     "st04_session_stream", "st12_stream_interval_join",
     "st16_frontier_stream", "st23_pair_gate_stream",
     "st29_paired_stream_loader")

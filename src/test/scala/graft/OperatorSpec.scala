@@ -872,17 +872,68 @@ class OperatorSpec extends AnyFunSuite {
     }
   }
 
+  test("native literal-matrix kernels equal their column forms on " +
+      "seeded, null-element, NaN and signed-zero vectors") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val dims = 16
+    val rnd = new scala.util.Random(13)
+    val rows: Seq[Seq[Any]] = Seq.fill(40)(Seq.fill(dims)(rnd.nextGaussian())) ++
+      Seq(Seq.tabulate(dims)(i => if (i == 3) null else 0.5 * i),
+        Seq.tabulate(dims)(i => if (i == 5) Double.NaN else 1.0),
+        Seq.fill(dims)(-0.0), Seq.fill(dims)(0.0),
+        Seq.tabulate(dims)(i => if (i % 2 == 0) -0.0 else 0.0),
+        Seq.tabulate(dims)(i => if (i == 0) -0.0 else 0.25 * (i % 3 - 1)))
+    val cents = Similarity.pseudoCentroids(5, dims)
+    for ((t, conv) <- Seq[(DataType, Any => Any)](DoubleType -> identity,
+        FloatType -> { case d: Double => d.toFloat; case x => x })) {
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.zipWithIndex.map {
+          case (v, i) => Row(i.toLong, v.map(conv)) }),
+        StructType(Seq(StructField("vec_id", LongType),
+          StructField("embedding", ArrayType(t)))))
+      val v = col("embedding")
+      for ((name, native, reference) <- Seq(
+          ("literal_dots(centroids)", Similarity.projectVec(v, cents),
+            Similarity.literalDotsColumnForm(v, cents))) ++
+          Seq(1, 8, 12).flatMap { nBits =>
+            val planes = Similarity.rademacherPlanes(nBits, dims)
+            Seq((s"hyperplane_bucket($nBits)",
+                Similarity.hyperplaneBucket(v, planes),
+                Similarity.lshBucket(v, nBits)),
+              (s"literal_dots($nBits planes)",
+                Similarity.projectVec(v, planes),
+                Similarity.literalDotsColumnForm(v, planes)))
+          }) {
+        val diff = df.filter(!(native <=> reference))
+          .select(col("vec_id"), native.as("native"), reference.as("ref"))
+          .collect()
+        assert(diff.isEmpty, s"$t $name differs: ${diff.mkString("; ")}")
+      }
+      // the null-element row buckets to 0 (every dot null); the NaN row
+      // sets every bit (Spark orders NaN above 0)
+      val b = df.select(Similarity.hyperplaneBucket(v,
+          Similarity.rademacherPlanes(8, dims))).collect().map(_.getLong(0))
+      assert(b(40) == 0L && b(41) == 255L, s"$t buckets ${b.drop(40).toSeq}")
+    }
+  }
+
   test("literal-matrix kernels raise on dimension mismatch instead of " +
       "silently mis-bucketing") {
     val planes = Similarity.rademacherPlanes(4, 8)
     val bad = Seq((1L, Array.fill(5)(0.5f))).toDF("vec_id", "embedding")
-    val ex = intercept[Exception] {
-      bad.select(Similarity.hyperplaneBucket(col("embedding"), planes))
-        .collect()
+    for ((name, kernel) <- Seq[(String, org.apache.spark.sql.Column =>
+        org.apache.spark.sql.Column)](
+        "hyperplaneBucket" -> (Similarity.hyperplaneBucket(_, planes)),
+        "projectVec" -> (Similarity.projectVec(_, planes)),
+        "literalCellScores" -> Similarity.literalCellScores(planes))) {
+      val ex = intercept[Exception] {
+        bad.select(kernel(col("embedding"))).collect()
+      }
+      assert(ex.getMessage.contains("expected 8-dim") ||
+        Option(ex.getCause).exists(_.getMessage.contains("expected 8-dim")),
+        s"$name: wrong error: ${ex.getMessage}")
     }
-    assert(ex.getMessage.contains("expected 8-dim") ||
-      Option(ex.getCause).exists(_.getMessage.contains("expected 8-dim")),
-      s"wrong error: ${ex.getMessage}")
   }
 
   test("embedding near-dup finds planted duplicates") {

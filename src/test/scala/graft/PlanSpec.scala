@@ -115,21 +115,49 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("ANN plans carry literal planes/centroids: no per-row xxhash64") {
+    // also: no interpreted HOF loops over vector dimensions, and
+    // near-dup's one executed join is the bucket self-join
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ZipWith}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     import org.apache.spark.sql.functions.col
+    import graft.operators.Similarity
     val e = Tables(spark, "/root/testdata/sf0.001", "embeddings")
     val q = e.filter(col("vec_id") < 3)
+    val nearDup = graft.operators.Dedup.embeddingNearDup(e, threshold = 0.9,
+      nBits = 6)
     for ((name, df) <- Seq(
-        "lshTopK" -> graft.operators.Similarity.lshTopK(e, q, k = 5,
-          nBits = 6),
-        "ivfTopK" -> graft.operators.Similarity.ivfTopK(e, q, k = 5),
-        "embeddingNearDup" -> graft.operators.Dedup.embeddingNearDup(e,
-          threshold = 0.9, nBits = 6))) {
-      val plan = df.queryExecution.optimizedPlan.toString
+        "lshTopK" -> Similarity.lshTopK(e, q, k = 5, nBits = 6),
+        "ivfTopK" -> Similarity.ivfTopK(e, q, k = 5),
+        "randomProjectionTopK" -> Similarity.randomProjectionTopK(e, q,
+          k = 5),
+        "ivfTopKWithCentroids" -> Similarity.ivfTopKWithCentroids(e, q,
+          k = 5, Similarity.pseudoCentroids(8, Similarity.dimsOf(e,
+            "embedding"))),
+        "embeddingNearDup" -> nearDup)) {
+      val optimized = df.queryExecution.optimizedPlan
+      val plan = optimized.toString
       // the seeded draws happen ON THE DRIVER now; an xxhash64 in the plan
       // means the interpreted per-row hashing regression came back
       assert(!plan.contains("xxhash64"),
         s"$name re-hashes per row:\n${plan.take(3000)}")
+      // dots, buckets and cell scores run in the native literal_dots /
+      // hyperplane_bucket kernels, not Spark's interpreted HOFs
+      val hofs = optimized.flatMap(_.expressions.flatMap(_.collect {
+        case h: ArrayAggregate => h
+        case h: ZipWith => h
+      }))
+      assert(hofs.isEmpty, s"$name loops in interpreted HOFs: " +
+        hofs.map(_.toString.take(200)).mkString("\n"))
     }
+    nearDup.collect()
+    val helper = new org.apache.spark.sql.execution.adaptive
+      .AdaptiveSparkPlanHelper {}
+    val joins = helper.collect(nearDup.queryExecution.executedPlan) {
+      case j: BaseJoinExec => j
+    }
+    assert(joins.size == 1 && (joins.head.leftKeys ++ joins.head.rightKeys)
+        .flatMap(_.references.map(_.name)).toSet == Set("bucket"),
+      s"near-dup joins ${joins.map(_.simpleString(200))}")
   }
 
   test("PQ plans carry literal codebooks: no per-row hashing, and the " +
